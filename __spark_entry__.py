@@ -30,6 +30,17 @@ CENTROIDS = os.path.join(REPO, "data", "ivf_centroids.parquet")
 _CACHE: dict = {}
 
 
+def _cache_put(spark: SparkSession, key: tuple, value):
+    """Cache ``value`` under ``key`` (``key[1]`` is the applicationId) and
+    evict every entry of another application: its handles are bound to a
+    stopped SparkContext and would otherwise stay referenced for the
+    driver's lifetime."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _CACHE if k[1] != app]:
+        del _CACHE[k]
+    _CACHE[key] = value
+
+
 def _kg(spark: SparkSession):
     """Run extract→link→dedup once per session; cache the small results."""
     key = ("kg", spark.sparkContext.applicationId)
@@ -44,7 +55,7 @@ def _kg(spark: SparkSession):
         edges = dedup_edges(link_stage(ext, lcsh, hot_threshold=1000,
                                        num_salts=4)).cache()
         edges.count()
-        _CACHE[key] = (ext, edges)
+        _cache_put(spark, key, (ext, edges))
     return _CACHE[key]
 
 
@@ -236,7 +247,7 @@ def _ivf_handles(spark, path: str):
         ids.count()
         cents = spark.read.parquet(CENTROIDS).persist()
         cents.count()
-        _CACHE[key] = (corpus, ids, cents)
+        _cache_put(spark, key, (corpus, ids, cents))
     return _CACHE[key]
 
 

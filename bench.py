@@ -15,6 +15,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -36,16 +37,19 @@ def _sf_name() -> str:
 
 def ensure_bench_pages(spark, sf: str) -> str:
     """Build (once) the clone-scaled pages parquet for this sf, with a mild
-    hot-author skew so the salted join path is exercised."""
+    hot-author skew so the salted join path is exercised.  The cache dir is
+    keyed on a hash of the corpus lines, so a changed corpus rebuilds it."""
+    from olkg.fixtures import corpus_lines
+    from olkg.pagesgen import build_pages_df_distributed
     clones = int(os.environ.get("OLKG_BENCH_CLONES",
                                 _SF_CLONES.get(sf, 200)))
-    path = os.path.join(tempfile.gettempdir(), f"olkg_bench_pages_{sf}_{clones}")
+    lines = corpus_lines(include_reference=True)
+    digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(),
+                        f"olkg_bench_pages_{sf}_{clones}_{digest}")
     marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return path
-    from olkg.fixtures import corpus_lines
-    from olkg.pagesgen import build_pages_df_distributed
-    lines = corpus_lines(include_reference=True)
     df = build_pages_df_distributed(
         spark, lines, clones=clones, rewrite_refs=True,
         skew_hot_author="/authors/HOT1A", skew_fraction=0.1,
@@ -77,7 +81,6 @@ def main() -> None:
 
     # --- headline: end-to-end KG pipeline ---------------------------------
     pages_path = ensure_bench_pages(spark, sf)
-    out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_")
     from olkg.pipeline import run_pipeline, run_pipeline_fast
     lcsh = spark.read.parquet(os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "data", "lcsh.parquet"))
@@ -94,15 +97,12 @@ def main() -> None:
     # (BASELINE.md §protocol), so both pipelines run N_TRIALS times
     # INTERLEAVED (fast, durable, fast, durable, ...) — host drift hits both
     # equally — and the reported number is the per-query MEDIAN, with every
-    # trial on record.  The corpus size estimate is computed ONCE and passed
-    # in, so the auto-dedup sampler's driver jobs don't pollute the timings.
+    # trial on record.  The fast path runs its dedup-sizing sampler in every
+    # trial, as a user's run does.
     import statistics
 
-    from olkg.pipeline import estimate_extract_size
     n_trials = int(os.environ.get("OLKG_BENCH_TRIALS", "3"))
-    est_total, est_per_task = estimate_extract_size(spark, pages_path)
     trials: dict[str, list[float]] = {"kg_pipeline": [],
-                                      "kg_pipeline_postwrite": [],
                                       "kg_pipeline_durable": []}
     m = None
     for _ in range(n_trials):
@@ -110,21 +110,8 @@ def main() -> None:
         t0 = time.time()
         m = run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
                               hot_threshold=50_000, num_salts=16,
-                              with_canonical_map=True,
-                              est_total_rows=est_total,
-                              est_rows_per_task=est_per_task)
+                              with_canonical_map=True)
         trials["kg_pipeline"].append(round(time.time() - t0, 3))
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-        # the decoupled-dedup scale path (what the 2.4M gate measures) —
-        # tracked separately so its bench-scale overhead vs the fused plan
-        # is on record round over round
-        out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_p_")
-        t0 = time.time()
-        run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
-                          hot_threshold=50_000, num_salts=16,
-                          with_canonical_map=True, dedup_postwrite=True)
-        trials["kg_pipeline_postwrite"].append(round(time.time() - t0, 3))
         shutil.rmtree(out_dir, ignore_errors=True)
 
         out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_d_")

@@ -35,199 +35,45 @@ _EDGE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
 
 # Measured on this host (BENCH/BASELINE.md): map-side partial aggregation
 # beats prepartition below ~1-2M mostly-unique rows per map task and loses
-# 3x above it.  'auto' flips at the midpoint and sizes reduce partitions to
-# ~1M rows each.
+# 3x above it.  plan_dedup flips at the midpoint and sizes reduce partitions
+# to ~1M rows each.
 AUTO_PREPARTITION_ROWS_PER_TASK = 1_500_000
 AUTO_TARGET_ROWS_PER_PARTITION = 1_000_000
 
 
 def plan_dedup(total_rows: int, rows_per_task: float) -> tuple[str, int | None]:
-    """Pure sizing rule for :func:`dedup_edges` strategy='auto': returns
-    (strategy, num_partitions).  Separated from the Spark sampler so the
-    decision boundary is unit-testable with arbitrary scales."""
+    """Pure sizing rule for :func:`dedup_edges`: returns (strategy,
+    num_partitions).  Separated from the Spark sampler so the decision
+    boundary is unit-testable with arbitrary scales."""
     if rows_per_task > AUTO_PREPARTITION_ROWS_PER_TASK:
         n = max(1, round(total_rows / AUTO_TARGET_ROWS_PER_PARTITION))
         return "prepartition", n
     return "partial", None
 
 
-def dedup_edges(triples: DataFrame, strategy: str = "partial",
-                num_partitions: int | None = None,
-                est_total_rows: int | None = None,
+def dedup_edges(triples: DataFrame, est_total_rows: int | None = None,
                 est_rows_per_task: float | None = None) -> DataFrame:
     """A4: distinct (subj, pred, obj, obj_kind, obj_datatype).
 
-    strategy='partial' (default): plain dropDuplicates — hash aggregate with
-    map-side partial dedup.  Right when per-map-task row counts fit the hash
-    map or duplicates are common.
+    The plan is sized by :func:`plan_dedup` from the caller's estimates
+    (``est_total_rows``, ``est_rows_per_task`` — see
+    olkg.pipeline.estimate_extract_size for the cheap sampler):
 
-    strategy='prepartition': explicit repartition on the dedup key first, so
-    Catalyst plans ONE complete aggregate and skips the map-side partial
-    pass.  Web-scale triple streams are mostly UNIQUE rows — partial
-    aggregation then reduces nothing while building (and spilling) a giant
-    per-task hash map.  Measured on 2.4M pages / 57M rows at 8 cores:
-    300 s (partial) → 111 s (prepartition, ≈ the no-dedup write cost).
-
-    strategy='auto': pick by data size via :func:`plan_dedup` from the
-    caller-supplied estimates (``est_total_rows``, ``est_rows_per_task`` —
-    see olkg.pipeline.estimate_extract_size for the cheap sampler).  With
-    no estimates, 'auto' degrades to 'partial' (the small-corpus default)."""
-    if strategy == "auto":
-        if est_rows_per_task is not None:
-            strategy, auto_n = plan_dedup(est_total_rows or 0,
-                                          est_rows_per_task)
-            if num_partitions is None:
-                num_partitions = auto_n
-        else:
-            strategy = "partial"
-    if strategy == "prepartition":
-        pre = (triples.repartition(num_partitions, *_EDGE_COLS)
-               if num_partitions else triples.repartition(*_EDGE_COLS))
-        return pre.dropDuplicates(_EDGE_COLS)
+    - 'partial': plain dropDuplicates — hash aggregate with map-side partial
+      dedup.  Right when per-map-task row counts fit the hash map or
+      duplicates are common; also what runs with no estimates.
+    - 'prepartition': explicit repartition on the dedup key first, so the
+      aggregate runs only after that exchange and skips the map-side
+      partial pass.  Web-scale triple streams are mostly UNIQUE rows — partial
+      aggregation then reduces nothing while building (and spilling) a
+      giant per-task hash map.  Measured on 2.4M pages / 57M rows at 8
+      cores: 300 s (partial) → 111 s (prepartition, ≈ the no-dedup write
+      cost)."""
+    if est_rows_per_task is not None:
+        strategy, n = plan_dedup(est_total_rows or 0, est_rows_per_task)
+        if strategy == "prepartition":
+            triples = triples.repartition(n, *_EDGE_COLS)
     return triples.dropDuplicates(_EDGE_COLS)
-
-
-def with_dedup_write_cols(stream: DataFrame) -> DataFrame:
-    """Annotate an extract stream for write-then-dedup (:func:`dedup_from_raw`):
-
-    - ``h1``/``h2``: two independent 64-bit row hashes (seeds 0 / 42) over the
-      five edge columns — a 128-bit row identity.  Multi-arg ``xxhash64`` is
-      ambiguity-free here because only the TRAILING column (obj_datatype) is
-      nullable, so the null-fold property of Spark's hash (a null argument
-      leaves the seed untouched) cannot make two distinct rows collide by
-      null-position shifting.
-    - ``uid``: a unique row id (``monotonically_increasing_id``), computed
-      once inside the write's projection so it is durable — downstream jobs
-      never depend on re-deriving ids from a re-planned scan.
-
-    All three are JVM-side codegen expressions added to the write projection;
-    the Python extraction stage stays a pure narrow map."""
-    return stream.select(
-        "*",
-        F.xxhash64(*_EDGE_COLS).alias("h1"),
-        F.xxhash64(F.lit(42), *_EDGE_COLS).alias("h2"),
-        F.monotonically_increasing_id().alias("uid"))
-
-
-def dedup_from_raw(raw: DataFrame,
-                   max_broadcast_drops: int = 20_000_000,
-                   stats: dict | None = None,
-                   detect: str = "hashagg",
-                   detect_partitions: int | None = None,
-                   cleanup: list | None = None) -> DataFrame:
-    """A4 dedup as a SEPARATE job over a materialized raw edge table (written
-    with :func:`with_dedup_write_cols` columns) — the decoupled alternative to
-    deduplicating inline in the extraction stage.
-
-    Why decouple: fused extract+dedup couples the Python-bound map stage to
-    a full shuffle of the (mostly unique) triple stream in one stage pair —
-    measured at 2.4M pages, that coupling is what capped the stage's
-    parallel scaling (BENCH/BASELINE.md, round 3).  Decoupled, the extract
-    stage is a pure narrow map+write (scales with cores), and dedup becomes
-    this job, which never shuffles the full rows at all on the broadcast
-    plan.
-
-    DETECT formulations (``detect=``), both scanning only the three long
-    columns (h1, h2, uid — columnar pruning, no string decode):
-
-    - ``'hashagg'`` (default): explicit repartition on (h1, h2) then ONE
-      complete hash aggregate — groupBy(h1, h2) → (min uid, count) — kept
-      only where count > 1.  The repartition-first shape skips the map-side
-      partial pass, which on a mostly-UNIQUE key stream reduces nothing
-      while building a giant per-task hash map (the dedup_edges
-      'prepartition' lesson, 3x measured), and a hash aggregate never sorts
-      — the phase probe showed the sort-based window detect is
-      spill-sensitive at low parallelism (anti-scaled in one 2.4M trial).
-      The dup-GROUP table (one 24-byte row per duplicated hash group,
-      regardless of group size) is the only detect output.
-    - ``'window'``: min/count window over (h1, h2) → per-row keep marks —
-      one narrow shuffle plus a per-partition SORT of the projection; the
-      round-4 formulation, kept for A/B measurement.
-
-    REMOVE: when the detected duplicate volume fits ``max_broadcast_drops``
-    the small side is BROADCAST and the full rows move ZERO times —
-    'hashagg' joins the group table back on (h1, h2) keeping rows with no
-    group entry or uid == min (so it never materializes a per-row drop
-    set at all); 'window' anti-joins the drop set on uid.  Beyond the
-    broadcast bound the join shuffles (SHUFFLE_HASH — volume equivalent to
-    the fused plan's shuffle; at that scale a real cluster's aggregate
-    shuffle bandwidth is the resource that grows with node count, so the
-    full shuffle is the right plan there anyway).
-
-    Exactness rests on the 128-bit row identity: two distinct rows dropped
-    as duplicates require an (h1, h2) double collision, P ≈ n²/2¹²⁹
-    (~1e-15 at 10¹² rows).  ``stats`` (optional dict) records the drop
-    count and the chosen plan — no silent behavior switches.  ``cleanup``
-    (a list, effectively REQUIRED): the detect intermediate is persisted
-    and appended here for the caller to unpersist once the output is
-    materialized (it must outlive the returned plan's execution, so this
-    function cannot unpersist it itself).  Omitting ``cleanup`` leaks that
-    executor cache for the app lifetime — a ResourceWarning says so rather
-    than leaking silently."""
-    if cleanup is None:
-        # UserWarning + a WARNING-level log line: ResourceWarning is hidden
-        # by default Python filters, which made the documented "fail loudly
-        # instead of leaking silently" contract effectively silent
-        import logging
-        import warnings
-        msg = ("dedup_from_raw: no `cleanup` list passed — the persisted "
-               "detect intermediate cannot be unpersisted by the caller and "
-               "leaks for the app lifetime; pass cleanup=[] and unpersist "
-               "its entries after materializing the output")
-        warnings.warn(msg, UserWarning, stacklevel=2)
-        logging.getLogger(__name__).warning(msg)
-    proj = raw.select("h1", "h2", "uid")
-    if detect == "hashagg":
-        pre = (proj.repartition(detect_partitions, "h1", "h2")
-               if detect_partitions else proj.repartition("h1", "h2"))
-        groups = (pre.groupBy("h1", "h2")
-                  .agg(F.min("uid").alias("_keep"),
-                       F.count(F.lit(1)).alias("_n"))
-                  .filter(F.col("_n") > 1)
-                  .persist())
-        if cleanup is not None:
-            cleanup.append(groups)
-        census = groups.agg(
-            F.count(F.lit(1)).alias("g"),
-            F.sum(F.col("_n") - F.lit(1)).alias("d")).first()
-        n_groups, n_drops = census["g"] or 0, census["d"] or 0
-        small = n_drops <= max_broadcast_drops
-        right = groups.select("h1", "h2", "_keep")
-        if small:
-            joined = raw.join(F.broadcast(right), ["h1", "h2"], "left")
-        else:
-            joined = raw.join(right.hint("SHUFFLE_HASH"),
-                              ["h1", "h2"], "left")
-        out = (joined
-               .filter(F.col("_keep").isNull()
-                       | (F.col("uid") == F.col("_keep")))
-               .select(*_EDGE_COLS))
-        if stats is not None:
-            stats["n_dup_groups"] = n_groups
-            stats["n_dropped_dups"] = n_drops
-            stats["dedup_plan"] = ("hashagg-broadcast" if small
-                                   else "hashagg-shuffle")
-        return out
-    if detect != "window":
-        raise ValueError(f"unknown detect formulation: {detect!r}")
-    w = Window.partitionBy("h1", "h2")
-    drops = (proj
-             .withColumn("_keep", F.min("uid").over(w))
-             .withColumn("_n", F.count(F.lit(1)).over(w))
-             .filter((F.col("_n") > 1) & (F.col("uid") != F.col("_keep")))
-             .select("uid")
-             .persist())
-    if cleanup is not None:
-        cleanup.append(drops)
-    n_drops = drops.count()
-    small = n_drops <= max_broadcast_drops
-    right = F.broadcast(drops) if small else drops
-    out = raw.join(right, "uid", "left_anti").select(*_EDGE_COLS)
-    if stats is not None:
-        stats["n_dropped_dups"] = n_drops
-        stats["dedup_plan"] = ("hashdrop-broadcast" if small
-                               else "hashdrop-shuffle")
-    return out
 
 
 _ID_PREDS = {
@@ -319,7 +165,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
       (xxhash64(x), xxhash64(7, x)) structs once, so every iteration sorts
       and shuffles 16-byte fixed-width labels instead of URI strings (~5x
       less payload at web scale; false-merge P ~ n^2/2^128 ~ 1e-15 at 10^12
-      entities, the same stated bound as dedup_from_raw's row digest);
+      entities);
     - each iteration is TWO key-partitioned window aggregations -- min-over-
       block then min-over-entity -- with the changed-row census piggybacked
       via ``observe`` on the SAME action (no separate convergence job);
@@ -596,13 +442,3 @@ def canonical_map(edges: DataFrame, author_names: DataFrame | None = None,
                                 max_block_df=max_block_df,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)
-
-
-def sameas_edges_from_map(cmap: DataFrame) -> DataFrame:
-    """owl:sameAs edges materializing non-trivial cluster memberships."""
-    return (cmap.filter(F.col("entity") != F.col("canonical_id"))
-            .select(F.col("entity").alias("subj"),
-                    F.lit(V.OWL_SAME_AS).alias("pred"),
-                    F.col("canonical_id").alias("obj"),
-                    F.lit("uri").alias("obj_kind"),
-                    F.lit(None).cast("string").alias("obj_datatype")))

@@ -217,13 +217,11 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
         side = _Cols(_COLS)
         for pdf in batches:
             out = _Cols(_TRIPLE_COLS)
-            hots = (pdf["hot_ok"].tolist() if "hot_ok" in pdf
-                    else [False] * len(pdf))
-            for line, hot in zip(pdf["line"].tolist(), hots):
+            for line in pdf["line"].tolist():
                 rec = parse_dump_line(line) if line is not None else None
                 if rec is None:
                     continue
-                res = extract_record(rec[0], rec[4], skip_hot=bool(hot))
+                res = extract_record(rec[0], rec[4])
                 if res is None:
                     continue
                 src_type = rec[0]
@@ -267,37 +265,19 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
 
 def extract_triples_with_side_sink(pages: DataFrame, side_sink: str,
                                    repartition_by_url: int | None = None,
-                                   side_count_acc=None,
-                                   native_hot: bool = False) -> DataFrame:
+                                   side_count_acc=None) -> DataFrame:
     """Single-pass extraction: returns the (non-collision) triple stream;
     side rows land in ``side_sink`` when the returned stream is executed.
     The caller MUST run an action on the stream before reading the sink.
     The page audit is NOT part of this stream — use :func:`audit_pages`.
     Pass a Spark accumulator as ``side_count_acc`` to census side rows
-    written (feeds the empty-sink guard in :func:`read_side_rows`).
-
-    ``native_hot`` (default OFF — measured slower, see olkg.nativex's
-    module docstring for the A/B) emits the high-volume structured edition
-    fields as pure Catalyst variant expressions (olkg.nativex) and tells
-    the Python UDF to skip them per conforming record — the hybrid union
-    is triple-identical to the all-Python path (tests/test_nativex.py).
-    Hot fields never produce collision-class or blocking-key predicates,
-    so the side-sink routing and the disjoint-dedup decomposition are
-    unaffected either way."""
+    written (feeds the empty-sink guard in :func:`read_side_rows`)."""
     src = pages
     if repartition_by_url:
         src = src.repartition(repartition_by_url, F.xxhash64("url"))
-    lines = pages_to_lines(src)
-    if not native_hot:
-        return lines.mapInPandas(
-            _make_sink_batches(side_sink, side_count_acc),
-            schema=TRIPLES_SCHEMA)
-    from .nativex import edition_hot_triples, hot_ok_col
-
-    flagged = lines.withColumn("hot_ok", hot_ok_col(F.col("line")))
-    py_stream = flagged.mapInPandas(
-        _make_sink_batches(side_sink, side_count_acc), schema=TRIPLES_SCHEMA)
-    return py_stream.unionByName(edition_hot_triples(lines))
+    return pages_to_lines(src).mapInPandas(
+        _make_sink_batches(side_sink, side_count_acc),
+        schema=TRIPLES_SCHEMA)
 
 
 def read_side_rows(spark, side_sink: str,

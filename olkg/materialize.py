@@ -74,10 +74,9 @@ def append_lineage(spark: SparkSession, out_dir: str, run_id: str, stage: str,
     """Per-partition lineage rows for a completed stage: the checkpointed
     evidence of what each partition produced (north_rule's lineage+metrics).
     Reads the stage's own checkpoint so counting costs one column scan.
-    ``detail`` (optional JSON string) records stage-level contracts on the
-    lineage row itself — e.g. the postwrite-dedup retention census
-    (raw == kept + dropped), so a resumed run can prove the raw-table
-    reclaim was verified without the original driver's metrics dict."""
+    ``detail`` (optional JSON string) records a stage-level contract on the
+    lineage row itself, so a resumed run can check it without the original
+    driver's metrics dict."""
     per_part = (df.groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(F.count(F.lit(1)).alias("rows_out"))
                 .select(F.lit(run_id).alias("run_id"),

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
-from .canonicalize import canonical_map, dedup_edges, sameas_edges_from_map
+from .canonicalize import _EDGE_COLS, canonical_map, dedup_edges, plan_dedup
 from .extract import extract_pages
 from .fsio import pjoin
 from .link import link_stage
@@ -37,23 +37,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
                  num_salts: int = 16,
                  repartition_by_url: int | None = None,
                  with_canonical_map: bool = True,
-                 export_nt: bool = True,
-                 dedup_postwrite: bool = False,
-                 dedup_detect: str = "hashagg") -> dict:
-    """Returns a metrics dict (stage wall times, row counts, triples/sec).
-
-    ``dedup_postwrite``: the durable path's ``linked`` checkpoint is
-    already a materialized table — i.e. the RAW table the decoupled dedup
-    wants — so with this flag the link stage's write projection adds the
-    dedup hash/uid columns (24 bytes/row, JVM-side) and the edges stage
-    becomes :func:`olkg.canonicalize.dedup_from_raw` over the checkpoint:
-    the big mostly-unique triple stream is never fully shuffled (narrow
-    hash-column detect + broadcast join-back), the scaling-safe shape a
-    real 10^12-page run — which uses THIS resumable path — needs.  A
-    resume over a ``linked`` checkpoint written WITHOUT the hash columns
-    (a fused-mode run) falls back to the fused dedup and says so in
-    ``metrics['stages']['canonicalize']['dedup_plan']`` — never a silent
-    re-extract, never a wrong answer."""
+                 export_nt: bool = True) -> dict:
+    """Returns a metrics dict (stage wall times, row counts, triples/sec)."""
     fsio.mkdirs(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
     metrics: dict = {"run_id": run_id, "stages": {}}
@@ -83,9 +68,6 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         t0 = time.time()
         linked = link_stage(extract_df, lcsh, hot_threshold=hot_threshold,
                             num_salts=num_salts)
-        if dedup_postwrite:
-            from .canonicalize import with_dedup_write_cols
-            linked = with_dedup_write_cols(linked)
         write_stage(linked, out_dir, "linked")
         wall = int((time.time() - t0) * 1000)
         append_lineage(spark, out_dir, run_id, "linked",
@@ -99,41 +81,23 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         metrics["stages"]["canonicalize"] = {"skipped": True}
     else:
         t0 = time.time()
-        dstats: dict = {}
-        dcleanup: list = []
-        if dedup_postwrite and {"h1", "h2", "uid"} <= set(linked.columns):
-            # decoupled dedup over the linked checkpoint (see docstring)
-            from .canonicalize import dedup_from_raw
-            edges = dedup_from_raw(linked, stats=dstats,
-                                   detect=dedup_detect, cleanup=dcleanup)
-        else:
-            if dedup_postwrite:
-                # resumed over a fused-mode linked checkpoint (no hash
-                # cols): recomputing uids across the detect/remove jobs
-                # would not be re-scan-stable, so dedup fused — on record
-                dstats["dedup_plan"] = "fused-fallback(no-hash-cols)"
-            # the linked checkpoint is already materialized, so 'auto'
-            # dedup can size itself from EXACT numbers: a metadata-only
-            # parquet count and the scan's task count
-            # (bytes / maxPartitionBytes)
-            n_linked = linked.count()
-            fs, p = fsio._hadoop_fs(spark, pjoin(out_dir, "linked"))
-            linked_bytes = fs.getContentSummary(p).getLength()
-            maxpb = _parse_size_bytes(spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"))
-            n_tasks = max(1, -(-linked_bytes // maxpb))
-            from .canonicalize import _EDGE_COLS
-            edges = dedup_edges(linked.select(*_EDGE_COLS),
-                                strategy="auto",
-                                est_total_rows=n_linked,
-                                est_rows_per_task=n_linked / n_tasks)
+        # the linked checkpoint is already materialized, so the dedup sizes
+        # itself from EXACT numbers: a metadata-only parquet count and the
+        # scan's task count (bytes / maxPartitionBytes)
+        n_linked = linked.count()
+        fs, p = fsio._hadoop_fs(spark, pjoin(out_dir, "linked"))
+        linked_bytes = fs.getContentSummary(p).getLength()
+        maxpb = _parse_size_bytes(spark.conf.get(
+            "spark.sql.files.maxPartitionBytes", "134217728"))
+        n_tasks = max(1, -(-linked_bytes // maxpb))
+        edges = dedup_edges(linked.select(*_EDGE_COLS),
+                            est_total_rows=n_linked,
+                            est_rows_per_task=n_linked / n_tasks)
         write_stage(edges, out_dir, "edges")
-        for cached in dcleanup:
-            cached.unpersist()
         wall = int((time.time() - t0) * 1000)
         append_lineage(spark, out_dir, run_id, "edges",
                        read_stage(spark, out_dir, "edges"), wall)
-        metrics["stages"]["canonicalize"] = {"wall_ms": wall, **dstats}
+        metrics["stages"]["canonicalize"] = {"wall_ms": wall}
 
     edges = read_stage(spark, out_dir, "edges")
 
@@ -203,7 +167,7 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
                           repartition_by_url: int | None = None
                           ) -> tuple[int, float]:
     """(est_total_triples, est_rows_per_map_task) for the extract stream —
-    the inputs dedup_edges(strategy='auto') sizes itself from.
+    the inputs dedup_edges sizes its plan from.
 
     Cost: one metadata-only parquet count, one Hadoop-FS content summary,
     and ~``sample_pages`` rows extracted DRIVER-side through the pure-Python
@@ -269,14 +233,7 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
                       num_salts: int = 16,
                       repartition_by_url: int | None = None,
                       with_canonical_map: bool = True,
-                      dedup_pages: bool = False,
-                      dedup_strategy: str = "auto",
-                      dedup_partitions: int | None = None,
-                      dedup_postwrite: bool = False,
-                      dedup_detect: str = "hashagg",
-                      keep_raw: bool = False,
-                      est_total_rows: int | None = None,
-                      est_rows_per_task: float | None = None) -> dict:
+                      dedup_pages: bool = False) -> dict:
     """Single-materialization, SINGLE-EXTRACTION variant.
 
     The expensive Python extraction UDF runs exactly once per page: the big
@@ -290,6 +247,13 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     two edge sets are disjoint by construction (tested), so the two local
     dedups compose to the global A4 dedup.
 
+    The direct-triple dedup is sized from :func:`estimate_extract_size` (a
+    driver-side sample, milliseconds): map-side partial aggregation for
+    small per-task row counts, prepartition then aggregate beyond
+    ~1.5M rows per map task (see olkg.canonicalize.dedup_edges).  The
+    estimate and the chosen plan are on record in
+    ``metrics['stages']['dedup_plan']``.
+
     ``run_pipeline`` is the durable, resumable path; this one is for
     throughput/scaling measurement (and for clusters where recompute beats
     intermediate durability).
@@ -298,36 +262,7 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     exact-deduplicated by content hash (url-min survivor) BEFORE extraction
     so duplicate pages never pay the Python extraction cost.  Output triples
     are unchanged whenever duplicate pages carry identical text (same
-    (s,p,o) net effect); page/audit counts then refer to distinct pages.
-
-    ``dedup_postwrite``: DECOUPLE dedup from the extraction stage — the UDF
-    stream is written RAW (undeduped, a pure narrow map+write, annotated
-    with row hashes + uids), and dedup runs as a separate job over the raw
-    parquet that never shuffles the full rows (see
-    olkg.canonicalize.dedup_from_raw).  This is the scaling-safe shape: the
-    Python-bound extract stage and the shuffle-bound dedup are measured and
-    scheduled independently (on a cluster they also overlap across jobs),
-    and the round-3 scaling decomposition showed the FUSED plan's shuffle
-    coupling is what capped extract-stage scaling at 2.4M pages.
-    ``dedup_strategy``/``dedup_partitions`` are ignored in this mode; no
-    driver-side sampler runs (the raw table gives exact sizes for free).
-    ``dedup_detect`` picks the duplicate-detection formulation
-    ('hashagg' default / 'window' — see olkg.canonicalize.dedup_from_raw).
-
-    RETENTION CONTRACT (``keep_raw``): the default ``False`` reclaims the
-    raw stage table with a DELETE-AFTER-VERIFY — the deduped edges are
-    written first, then the exactness census (raw rows == kept rows +
-    detected drops, a metadata-only parquet count) must hold before the
-    delete; a mismatch raises and leaves the raw table in place for
-    forensics.  At 10^12 rows the raw table roughly doubles the output
-    footprint, so reclaim is the safe-at-scale default.  ``keep_raw=True``
-    retains it as a recovery checkpoint / lineage anchor (debugging,
-    re-runs of downstream stages without re-extraction).
-
-    ``est_total_rows``/``est_rows_per_task``: pre-computed sampler outputs
-    for dedup_strategy='auto' (see :func:`estimate_extract_size`) — pass
-    them to skip the in-run sampler, e.g. when benchmarking repeated runs
-    over the same corpus."""
+    (s,p,o) net effect); page/audit counts then refer to distinct pages."""
     from pyspark.sql import Observation
 
     from .extract import (audit_pages, extract_triples_with_side_sink,
@@ -356,72 +291,18 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
     stream = extract_triples_with_side_sink(
         pages, sides_sink, repartition_by_url=repartition_by_url,
         side_count_acc=side_acc)
-    if dedup_postwrite:
-        # decoupled shape: (a) raw write — pure narrow map, the Python
-        # extraction never shares a stage with a shuffle; (b) dedup job over
-        # the raw parquet — narrow hash-column shuffle + anti-join (full
-        # rows move zero times on the broadcast plan)
-        from .canonicalize import dedup_from_raw, with_dedup_write_cols
-        fsio.delete(spark, pjoin(out_dir, "edges_raw"))
-        write_stage(with_dedup_write_cols(stream), out_dir, "edges_raw")
-        t1 = time.time()
-        metrics["stages"]["extract_raw"] = {
-            "wall_ms": int((t1 - t0) * 1000)}
-        dstats: dict = {}
-        dcleanup: list = []
-        obs_direct = Observation("direct_edges")
-        direct_edges = dedup_from_raw(
-            read_stage(spark, out_dir, "edges_raw"), stats=dstats,
-            detect=dedup_detect, cleanup=dcleanup).observe(
-            obs_direct, F.count(F.lit(1)).alias("n"))
-        write_stage(direct_edges, out_dir, "edges/d=0")
-        for cached in dcleanup:       # detect intermediates are consumed now
-            cached.unpersist()
-        n_direct = obs_direct.get["n"]
-        dd_metrics = {"wall_ms": None, "rows": n_direct, **dstats}
-        if not keep_raw:
-            # delete-after-verify (see retention contract in the docstring):
-            # an empty-projection parquet scan of the raw table (cheap —
-            # no columns decoded — though still a real job; Spark's v1
-            # parquet reader does not rewrite count(*) to footer metadata),
-            # then the exactness census gates the reclaim — a mismatch
-            # keeps raw on disk and fails loudly
-            raw_rows = read_stage(spark, out_dir, "edges_raw").count()
-            expected = (n_direct or 0) + dstats.get("n_dropped_dups", 0)
-            if raw_rows != expected:
-                raise RuntimeError(
-                    f"postwrite dedup census mismatch: raw={raw_rows} != "
-                    f"kept={n_direct} + dropped="
-                    f"{dstats.get('n_dropped_dups')} — edges_raw retained "
-                    f"for forensics, not deleted")
-            fsio.delete(spark, pjoin(out_dir, "edges_raw"))
-            dd_metrics["raw_rows"] = raw_rows
-        dd_metrics["raw_retained"] = keep_raw
-        dd_metrics["wall_ms"] = int((time.time() - t1) * 1000)
-        metrics["stages"]["dedup_direct"] = dd_metrics
-    else:
-        est_total, est_per_task = est_total_rows, est_rows_per_task
-        if dedup_strategy == "auto" and est_per_task is None:
-            # cheap sampler (driver-side, milliseconds): sizes the dedup
-            # plan — map-side partial agg below ~1.5M rows/map task,
-            # explicit prepartition + complete agg above (3x measured,
-            # BENCH/BASELINE.md)
-            est_total, est_per_task = estimate_extract_size(
-                spark, pages_path, repartition_by_url=repartition_by_url)
-        if dedup_strategy == "auto":
-            from .canonicalize import plan_dedup
-            metrics["stages"]["dedup_plan"] = {
-                "est_total_rows": est_total,
-                "est_rows_per_task": int(est_per_task),
-                "chosen": plan_dedup(est_total, est_per_task)[0]}
-        obs_direct = Observation("direct_edges")
-        direct_edges = dedup_edges(stream, strategy=dedup_strategy,
-                                   num_partitions=dedup_partitions,
-                                   est_total_rows=est_total,
-                                   est_rows_per_task=est_per_task).observe(
-            obs_direct, F.count(F.lit(1)).alias("n"))
-        write_stage(direct_edges, out_dir, "edges/d=0")
-        n_direct = obs_direct.get["n"]
+    est_total, est_per_task = estimate_extract_size(
+        spark, pages_path, repartition_by_url=repartition_by_url)
+    metrics["stages"]["dedup_plan"] = {
+        "est_total_rows": est_total,
+        "est_rows_per_task": int(est_per_task),
+        "chosen": plan_dedup(est_total, est_per_task)[0]}
+    obs_direct = Observation("direct_edges")
+    direct_edges = dedup_edges(stream, est_total_rows=est_total,
+                               est_rows_per_task=est_per_task).observe(
+        obs_direct, F.count(F.lit(1)).alias("n"))
+    write_stage(direct_edges, out_dir, "edges/d=0")
+    n_direct = obs_direct.get["n"]
     metrics["stages"]["extract_dedup_direct"] = {
         "wall_ms": int((time.time() - t0) * 1000), "rows": n_direct}
 
@@ -513,16 +394,8 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
         "nodes_ms": results["nodes_ms"]}
 
     edges = read_stage(spark, out_dir, "edges")
-    # the lineage row carries the retention-contract census (raw == kept +
-    # dropped, raw_retained) so the reclaim verification survives the run
-    dedup_census = metrics["stages"].get("dedup_direct")
     append_lineage(spark, out_dir, run_id, "edges", edges,
-                   metrics["stages"]["link_dedup"]["wall_ms"],
-                   detail=json.dumps(
-                       {k: dedup_census[k]
-                        for k in ("rows", "n_dropped_dups", "raw_rows",
-                                  "raw_retained") if k in dedup_census})
-                   if dedup_census else None)
+                   metrics["stages"]["link_dedup"]["wall_ms"])
     # full per-stage lineage (north_rule): nodes + canonical_map read their
     # own checkpoints, so each census is one pruned column scan; the side
     # sink census (written during the extract stage) is a lineage row too,
@@ -564,48 +437,7 @@ def main(argv=None):
     ap.add_argument("--dedup-pages", action="store_true",
                     help="exact-dedup pages by content hash before extract "
                          "(fast mode only)")
-    ap.add_argument("--dedup-strategy", default="auto",
-                    choices=["auto", "partial", "prepartition"],
-                    help="edge dedup: 'auto' (default) sizes the plan from "
-                         "a cheap sample — partial agg for small per-task "
-                         "row counts, prepartition+complete agg beyond "
-                         "~1.5M rows/map task (3x measured; see "
-                         "olkg.canonicalize.dedup_edges)")
-    ap.add_argument("--dedup-partitions", type=int, default=None,
-                    help="partition count for --dedup-strategy prepartition "
-                         "(size to ~1M rows each)")
-    ap.add_argument("--dedup-postwrite", action="store_true",
-                    help="decouple dedup from the big stream: fast mode "
-                         "writes the extract stream raw (pure narrow map) "
-                         "and dedups as a separate job; durable mode "
-                         "annotates the linked checkpoint and dedups from "
-                         "it — either way only 24-byte hash rows shuffle "
-                         "(olkg.canonicalize.dedup_from_raw)")
-    ap.add_argument("--dedup-detect", default="hashagg",
-                    choices=["hashagg", "window"],
-                    help="duplicate-detect formulation for "
-                         "--dedup-postwrite: 'hashagg' (sort-free complete "
-                         "aggregate, default) or 'window' (sort-based)")
-    ap.add_argument("--keep-raw", action="store_true",
-                    help="retain the edges_raw stage table as a recovery "
-                         "checkpoint after the decoupled dedup (default: "
-                         "delete-after-verify — the exactness census "
-                         "raw == kept + dropped gates the reclaim; at "
-                         "scale the raw table doubles the output "
-                         "footprint)")
-    ap.add_argument("--no-keep-raw", action="store_true",
-                    help="deprecated no-op: raw reclaim is the default "
-                         "(see --keep-raw)")
     args = ap.parse_args(argv)
-    if args.no_keep_raw:
-        # the round-6 default flip made this a no-op; warn so invocations
-        # that relied on it noticing the retention default changed
-        import warnings
-        warnings.warn(
-            "--no-keep-raw is deprecated and a no-op: raw-table reclaim "
-            "(delete-after-verify) has been the DEFAULT since the round-6 "
-            "retention-contract change; pass --keep-raw to retain "
-            "edges_raw as a recovery checkpoint", UserWarning)
 
     from .session import build_session
     spark = build_session(app_name="olkg-pipeline", master=args.master,
@@ -621,20 +453,13 @@ def main(argv=None):
                                     hot_threshold=args.hot_threshold,
                                     num_salts=args.num_salts,
                                     repartition_by_url=args.repartition_by_url,
-                                    dedup_pages=args.dedup_pages,
-                                    dedup_strategy=args.dedup_strategy,
-                                    dedup_partitions=args.dedup_partitions,
-                                    dedup_postwrite=args.dedup_postwrite,
-                                    dedup_detect=args.dedup_detect,
-                                    keep_raw=args.keep_raw)
+                                    dedup_pages=args.dedup_pages)
     else:
         metrics = run_pipeline(spark, args.pages, args.out, lcsh=lcsh,
                                resume=not args.no_resume,
                                hot_threshold=args.hot_threshold,
                                num_salts=args.num_salts,
-                               repartition_by_url=args.repartition_by_url,
-                               dedup_postwrite=args.dedup_postwrite,
-                               dedup_detect=args.dedup_detect)
+                               repartition_by_url=args.repartition_by_url)
     print(json.dumps(metrics))
     spark.stop()
 

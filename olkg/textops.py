@@ -2,9 +2,9 @@
 
 These are the operations a large-scale corpus pipeline needs beyond the KG
 mapping itself: deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard),
-language id, quality scoring, token counting, fingerprinting.  All hot paths
-are native Catalyst expressions (JVM-side, whole-stage codegen); Python
-appears only in the MinHash/SimHash signature UDFs, which are Arrow-batched.
+language id, quality scoring, token counting, fingerprinting.  Every operator
+is built from native Catalyst expressions (JVM-side, whole-stage codegen); no
+Python UDF runs in this module.
 
 Scale notes:
 - exact dedup: one hash-partitioned aggregate on a fixed-width digest, never

@@ -508,15 +508,6 @@ GENERIC_FIELDS = {
 }
 
 
-# Fields whose common shapes are ALSO emitted natively by olkg.nativex
-# (Catalyst variant expressions).  When a record passes the native
-# conformance gate, the Spark fast path emits these JVM-side and the Python
-# extractor skips them (skip_hot=True) — the two emissions are disjoint and
-# their union equals the full Python output (tests/test_nativex.py).
-HOT_NATIVE_FIELDS = frozenset(GENERIC_FIELDS) | {
-    "languages", "title", "publish_country", "covers"}
-
-
 class EditionExtractor(_Emitter):
     rdf_type = V.BIBO_BOOK  # lib/edition.rb:8
 
@@ -549,16 +540,9 @@ class EditionExtractor(_Emitter):
         "covers": "parse_edition_covers",
     }
 
-    def __init__(self, data, db=None, skip_hot: bool = False):
-        super().__init__(data, db=db)
-        self.skip_hot = skip_hot
-
     def run(self):
-        """parse_data (lib/edition.rb:28-36): dispatch else generic-field map.
-        ``skip_hot`` skips the natively-emitted fields (HOT_NATIVE_FIELDS)."""
+        """parse_data (lib/edition.rb:28-36): dispatch else generic-field map."""
         for key in self.data.keys():
-            if self.skip_hot and key in HOT_NATIVE_FIELDS:
-                continue
             m = self.DISPATCH.get(key)
             if m is not None:
                 getattr(self, m)(self.data[key])
@@ -942,16 +926,13 @@ EXTRACTORS = {
 }
 
 
-def extract_record(record_type: str, data: dict, db=None,
-                   skip_hot: bool = False) -> ExtractResult | None:
+def extract_record(record_type: str, data: dict,
+                   db=None) -> ExtractResult | None:
     """One dump record → triples + join side-rows.  Unknown types → None
-    (skipped, openlibrary_to_rdf.rb:34).  ``skip_hot`` (editions only)
-    omits the fields olkg.nativex emits JVM-side for conforming records."""
+    (skipped, openlibrary_to_rdf.rb:34)."""
     cls = EXTRACTORS.get(record_type)
     if cls is None:
         return None
-    if skip_hot and cls is EditionExtractor:
-        return cls(data, db=db, skip_hot=True).run()
     return cls(data, db=db).run()
 
 

@@ -74,8 +74,7 @@ def generate_corpus(clones: int, path: str,
     spark.stop()
 
 
-def run_at(cores: int, pages_path: str, dedup_mode: str = "fused",
-           dedup_detect: str = "hashagg",
+def run_at(cores: int, pages_path: str,
            scratch_root: str | None = None) -> dict:
     out = tempfile.mkdtemp(prefix=f"olkg_scale_{cores}_", dir=scratch_root)
     # fixed moderate heap at every level: on this VM, JVM heaps ≥32g degrade
@@ -98,10 +97,6 @@ def run_at(cores: int, pages_path: str, dedup_mode: str = "fused",
            "--hot-threshold", "50000",
            # north_rule: repartition pages by url-hash ahead of extraction
            "--repartition-by-url", str(cores * 2)]
-    if dedup_mode == "postwrite":
-        # delete-after-verify raw reclaim is the pipeline default now; the
-        # scratch footprint stays ~1x the output with the census asserted
-        cmd += ["--dedup-postwrite", "--dedup-detect", dedup_detect]
     t0 = time.time()
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env,
                           cwd=REPO)
@@ -129,14 +124,6 @@ def main():
                          "the legacy one-clique-per-entity corpus")
     ap.add_argument("--out-json", default="scaling.json",
                     help="artifact filename under BENCH/")
-    ap.add_argument("--dedup-detect", default="hashagg",
-                    choices=["hashagg", "window"],
-                    help="detect formulation for --dedup-mode postwrite")
-    ap.add_argument("--dedup-mode", default="fused",
-                    choices=["fused", "postwrite"],
-                    help="'postwrite' decouples dedup from the extract "
-                         "stage (raw write + hash-drop dedup job; see "
-                         "olkg.canonicalize.dedup_from_raw)")
     ap.add_argument("--storage", default="disk", choices=["disk", "tmpfs"],
                     help="where the page corpus and stage tables live: "
                          "'disk' (/tmp, the one virtio device) or 'tmpfs' "
@@ -180,8 +167,6 @@ def main():
         return {
             "clones": args.clones,
             "cluster_size": cs,
-            "dedup_mode": args.dedup_mode,
-            "dedup_detect": args.dedup_detect,
             "storage": args.storage,
             "parquet_codec": os.environ.get("OLKG_PARQUET_CODEC", "snappy"),
             "pages": any_t.get("pages"),
@@ -199,9 +184,7 @@ def main():
         for cores in (lo, hi):  # interleave levels against host drift
             print(f"trial {i + 1}/{args.trials}: local[{cores}] ...",
                   flush=True)
-            m = run_at(cores, pages_path, dedup_mode=args.dedup_mode,
-                       dedup_detect=args.dedup_detect,
-                       scratch_root=scratch_root)
+            m = run_at(cores, pages_path, scratch_root=scratch_root)
             rec = {"wall_s": m["wall_s"], "triples": m["triples"],
                    "pages": m["pages"],
                    "tps": round(m["triples"] / m["wall_s"], 1),

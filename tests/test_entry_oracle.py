@@ -77,6 +77,22 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"name", "n"}
 
 
+def test_session_cache_evicts_stopped_applications(spark):
+    """Inserting a live session's entry drops every entry of another
+    application, whose handles are bound to a stopped SparkContext."""
+    live = spark.sparkContext.applicationId
+    dead = ("kg", "app-stopped-0000")
+    entry_mod._CACHE[dead] = ("stale", "handles")
+    held = entry_mod._CACHE.pop(("kg", live), None)   # force a fresh insert
+    entry_mod._kg(spark)
+    if held is not None:
+        for df in held:
+            df.unpersist()
+    assert dead not in entry_mod._CACHE
+    assert ("kg", live) in entry_mod._CACHE
+    assert all(k[1] == live for k in entry_mod._CACHE)
+
+
 def test_ann_lsh_recall_vs_bruteforce(spark):
     """The LSH path must find a reasonable fraction of the true top-5."""
     from olkg.simsearch import cosine_topk_bruteforce, cosine_topk_lsh

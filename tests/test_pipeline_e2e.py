@@ -178,6 +178,10 @@ def test_fast_pipeline_matches_golden(spark, corpus, tmp_path_factory):
     assert metrics["triples"] == len(golden)
     assert metrics["text_mismatches"] == 0
     assert metrics["pages"] == len(corpus)
+    # fast-path lineage covers every stage including the side sink census
+    lineage = spark.read.parquet(out + "/lineage")
+    stages = {r.stage for r in lineage.select("stage").distinct().collect()}
+    assert {"edges", "nodes", "canonical_map", "sides"} <= stages
 
 
 def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
@@ -198,91 +202,6 @@ def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
     p, r = precision_recall(result, golden)
     assert p == 1.0 and r == 1.0
     assert metrics["pages"] == len(corpus)  # 3x input deduped to 1x
-
-
-def test_fast_pipeline_dedup_pages_with_postwrite(spark, corpus,
-                                                  tmp_path_factory):
-    """A real crawl run wants BOTH page dedup (duplicate pages never pay
-    extraction) and the decoupled post-write edge dedup — composed, the
-    output is still golden-identical and duplicate-free."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_dp_pw_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_dp_pw")) + "/pages.parquet"
-    dup = build_pages_df(spark, corpus)
-    dup.union(dup).union(dup).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                dedup_pages=True, dedup_postwrite=True)
-    edges = spark.read.parquet(out + "/edges")
-    result = edges_set(spark, out)
-    assert edges.count() == len(result), "edges table contains duplicates"
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0
-    assert metrics["pages"] == len(corpus)      # 3x input deduped to 1x
-    assert metrics["stages"]["dedup_direct"]["dedup_plan"].startswith("hashagg")
-    import os
-    # default keep_raw=False reclaims the raw table after the exactness
-    # census (raw == kept + dropped) verified the decomposition
-    assert not os.path.exists(out + "/edges_raw")
-    assert metrics["stages"]["dedup_direct"]["raw_rows"] == (
-        metrics["stages"]["dedup_direct"]["rows"]
-        + metrics["stages"]["dedup_direct"]["n_dropped_dups"])
-
-
-def test_durable_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
-    """run_pipeline(dedup_postwrite=True): the linked checkpoint carries the
-    dedup hash/uid columns, the edges stage runs the decoupled
-    dedup_from_raw over it (plan on record), output golden-identical and
-    duplicate-free; a resume that drops edges+nodes reuses the annotated
-    linked checkpoint across the new stage boundary; and a postwrite
-    resume over a FUSED-mode linked checkpoint (no hash cols) falls back
-    to the fused dedup, recorded, same answer."""
-    out = str(tmp_path_factory.mktemp("olkg_dur_pw_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_dur_pw")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                           hot_threshold=100, num_salts=4,
-                           dedup_postwrite=True)
-    linked = spark.read.parquet(out + "/linked")
-    assert {"h1", "h2", "uid"} <= set(linked.columns)
-    edges = spark.read.parquet(out + "/edges")
-    assert set(edges.columns) == {"subj", "pred", "obj", "obj_kind",
-                                  "obj_datatype"}
-    result = edges_set(spark, out)
-    assert edges.count() == len(result), "edges table contains duplicates"
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0
-    assert metrics["stages"]["canonicalize"]["dedup_plan"].startswith("hashagg")
-
-    # resume across the new boundary: linked (with hash cols) is reused,
-    # edges recomputed via the decoupled path, identical output
-    shutil.rmtree(out + "/edges")
-    shutil.rmtree(out + "/nodes")
-    m2 = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                      hot_threshold=100, num_salts=4, dedup_postwrite=True)
-    assert m2["stages"]["extract"] == {"skipped": True}
-    assert m2["stages"]["link"] == {"skipped": True}
-    assert m2["stages"]["canonicalize"]["dedup_plan"].startswith("hashagg")
-    assert edges_set(spark, out) == result
-
-    # fused-mode checkpoint + postwrite resume → recorded fallback
-    out2 = str(tmp_path_factory.mktemp("olkg_dur_fb_out"))
-    run_pipeline(spark, pages_path, out2, lcsh=lcsh, resume=True,
-                 hot_threshold=100, num_salts=4, with_canonical_map=False,
-                 export_nt=False)
-    shutil.rmtree(out2 + "/edges")
-    shutil.rmtree(out2 + "/nodes")
-    m3 = run_pipeline(spark, pages_path, out2, lcsh=lcsh, resume=True,
-                      hot_threshold=100, num_salts=4,
-                      with_canonical_map=False, export_nt=False,
-                      dedup_postwrite=True)
-    assert (m3["stages"]["canonicalize"]["dedup_plan"]
-            == "fused-fallback(no-hash-cols)")
-    assert edges_set(spark, out2) == result
 
 
 def test_direct_join_born_disjointness(spark, corpus):
@@ -368,24 +287,43 @@ def test_ntriples_dated_single_file(spark, pipeline_out, tmp_path):
     assert n == edges.count()
 
 
-def test_fast_pipeline_prepartition_dedup(spark, corpus, tmp_path_factory):
-    """dedup_strategy='prepartition' (the >2M-rows-per-task scale path)
-    produces the identical golden edge set."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_prepart_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_pp")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False,
-                                dedup_strategy="prepartition",
-                                dedup_partitions=8)
-    result = edges_set(spark, out)
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0
-    assert metrics["triples"] == len(golden)
+def test_fast_pipeline_prepartition_dedup(spark):
+    """Past AUTO_PREPARTITION_ROWS_PER_TASK (the scale shape the fast
+    pipeline's sampler can pick), dedup_edges repartitions on the five edge
+    columns and aggregates only after that exchange — no map-side partial
+    aggregate — with output identical to dropDuplicates."""
+    import contextlib
+    import io
+    import re
+
+    from olkg.canonicalize import (AUTO_PREPARTITION_ROWS_PER_TASK,
+                                   dedup_edges)
+    rows = ([("s%d" % i, "p", "o%d" % (i % 7), "uri", None)
+             for i in range(40)]
+            + [("s1", "p", "o1", "uri", None)] * 5      # true dups
+            + [("s2", "p", "o2", "uri", "dt")] * 3)     # dups w/ datatype
+    cols = ("subj string, pred string, obj string, obj_kind string, "
+            "obj_datatype string")
+    stream = spark.createDataFrame(rows, cols)
+    got = dedup_edges(stream, est_total_rows=8_000_000,
+                      est_rows_per_task=AUTO_PREPARTITION_ROWS_PER_TASK + 1)
+
+    # the plan before execution: one linear tree, root first
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        got.explain()
+    plan = buf.getvalue().splitlines()
+    exch = [i for i, ln in enumerate(plan) if re.search(
+        r"Exchange hashpartitioning\(subj#\d+, pred#\d+, obj#\d+, "
+        r"obj_kind#\d+, obj_datatype#\d+, 8\)", ln)]
+    assert exch, "\n".join(plan)
+    above, below = plan[:exch[0]], plan[exch[0] + 1:]
+    assert any("HashAggregate" in ln for ln in above), "\n".join(plan)
+    assert not any("HashAggregate" in ln for ln in below), "\n".join(plan)
+
+    want = list(map(tuple, stream.dropDuplicates().collect()))
+    got_rows = list(map(tuple, got.collect()))
+    assert len(got_rows) == len(want) and set(got_rows) == set(want)
 
 
 def test_dedup_pages_preserves_distinct_content_per_url(spark):
@@ -408,7 +346,7 @@ def test_dedup_pages_preserves_distinct_content_per_url(spark):
 
 
 def test_plan_dedup_sizing_rule():
-    """'auto' flips to prepartition past the measured per-task threshold and
+    """plan_dedup flips to prepartition past the measured per-task threshold and
     sizes reduce partitions to ~1M rows; stays partial below it."""
     from olkg.canonicalize import plan_dedup
     # 57M rows over 16 map tasks (the measured 2.4M-page shape) → prepartition
@@ -437,7 +375,7 @@ def test_estimate_extract_size_sampler(spark, corpus, tmp_path_factory):
 
 
 def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory):
-    """dedup_strategy='auto' (the default) still reproduces golden."""
+    """The sampler-sized dedup reproduces golden and records its plan."""
     from olkg.pipeline import run_pipeline_fast
     out = str(tmp_path_factory.mktemp("olkg_auto_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_auto")) + "/pages.parquet"
@@ -445,108 +383,9 @@ def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory):
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
     metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
                                 hot_threshold=100, num_salts=4,
-                                with_canonical_map=False,
-                                dedup_strategy="auto")
+                                with_canonical_map=False)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
     assert p == 1.0 and r == 1.0
     assert metrics["stages"]["dedup_plan"]["chosen"] == "partial"
-
-
-def test_dedup_from_raw_exact_and_plans(spark):
-    """dedup_from_raw equals dropDuplicates on both plans (broadcast drop
-    set and shuffled anti-join), and its DETECT pass scans only the three
-    long columns (columnar pruning — no string decode in the narrow pass)."""
-    from olkg.canonicalize import dedup_from_raw, with_dedup_write_cols
-    rows = ([("s%d" % i, "p", "o%d" % (i % 7), "uri", None)
-             for i in range(40)]        # 7 distinct (s varies → 40 distinct)
-            + [("s1", "p", "o1", "uri", None)] * 5     # true dups
-            + [("s2", "p", "o2", "uri", "dt")] * 3)    # dups w/ datatype
-    cols = "subj string, pred string, obj string, obj_kind string, obj_datatype string"
-    stream = spark.createDataFrame(rows, cols)
-    raw = with_dedup_write_cols(stream)
-    want = set(map(tuple, stream.dropDuplicates().collect()))
-
-    for detect, bc_plan, sh_plan in (
-            ("hashagg", "hashagg-broadcast", "hashagg-shuffle"),
-            ("window", "hashdrop-broadcast", "hashdrop-shuffle")):
-        for max_bc in (1 << 30, 0):      # broadcast plan, then shuffle plan
-            stats, cleanup = {}, []
-            got = dedup_from_raw(raw, max_broadcast_drops=max_bc,
-                                 stats=stats, detect=detect, cleanup=cleanup)
-            got_set = list(map(tuple, got.collect()))
-            assert len(got_set) == len(want) and set(got_set) == want
-            assert stats["n_dropped_dups"] == 5 + 2
-            assert stats["dedup_plan"] == (bc_plan if max_bc else sh_plan)
-            if detect == "hashagg":
-                assert stats["n_dup_groups"] == 2
-            assert len(cleanup) == 1     # the detect intermediate, on record
-            for cached in cleanup:
-                cached.unpersist()
-
-    # columnar pruning evidence on a real parquet-backed raw table
-    import contextlib, io, tempfile
-    path = tempfile.mkdtemp(prefix="olkg_raw_prune_") + "/raw.parquet"
-    raw.write.mode("overwrite").parquet(path)
-    raw_pq = spark.read.parquet(path)
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("h1", "h2")
-    narrow = (raw_pq.select("h1", "h2", "uid")
-              .withColumn("_keep", F.min("uid").over(w)))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        narrow.explain(mode="formatted")
-    plan = buf.getvalue()
-    rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert rs and all("subj" not in ln and "obj" not in ln for ln in rs), plan
-
-
-def test_fast_pipeline_postwrite_dedup(spark, corpus, tmp_path_factory):
-    """dedup_postwrite (raw write + decoupled hash-drop dedup job)
-    reproduces the identical golden edge set with no duplicate rows, and
-    records the decoupled stage walls + chosen dedup plan in metrics."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_pw_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_pw")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                dedup_postwrite=True, keep_raw=True)
-    edges = spark.read.parquet(out + "/edges")
-    n_rows = edges.count()
-    result = edges_set(spark, out)
-    assert n_rows == len(result), "edges table contains duplicate rows"
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0, (
-        f"P={p} R={r}; spurious={list(result - golden)[:5]} "
-        f"missing={list(golden - result)[:5]}")
-    assert metrics["triples"] == len(golden)
-    assert metrics["text_mismatches"] == 0
-    assert "extract_raw" in metrics["stages"]
-    assert metrics["stages"]["dedup_direct"]["dedup_plan"] == \
-        "hashagg-broadcast"
-    # keep_raw=True retains the raw stage table (recovery checkpoint /
-    # lineage anchor); its row count equals deduped rows + detected drops —
-    # the decomposition is exact (the default keep_raw=False verifies this
-    # same census before reclaiming the raw table)
-    raw = spark.read.parquet(out + "/edges_raw")
-    assert raw.count() == (metrics["stages"]["dedup_direct"]["rows"]
-                           + metrics["stages"]["dedup_direct"]["n_dropped_dups"])
-    # fast-path lineage covers every stage including the side sink census
-    lineage = spark.read.parquet(out + "/lineage")
-    stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert {"edges", "nodes", "canonical_map", "sides"} <= stages
-    # round-7: the edges lineage row carries the retention-contract census
-    # itself, so a resumed run can verify raw == kept + dropped without the
-    # original driver's metrics dict
-    import json as _json
-    detail_rows = (lineage.filter(F.col("stage") == "edges")
-                   .select("detail").distinct().collect())
-    census = _json.loads(detail_rows[0]["detail"])
-    assert census["raw_retained"] is True
-    assert census["rows"] == metrics["stages"]["dedup_direct"]["rows"]
-    assert (census["rows"] + census["n_dropped_dups"]) == raw.count()
