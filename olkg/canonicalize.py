@@ -146,8 +146,26 @@ def _author_name_bands(author_names: DataFrame, num_bands: int,
             .dropDuplicates())
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a ``localCheckpoint``/``checkpoint`` result.
+
+    A checkpointed DataFrame reads a ``LogicalRDD`` whose RDD stays
+    registered (and its blocks cached) until unpersisted or garbage
+    collected; ``DataFrame.unpersist`` does not reach it.  Callers of
+    :func:`connected_components` release the returned map with this once
+    they have written it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _plan_nodes(df: DataFrame) -> int:
+    """Node count of ``df``'s analyzed logical plan (no Spark action)."""
+    def walk(p):
+        ch = p.children()
+        return 1 + sum(walk(ch.apply(i)) for i in range(ch.size()))
+    return walk(df._jdf.queryExecution().analyzed())
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20,
-                         truncate_every: int = 5,
                          reliable_dir: str | None = None,
                          max_block_df: int | None = 100_000,
                          dropped_stats: dict | None = None,
@@ -167,8 +185,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
       less payload at web scale; false-merge P ~ n^2/2^128 ~ 1e-15 at 10^12
       entities);
     - each iteration is TWO key-partitioned window aggregations -- min-over-
-      block then min-over-entity -- with the changed-row census piggybacked
-      via ``observe`` on the SAME action (no separate convergence job);
+      block then min-over-entity;
     - the graph is CONTRACTED once the census shows most rows stable (and
       unconditionally after iteration 0, which computes the 2-hop min and
       therefore already clusters): one row per (label, block) with
@@ -184,21 +201,50 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
       blocks collapse geometrically and never pay it.  Past ``max_iter//2``
       it engages unconditionally as a convergence backstop.
 
-    Lineage is truncated every ``truncate_every`` iterations AFTER the
-    census materializes (every iteration is observed; an unobserved
-    iteration can never read as converged): reliable ``checkpoint`` into
-    ``reliable_dir`` when given (the durable path -- an executor loss on a
-    real cluster recovers from distributed storage), else
-    ``localCheckpoint`` (fast path; re-derivable state).
+    ONE LINEAGE-TRUNCATING ACTION PER STEP.  A step is the mergeable-state
+    build, one label-propagation iteration, or one contraction; each is a
+    single eager ``localCheckpoint`` (fast path; re-derivable state) or a
+    reliable ``checkpoint`` into ``reliable_dir`` (the durable path -- an
+    executor loss on a real cluster recovers from distributed storage).
+    Every step's plan therefore starts from the previous step's checkpoint,
+    so plan size is constant across iterations (``cc_stats["plan_nodes"]``).
+    The step's censuses ride on that same action through ``Observation``:
+    super-block drops (build), row count (every step) and changed count
+    (iterations) -- no separate count, first or pin job.  A contraction
+    mapping is a lazy projection of the checkpointed state it came from;
+    that state is held until the unwind, every other state is released as
+    soon as the loop moves past it, and the held ones once the result is
+    pinned.  The returned map is itself a local checkpoint: release it with
+    :func:`release_checkpoint` once it is written.
 
     ``cc_stats`` (dict, optional) receives: iterations, jump_engaged_at,
     changed_hist, iter_walls (per-iteration seconds), contractions
-    (at_iter / rows_before / rows_after censuses -- no silent shrinks).
+    (at_iter / rows_before / rows_after censuses -- no silent shrinks),
+    converged, plan_nodes (analyzed-plan node count per step: build,
+    iterations, contractions).
     """
+    import itertools
     import time as _time
     from pyspark.sql import Observation
 
     spark = pairs.sparkSession
+    if reliable_dir is not None:
+        spark.sparkContext.setCheckpointDir(reliable_dir)
+    plan_nodes: dict = {"build": [], "iterations": [], "contractions": []}
+    step_ids = itertools.count()
+
+    def step(kind: str, df: DataFrame, cols: list, **census):
+        """Materialize ``df.select(cols)`` with one eager checkpoint; the
+        row count and the ``census`` aggregates are observed on ``df`` by
+        that same action.  Returns (checkpoint, observed values)."""
+        obs = Observation(f"cc_step_{next(step_ids)}")
+        out = (df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                          *[e.alias(k) for k, e in census.items()])
+               .select(*cols))
+        plan_nodes[kind].append(_plan_nodes(out))
+        out = (out.checkpoint(eager=True) if reliable_dir is not None
+               else out.localCheckpoint(eager=True))
+        return out, obs.get
 
     def _h(col: str):
         return F.struct(F.xxhash64(F.col(col)).alias("h1"),
@@ -207,11 +253,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     enc = pairs.select(_h("entity").alias("eh"), _h("block_key").alias("bh"),
                        F.col("entity"))
     pe = enc.select("eh", "bh").dropDuplicates(["eh", "bh"])
-    # entity-string dictionary: only read AFTER convergence to restore the
-    # min-URI representative; min() makes a (2^-128) hash collision
-    # deterministic rather than racy
-    ent_names = (enc.groupBy("eh").agg(F.min("entity").alias("entity"))
-                 .persist())
+    # entity-string dictionary: read once, by the unwind after convergence,
+    # to restore the min-URI representative (so it is not cached); min()
+    # makes a (2^-128) hash collision deterministic rather than racy
+    ent_names = enc.groupBy("eh").agg(F.min("entity").alias("entity"))
 
     # only keys shared by >=2 entities can merge anything -- this drops the
     # (at web scale, vast) unique-identifier majority before the loop;
@@ -222,33 +267,36 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     # unrelated entities into one giant component, and blows up both the
     # window sizes and the iteration count (component diameter).  This is
     # the standard entity-resolution guard; pass ``dropped_stats`` (a dict)
-    # to census what the cap discarded (no silent caps).
-    dfs = (pe.groupBy("bh").agg(F.count(F.lit(1)).alias("df"))
-           .persist())  # census + mergeable filter share one computation
+    # to census what the cap discarded (no silent caps) -- observed on the
+    # block census inside the state build's own action.
+    dfs = pe.groupBy("bh").agg(F.count(F.lit(1)).alias("df"))
     keep = F.col("df") >= 2
+    drops = None
     if max_block_df is not None:
         keep = keep & (F.col("df") <= max_block_df)
         if dropped_stats is not None:
-            row = (dfs.filter(F.col("df") > max_block_df)
-                   .agg(F.count(F.lit(1)).alias("k"),
-                        F.sum("df").alias("rows")).first())
-            dropped_stats["dropped_super_blocks"] = row["k"] or 0
-            dropped_stats["dropped_pair_rows"] = row["rows"] or 0
+            drops = Observation(f"cc_step_{next(step_ids)}")
+            big = F.col("df") > max_block_df
+            dfs = dfs.observe(drops,
+                              F.count(F.when(big, 1)).alias("k"),
+                              F.sum(F.when(big, F.col("df"))).alias("rows"))
     mergeable = dfs.filter(keep).select("bh")
-    state = (pe.join(mergeable.hint("SHUFFLE_HASH"), "bh")
-             .withColumn("label", F.col("eh"))
-             .persist())
-    n_rows = state.count()
-    dfs.unpersist()
-    if reliable_dir is not None:
-        spark.sparkContext.setCheckpointDir(reliable_dir)
+    state, seen = step(
+        "build", pe.join(mergeable.hint("SHUFFLE_HASH"), "bh"),
+        ["eh", "bh", F.col("eh").alias("label")])
+    n_rows = seen["rows"]
+    if drops is not None:
+        dropped_stats["dropped_super_blocks"] = drops.get["k"] or 0
+        dropped_stats["dropped_pair_rows"] = drops.get["rows"] or 0
 
     wk = Window.partitionBy("bh")
     we = Window.partitionBy("eh")
     changed_hist: list[int] = []
     iter_walls: list[float] = []
     contractions: list[dict] = []
-    maps: list[DataFrame] = []   # contraction mappings, outermost first
+    # checkpointed states each contraction started from, outermost first:
+    # their (entity -> label) projections are the unwind's mappings
+    sources: list[DataFrame] = []
     jump_on = False
     jump_engaged_at: int | None = None
     last_contract = -2
@@ -256,7 +304,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         t_iter = _time.time()
         # min(label) over the block, then min of that over the entity; both
         # include the row's own label, so labels decrease monotonically
-        obs = Observation(f"cc_changed_{i}")
         win = (state
                .withColumn("_kmin", F.min("label").over(wk))
                .withColumn("_new", F.min("_kmin").over(we))
@@ -276,42 +323,25 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         if jump_on:
             # pointer jump: label <- label(label).  Labels are entity ids,
             # so the per-entity label map applied to the label column
-            # halves every chain.  `win` is persisted because the jump
-            # reads it twice (left side + the map); the census moves to the
-            # post-join projection (a stable window step implies a stable
-            # jump, so observing window-step changes remains a sound
-            # convergence test).
-            win = win.persist()
+            # halves every chain.  Both sides read `win` over the previous
+            # checkpoint, so the plan stays the same size every iteration;
+            # the census is observed on the post-join projection (a stable
+            # window step implies a stable jump, so observing window-step
+            # changes remains a sound convergence test).
             jmp = (win.select(F.col("eh").alias("label"),
                               F.col("label").alias("_jmp"))
                    .dropDuplicates(["label"]))
-            nxt = (win.join(jmp, "label", "left")
+            win = (win.join(jmp, "label", "left")
                    .select("eh", "bh",
                            F.coalesce("_jmp", "label").alias("label"),
                            "_chg"))
-        else:
-            nxt = win
-            win = None
-        new_state = (nxt.observe(obs, F.sum("_chg").alias("n"))
-                     .drop("_chg"))
-        new_state = new_state.persist()
-        n_rows = new_state.count()
-        state.unpersist()
-        if win is not None:
-            win.unpersist()
-        state = new_state
-        raw = obs.get["n"]
-        n_changed = int(raw) if raw is not None else 0   # always observed now
+        prev_state = state
+        state, seen = step("iterations", win, ["eh", "bh", "label"],
+                           n=F.sum("_chg"))
+        release_checkpoint(prev_state)
+        n_rows = seen["rows"]
+        n_changed = int(seen["n"] or 0)
         changed_hist.append(n_changed)
-        # truncate AFTER the census materialized: the observation fired on
-        # the persisted node above, so truncation reads the cache once and
-        # never masks the census (the old order lost one census per
-        # truncation and burned a full extra iteration on the carried count)
-        if (i + 1) % truncate_every == 0 and n_changed and n_rows:
-            t = (state.checkpoint(eager=True) if reliable_dir is not None
-                 else state.localCheckpoint(eager=True))
-            state.unpersist()
-            state = t
         if n_changed == 0 or n_rows == 0:
             iter_walls.append(round(_time.time() - t_iter, 2))
             break
@@ -322,31 +352,18 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         # pays back on big graphs and costs epsilon on small ones --
         # tests run through it too).  Star-only graphs contract to an
         # EMPTY frontier here and exit after a single full-size pass.
-        if (len(maps) < 4 and i - last_contract >= 2
+        if (len(sources) < 4 and i - last_contract >= 2
                 and (i == 0 or n_changed * 2 < n_rows)):
-            mapping = state.select("eh", "label").distinct().persist()
-            mapping.count()   # pin before the state it derives from moves
-            if reliable_dir is not None:
-                # rebind to the checkpoint and release the pre-checkpoint
-                # cache NOW — the final unwind only unpersists the handle it
-                # kept, so leaving the old copy persisted would leak it for
-                # the app lifetime
-                ckpt = mapping.checkpoint(eager=True)
-                mapping.unpersist()
-                mapping = ckpt
+            sources.append(state)
             cstate = state.select(F.col("label").alias("eh"), "bh").distinct()
             cdfs = cstate.groupBy("bh").agg(F.count(F.lit(1)).alias("df"))
-            cstate = (cstate.join(cdfs.filter(F.col("df") >= 2).select("bh")
-                                  .hint("SHUFFLE_HASH"), "bh")
-                      .select("bh", "eh", F.col("eh").alias("label"))
-                      .persist())
-            c_rows = cstate.count()
+            cstate = cstate.join(cdfs.filter(F.col("df") >= 2).select("bh")
+                                 .hint("SHUFFLE_HASH"), "bh")
+            state, seen = step("contractions", cstate,
+                               ["bh", "eh", F.col("eh").alias("label")])
             contractions.append({"at_iter": i, "rows_before": n_rows,
-                                 "rows_after": c_rows})
-            maps.append(mapping)
-            state.unpersist()
-            state = cstate
-            n_rows = c_rows
+                                 "rows_after": seen["rows"]})
+            n_rows = seen["rows"]
             last_contract = i
         iter_walls.append(round(_time.time() - t_iter, 2))
         if n_rows == 0:
@@ -359,6 +376,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         cc_stats["iter_walls"] = iter_walls
         cc_stats["contractions"] = contractions
         cc_stats["converged"] = converged
+        cc_stats["plan_nodes"] = plan_nodes
+
+    def release_states():
+        for df in [state] + sources:
+            release_checkpoint(df)
+
     if not converged:
         # fail LOUDLY rather than return a partially-merged map: max_iter
         # exhausted with rows still changing means the output would silently
@@ -366,10 +389,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         # the default budget — the pointer-jump backstop bounds convergence
         # at O(log diameter) — so hitting this means the budget was cut or
         # the graph violates the blocking assumptions; both deserve a stop.
-        state.unpersist()
-        for mapping in maps:
-            mapping.unpersist()
-        ent_names.unpersist()
+        release_states()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             f"iterations: {changed_hist[-1]} rows still changing over a "
@@ -380,8 +400,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     # was removed by the df>=2 refilter with its component fully converged,
     # so its label is final (coalesce keeps it)
     comp = state.select("eh", "label").distinct()
-    for mapping in reversed(maps):
-        m = mapping.withColumnRenamed("label", "_plabel")
+    for src in reversed(sources):
+        m = (src.select("eh", F.col("label").alias("_plabel"))
+             .distinct())
         c = (comp.withColumnRenamed("eh", "_pe")
              .withColumnRenamed("label", "_flabel"))
         comp = (m.join(c, m["_plabel"] == c["_pe"], "left")
@@ -395,12 +416,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     out = (comp.withColumn("canonical_id",
                            F.min("entity").over(Window.partitionBy("label")))
            .select("entity", "canonical_id").distinct())
-    # pin the result before releasing the loop caches it derives from
+    # pin the result before releasing the loop states it derives from
     out = out.localCheckpoint(eager=True)
-    state.unpersist()
-    for mapping in maps:
-        mapping.unpersist()
-    ent_names.unpersist()
+    release_states()
     return out
 
 

@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
-from .canonicalize import _EDGE_COLS, canonical_map, dedup_edges, plan_dedup
+from .canonicalize import (_EDGE_COLS, canonical_map, dedup_edges, plan_dedup,
+                           release_checkpoint)
 from .extract import extract_pages
 from .fsio import pjoin
 from .link import link_stage
@@ -106,15 +107,16 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         names = (extract_df.filter(F.col("kind") == "author_name")
                  .select(F.col("subj").alias("author_key"),
                          F.col("obj").alias("name")))
-        # durable path: CC iterations checkpoint to the stage directory
-        # (distributed storage on a cluster), so an executor/driver loss
-        # resumes instead of recomputing the loop
+        # durable path: every CC step is one reliable checkpoint into the
+        # stage directory (distributed storage on a cluster), so an executor
+        # loss recovers from storage instead of recomputing the loop
         dropped: dict = {}
         cc_stats: dict = {}
         cmap = canonical_map(edges, names,
                              reliable_dir=pjoin(out_dir, "_cc_checkpoints"),
                              dropped_stats=dropped, cc_stats=cc_stats)
         write_stage(cmap, out_dir, "canonical_map")
+        release_checkpoint(cmap)
         append_lineage(spark, out_dir, run_id, "canonical_map",
                        read_stage(spark, out_dir, "canonical_map"),
                        int((time.time() - t0) * 1000))
@@ -350,10 +352,11 @@ def run_pipeline_fast(spark: SparkSession, pages_path: str, out_dir: str,
                          F.col("obj").alias("name")))
         dropped: dict = {}
         cc_stats: dict = {}
-        write_stage(canonical_map_from_blocks(block_ids, names,
-                                              dropped_stats=dropped,
-                                              cc_stats=cc_stats),
-                    out_dir, "canonical_map")
+        cmap = canonical_map_from_blocks(block_ids, names,
+                                         dropped_stats=dropped,
+                                         cc_stats=cc_stats)
+        write_stage(cmap, out_dir, "canonical_map")
+        release_checkpoint(cmap)
         results["cmap_ms"] = int((time.time() - t) * 1000)
         results["cmap_dropped"] = {**dropped, **cc_stats}
 

@@ -150,6 +150,53 @@ def test_cc_long_chain_converges_within_max_iter(spark):
     assert stats["iterations"] <= 20
 
 
+def _chain_pairs(spark, n=60):
+    rows = []
+    for i in range(n - 1):
+        rows.append((f"e{i:03d}", f"k{i:03d}"))
+        rows.append((f"e{i+1:03d}", f"k{i:03d}"))
+    return spark.createDataFrame(rows, ["entity", "block_key"])
+
+
+def test_cc_releases_loop_state(spark):
+    """connected_components leaves exactly one persistent RDD behind -- the
+    returned map -- and release_checkpoint frees that one too: every loop
+    checkpoint and contraction source is released by the loop itself
+    (checkpointed blocks otherwise stay registered for the application's
+    lifetime)."""
+    from olkg.canonicalize import connected_components, release_checkpoint
+    pairs = _chain_pairs(spark)
+    jsc = spark.sparkContext._jsc
+
+    def new_rdds():   # ids, not a size: the cleaner may free older ones
+        return set(jsc.getPersistentRDDs().keys()) - start
+
+    start = set(jsc.getPersistentRDDs().keys())
+    cmap = connected_components(pairs, max_iter=20)
+    assert len(new_rdds()) == 1
+    assert cmap.count() == 60
+    release_checkpoint(cmap)
+    assert new_rdds() == set()
+
+
+def test_cc_plan_size_constant_across_iterations(spark):
+    """Every CC step plans from the previous step's checkpoint, so the
+    analyzed plan of an iteration has the same node count whichever
+    iteration it is, before and after the pointer jump engages (the jump
+    reads the window step twice; without per-step truncation the plan
+    doubled each jump iteration)."""
+    from olkg.canonicalize import connected_components, release_checkpoint
+    stats = {}
+    release_checkpoint(connected_components(_chain_pairs(spark), max_iter=20,
+                                            cc_stats=stats))
+    nodes = stats["plan_nodes"]["iterations"]
+    j = stats["jump_engaged_at"]
+    assert j is not None and len(nodes) - j >= 3, stats
+    plain, jumped = nodes[:j], nodes[j:]
+    assert len(set(plain)) == 1 and len(set(jumped)) == 1, nodes
+    assert len(set(stats["plan_nodes"]["contractions"])) == 1, stats
+
+
 def test_cc_nonconvergence_raises_loudly(spark):
     """An exhausted iteration budget with rows still changing must RAISE,
     never return a partially-merged map (the engine's no-silent-caps rule):

@@ -261,7 +261,7 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
          ("e5", "k5"), ("e6", "k5")],
         ["entity", "block_key"])
     ckdir = str(tmp_path / "cc_ck")
-    cc = connected_components(pairs, truncate_every=1, reliable_dir=ckdir)
+    cc = connected_components(pairs, reliable_dir=ckdir)
     got = {r.entity: r.canonical_id for r in cc.collect()}
     assert got == {"e1": "e1", "e2": "e1", "e3": "e1",
                    "e5": "e5", "e6": "e5"}
