@@ -81,7 +81,7 @@ def main() -> None:
 
     # --- headline: end-to-end KG pipeline ---------------------------------
     pages_path = ensure_bench_pages(spark, sf)
-    from olkg.pipeline import run_pipeline, run_pipeline_fast
+    from olkg.pipeline import run_pipeline
     lcsh = spark.read.parquet(os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "data", "lcsh.parquet"))
     # untimed warmup: JIT the extraction path and spin up the Python workers
@@ -91,35 +91,22 @@ def main() -> None:
     from olkg.pagesgen import build_pages_df
     extract_pages(build_pages_df(spark, corpus_lines())).count()
 
-    # headline: the single-extraction throughput path (what the scaling gate
-    # measures) and the durable checkpoint-everything path.  The host is
-    # shared and single-shot wall times swing ±30% on identical work
-    # (BASELINE.md §protocol), so both pipelines run N_TRIALS times
-    # INTERLEAVED (fast, durable, fast, durable, ...) — host drift hits both
-    # equally — and the reported number is the per-query MEDIAN, with every
-    # trial on record.  The fast path runs its dedup-sizing sampler in every
-    # trial, as a user's run does.
+    # headline: the pipeline.  The host is shared and single-shot wall times
+    # swing ±30% on identical work (BASELINE.md §protocol), so it runs
+    # N_TRIALS times and the reported number is the MEDIAN, with every
+    # trial on record.  Each trial runs the dedup-sizing sampler, as a
+    # user's run does.
     import statistics
 
     n_trials = int(os.environ.get("OLKG_BENCH_TRIALS", "3"))
-    trials: dict[str, list[float]] = {"kg_pipeline": [],
-                                      "kg_pipeline_durable": []}
+    trials: dict[str, list[float]] = {"kg_pipeline": []}
     m = None
     for _ in range(n_trials):
         out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_")
         t0 = time.time()
-        m = run_pipeline_fast(spark, pages_path, out_dir, lcsh=lcsh,
-                              hot_threshold=50_000, num_salts=16,
-                              with_canonical_map=True)
+        m = run_pipeline(spark, pages_path, out_dir, lcsh=lcsh,
+                         resume=False, hot_threshold=50_000, num_salts=16)
         trials["kg_pipeline"].append(round(time.time() - t0, 3))
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-        out_dir = tempfile.mkdtemp(prefix="olkg_bench_out_d_")
-        t0 = time.time()
-        run_pipeline(spark, pages_path, out_dir, lcsh=lcsh, resume=False,
-                     hot_threshold=50_000, num_salts=16,
-                     with_canonical_map=True, export_nt=False)
-        trials["kg_pipeline_durable"].append(round(time.time() - t0, 3))
         shutil.rmtree(out_dir, ignore_errors=True)
     for name, ts in trials.items():
         queries[name] = round(statistics.median(ts), 3)

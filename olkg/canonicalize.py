@@ -203,9 +203,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
 
     ONE LINEAGE-TRUNCATING ACTION PER STEP.  A step is the mergeable-state
     build, one label-propagation iteration, or one contraction; each is a
-    single eager ``localCheckpoint`` (fast path; re-derivable state) or a
-    reliable ``checkpoint`` into ``reliable_dir`` (the durable path -- an
-    executor loss on a real cluster recovers from distributed storage).
+    single eager ``localCheckpoint`` (re-derivable state) or, when
+    ``reliable_dir`` is given (the pipeline always gives one), a reliable
+    ``checkpoint`` there -- an executor loss on a real cluster recovers
+    from distributed storage.
     Every step's plan therefore starts from the previous step's checkpoint,
     so plan size is constant across iterations (``cc_stats["plan_nodes"]``).
     The step's censuses ride on that same action through ``Observation``:
@@ -430,11 +431,14 @@ def canonical_map_from_blocks(block_ids: DataFrame,
                               max_block_df: int | None = 100_000,
                               dropped_stats: dict | None = None,
                               cc_stats: dict | None = None) -> DataFrame:
-    """canonical_map from pre-extracted (entity, block_key) rows — the fast
-    path feeds the extract stage's sink copy of the identifier triples here,
-    so entity resolution never re-scans the full edge table (and can run
-    concurrently with the link stage, which only appends join-born
-    predicates that are never blocking keys)."""
+    """(entity, canonical_id) for all entities resolvable via blocking keys;
+    entities not in any block are their own canonical id (left out of the
+    map — consumers treat absence as identity).  The pipeline feeds the
+    extract stage's sink copy of the identifier triples here, so entity
+    resolution never re-scans the full edge table (and can run concurrently
+    with the link stage, which only appends join-born predicates that are
+    never blocking keys).  ``reliable_dir``: where each CC step's reliable
+    checkpoint goes (distributed storage on a cluster)."""
     pairs = block_ids.select("entity", "block_key")
     if author_names is not None:
         pairs = pairs.unionByName(
@@ -444,19 +448,3 @@ def canonical_map_from_blocks(block_ids: DataFrame,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)
 
-
-def canonical_map(edges: DataFrame, author_names: DataFrame | None = None,
-                  reliable_dir: str | None = None,
-                  max_block_df: int | None = 100_000,
-                  dropped_stats: dict | None = None,
-                  cc_stats: dict | None = None) -> DataFrame:
-    """(entity, canonical_id) for all entities resolvable via blocking keys;
-    entities not in any block are their own canonical id (left out of the map
-    — consumers treat absence as identity).  ``reliable_dir``: durable CC
-    checkpoint location (cluster-side distributed storage) for the resumable
-    path."""
-    return connected_components(blocking_keys(edges, author_names),
-                                reliable_dir=reliable_dir,
-                                max_block_df=max_block_df,
-                                dropped_stats=dropped_stats,
-                                cc_stats=cc_stats)

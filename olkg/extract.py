@@ -15,18 +15,19 @@ Scale notes (100 TB posture):
   from the parquet/Iceberg scan.
 - the html→text inversion is audited per page ('page' rows), enforcing the
   byte-identity invariant without a second pass.
-- single-pass mode (:func:`extract_triples_with_side_sink`): the UDF yields
-  the big triple stream straight into the downstream shuffle and writes the
-  small side rows (author names, creation refs, LCSH probes, page audits —
-  a few rows per page) to a parquet side sink from inside the task, so the
-  expensive Python extraction runs EXACTLY ONCE per page and the large
-  intermediate is never materialized.  On a cluster the sink path must be
-  shared storage — the sink is written through ``pyarrow.fs`` resolved from
-  the URI in-task (hdfs://, s3a://→s3://, file://; see olkg.fsio), and the
-  driver cross-checks an executor-side row census against sink visibility,
-  failing loudly on a non-shared sink.  Task retries can duplicate sink files;
-  every consumer is duplicate-tolerant (names/refs/probes feed joins whose
-  outputs pass one dropDuplicates; page audits aggregate per distinct url).
+- side-sink mode (:func:`extract_triples_with_side_sink`, the pipeline's
+  extract job): the UDF yields the big triple stream straight into the
+  downstream shuffle and writes the small side rows (author names, creation
+  refs, LCSH probes, block ids — a few rows per page) to a parquet side sink
+  from inside the task, so the expensive Python extraction runs EXACTLY
+  ONCE per page and the large intermediate is never materialized.  On a
+  cluster the sink path must be shared storage — the sink is written
+  through ``pyarrow.fs`` resolved from the URI in-task (hdfs://,
+  s3a://→s3://, file://; see olkg.fsio), and the driver cross-checks an
+  executor-side row census against sink visibility, failing loudly on a
+  non-shared sink.  Task retries can duplicate sink files; every consumer
+  is duplicate-tolerant (names/refs/probes feed joins whose outputs pass
+  one dropDuplicates; block ids feed blocking, which dedups).
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ _TRIPLE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
 # (J1 emits ol:author from the author↔creation rendezvous; editions with a
 # role=="Author" contributor emit ol:author directly, lib/edition.rb:229-236;
 # J2 emits dc:subject URIs, and classifications/dict-subjects emit dc:subject
-# URIs directly).  In single-pass mode these are routed through the side sink
+# URIs directly).  In side-sink mode these are routed through the side sink
 # so the directly-written edge set and the join-born edge set stay provably
 # disjoint — global dedup then decomposes into two independent dedups.
 _DC_SUBJECT = V.DC_SUBJECT
@@ -90,9 +91,9 @@ class _Cols:
         self.cols = [[] for _ in self.names]
 
 
-def _make_extract_batches(triples: bool = True, sides: bool = True):
-    """Batch iterator emitting the unified 8-column extract rows (durable
-    path; also the two-pass fast path's building block)."""
+def _make_extract_batches():
+    """Batch iterator emitting the unified 8-column extract rows: triples,
+    side rows and one 'page' audit row per page."""
 
     def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -105,50 +106,46 @@ def _make_extract_batches(triples: bool = True, sides: bool = True):
                 line = recovered if recovered is not None else text
                 rec = parse_dump_line(line) if line is not None else None
                 src_type = rec[0] if rec else None
-                if sides:
-                    out.append("page", src_type, url, url, None,
-                               "ok" if recovered == text else "mismatch",
-                               None, None)
+                out.append("page", src_type, url, url, None,
+                           "ok" if recovered == text else "mismatch",
+                           None, None)
                 if rec is None:
                     continue
                 res = extract_record(rec[0], rec[4])
                 if res is None:
                     continue
-                if triples:
-                    for t in res.triples:
-                        out.append("triple", src_type, url, t.subj, t.pred,
-                                   t.obj, t.obj_kind, t.obj_datatype)
-                if sides:
-                    for key, name in res.author_names:
-                        out.append("author_name", src_type, url, key, None,
-                                   name, None, None)
-                    for creation, key in res.creation_refs:
-                        out.append("creation_ref", src_type, url, creation,
-                                   None, key, None, None)
-                    for uri, label in res.probes:
-                        out.append("probe", src_type, url, uri, None, label,
-                                   None, None)
+                for t in res.triples:
+                    out.append("triple", src_type, url, t.subj, t.pred,
+                               t.obj, t.obj_kind, t.obj_datatype)
+                for key, name in res.author_names:
+                    out.append("author_name", src_type, url, key, None,
+                               name, None, None)
+                for creation, key in res.creation_refs:
+                    out.append("creation_ref", src_type, url, creation,
+                               None, key, None, None)
+                for uri, label in res.probes:
+                    out.append("probe", src_type, url, uri, None, label,
+                               None, None)
             yield out.frame()
 
     return _extract_batches
 
 
-def extract_pages(pages: DataFrame, repartition_by_url: int | None = None,
-                  triples: bool = True, sides: bool = True) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → unified extract rows
-    (durable-pipeline path; the checkpoint write materializes every kind
-    once, so downstream readers never re-run the UDF)."""
+def extract_pages(pages: DataFrame,
+                  repartition_by_url: int | None = None) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → unified extract rows, every
+    kind in one stream (the streaming ingest and the query entry points
+    read it; the pipeline uses :func:`extract_triples_with_side_sink`)."""
     cols = [c for c in ("url", "html", "text") if c in pages.columns]
     src = pages.select(*cols)
     if repartition_by_url:
         src = src.repartition(repartition_by_url, F.xxhash64("url"))
-    return src.mapInPandas(_make_extract_batches(triples, sides),
-                           schema=EXTRACT_SCHEMA)
+    return src.mapInPandas(_make_extract_batches(), schema=EXTRACT_SCHEMA)
 
 
-# --- JVM-native html→text inversion (single-pass fast path) ----------------
+# --- JVM-native html→text inversion (side-sink mode) ------------------------
 # html_to_text (pagesgen.py) is substring+replace — expressible natively, so
-# the fast path never ships html bytes to Python and never pays Python string
+# the pipeline never ships html bytes to Python and never pays Python string
 # work for the inversion; Python receives ONLY the recovered dump line.
 
 _H_PREFIX = "<html><body><pre>"
@@ -204,7 +201,7 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
     The sink path may be a URI (``hdfs://``, ``s3a://``, ``file://``) or a
     plain path: it is resolved IN-TASK via :func:`olkg.fsio.pa_fs`
     (pyarrow), so executors write straight to shared storage — the cluster
-    precondition for the fast path.  ``side_count_acc`` (a Spark
+    precondition for the side sink.  ``side_count_acc`` (a Spark
     accumulator) censuses written side rows so the driver can detect a sink
     the executors wrote but it cannot see (see :func:`read_side_rows`)."""
 

@@ -2,8 +2,10 @@
 
 The engine ships its own synthetic corpus (generated below, covering every
 JSON field shape the reference's parsers handle — see FIXTURES.md §2) so the
-repo is standalone; when the reference corpus is present at
-/root/reference/specs/data it is folded in for parity coverage.
+repo is standalone.  The reference's 20 fixture records are folded in for
+parity coverage: from the reference corpus (``REF_DATA``) when present,
+else from the ``text`` column of the committed ``data/pages.parquet``,
+which holds the same lines byte for byte.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ import json
 from pathlib import Path
 
 REF_DATA = Path("/root/reference/specs/data")
+PAGES = Path(__file__).resolve().parent.parent / "data" / "pages.parquet"
 
 # LCSH label→URI dimension rows (the pairs the reference specs seed into
 # Redis: specs/edition_spec.rb:318-322, specs/work_spec.rb:137-145)
@@ -166,9 +169,16 @@ def synthetic_lines() -> list[str]:
 
 
 def reference_lines() -> list[str]:
-    """Verbatim fixture lines from the reference corpus, when present."""
+    """Verbatim fixture lines from the reference corpus, else the committed
+    pages table's non-synthetic records; [] when neither exists (e.g. when
+    the package is imported from a zip)."""
     if not REF_DATA.exists():
-        return []
+        if not PAGES.exists():
+            return []
+        import pyarrow.parquet as pq
+        synthetic = set(synthetic_lines())
+        return [t for t in pq.read_table(PAGES, columns=["text"])
+                .column("text").to_pylist() if t not in synthetic]
     lines = []
     for path in sorted(REF_DATA.glob("*.txt")):
         with open(path, encoding="utf-8") as f:

@@ -12,7 +12,7 @@ the way its side of the cluster naturally can:
   behavior for the sandbox.
 
 - **Executor side** — :func:`pa_fs` resolves a ``pyarrow.fs.FileSystem``
-  from a URI *inside a task* (no JVM access there), used by the fast path's
+  from a URI *inside a task* (no JVM access there), used by the pipeline's
   side sink (:mod:`olkg.extract`).  ``s3a://`` is translated to pyarrow's
   ``s3://`` scheme; credentials come from the task environment the way any
   pyarrow S3 access does.

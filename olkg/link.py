@@ -92,29 +92,16 @@ def lcsh_lookup_join(probes: DataFrame, lcsh: DataFrame) -> DataFrame:
 
 
 def link_stage(extract_df: DataFrame, lcsh: DataFrame | None,
-               hot_threshold: int = 100_000, num_salts: int = 16,
-               sides: DataFrame | None = None) -> DataFrame:
+               hot_threshold: int = 100_000, num_salts: int = 16) -> DataFrame:
     """Derive the join-born triples from the extract rows and union them with
     the record-local triples → the full (pre-dedup) triple stream.
-
-    ``sides``: where to read the small side-row kinds (author_name,
-    creation_ref, probe) from.  Defaults to ``extract_df`` — correct when
-    that is a materialized checkpoint or a cached DataFrame.  When
-    ``extract_df`` is an UNMATERIALIZED UDF stream, pass the (tiny,
-    persisted/parquet) side rows separately: each side branch, plus the
-    hot-key census, is its own plan subtree, and reading them off the raw
-    stream would re-run the expensive extraction once per subtree."""
-    if sides is None:
-        sides = extract_df
+    ``extract_df`` is read several times (the triples, each side kind, the
+    hot-key census), so pass a materialized or cached DataFrame, not a raw
+    UDF stream."""
     direct = (extract_df.filter(F.col("kind") == "triple")
               .select("subj", "pred", "obj", "obj_kind", "obj_datatype"))
-
-    parts = [direct]
-    parts.append(join_born_triples(sides, lcsh, hot_threshold, num_salts))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return direct.unionByName(
+        join_born_triples(extract_df, lcsh, hot_threshold, num_salts))
 
 
 def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,

@@ -6,9 +6,10 @@ with an Iceberg catalog, pass ``table_format='iceberg'`` and stage outputs go
 through ``writeTo(...).createOrReplace()`` instead (same logical layout).
 
 Resume contract (north_rule): every stage writes to ``<out>/<stage>/`` with a
-``_SUCCESS`` marker; a re-run skips any stage whose marker exists and reads
-the checkpoint instead, so a killed run resumes from the last completed stage
-and reproduces the identical triple set (blank-node labels are deterministic,
+``_SUCCESS`` marker; a re-run skips a stage whose marker exists (and whose
+inputs were reused, see olkg.pipeline) and reads its output instead, so a
+killed run resumes from the last completed stages and reproduces the
+identical triple set (blank-node labels are deterministic,
 olkg.util.det_bnode).
 """
 
@@ -22,7 +23,6 @@ from pyspark.sql import functions as F
 from . import fsio
 from . import vocab as V
 from .fsio import pjoin
-from .schema import LINEAGE_SCHEMA
 
 
 def _stage_path(out_dir: str, stage: str) -> str:
@@ -69,30 +69,18 @@ def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
 
 
 def append_lineage(spark: SparkSession, out_dir: str, run_id: str, stage: str,
-                   df: DataFrame, wall_ms: int,
-                   detail: str | None = None) -> None:
+                   df: DataFrame, wall_ms: int) -> None:
     """Per-partition lineage rows for a completed stage: the checkpointed
     evidence of what each partition produced (north_rule's lineage+metrics).
-    Reads the stage's own checkpoint so counting costs one column scan.
-    ``detail`` (optional JSON string) records a stage-level contract on the
-    lineage row itself, so a resumed run can check it without the original
-    driver's metrics dict."""
+    Reads the stage's own checkpoint so counting costs one column scan."""
     per_part = (df.groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(F.count(F.lit(1)).alias("rows_out"))
                 .select(F.lit(run_id).alias("run_id"),
                         F.lit(stage).alias("stage"),
                         F.col("partition_id").cast("long"),
                         F.col("rows_out").cast("long"),
-                        F.lit(wall_ms).cast("long").alias("wall_ms"),
-                        F.lit(detail).cast("string").alias("detail")))
+                        F.lit(wall_ms).cast("long").alias("wall_ms")))
     per_part.write.mode("append").parquet(pjoin(out_dir, "lineage"))
-
-
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = pjoin(out_dir, "lineage")
-    if not fsio.exists(spark, path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(path)
 
 
 def build_nodes(edges: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """Spark schemas for every table the pipeline touches."""
 
-from pyspark.sql.types import (BinaryType, BooleanType, LongType, StringType,
-                               StructField, StructType, TimestampType)
+from pyspark.sql.types import (BinaryType, StringType, StructField,
+                               StructType, TimestampType)
 
 # Input: Common-Crawl-style pages (BASELINE.json input_hint)
 PAGES_SCHEMA = StructType([
@@ -42,14 +42,4 @@ TRIPLES_SCHEMA = StructType([
 LCSH_SCHEMA = StructType([
     StructField("label", StringType(), False),
     StructField("uri", StringType(), False),
-])
-
-# Per-partition lineage/metrics checkpoint rows (north_rule)
-LINEAGE_SCHEMA = StructType([
-    StructField("run_id", StringType(), False),
-    StructField("stage", StringType(), False),
-    StructField("partition_id", LongType(), True),
-    StructField("rows_out", LongType(), True),
-    StructField("wall_ms", LongType(), True),
-    StructField("detail", StringType(), True),
 ])

@@ -93,7 +93,6 @@ def run_at(cores: int, pages_path: str,
            "--master", f"local[{cores}]",
            "--shuffle-partitions", str(cores * 2),
            "--no-resume",
-           "--fast",
            "--hot-threshold", "50000",
            # north_rule: repartition pages by url-hash ahead of extraction
            "--repartition-by-url", str(cores * 2)]

@@ -1,9 +1,9 @@
-"""Object-store posture of the fast path.
+"""Object-store posture of the pipeline.
 
-The fast path's side sink is written from INSIDE executor tasks, so on a
+The pipeline's side sink is written from INSIDE executor tasks, so on a
 multi-node cluster it must land on shared storage.  These tests pin:
 
-1. the whole fast pipeline runs against a *URI* out_dir (``file://`` —
+1. the whole pipeline runs against a *URI* out_dir (``file://`` —
    exercises scheme parsing + the pyarrow/Hadoop FS abstraction end to end
    in-sandbox; no object-store jars exist here) and still matches golden;
 2. the sink writer goes through ``pyarrow.fs`` (verified against pyarrow's
@@ -30,14 +30,14 @@ def _edges_set(spark, out_uri):
 
 
 def test_fast_pipeline_on_file_uri_out_dir(spark, tmp_path_factory):
-    from olkg.pipeline import run_pipeline_fast
+    from olkg.pipeline import run_pipeline
     corpus = corpus_lines(include_reference=True)
     out = "file://" + str(tmp_path_factory.mktemp("olkg_uri_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_uri")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
+                           hot_threshold=100, num_salts=4)
     result = _edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)

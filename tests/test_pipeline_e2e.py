@@ -2,6 +2,7 @@
 golden net effect (the P/R ≥ 0.95 gate from BASELINE.md — we require 1.0),
 byte-identity audit, idempotent resume, and salted-join equivalence."""
 
+import os
 import shutil
 
 import pytest
@@ -28,7 +29,7 @@ def pipeline_out(spark, corpus, tmp_path_factory):
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
     metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                           hot_threshold=100, num_salts=4)
+                           hot_threshold=100, num_salts=4, export_nt=True)
     return out, pages_path, metrics
 
 
@@ -37,9 +38,22 @@ def edges_set(spark, out):
     return {(r.subj, r.pred, r.obj, r.obj_kind, r.obj_datatype) for r in rows}
 
 
+def cmap_set(spark, out):
+    return {(r.entity, r.canonical_id)
+            for r in spark.read.parquet(out + "/canonical_map").collect()}
+
+
+def sink_parts(out):
+    return {f for f in os.listdir(out + "/sides") if f.endswith(".parquet")}
+
+
 def test_pipeline_matches_golden(spark, corpus, pipeline_out):
+    """Same golden set and NO duplicate edge rows: the direct and join-born
+    edge sets are deduped separately, so this checks their disjointness."""
     out, _, metrics = pipeline_out
+    n_rows = spark.read.parquet(out + "/edges").count()
     result = edges_set(spark, out)
+    assert n_rows == len(result), "edges table contains duplicate rows"
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
     assert p == 1.0 and r == 1.0, (
@@ -48,9 +62,9 @@ def test_pipeline_matches_golden(spark, corpus, pipeline_out):
     assert metrics["triples"] == len(golden)
 
 
-def test_byte_identity_audit(pipeline_out):
+def test_byte_identity_audit(corpus, pipeline_out):
     _, _, metrics = pipeline_out
-    assert metrics["pages"] > 0
+    assert metrics["pages"] == len(corpus)
     assert metrics["text_mismatches"] == 0
 
 
@@ -90,27 +104,62 @@ def test_ntriples_export(spark, pipeline_out):
     assert sample.startswith("<http://openlibrary.org/")
 
 
-def test_resume_reuses_checkpoints(spark, corpus, pipeline_out, tmp_path):
-    out, pages_path, _ = pipeline_out
-    before = edges_set(spark, out)
-    # simulate a crash after the link stage: drop downstream outputs
-    shutil.rmtree(out + "/edges")
-    shutil.rmtree(out + "/nodes")
+def _resume_copy(spark, pipeline_out, tmp_path):
+    """A finished run's output directory, copied so it can be damaged."""
+    out0, pages_path, _ = pipeline_out
+    out = str(tmp_path / "out")
+    shutil.copytree(out0, out)
+    return out, pages_path, edges_set(spark, out), cmap_set(spark, out)
+
+
+def _rerun(spark, pages_path, out):
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                           hot_threshold=100, num_salts=4)
-    # upstream stages were skipped, downstream recomputed, output identical
+    return run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
+                        hot_threshold=100, num_salts=4)
+
+
+def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path):
+    """A crash during the tail: the validated extract job is reused (the UDF
+    does not run again) and only the missing tail stages are rebuilt."""
+    out, pages_path, edges0, cmap0 = _resume_copy(spark, pipeline_out,
+                                                  tmp_path)
+    parts = sink_parts(out)
+    assert parts
+    for stage in ("edges/d=1", "nodes", "canonical_map"):
+        shutil.rmtree(os.path.join(out, stage))
+    metrics = _rerun(spark, pages_path, out)
     assert metrics["stages"]["extract"] == {"skipped": True}
-    assert metrics["stages"]["link"] == {"skipped": True}
-    assert "wall_ms" in metrics["stages"]["canonicalize"]
-    assert edges_set(spark, out) == before
+    assert sink_parts(out) == parts
+    assert "wall_ms" in metrics["stages"]["link_dedup"]
+    assert "wall_ms" in metrics["stages"]["canonical_map"]
+    assert edges_set(spark, out) == edges0
+    assert cmap_set(spark, out) == cmap0
+    assert metrics["triples"] == len(edges0)
+
+
+def test_resume_reextracts_unvalidated_sink(spark, pipeline_out, tmp_path):
+    """Side-sink part files without the _SUCCESS marker stand for a crash
+    before the sink was validated: the run extracts again into a fresh sink
+    and rebuilds every stage read from it."""
+    out, pages_path, edges0, cmap0 = _resume_copy(spark, pipeline_out,
+                                                  tmp_path)
+    parts = sink_parts(out)
+    os.remove(os.path.join(out, "sides", "_SUCCESS"))
+    metrics = _rerun(spark, pages_path, out)
+    assert "wall_ms" in metrics["stages"]["extract"]
+    assert "wall_ms" in metrics["stages"]["canonical_map"]
+    assert sink_parts(out) and parts.isdisjoint(sink_parts(out))
+    assert os.path.exists(os.path.join(out, "sides", "_SUCCESS"))
+    assert edges_set(spark, out) == edges0
+    assert spark.read.parquet(out + "/edges").count() == len(edges0)
+    assert cmap_set(spark, out) == cmap0
 
 
 def test_lineage_written(spark, pipeline_out):
     out, _, _ = pipeline_out
     lineage = spark.read.parquet(out + "/lineage")
     stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert {"extract", "linked", "edges", "nodes"} <= stages
+    assert {"edges", "sides", "nodes", "canonical_map"} <= stages
     assert lineage.filter(F.col("rows_out") > 0).count() > 0
 
 
@@ -156,47 +205,18 @@ def test_skewed_corpus_still_correct(spark, tmp_path):
     assert metrics["text_mismatches"] == 0
 
 
-def test_fast_pipeline_matches_golden(spark, corpus, tmp_path_factory):
-    """Single-extraction fast mode: same golden set, NO duplicate edge rows
-    (the direct/join-born disjointness invariant), clean audit."""
-    from olkg.pipeline import run_pipeline_fast
-    out = str(tmp_path_factory.mktemp("olkg_fast_out"))
-    pages_path = str(tmp_path_factory.mktemp("pages_fast")) + "/pages.parquet"
-    build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
-    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4)
-    edges = spark.read.parquet(out + "/edges")
-    n_rows = edges.count()
-    result = edges_set(spark, out)
-    assert n_rows == len(result), "edges table contains duplicate rows"
-    golden = golden_triples(corpus, dict(LCSH_ROWS))
-    p, r = precision_recall(result, golden)
-    assert p == 1.0 and r == 1.0, (
-        f"P={p} R={r}; spurious={list(result - golden)[:5]} "
-        f"missing={list(golden - result)[:5]}")
-    assert metrics["triples"] == len(golden)
-    assert metrics["text_mismatches"] == 0
-    assert metrics["pages"] == len(corpus)
-    # fast-path lineage covers every stage including the side sink census
-    lineage = spark.read.parquet(out + "/lineage")
-    stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert {"edges", "nodes", "canonical_map", "sides"} <= stages
-
-
 def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
     """dedup_pages: duplicate-content pages are dropped before extraction;
     the triple net effect is unchanged."""
-    from olkg.pipeline import run_pipeline_fast
     out = str(tmp_path_factory.mktemp("olkg_dedup_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_dup")) + "/pages.parquet"
     # 3x-duplicated corpus: same urls, same text
     dup = build_pages_df(spark, corpus)
     dup.union(dup).union(dup).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False, dedup_pages=True)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
+                           hot_threshold=100, num_salts=4,
+                           with_canonical_map=False, dedup_pages=True)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
@@ -205,7 +225,7 @@ def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
 
 
 def test_direct_join_born_disjointness(spark, corpus):
-    """The fast mode's two-write dedup decomposition is sound iff no
+    """The pipeline's two-write dedup decomposition is sound iff no
     NON-collision direct triple carries a join-born predicate signature;
     verify on the full fixture corpus (which includes role=='Author'
     contributors, the known direct ol:author source)."""
@@ -250,10 +270,9 @@ def test_iceberg_write_dispatch(spark):
 
 
 def test_cc_reliable_checkpoint(spark, tmp_path):
-    """The durable path's CC loop checkpoints to the given directory
+    """The pipeline's CC loop checkpoints to the given directory
     (distributed storage on a cluster) and still converges to the right
     components."""
-    import os
     from olkg.canonicalize import connected_components
     pairs = spark.createDataFrame(
         [("e1", "k1"), ("e2", "k1"), ("e2", "k2"), ("e3", "k2"),
@@ -288,7 +307,7 @@ def test_ntriples_dated_single_file(spark, pipeline_out, tmp_path):
 
 
 def test_fast_pipeline_prepartition_dedup(spark):
-    """Past AUTO_PREPARTITION_ROWS_PER_TASK (the scale shape the fast
+    """Past AUTO_PREPARTITION_ROWS_PER_TASK (the scale shape the
     pipeline's sampler can pick), dedup_edges repartitions on the five edge
     columns and aggregates only after that exchange — no map-side partial
     aggregate — with output identical to dropDuplicates."""
@@ -376,14 +395,13 @@ def test_estimate_extract_size_sampler(spark, corpus, tmp_path_factory):
 
 def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory):
     """The sampler-sized dedup reproduces golden and records its plan."""
-    from olkg.pipeline import run_pipeline_fast
     out = str(tmp_path_factory.mktemp("olkg_auto_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_auto")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline_fast(spark, pages_path, out, lcsh=lcsh,
-                                hot_threshold=100, num_salts=4,
-                                with_canonical_map=False)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
+                           hot_threshold=100, num_salts=4,
+                           with_canonical_map=False)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
