@@ -13,12 +13,15 @@ entity are clustered by **blocking keys** —
 - author name MinHash band signatures: fuzzy name blocks.
 
 Within the bipartite (entity, block-key) graph, connected components are
-computed by hash-min label propagation — alternating min-aggregations over the
-two sides until a fixpoint.  Blocks are tiny after blocking, so convergence is
-fast (diameter of the identifier co-occurrence graph), and every iteration is
-two shuffles on (key) / (entity) — no driver-side state, no GraphFrames
-dependency.  The canonical id of a cluster is its lexicographically smallest
-member URI (deterministic across runs and cluster sizes).
+computed as a size-dispatched plan (:func:`connected_components`).  One
+distributed build keeps the entity pairs of merge-capable blocks.  A graph
+whose collect fits ``DRIVER_FINISH_BYTES`` is then collected once and
+finished on the driver (numpy min-label propagation with pointer jumping);
+a larger one runs hash-min label propagation on the executors --
+alternating min-aggregations over the two sides until a fixpoint, two
+shuffles on (key) / (entity) per iteration, no GraphFrames dependency.
+Either way the canonical id of a cluster is its lexicographically smallest
+member URI (deterministic across runs, cluster sizes and the dispatch).
 """
 
 from __future__ import annotations
@@ -153,8 +156,11 @@ def release_checkpoint(df: DataFrame) -> None:
     registered (and its blocks cached) until unpersisted or garbage
     collected; ``DataFrame.unpersist`` does not reach it.  Callers of
     :func:`connected_components` release the returned map with this once
-    they have written it."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    they have written it.  A driver-finished map reads a local relation,
+    which holds no blocks: then this is a no-op."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _plan_nodes(df: DataFrame) -> int:
@@ -165,19 +171,136 @@ def _plan_nodes(df: DataFrame) -> int:
     return walk(df._jdf.queryExecution().analyzed())
 
 
+# Largest build connected_components finishes on the driver, in bytes of
+# the Arrow table it collects: Spark's default spark.driver.maxResultSize,
+# past which the collect aborts.  The measurements behind it are in the
+# connected_components docstring.
+DRIVER_FINISH_BYTES = 1 << 30
+
+
+def _driver_finish_cap(spark) -> int:
+    """``DRIVER_FINISH_BYTES``, lowered to the session's own
+    ``spark.driver.maxResultSize`` when that is set lower (0: no limit)."""
+    limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g")
+    return min(DRIVER_FINISH_BYTES, limit) if limit > 0 else DRIVER_FINISH_BYTES
+
+
+def _driver_components(entity, h1, h2, max_rounds: int):
+    """Connected components of a bipartite (entity, block) edge list, in
+    driver memory.  ``entity`` is an Arrow string array; a block is one
+    distinct (h1, h2) pair of the int64 arrays.
+
+    Entities get dense ids in UTF-8 byte order, which is code-point order
+    and the order of Spark's ``min`` on strings, so the smallest id in a
+    component is its smallest URI.  Each round hooks every member's root
+    under the smallest root in its block, then pointer-jumps every label to
+    its root; a round that changes no label is the fixpoint.  Returns
+    (names, label, changed_hist): the sorted distinct entities, each one's
+    component-min id, and the changed-label count of every round, the last
+    of which is 0 unless ``max_rounds`` ran out first."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    names = pc.unique(entity)
+    names = names.take(pc.sort_indices(names))
+    ids = pc.index_in(entity, value_set=names).to_numpy()
+    order = np.lexsort((h2, h1))
+    h1, h2, members = h1[order], h2[order], ids[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (h1[1:] != h1[:-1]) | (h2[1:] != h2[:-1])
+    starts = np.flatnonzero(first)
+    sizes = np.diff(np.append(starts, len(order)))
+    label = np.arange(len(names))
+    changed_hist: list[int] = []
+    while len(changed_hist) < max_rounds:
+        root = label[members]
+        hook = np.repeat(np.minimum.reduceat(root, starts), sizes)
+        new = label.copy()
+        np.minimum.at(new, root, hook)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        changed_hist.append(int(np.count_nonzero(new != label)))
+        label = new
+        if changed_hist[-1] == 0:
+            break
+    return names, label, changed_hist
+
+
+def _not_converged(max_iter: int, changed_hist: list, n_rows: int):
+    # fail LOUDLY rather than return a partially-merged map: the budget
+    # exhausted with labels still changing means the output would silently
+    # under-merge (the engine's no-silent-caps rule).  Unreachable with the
+    # default budget -- pointer jumping bounds convergence at O(log
+    # diameter) -- so hitting this means the budget was cut or the graph
+    # violates the blocking assumptions; both deserve a stop.
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        f"iterations: {changed_hist[-1]} rows still changing over a "
+        f"{n_rows}-row frontier (changed_hist={changed_hist}); raise "
+        f"max_iter or inspect the blocking keys for super-components")
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20,
                          reliable_dir: str | None = None,
                          max_block_df: int | None = 100_000,
                          dropped_stats: dict | None = None,
                          cc_stats: dict | None = None) -> DataFrame:
-    """Hash-min label propagation over the bipartite (entity, block_key)
-    graph.  Returns (entity, canonical_id) for every entity that has at least
-    one *merge-capable* block key (df >= 2); singleton-key entities are their
+    """Connected components of the bipartite (entity, block_key) graph.
+    Returns (entity, canonical_id) for every entity that has at least one
+    *merge-capable* block key (df >= 2); singleton-key entities are their
     own canonical id and are omitted (identity).  canonical_id is the
-    lexicographic MIN entity URI of the component (restored after the loop,
-    so it is independent of the loop's internal label encoding).
+    lexicographic MIN entity URI of the component, whichever side finishes
+    it.
 
-    Scale shape (round 5; the 2.4M-page gate showed this stage dominating):
+    A size-dispatched plan, like :func:`plan_dedup`.  One distributed BUILD
+    step keeps the (entity, block) pairs of merge-capable blocks, with both
+    sides hash-encoded and the entity string carried along; its row count
+    and the size of its collect (the entities' UTF-8 bytes plus 21 bytes a
+    row: ~59 bytes a row of OpenLibrary URIs) are observed on the build's
+    own action.  Then:
+
+    - DRIVER FINISH, when that collect fits the driver: at most
+      ``DRIVER_FINISH_BYTES`` (1 GiB, ~18M rows of OpenLibrary URIs) and
+      at most the session's ``spark.driver.maxResultSize``.  One
+      ``toArrow()`` collects (entity, block hash) and
+      :func:`_driver_components` finishes in numpy.  The map comes back as
+      ``spark.createDataFrame`` of the Arrow result: no iterations, no
+      contractions, no unwind joins.
+    - DISTRIBUTED LOOP, for a build the driver cannot receive: hash-min
+      label propagation on the executors, below.
+
+    The cap is where the driver side stops working, not a crossover: no
+    crossover was found.  On a 4-CPU host (local[4], warm session,
+    synthetic chains of four 8-entity stars, reliable checkpoints as the
+    pipeline runs them), CC plus the map's write, two runs a side:
+
+    ==========  ==============  ==============  ===============
+    build rows  loop            driver          finish alone
+    ==========  ==============  ==============  ===============
+    250k        11.5-13.0 s     3.2-3.6 s       0.6 s
+    1M          21.9-23.2 s     7.2-8.9 s       1.9-2.4 s
+    2M          37.0-47.0 s     13.9-16.5 s     4.5-5.4 s
+    4M          62.5-63.4 s     24.7-29.8 s     9.5-10.8 s
+    ==========  ==============  ==============  ===============
+
+    The driver side won at every size.  What it cannot do is receive a
+    build past the collect limit: Spark aborts a collect whose task results
+    exceed ``spark.driver.maxResultSize`` (1 GiB by default).  Measured: a
+    974k-row build (57.1 MB of task results) forced onto the driver under
+    a 40m limit aborts ("Total size of serialized results ... is bigger
+    than spark.driver.maxResultSize"), while under the cap the same build
+    runs the loop instead (an 820,512-row map, as many rows as the driver
+    side returns without the limit).  So the loop is the path for the
+    graphs only it can run, and the cap is that limit, read from the
+    session.  The finish's own numpy state peaks at ~135 bytes a row on top
+    of the collected table (measured to 7.8M rows, 22 s), so a build at the
+    1 GiB cap asks ~3.5 GB of the driver's Python process.
+
+    Loop shape (round 5; the 2.4M-page gate showed this stage dominating):
 
     - the loop state is 128-BIT HASH-ENCODED: entities and block keys become
       (xxhash64(x), xxhash64(7, x)) structs once, so every iteration sorts
@@ -194,7 +317,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
       never merge anything again, so late iterations touch only the
       unresolved frontier (the gate corpus collapses 17M rows to the chain
       joints).  Final labels unwind through the recorded (entity -> label)
-      mappings, outermost last;
+      mappings, outermost last, and the (entity hash -> entity) dictionary
+      is read from the build checkpoint, so the unwind reads no input;
     - a POINTER-JUMP step (label <- label-of-label, one self-join) engages
       on a roughly-flat census -- the signature of chain-at-a-time
       propagation -- and compresses chains in O(log diameter) rounds; star
@@ -211,18 +335,23 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     so plan size is constant across iterations (``cc_stats["plan_nodes"]``).
     The step's censuses ride on that same action through ``Observation``:
     super-block drops (build), row count (every step) and changed count
-    (iterations) -- no separate count, first or pin job.  A contraction
-    mapping is a lazy projection of the checkpointed state it came from;
-    that state is held until the unwind, every other state is released as
-    soon as the loop moves past it, and the held ones once the result is
-    pinned.  The returned map is itself a local checkpoint: release it with
+    (iterations) -- no separate count, first or pin job.  The build and
+    the states contractions start from are held until the unwind, every
+    other state is released as soon as the loop moves past it, and the
+    held ones once the result is pinned.  The returned map is a local
+    checkpoint (loop) or a local relation (driver): pass it to
     :func:`release_checkpoint` once it is written.
 
-    ``cc_stats`` (dict, optional) receives: iterations, jump_engaged_at,
-    changed_hist, iter_walls (per-iteration seconds), contractions
+    Either side raises ``RuntimeError`` rather than return an under-merged
+    map when ``max_iter`` rounds pass without a fixpoint.
+
+    ``cc_stats`` (dict, optional) receives: finish ("driver" | "loop"),
+    iterations, jump_engaged_at, changed_hist, iter_walls (per-iteration
+    seconds; the driver side's one entry is the whole finish), contractions
     (at_iter / rows_before / rows_after censuses -- no silent shrinks),
     converged, plan_nodes (analyzed-plan node count per step: build,
-    iterations, contractions).
+    iterations, contractions).  The driver side jumps from its first round
+    and never contracts.
     """
     import itertools
     import time as _time
@@ -233,6 +362,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         spark.sparkContext.setCheckpointDir(reliable_dir)
     plan_nodes: dict = {"build": [], "iterations": [], "contractions": []}
     step_ids = itertools.count()
+    stats = cc_stats if cc_stats is not None else {}
 
     def step(kind: str, df: DataFrame, cols: list, **census):
         """Materialize ``df.select(cols)`` with one eager checkpoint; the
@@ -251,13 +381,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         return F.struct(F.xxhash64(F.col(col)).alias("h1"),
                         F.xxhash64(F.lit(7), F.col(col)).alias("h2"))
 
-    enc = pairs.select(_h("entity").alias("eh"), _h("block_key").alias("bh"),
-                       F.col("entity"))
-    pe = enc.select("eh", "bh").dropDuplicates(["eh", "bh"])
-    # entity-string dictionary: read once, by the unwind after convergence,
-    # to restore the min-URI representative (so it is not cached); min()
-    # makes a (2^-128) hash collision deterministic rather than racy
-    ent_names = enc.groupBy("eh").agg(F.min("entity").alias("entity"))
+    # the entity string rides along, so the build is also the finish's
+    # input and the unwind's dictionary; a (2^-128) entity-hash collision
+    # keeps both strings, so the result stays deterministic
+    pe = pairs.select(_h("entity").alias("eh"), _h("block_key").alias("bh"),
+                      F.col("entity")).dropDuplicates()
 
     # only keys shared by >=2 entities can merge anything -- this drops the
     # (at web scale, vast) unique-identifier majority before the loop;
@@ -282,16 +410,42 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                               F.count(F.when(big, 1)).alias("k"),
                               F.sum(F.when(big, F.col("df"))).alias("rows"))
     mergeable = dfs.filter(keep).select("bh")
-    state, seen = step(
-        "build", pe.join(mergeable.hint("SHUFFLE_HASH"), "bh"),
-        ["eh", "bh", F.col("eh").alias("label")])
+    build, seen = step("build", pe.join(mergeable.hint("SHUFFLE_HASH"), "bh"),
+                       ["eh", "bh", "entity"],
+                       ebytes=F.sum(F.octet_length("entity")))
     n_rows = seen["rows"]
+    # the finish's collect as Spark counts it against maxResultSize: a row
+    # is the entity's UTF-8 bytes, its 4-byte Arrow offset, the two int64
+    # block hashes and ~0.7 bytes of validity bits and IPC framing
+    # (measured: 57.1 MB of task results for a 56.4 MB table of 974k rows)
+    n_bytes = (seen["ebytes"] or 0) + 21 * n_rows
     if drops is not None:
         dropped_stats["dropped_super_blocks"] = drops.get["k"] or 0
         dropped_stats["dropped_pair_rows"] = drops.get["rows"] or 0
 
+    if n_bytes <= _driver_finish_cap(spark):
+        import pyarrow as pa
+        t_fin = _time.time()
+        tbl = build.select("entity", F.col("bh.h1").alias("h1"),
+                           F.col("bh.h2").alias("h2")).toArrow()
+        release_checkpoint(build)
+        names, label, changed_hist = _driver_components(
+            tbl.column("entity"), tbl.column("h1").to_numpy(),
+            tbl.column("h2").to_numpy(), max_iter)
+        converged = not changed_hist or changed_hist[-1] == 0
+        stats.update(finish="driver", iterations=len(changed_hist),
+                     jump_engaged_at=0, changed_hist=changed_hist,
+                     iter_walls=[round(_time.time() - t_fin, 2)],
+                     contractions=[], converged=converged,
+                     plan_nodes=plan_nodes)
+        if not converged:
+            raise _not_converged(max_iter, changed_hist, n_rows)
+        return spark.createDataFrame(pa.table(
+            {"entity": names, "canonical_id": names.take(label)}))
+
     wk = Window.partitionBy("bh")
     we = Window.partitionBy("eh")
+    state = build
     changed_hist: list[int] = []
     iter_walls: list[float] = []
     contractions: list[dict] = []
@@ -305,7 +459,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         t_iter = _time.time()
         # min(label) over the block, then min of that over the entity; both
         # include the row's own label, so labels decrease monotonically
+        # (the build's label is its entity hash)
         win = (state
+               .select("eh", "bh",
+                       F.col("eh" if state is build else "label")
+                       .alias("label"))
                .withColumn("_kmin", F.min("label").over(wk))
                .withColumn("_new", F.min("_kmin").over(we))
                .select("eh", "bh",
@@ -339,7 +497,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         prev_state = state
         state, seen = step("iterations", win, ["eh", "bh", "label"],
                            n=F.sum("_chg"))
-        release_checkpoint(prev_state)
+        if prev_state is not build:
+            release_checkpoint(prev_state)
         n_rows = seen["rows"]
         n_changed = int(seen["n"] or 0)
         changed_hist.append(n_changed)
@@ -370,32 +529,18 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         if n_rows == 0:
             break
     converged = (not changed_hist or changed_hist[-1] == 0 or n_rows == 0)
-    if cc_stats is not None:
-        cc_stats["iterations"] = len(changed_hist)
-        cc_stats["jump_engaged_at"] = jump_engaged_at
-        cc_stats["changed_hist"] = changed_hist
-        cc_stats["iter_walls"] = iter_walls
-        cc_stats["contractions"] = contractions
-        cc_stats["converged"] = converged
-        cc_stats["plan_nodes"] = plan_nodes
+    stats.update(finish="loop", iterations=len(changed_hist),
+                 jump_engaged_at=jump_engaged_at, changed_hist=changed_hist,
+                 iter_walls=iter_walls, contractions=contractions,
+                 converged=converged, plan_nodes=plan_nodes)
 
     def release_states():
-        for df in [state] + sources:
+        for df in [state, build] + sources:
             release_checkpoint(df)
 
     if not converged:
-        # fail LOUDLY rather than return a partially-merged map: max_iter
-        # exhausted with rows still changing means the output would silently
-        # under-merge (the engine's no-silent-caps rule).  Unreachable with
-        # the default budget — the pointer-jump backstop bounds convergence
-        # at O(log diameter) — so hitting this means the budget was cut or
-        # the graph violates the blocking assumptions; both deserve a stop.
         release_states()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations: {changed_hist[-1]} rows still changing over a "
-            f"{n_rows}-row frontier (changed_hist={changed_hist}); raise "
-            f"max_iter or inspect the blocking keys for super-components")
+        raise _not_converged(max_iter, changed_hist, n_rows)
     # unwind: pseudo-entity labels -> previous level's labels, innermost
     # mapping first; a pseudo-entity absent from the contracted loop output
     # was removed by the df>=2 refilter with its component fully converged,
@@ -409,7 +554,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         comp = (m.join(c, m["_plabel"] == c["_pe"], "left")
                 .select("eh",
                         F.coalesce("_flabel", "_plabel").alias("label")))
-    comp = comp.join(ent_names, "eh").select("entity", "label")
+    comp = comp.join(build.select("eh", "entity").distinct(), "eh")
     # representative = min entity URI per component, exactly as the string-
     # label loop chose it (labels are internal ids only); ONE window pass
     # instead of groupBy + join-back — the rows are already co-partitioned

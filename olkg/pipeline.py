@@ -10,7 +10,8 @@ reads only materialized inputs, as three concurrent chains::
                                          collision-class triples
   sides ──link (J1 salted ⋈, J2 broadcast ⋈) + dedup──▶ edges/d=1
         ──▶ nodes/ [──▶ export_nt/]
-  sides ──blocked CC (reliable checkpoints)──▶ canonical_map/
+  sides ──blocked CC (reliable checkpoints; small graphs finish on the
+        driver)──▶ canonical_map/
   pages ──native byte-identity audit
   then  ──▶ lineage/ (per-partition rows for each stage the run wrote)
 
@@ -185,6 +186,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     nodes_reused = d1_reused and stage_complete(out_dir, "nodes")
     nt_reused = d1_reused and stage_complete(out_dir, "export_nt")
     cmap_reused = extract_reused and stage_complete(out_dir, "canonical_map")
+    cc_ckpt = pjoin(out_dir, "_cc_checkpoints")
 
     # -- job 1: extract (once) → dedup direct triples → edges/d=0 ------------
     # edges is a two-partition table (d=0 direct, d=1 join-born): the link
@@ -266,6 +268,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     def _run_cmap():
         if cmap_reused:
             stages["canonical_map"] = {"skipped": True}
+            fsio.delete(spark, cc_ckpt)
             return
         t = time.time()
         from .canonicalize import canonical_map_from_blocks
@@ -281,10 +284,13 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         dropped: dict = {}
         cc_stats: dict = {}
         cmap = canonical_map_from_blocks(
-            block_ids, names, reliable_dir=pjoin(out_dir, "_cc_checkpoints"),
+            block_ids, names, reliable_dir=cc_ckpt,
             dropped_stats=dropped, cc_stats=cc_stats)
         write_stage(cmap, out_dir, "canonical_map")
         release_checkpoint(cmap)
+        # the map's marker now stands for the whole stage: a resumed run
+        # never reads the checkpoints again
+        fsio.delete(spark, cc_ckpt)
         # no silent caps: super-block-guard drops are on record per run, as
         # are the CC loop's iteration count and jump engagement
         stages["canonical_map"] = {"wall_ms": int((time.time() - t) * 1000),

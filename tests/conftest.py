@@ -112,3 +112,28 @@ def spark():
                           shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def cc_loop(monkeypatch):
+    """Pins ``connected_components`` to its distributed loop: the driver
+    finish cap at 0 bytes, for the tests of loop internals."""
+    import olkg.canonicalize as C
+    monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 0)
+
+
+@pytest.fixture
+def cc_sides(monkeypatch):
+    """Both sides of the driver finish cap for the CC output tests.
+    Calling it iterates over "loop" (the cap at 0) and "driver" (the
+    default cap, above every test graph), with the cap set for that side
+    while the test body runs, so one test checks both sides and can compare
+    them with each other."""
+    import olkg.canonicalize as C
+    default = C.DRIVER_FINISH_BYTES
+
+    def sides():
+        for side, cap in (("loop", 0), ("driver", default)):
+            monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", cap)
+            yield side
+    return sides

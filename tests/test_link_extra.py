@@ -94,27 +94,32 @@ def test_lcsh_loader_unescapes_labels(spark, tmp_path):
         "http://id.loc.gov/authorities/subjects/sh10"
 
 
-def test_cc_super_block_guard(spark):
+def test_cc_super_block_guard(spark, cc_sides):
     """connected_components drops blocks with df > max_block_df (hub keys
     carry no discriminating evidence and chain unrelated entities), censuses
-    what it dropped, and keeps normal blocks intact."""
+    what it dropped, and keeps normal blocks intact -- with an identical
+    census and map on both sides of the driver finish cap."""
     from olkg.canonicalize import connected_components
     rows = ([("e%d" % i, "hub") for i in range(50)]        # super-block
             + [("a1", "k1"), ("a2", "k1"),                 # normal block
                ("b1", "k2"), ("b2", "k2"), ("b3", "k2")])
     pairs = spark.createDataFrame(rows, ["entity", "block_key"])
-    stats = {}
-    cmap = {(r.entity, r.canonical_id)
-            for r in connected_components(pairs, max_block_df=10,
-                                          dropped_stats=stats).collect()}
-    # hub entities resolved nowhere (identity); normal blocks resolved
-    assert cmap == {("a1", "a1"), ("a2", "a1"),
-                    ("b1", "b1"), ("b2", "b1"), ("b3", "b1")}
-    assert stats == {"dropped_super_blocks": 1, "dropped_pair_rows": 50}
-    # no cap → the hub merges everything it touches
-    all_cc = {(r.entity, r.canonical_id)
-              for r in connected_components(pairs, max_block_df=None).collect()}
-    assert ("e49", "e0") in all_cc
+    for side in cc_sides():
+        stats, cc = {}, {}
+        cmap = {(r.entity, r.canonical_id)
+                for r in connected_components(pairs, max_block_df=10,
+                                              dropped_stats=stats,
+                                              cc_stats=cc).collect()}
+        assert cc["finish"] == side
+        # hub entities resolved nowhere (identity); normal blocks resolved
+        assert cmap == {("a1", "a1"), ("a2", "a1"),
+                        ("b1", "b1"), ("b2", "b1"), ("b3", "b1")}
+        assert stats == {"dropped_super_blocks": 1, "dropped_pair_rows": 50}
+        # no cap → the hub merges everything it touches
+        all_cc = {(r.entity, r.canonical_id)
+                  for r in connected_components(pairs,
+                                                max_block_df=None).collect()}
+        assert ("e49", "e0") in all_cc
 
 
 def test_fake_names_do_not_chain_minhash_blocks():
@@ -127,11 +132,12 @@ def test_fake_names_do_not_chain_minhash_blocks():
     assert all(n.replace(" ", "").isalpha() for n in names)
 
 
-def test_cc_long_chain_converges_within_max_iter(spark):
+def test_cc_long_chain_converges_within_max_iter(spark, cc_sides):
     """A chain component longer than max_iter hops must still fully
     converge: plain hash-min propagates one hop per iteration and would
-    silently stop short at max_iter; the pointer-jump step (iteration >= 3)
-    compresses chains in O(log diameter)."""
+    silently stop short at max_iter; the pointer-jump step (iteration >= 3
+    in the loop, every round on the driver) compresses chains in
+    O(log diameter)."""
     from olkg.canonicalize import connected_components
     n = 60   # bipartite diameter ~120 >> max_iter=20
     rows = []
@@ -139,15 +145,20 @@ def test_cc_long_chain_converges_within_max_iter(spark):
         rows.append((f"e{i:03d}", f"k{i:03d}"))
         rows.append((f"e{i+1:03d}", f"k{i:03d}"))
     pairs = spark.createDataFrame(rows, ["entity", "block_key"])
-    stats = {}
-    cmap = connected_components(pairs, max_iter=20, cc_stats=stats).collect()
-    labels = {r.canonical_id for r in cmap}
-    assert labels == {"e000"}, f"chain not fully merged: {sorted(labels)[:5]}"
-    assert len({r.entity for r in cmap}) == n
-    # a chain's changed census stays flat round over round — the jump gate
-    # must fire (without it the chain needs ~diameter/2 = 60 iterations)
-    assert stats["jump_engaged_at"] is not None
-    assert stats["iterations"] <= 20
+    for side in cc_sides():
+        stats = {}
+        cmap = connected_components(pairs, max_iter=20,
+                                    cc_stats=stats).collect()
+        assert stats["finish"] == side
+        labels = {r.canonical_id for r in cmap}
+        assert labels == {"e000"}, \
+            f"{side}: chain not fully merged: {sorted(labels)[:5]}"
+        assert len({r.entity for r in cmap}) == n
+        # a chain's changed census stays flat round over round — the loop's
+        # jump gate must fire (without it the chain needs ~diameter/2 = 60
+        # iterations)
+        assert stats["jump_engaged_at"] is not None
+        assert stats["iterations"] <= 20
 
 
 def _chain_pairs(spark, n=60):
@@ -158,12 +169,14 @@ def _chain_pairs(spark, n=60):
     return spark.createDataFrame(rows, ["entity", "block_key"])
 
 
-def test_cc_releases_loop_state(spark):
-    """connected_components leaves exactly one persistent RDD behind -- the
+def test_cc_releases_loop_state(spark, cc_sides):
+    """The loop side leaves exactly one persistent RDD behind -- the
     returned map -- and release_checkpoint frees that one too: every loop
     checkpoint and contraction source is released by the loop itself
     (checkpointed blocks otherwise stay registered for the application's
-    lifetime)."""
+    lifetime).  The driver side releases its build once collected and
+    returns a local relation, so it leaves none, and releasing its map is
+    a no-op."""
     from olkg.canonicalize import connected_components, release_checkpoint
     pairs = _chain_pairs(spark)
     jsc = spark.sparkContext._jsc
@@ -171,15 +184,18 @@ def test_cc_releases_loop_state(spark):
     def new_rdds():   # ids, not a size: the cleaner may free older ones
         return set(jsc.getPersistentRDDs().keys()) - start
 
-    start = set(jsc.getPersistentRDDs().keys())
-    cmap = connected_components(pairs, max_iter=20)
-    assert len(new_rdds()) == 1
-    assert cmap.count() == 60
-    release_checkpoint(cmap)
-    assert new_rdds() == set()
+    for side in cc_sides():
+        start = set(jsc.getPersistentRDDs().keys())
+        stats = {}
+        cmap = connected_components(pairs, max_iter=20, cc_stats=stats)
+        assert stats["finish"] == side
+        assert len(new_rdds()) == {"loop": 1, "driver": 0}[side]
+        assert cmap.count() == 60
+        release_checkpoint(cmap)
+        assert new_rdds() == set()
 
 
-def test_cc_plan_size_constant_across_iterations(spark):
+def test_cc_plan_size_constant_across_iterations(spark, cc_loop):
     """Every CC step plans from the previous step's checkpoint, so the
     analyzed plan of an iteration has the same node count whichever
     iteration it is, before and after the pointer jump engages (the jump
@@ -197,45 +213,48 @@ def test_cc_plan_size_constant_across_iterations(spark):
     assert len(set(stats["plan_nodes"]["contractions"])) == 1, stats
 
 
-def test_cc_nonconvergence_raises_loudly(spark):
+def test_cc_nonconvergence_raises_loudly(spark, cc_sides):
     """An exhausted iteration budget with rows still changing must RAISE,
     never return a partially-merged map (the engine's no-silent-caps rule):
-    a long chain at max_iter=2 cannot converge (the jump gate needs
-    iteration >= 2 of history), so the loop must fail loudly and record
-    converged=False in cc_stats."""
+    a long chain cannot converge at max_iter=2 in the loop (the jump gate
+    needs iteration >= 2 of history) nor in one driver round (a chain needs
+    a second round to confirm its first), so either side must fail loudly
+    and record converged=False in cc_stats."""
     import pytest
     from olkg.canonicalize import connected_components
-    n = 60
-    rows = []
-    for i in range(n - 1):
-        rows.append((f"e{i:03d}", f"k{i:03d}"))
-        rows.append((f"e{i+1:03d}", f"k{i:03d}"))
-    pairs = spark.createDataFrame(rows, ["entity", "block_key"])
-    stats = {}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=2, cc_stats=stats)
-    assert stats["converged"] is False
-    assert stats["changed_hist"][-1] != 0
+    pairs = _chain_pairs(spark)
+    for side in cc_sides():
+        stats = {}
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(pairs, cc_stats=stats,
+                                 max_iter={"loop": 2, "driver": 1}[side])
+        assert stats["finish"] == side
+        assert stats["converged"] is False
+        assert stats["changed_hist"][-1] != 0
 
 
-def test_cc_star_blocks_never_pay_the_jump(spark):
+def test_cc_star_blocks_never_pay_the_jump(spark, cc_sides):
     """Star blocks (the identifier-block common case) collapse their
-    changed census geometrically and converge by round 3 — the progress
-    gate must leave the pointer jump OFF so the common case pays no
-    persist + self-join per iteration."""
+    changed census geometrically and converge by round 3 — the loop's
+    progress gate must leave the pointer jump OFF so the common case pays
+    no persist + self-join per iteration.  Both sides give the same map."""
     from olkg.canonicalize import connected_components
     rows = []
     for b in range(40):                      # 40 disjoint stars of 6
         for m in range(6):
             rows.append((f"s{b:02d}_{m}", f"isbn:{b:02d}"))
     pairs = spark.createDataFrame(rows, ["entity", "block_key"])
-    stats = {}
-    cmap = {(r.entity, r.canonical_id)
-            for r in connected_components(pairs, cc_stats=stats).collect()}
-    assert len(cmap) == 240
-    assert all(c == f"s{e[1:3]}_0" for e, c in cmap)
-    assert stats["jump_engaged_at"] is None, stats
-    assert stats["iterations"] <= 3, stats
+    for side in cc_sides():
+        stats = {}
+        cmap = {(r.entity, r.canonical_id)
+                for r in connected_components(pairs,
+                                              cc_stats=stats).collect()}
+        assert stats["finish"] == side
+        assert len(cmap) == 240
+        assert all(c == f"s{e[1:3]}_0" for e, c in cmap)
+        assert stats["iterations"] <= 3, stats
+        if side == "loop":
+            assert stats["jump_engaged_at"] is None, stats
 
 
 def _union_find_reference(rows):
@@ -278,11 +297,12 @@ def _union_find_reference(rows):
     return out
 
 
-def test_cc_contraction_matches_union_find(spark):
+def test_cc_contraction_matches_union_find(spark, cc_sides):
     """Mixed stars + a chain long enough to need several iterations: the
     contraction path (engaged unconditionally after iteration 1) must
     census its shrinks (no silent row drops) and the unwound output must
-    equal a driver-side union-find, including the min-URI representative."""
+    equal a driver-side union-find, including the min-URI representative;
+    so must the driver finish's, which never contracts."""
     from olkg.canonicalize import connected_components
     rows = []
     for b in range(25):                       # stars (identifier blocks)
@@ -292,22 +312,27 @@ def test_cc_contraction_matches_union_find(spark):
         rows.append((f"c{i:02d}", f"band:{i:02d}"))
         rows.append((f"c{i+1:02d}", f"band:{i:02d}"))
     rows.append(("c00", "isbn:00"))           # chain touches star 0
-    stats = {}
-    got = {(r.entity, r.canonical_id)
-           for r in connected_components(
-               spark.createDataFrame(rows, ["entity", "block_key"]),
-               cc_stats=stats).collect()}
-    assert got == _union_find_reference(rows)
-    assert stats["contractions"], stats       # fired at least once
-    for c in stats["contractions"]:           # shrink census is coherent
-        assert c["rows_after"] <= c["rows_before"]
-    assert len(stats["iter_walls"]) == stats["iterations"]
+    pairs = spark.createDataFrame(rows, ["entity", "block_key"])
+    for side in cc_sides():
+        stats = {}
+        got = {(r.entity, r.canonical_id)
+               for r in connected_components(pairs, cc_stats=stats).collect()}
+        assert got == _union_find_reference(rows), side
+        if side == "driver":
+            assert stats["contractions"] == [] and \
+                len(stats["iter_walls"]) == 1, stats
+            continue
+        assert stats["contractions"], stats       # fired at least once
+        for c in stats["contractions"]:           # shrink census is coherent
+            assert c["rows_after"] <= c["rows_before"]
+        assert len(stats["iter_walls"]) == stats["iterations"]
 
 
-def test_cc_seeded_random_graph_matches_union_find(spark):
+def test_cc_seeded_random_graph_matches_union_find(spark, cc_sides):
     """Deterministic pseudo-random bipartite graph (mix of singleton keys,
-    stars, shared hubs): hash-encoded labels + contraction + jump must be
-    invisible in the output vs driver-side union-find."""
+    stars, shared hubs): hash-encoded labels + contraction + jump, and the
+    driver finish, must be invisible in the output vs driver-side
+    union-find."""
     from olkg.canonicalize import connected_components
     import random
     rng = random.Random(20260817)
@@ -316,8 +341,56 @@ def test_cc_seeded_random_graph_matches_union_find(spark):
         e = f"http://x/e{i:04d}"
         for _ in range(rng.randint(1, 3)):
             rows.append((e, f"k{rng.randint(0, 250):03d}"))
-    got = {(r.entity, r.canonical_id)
-           for r in connected_components(
-               spark.createDataFrame(rows, ["entity", "block_key"]),
-               max_block_df=None).collect()}
-    assert got == _union_find_reference(rows)
+    pairs = spark.createDataFrame(rows, ["entity", "block_key"])
+    expect = _union_find_reference(rows)
+    for side in cc_sides():
+        stats = {}
+        got = {(r.entity, r.canonical_id)
+               for r in connected_components(pairs, max_block_df=None,
+                                             cc_stats=stats).collect()}
+        assert stats["finish"] == side
+        assert got == expect, side
+
+
+def test_cc_representative_is_code_point_min(spark, cc_sides):
+    """Both sides pick the smallest URI by code point, the order of Spark's
+    min on strings (UTF-8 bytes).  U+FFFF sorts before any astral-plane
+    character by code point but after it in UTF-16, and "z" sorts before
+    "é" by code point but not in a locale collation, so a driver finish
+    that sorted by either would pick another representative here."""
+    from olkg.canonicalize import connected_components
+    astral = ["e\U0001F600", "e\uffff", "e\U00010000"]
+    accented = ["e\u00e9", "ez", "e\u00e9z"]
+    rows = ([(e, "k:astral") for e in astral]
+            + [(e, "k:accented") for e in accented])
+    expect = {(e, min(astral)) for e in astral} | \
+        {(e, min(accented)) for e in accented}
+    assert min(astral) == "e\uffff" and min(accented) == "ez"
+    pairs = spark.createDataFrame(rows, ["entity", "block_key"])
+    for side in cc_sides():
+        stats = {}
+        got = {(r.entity, r.canonical_id)
+               for r in connected_components(pairs, cc_stats=stats).collect()}
+        assert stats["finish"] == side
+        assert got == expect, side
+
+
+def test_cc_dispatch_reads_the_build_size(spark, monkeypatch):
+    """The cap is compared with the size of the build's collect, observed
+    on the build: entity UTF-8 bytes plus 21 bytes a row, over the pairs of
+    merge-capable blocks only (five here, whatever the singleton keys add to
+    the input).  A session whose spark.driver.maxResultSize is below the
+    constant lowers the cap to it."""
+    import olkg.canonicalize as C
+    rows = [("a1", "k1"), ("a2", "k1"), ("b1", "k2"), ("b2", "k2"),
+            ("b3", "k2"), ("c1", "k3"), ("a1", "k4")]
+    pairs = spark.createDataFrame(rows, ["entity", "block_key"])
+    size = sum(len(e.encode()) + 21 for e in ("a1", "a2", "b1", "b2", "b3"))
+    for cap, side in ((size, "driver"), (size - 1, "loop")):
+        monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", cap)
+        stats = {}
+        C.connected_components(pairs, cc_stats=stats)
+        assert stats["finish"] == side, cap
+    monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 1 << 40)
+    limit = spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
+    assert limit == "1g" and C._driver_finish_cap(spark) == 1 << 30

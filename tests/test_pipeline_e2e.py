@@ -269,24 +269,54 @@ def test_iceberg_write_dispatch(spark):
     writer.createOrReplace.assert_not_called()
 
 
-def test_cc_reliable_checkpoint(spark, tmp_path):
-    """The pipeline's CC loop checkpoints to the given directory
-    (distributed storage on a cluster) and still converges to the right
-    components."""
+def test_cc_reliable_checkpoint(spark, tmp_path, cc_sides):
+    """The pipeline's CC steps checkpoint to the given directory
+    (distributed storage on a cluster) and still converge to the right
+    components, on both sides of the driver finish cap."""
     from olkg.canonicalize import connected_components
     pairs = spark.createDataFrame(
         [("e1", "k1"), ("e2", "k1"), ("e2", "k2"), ("e3", "k2"),
          ("e4", "k9"),  # singleton key: excluded from the map
          ("e5", "k5"), ("e6", "k5")],
         ["entity", "block_key"])
-    ckdir = str(tmp_path / "cc_ck")
-    cc = connected_components(pairs, reliable_dir=ckdir)
-    got = {r.entity: r.canonical_id for r in cc.collect()}
-    assert got == {"e1": "e1", "e2": "e1", "e3": "e1",
-                   "e5": "e5", "e6": "e5"}
-    # at least one reliable checkpoint landed in the stage directory
-    found = any(files for _, _, files in os.walk(ckdir))
-    assert found, "no reliable checkpoint files written"
+    for side in cc_sides():
+        ckdir = str(tmp_path / f"cc_ck_{side}")
+        stats = {}
+        cc = connected_components(pairs, reliable_dir=ckdir, cc_stats=stats)
+        assert stats["finish"] == side
+        got = {r.entity: r.canonical_id for r in cc.collect()}
+        assert got == {"e1": "e1", "e2": "e1", "e3": "e1",
+                       "e5": "e5", "e6": "e5"}
+        # at least one reliable checkpoint landed in the stage directory
+        found = any(files for _, _, files in os.walk(ckdir))
+        assert found, f"{side}: no reliable checkpoint files written"
+
+
+def test_cc_checkpoints_deleted_after_map(pipeline_out):
+    """Once canonical_map/_SUCCESS exists the CC checkpoints are deleted:
+    a resumed run reuses the map and never reads them."""
+    out, _, _ = pipeline_out
+    assert os.path.exists(os.path.join(out, "canonical_map", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(out, "_cc_checkpoints"))
+
+
+def test_cc_sides_agree_in_pipeline(spark, pipeline_out, tmp_path,
+                                    monkeypatch):
+    """run_pipeline on the fixture corpus writes the same canonical map and
+    the same dropped-block census whether CC finishes on the driver (the
+    default) or in the distributed loop (the cap at 0)."""
+    import olkg.canonicalize as C
+    out, pages_path, edges0, cmap0 = _resume_copy(spark, pipeline_out,
+                                                  tmp_path)
+    driver = pipeline_out[2]["stages"]["canonical_map"]
+    assert driver["finish"] == "driver"
+    shutil.rmtree(os.path.join(out, "canonical_map"))
+    monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 0)
+    loop = _rerun(spark, pages_path, out)["stages"]["canonical_map"]
+    assert loop["finish"] == "loop"
+    assert cmap0 and cmap_set(spark, out) == cmap0
+    census = ("dropped_super_blocks", "dropped_pair_rows")
+    assert {k: loop[k] for k in census} == {k: driver[k] for k in census}
 
 
 def test_ntriples_dated_single_file(spark, pipeline_out, tmp_path):
