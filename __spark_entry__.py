@@ -4,17 +4,22 @@
 pages corpus and touches sf0.001.
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
-(SURVEY.md §2 + the training-data ops).  KG queries run the real distributed
-pipeline over ``data/pages.parquet`` (committed, deterministic) and are
-checked against ``data/golden_edges.parquet`` — the single-process net-effect
-golden set produced by the spec-tested pure-Python semantics (olkg.golden),
-i.e. the oracle verifies distributed == reference semantics.  Corpus-ops
-queries run on the driver's sf tables with plain-SQL oracles.
+(SURVEY.md §2 + the training-data ops).  KG queries read one
+``olkg.pipeline.run_pipeline`` run per application over
+``data/pages.parquet`` (committed, deterministic): its edge table is checked
+against ``data/golden_edges.parquet`` — the single-process net-effect golden
+set produced by the spec-tested pure-Python semantics (olkg.golden), i.e.
+the oracle verifies distributed == reference semantics — and its
+byte-identity audit against the pages table.  Corpus-ops queries run on the
+driver's sf tables with plain-SQL oracles.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,24 +43,32 @@ def _cache_put(spark: SparkSession, key: tuple, value):
     app = spark.sparkContext.applicationId
     for k in [k for k in _CACHE if k[1] != app]:
         del _CACHE[k]
+        if k[0] == "kg":
+            shutil.rmtree(_kg_dir(k[1]), ignore_errors=True)
     _CACHE[key] = value
 
 
-def _kg(spark: SparkSession):
-    """Run extract→link→dedup once per session; cache the small results."""
-    key = ("kg", spark.sparkContext.applicationId)
-    if key not in _CACHE:
-        from olkg.canonicalize import dedup_edges
-        from olkg.extract import extract_pages
-        from olkg.link import link_stage
+def _kg_dir(app_id: str) -> str:
+    return os.path.join(tempfile.gettempdir(), f"olkg_kg_{app_id}")
 
-        pages = spark.read.parquet(PAGES)
-        lcsh = spark.read.parquet(LCSH)
-        ext = extract_pages(pages).cache()
-        edges = dedup_edges(link_stage(ext, lcsh, hot_threshold=1000,
-                                       num_salts=4)).cache()
-        edges.count()
-        _cache_put(spark, key, (ext, edges))
+
+def _kg(spark: SparkSession):
+    """Run the pipeline once per application; cache ``(metrics, edges)``.
+
+    The output goes to one directory per application under the temp dir.
+    It is deleted when the driver exits, or earlier when a later
+    application's cache insert evicts this one."""
+    app = spark.sparkContext.applicationId
+    key = ("kg", app)
+    if key not in _CACHE:
+        from olkg.materialize import read_stage
+        from olkg.pipeline import run_pipeline
+
+        out = _kg_dir(app)
+        atexit.register(shutil.rmtree, out, True)
+        metrics = run_pipeline(spark, PAGES, out,
+                               lcsh=spark.read.parquet(LCSH))
+        _cache_put(spark, key, (metrics, read_stage(spark, out, "edges")))
     return _CACHE[key]
 
 
@@ -66,8 +79,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG construction (extract→link→canonicalize) triple
-    census by predicate, plus an sf0.001 corpus stat row."""
+    """Flagship: the full KG pipeline (extract → link → dedup → nodes, with
+    the CC canonical map) as a triple census by predicate, plus an sf0.001
+    corpus stat row."""
     _, edges = _kg(spark)
     pred_counts = (edges.groupBy("pred")
                    .agg(F.count(F.lit(1)).alias("n"))
@@ -139,11 +153,11 @@ def q_kg_datetime_literals(spark, sf_dir):
 
 
 def q_kg_text_identity(spark, sf_dir):
-    ext, _ = _kg(spark)
-    return (ext.filter(F.col("kind") == "page")
-            .agg(F.count(F.lit(1)).alias("pages"),
-                 F.sum(F.when(F.col("obj") == "ok", 1).otherwise(0))
-                 .alias("pages_ok")))
+    metrics, _ = _kg(spark)
+    pages = metrics["pages"]
+    return spark.createDataFrame(
+        [(pages, pages - metrics["text_mismatches"])],
+        "pages bigint, pages_ok bigint")
 
 
 # ---------------------------------------------------------------------------

@@ -86,10 +86,13 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), "data", "lcsh.parquet"))
     # untimed warmup: JIT the extraction path and spin up the Python workers
     # so the first timed pipeline doesn't carry one-time costs
-    from olkg.extract import extract_pages
+    from olkg.extract import extract_triples_with_side_sink
     from olkg.fixtures import corpus_lines
     from olkg.pagesgen import build_pages_df
-    extract_pages(build_pages_df(spark, corpus_lines())).count()
+    warm_sink = tempfile.mkdtemp(prefix="olkg_bench_warmup_")
+    extract_triples_with_side_sink(build_pages_df(spark, corpus_lines()),
+                                   warm_sink).count()
+    shutil.rmtree(warm_sink, ignore_errors=True)
 
     # headline: the pipeline.  The host is shared and single-shot wall times
     # swing ±30% on identical work (BASELINE.md §protocol), so it runs

@@ -13,10 +13,12 @@ Scale notes (100 TB posture):
   input's own partitioning is skewed (north_rule's url-hash repartition).
 - column pruning: only (url, html, text) are read — Catalyst prunes the rest
   from the parquet/Iceberg scan.
-- the html→text inversion is audited per page ('page' rows), enforcing the
-  byte-identity invariant without a second pass.
-- side-sink mode (:func:`extract_triples_with_side_sink`, the pipeline's
-  extract job): the UDF yields the big triple stream straight into the
+- the html→text inversion runs JVM-side (:func:`pages_to_lines`), so
+  Python never sees html bytes; :func:`audit_pages` checks it against the
+  text column in one native scan (the byte-identity invariant).
+- the side sink (:func:`extract_triples_with_side_sink`, the only
+  extraction — the pipeline, the query entry points and the streaming
+  ingest all run it): the UDF yields the big triple stream straight into the
   downstream shuffle and writes the small side rows (author names, creation
   refs, LCSH probes, block ids — a few rows per page) to a parquet side sink
   from inside the task, so the expensive Python extraction runs EXACTLY
@@ -40,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
-from .pagesgen import html_to_text
 from .schema import EXTRACT_SCHEMA, TRIPLES_SCHEMA
 from .triples import extract_record, parse_dump_line
 
@@ -87,63 +88,8 @@ class _Cols:
     def frame(self) -> pd.DataFrame:
         return pd.DataFrame(dict(zip(self.names, self.cols)))
 
-    def reset(self):
-        self.cols = [[] for _ in self.names]
 
-
-def _make_extract_batches():
-    """Batch iterator emitting the unified 8-column extract rows: triples,
-    side rows and one 'page' audit row per page."""
-
-    def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _Cols(_COLS)
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist() if "html" in pdf else [None] * len(urls)
-            texts = pdf["text"].tolist()
-            for url, html, text in zip(urls, htmls, texts):
-                recovered = html_to_text(bytes(html)) if html is not None else None
-                line = recovered if recovered is not None else text
-                rec = parse_dump_line(line) if line is not None else None
-                src_type = rec[0] if rec else None
-                out.append("page", src_type, url, url, None,
-                           "ok" if recovered == text else "mismatch",
-                           None, None)
-                if rec is None:
-                    continue
-                res = extract_record(rec[0], rec[4])
-                if res is None:
-                    continue
-                for t in res.triples:
-                    out.append("triple", src_type, url, t.subj, t.pred,
-                               t.obj, t.obj_kind, t.obj_datatype)
-                for key, name in res.author_names:
-                    out.append("author_name", src_type, url, key, None,
-                               name, None, None)
-                for creation, key in res.creation_refs:
-                    out.append("creation_ref", src_type, url, creation,
-                               None, key, None, None)
-                for uri, label in res.probes:
-                    out.append("probe", src_type, url, uri, None, label,
-                               None, None)
-            yield out.frame()
-
-    return _extract_batches
-
-
-def extract_pages(pages: DataFrame,
-                  repartition_by_url: int | None = None) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → unified extract rows, every
-    kind in one stream (the streaming ingest and the query entry points
-    read it; the pipeline uses :func:`extract_triples_with_side_sink`)."""
-    cols = [c for c in ("url", "html", "text") if c in pages.columns]
-    src = pages.select(*cols)
-    if repartition_by_url:
-        src = src.repartition(repartition_by_url, F.xxhash64("url"))
-    return src.mapInPandas(_make_extract_batches(), schema=EXTRACT_SCHEMA)
-
-
-# --- JVM-native html→text inversion (side-sink mode) ------------------------
+# --- JVM-native html→text inversion -----------------------------------------
 # html_to_text (pagesgen.py) is substring+replace — expressible natively, so
 # the pipeline never ships html bytes to Python and never pays Python string
 # work for the inversion; Python receives ONLY the recovered dump line.
@@ -154,8 +100,11 @@ _H_SUFFIX = "</pre></body></html>"
 
 def _native_recovered(html_col):
     """Decoded+unescaped dump line from the html envelope, NULL when the
-    envelope doesn't conform (same contract as pagesgen.html_to_text)."""
-    s = F.decode(html_col, "UTF-8")
+    envelope doesn't conform (same contract as pagesgen.html_to_text).  An
+    envelope that is not valid UTF-8 does not conform: it falls back to the
+    text column and counts as an audit mismatch, instead of failing the
+    whole job."""
+    s = F.try_validate_utf8(html_col.cast("string"))
     conforms = s.startswith(_H_PREFIX) & s.endswith(_H_SUFFIX)
     body = s.substr(F.lit(len(_H_PREFIX) + 1),
                     F.length(s) - F.lit(len(_H_PREFIX) + len(_H_SUFFIX)))
@@ -168,7 +117,7 @@ def _native_recovered(html_col):
 
 def pages_to_lines(pages: DataFrame) -> DataFrame:
     """(line): the dump line per page — html inversion when possible, else
-    the text column (mirrors the Python fallback in _make_extract_batches)."""
+    the text column."""
     cols = pages.columns
     if "html" in cols and "text" in cols:
         line = F.coalesce(_native_recovered(F.col("html")), F.col("text"))

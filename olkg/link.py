@@ -91,23 +91,10 @@ def lcsh_lookup_join(probes: DataFrame, lcsh: DataFrame) -> DataFrame:
     )
 
 
-def link_stage(extract_df: DataFrame, lcsh: DataFrame | None,
-               hot_threshold: int = 100_000, num_salts: int = 16) -> DataFrame:
-    """Derive the join-born triples from the extract rows and union them with
-    the record-local triples → the full (pre-dedup) triple stream.
-    ``extract_df`` is read several times (the triples, each side kind, the
-    hot-key census), so pass a materialized or cached DataFrame, not a raw
-    UDF stream."""
-    direct = (extract_df.filter(F.col("kind") == "triple")
-              .select("subj", "pred", "obj", "obj_kind", "obj_datatype"))
-    return direct.unionByName(
-        join_born_triples(extract_df, lcsh, hot_threshold, num_salts))
-
-
 def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,
                       hot_threshold: int = 100_000,
                       num_salts: int = 16) -> DataFrame:
-    """The link stage's join outputs alone: J1 (ol:author rendezvous) and,
+    """The link stage's join outputs: J1 (ol:author rendezvous) and,
     when an LCSH dimension is given, J2 (dc:subject URI lookups) — both
     derived from the small side-row kinds."""
     refs = (sides.filter(F.col("kind") == "creation_ref")

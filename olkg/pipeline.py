@@ -59,26 +59,22 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     the inputs dedup_edges sizes its plan from.
 
     Cost: one metadata-only parquet count, one Hadoop-FS content summary,
-    and ~``sample_pages`` rows extracted DRIVER-side through the pure-Python
-    semantics (~milliseconds) to estimate triples/page.  Map-task count is
-    input_bytes / spark.sql.files.maxPartitionBytes — unless the stream is
-    explicitly repartitioned (``repartition_by_url``), which then fixes the
-    task count."""
-    from .pagesgen import html_to_text
+    and ~``sample_pages`` dump lines (the extract job's own
+    :func:`~olkg.extract.pages_to_lines`) extracted DRIVER-side through the
+    pure-Python semantics (~milliseconds) to estimate triples/page.
+    Map-task count is input_bytes / spark.sql.files.maxPartitionBytes —
+    unless the stream is explicitly repartitioned (``repartition_by_url``),
+    which then fixes the task count."""
+    from .extract import pages_to_lines
     from .triples import extract_line
 
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
     if n_pages == 0:
         return 0, 0.0
-    cols = [c for c in ("html", "text") if c in pages.columns]
-    sample = pages.select(*cols).limit(min(sample_pages, n_pages)).collect()
+    sample = pages_to_lines(pages).limit(min(sample_pages, n_pages)).collect()
     tri = 0
-    for r in sample:
-        html = r["html"] if "html" in cols else None
-        recovered = html_to_text(bytes(html)) if html is not None else None
-        line = recovered if recovered is not None else (
-            r["text"] if "text" in cols else None)
+    for (line,) in sample:
         res = extract_line(line) if line else None
         tri += len(res.triples) if res else 0
     est_total = int(n_pages * (tri / len(sample)))

@@ -12,12 +12,15 @@ PAGES_SCHEMA = StructType([
     StructField("lang", StringType(), True),
 ])
 
-# Output of the extract stage: one unified row stream, discriminated by `kind`
-#   kind = 'triple'       → subj/pred/obj[/obj_kind/obj_datatype] populated
+# Rows of the extract stage's side sink, discriminated by `kind`
+#   kind = 'triple'       → a collision-class triple (ol:author, dc:subject
+#                           URI — predicates a join can also produce):
+#                           subj/pred/obj/obj_kind[/obj_datatype] populated
 #   kind = 'probe'        → subj=entity uri, obj=normalized subject label (J2 input)
 #   kind = 'author_name'  → subj=author key, obj=name string (J1 build side)
 #   kind = 'creation_ref' → subj=creation uri, obj=author key (J1 probe side)
-#   kind = 'page'         → subj=url, obj='ok'|'mismatch' (byte-identity audit)
+#   kind = 'block_id'     → subj=entity uri, obj='isbn13:…'|'lccn:…'|'oclc:…'
+#                           (entity-resolution blocking key)
 EXTRACT_SCHEMA = StructType([
     StructField("kind", StringType(), False),
     StructField("src_type", StringType(), True),

@@ -3,12 +3,11 @@
 The reference is a batch converter; these wrap the same extraction semantics
 for continuous ingest, the way a crawl feed would arrive in production:
 
-- :func:`stream_extract`: file-source stream of pages → per-micro-batch
-  extraction (the SAME spec-tested extract + link-input side rows) appended
-  to a triples directory.  ``foreachBatch`` + the streaming checkpoint give
-  exactly-once per micro-batch on restart; resume = restart with the same
-  checkpoint location (north_rule's idempotent-resume posture, streaming
-  flavor).
+- :func:`stream_extract`: file-source stream of pages → the pipeline's own
+  extract job on each micro-batch (triple stream + validated side sink).
+  ``foreachBatch`` + the streaming checkpoint give exactly-once per
+  micro-batch on restart; resume = restart with the same checkpoint
+  location (north_rule's idempotent-resume posture, streaming flavor).
 - :func:`stream_events_hourly`: watermarked sliding-window aggregation over
   an event stream — the late-data-tolerant stateful operator pattern
   (watermark bounds state; late rows beyond it are dropped deterministically).
@@ -16,42 +15,53 @@ for continuous ingest, the way a crawl feed would arrive in production:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fsio
+from .fsio import pjoin
 from .schema import PAGES_SCHEMA
 
 
 def stream_extract(spark: SparkSession, input_dir: str, out_dir: str,
                    trigger_available_now: bool = True):
-    """Continuous KG ingest: watch ``input_dir`` for pages parquet files,
-    extract each micro-batch with the batch-identical UDF, append the
-    unified extract rows (kind-discriminated) to ``<out_dir>/extract_stream``.
+    """Continuous KG ingest: watch ``input_dir`` for pages parquet files and
+    run the pipeline's extract job
+    (:func:`olkg.extract.extract_triples_with_side_sink`) on each
+    micro-batch.  Batch N writes its triple stream to
+    ``<out_dir>/extract_stream/triples/batch_id=N`` and its side sink to
+    ``<out_dir>/extract_stream/sides/batch_id=N``; the sink is validated
+    against the executors' row census (:func:`olkg.extract.read_side_rows`)
+    as in :func:`olkg.pipeline.run_pipeline`.  The byte-identity audit is
+    :func:`olkg.extract.audit_pages` over the same pages.
 
     Returns the StreamingQuery.  With ``trigger_available_now`` the query
     drains everything currently present and stops (the test/backfill mode);
     without it, it runs until stopped (the production mode)."""
-    from .extract import extract_pages
+    from .extract import extract_triples_with_side_sink, read_side_rows
 
-    dest = os.path.join(out_dir, "extract_stream")
-    checkpoint = os.path.join(out_dir, "_stream_checkpoint")
+    dest = pjoin(out_dir, "extract_stream")
+    checkpoint = pjoin(out_dir, "_stream_checkpoint")
 
     pages = (spark.readStream
              .schema(PAGES_SCHEMA)
              .parquet(input_dir))
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent per-batch sink: each micro-batch overwrites its OWN
-        # batch_id-derived subdirectory, so a crash between a (partial)
-        # write and the checkpoint commit re-runs the batch into the same
-        # path instead of appending duplicates — exactly-once OUTPUT, not
-        # just exactly-once processing.  Readers see the union via normal
-        # partition discovery on `dest`.
-        (extract_pages(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(dest, f"batch_id={batch_id}")))
+        # Idempotent per-batch sink: a crash between a (partial) write and
+        # the checkpoint commit re-runs the batch, which first deletes its
+        # OWN batch_id directories, so its output lands exactly once —
+        # exactly-once OUTPUT, not just exactly-once processing.  Readers
+        # see the union via partition discovery on each table.
+        triples = pjoin(dest, "triples", f"batch_id={batch_id}")
+        sides = pjoin(dest, "sides", f"batch_id={batch_id}")
+        fsio.delete(spark, triples)
+        fsio.delete(spark, sides)
+        side_acc = spark.sparkContext.accumulator(0)
+        (extract_triples_with_side_sink(batch_df, sides,
+                                        side_count_acc=side_acc)
+         .write.parquet(triples))
+        read_side_rows(spark, sides, expected_rows=side_acc.value)
 
     writer = (pages.writeStream
               .foreachBatch(_process)

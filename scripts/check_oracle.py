@@ -50,8 +50,17 @@ def main() -> None:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    from bench_extra import build_bench_session
-    spark = build_bench_session()
+    # the session bench.py builds (same confs → same plans)
+    os.environ.setdefault("OLKG_TMPFS_SCRATCH", "1")
+    from olkg.session import build_session
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = build_session(
+        app_name="olkg-check-oracle",
+        master=f"local[{cpus}]",
+        shuffle_partitions=max(2 * cpus, 16),
+        extra_conf={"spark.task.cpus": "2"} if cpus >= 16 else {},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
     qmap, omap = entry.queries(), entry.oracle_sql()
     if any(n.startswith("ann_ivf") for n in names):

@@ -83,11 +83,8 @@ def test_session_cache_evicts_stopped_applications(spark):
     live = spark.sparkContext.applicationId
     dead = ("kg", "app-stopped-0000")
     entry_mod._CACHE[dead] = ("stale", "handles")
-    held = entry_mod._CACHE.pop(("kg", live), None)   # force a fresh insert
+    entry_mod._CACHE.pop(("kg", live), None)   # force a fresh insert
     entry_mod._kg(spark)
-    if held is not None:
-        for df in held:
-            df.unpersist()
     assert dead not in entry_mod._CACHE
     assert ("kg", live) in entry_mod._CACHE
     assert all(k[1] == live for k in entry_mod._CACHE)

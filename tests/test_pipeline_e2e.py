@@ -68,6 +68,33 @@ def test_byte_identity_audit(corpus, pipeline_out):
     assert metrics["text_mismatches"] == 0
 
 
+def test_non_utf8_envelope_falls_back_to_text(spark, corpus, tmp_path):
+    """An html envelope that is not valid UTF-8 does not conform: the page
+    is extracted from its text column and counts as one audit mismatch,
+    instead of failing the whole extract job."""
+    import json
+    from olkg.schema import PAGES_SCHEMA
+    line = "\t".join(["/type/author", "/authors/BADUTF8A", "1",
+                      "2020-01-01T00:00:00",
+                      json.dumps({"key": "/authors/BADUTF8A",
+                                  "name": "Envelope Fallback"})])
+    bad = spark.createDataFrame(
+        [("http://bad.example/utf8", None,
+          bytearray(b"<html><body><pre>\xff</pre></body></html>"), line,
+          "en")], PAGES_SCHEMA)
+    pages_path = str(tmp_path / "pages.parquet")
+    build_pages_df(spark, corpus).unionByName(bad).write.parquet(pages_path)
+    lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
+    out = str(tmp_path / "out")
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
+                           with_canonical_map=False)
+    assert metrics["pages"] == len(corpus) + 1
+    assert metrics["text_mismatches"] == 1
+    golden = golden_triples(corpus + [line], dict(LCSH_ROWS))
+    assert edges_set(spark, out) == golden
+    assert golden != golden_triples(corpus, dict(LCSH_ROWS))
+
+
 def test_html_roundtrip():
     line = "/type/edition\t/books/X\t1\t2020\t{\"key\": \"/books/X\", \"title\": \"a<b>&c\"}"
     assert html_to_text(text_to_html(line)) == line

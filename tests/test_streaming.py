@@ -1,6 +1,6 @@
 """Structured Streaming tests: streaming ingest produces the batch-identical
-extract rows (exactly-once via the streaming checkpoint), and the watermarked
-windowed aggregation matches its batch equivalent."""
+triple stream and side rows (exactly-once via the streaming checkpoint), and
+the watermarked windowed aggregation matches its batch equivalent."""
 
 import contextlib
 import os
@@ -28,7 +28,7 @@ def _few_state_partitions(spark, n=4):
 
 
 def test_stream_extract_matches_batch(spark, tmp_path):
-    from olkg.extract import extract_pages
+    from olkg.extract import extract_triples_with_side_sink, read_side_rows
     from olkg.streaming import stream_extract
 
     lines = corpus_lines(include_reference=False)
@@ -41,21 +41,34 @@ def test_stream_extract_matches_batch(spark, tmp_path):
         q = stream_extract(spark, in_dir, out_dir)
         q.awaitTermination(120)
 
-    want = extract_pages(pages)
+    # the batch extract job on the same pages
+    acc = spark.sparkContext.accumulator(0)
+    sink = str(tmp_path / "batch_sides")
+    want_triples = {tuple(r) for r in extract_triples_with_side_sink(
+        pages, sink, side_count_acc=acc).collect()}
+    sides = read_side_rows(spark, sink, expected_rows=acc.value)
+    want_sides = {tuple(r) for r in sides.collect()}
+    assert want_triples and want_sides
+
     # the idempotent sink partitions by batch_id; project it away to compare
-    got = spark.read.parquet(os.path.join(out_dir, "extract_stream")) \
-        .select(*want.columns)
-    g = {tuple(r) for r in got.collect()}
-    w = {tuple(r) for r in want.collect()}
-    assert g == w and len(g) > 0
+    dest = os.path.join(out_dir, "extract_stream")
+
+    def streamed(table, cols):
+        return spark.read.parquet(os.path.join(dest, table)).select(*cols)
+
+    got_triples = streamed("triples", ["subj", "pred", "obj", "obj_kind",
+                                       "obj_datatype"])
+    got_sides = streamed("sides", sides.columns)
+    assert {tuple(r) for r in got_triples.collect()} == want_triples
+    assert {tuple(r) for r in got_sides.collect()} == want_sides
+    n_rows = got_triples.count() + got_sides.count()
 
     # restart with the same checkpoint: no new input → no duplicate rows
     with _few_state_partitions(spark):
         q2 = stream_extract(spark, in_dir, out_dir)
         q2.awaitTermination(120)
-    assert spark.read.parquet(
-        os.path.join(out_dir, "extract_stream")).count() == len(
-        got.collect())
+    assert (streamed("triples", ["subj"]).count()
+            + streamed("sides", ["kind"]).count()) == n_rows
 
 
 def test_stream_events_hourly_matches_batch(spark, tmp_path):
