@@ -79,39 +79,43 @@ def dedup_edges(triples: DataFrame, est_total_rows: int | None = None,
     return triples.dropDuplicates(_EDGE_COLS)
 
 
-_ID_PREDS = {
-    V.BIBO_ISBN13: "isbn13",
-    V.BIBO_LCCN: "lccn",
-    V.BIBO_OCLCNUM: "oclc",
-}
+# identifier predicates and the prefix of the blocking key each makes
+# ('isbn13:<isbn>'); the extract stage's side sink writes the same keys
+BLOCK_PREDS = {V.BIBO_ISBN13: "isbn13", V.BIBO_LCCN: "lccn",
+               V.BIBO_OCLCNUM: "oclc"}
+# author names block by MinHash-LSH over character 3-grams: NAME_BANDS
+# bands of NAME_BAND_ROWS permutations each
+NAME_BANDS = 4
+NAME_BAND_ROWS = 2
+# a blocking key shared by more entities is a super-block, dropped by CC
+MAX_BLOCK_DF = 100_000
 
 
-def blocking_keys(edges: DataFrame, author_names: DataFrame | None = None,
-                  minhash_bands: int = 4, band_rows: int = 2) -> DataFrame:
+def blocking_keys(edges: DataFrame,
+                  author_names: DataFrame | None = None) -> DataFrame:
     """(entity, block_key) pairs.
 
     Identifier keys come straight off the deduped edge table (already
     normalized by the extract semantics: ISBN cleanup/convert, LCCN strip,
     OCLC digits-only).  Author fuzzy keys are MinHash band signatures over
     character 3-grams of each name (vectorized, see _minhash_band_udf)."""
-    pred_map = F.create_map(*[F.lit(x) for kv in _ID_PREDS.items() for x in kv])
-    ids = (edges.filter(F.col("pred").isin(list(_ID_PREDS)))
+    pred_map = F.create_map(*[F.lit(x) for kv in BLOCK_PREDS.items()
+                              for x in kv])
+    ids = (edges.filter(F.col("pred").isin(list(BLOCK_PREDS)))
            .select(F.col("subj").alias("entity"),
                    F.concat_ws(":", pred_map[F.col("pred")],
                                F.col("obj")).alias("block_key")))
     if author_names is None:
         return ids
-    bands = _author_name_bands(author_names, minhash_bands, band_rows)
-    return ids.unionByName(bands)
+    return ids.unionByName(_author_name_bands(author_names))
 
 
-def _author_name_bands(author_names: DataFrame, num_bands: int,
-                       band_rows: int) -> DataFrame:
+def _author_name_bands(author_names: DataFrame) -> DataFrame:
     """MinHash-LSH band keys for author names, entirely in native
     expressions (JVM-side, codegen): casefold+strip → char-3-gram array →
     per-permutation min of xxhash64(perm|gram) → per-band signature hash.
     Two names sharing any band land in one block."""
-    n_perm = num_bands * band_rows
+    n_perm = NAME_BANDS * NAME_BAND_ROWS
     per_author = (author_names
                   .select(F.col("author_key"), F.col("name"))
                   .dropDuplicates())
@@ -138,9 +142,9 @@ def _author_name_bands(author_names: DataFrame, num_bands: int,
           for p in range(n_perm)])
     band_keys = F.array(*[
         F.concat(F.lit(f"nameband:{b}:"),
-                 F.xxhash64(*[F.col(f"m{b * band_rows + r}")
-                              for r in range(band_rows)]).cast("string"))
-        for b in range(num_bands)])
+                 F.xxhash64(*[F.col(f"m{b * NAME_BAND_ROWS + r}")
+                              for r in range(NAME_BAND_ROWS)]).cast("string"))
+        for b in range(NAME_BANDS)])
     name_bands = mins.select("name", F.explode(band_keys).alias("block_key"))
     return (per_author.join(name_bands, "name")
             .select(F.concat(F.lit(V.URI_PREFIX),
@@ -246,7 +250,7 @@ def _not_converged(max_iter: int, changed_hist: list, n_rows: int):
 
 def connected_components(pairs: DataFrame, max_iter: int = 20,
                          reliable_dir: str | None = None,
-                         max_block_df: int | None = 100_000,
+                         max_block_df: int | None = MAX_BLOCK_DF,
                          dropped_stats: dict | None = None,
                          cc_stats: dict | None = None) -> DataFrame:
     """Connected components of the bipartite (entity, block_key) graph.
@@ -571,9 +575,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
 def canonical_map_from_blocks(block_ids: DataFrame,
                               author_names: DataFrame | None = None,
                               reliable_dir: str | None = None,
-                              minhash_bands: int = 4,
-                              band_rows: int = 2,
-                              max_block_df: int | None = 100_000,
                               dropped_stats: dict | None = None,
                               cc_stats: dict | None = None) -> DataFrame:
     """(entity, canonical_id) for all entities resolvable via blocking keys;
@@ -586,10 +587,8 @@ def canonical_map_from_blocks(block_ids: DataFrame,
     checkpoint goes (distributed storage on a cluster)."""
     pairs = block_ids.select("entity", "block_key")
     if author_names is not None:
-        pairs = pairs.unionByName(
-            _author_name_bands(author_names, minhash_bands, band_rows))
+        pairs = pairs.unionByName(_author_name_bands(author_names))
     return connected_components(pairs, reliable_dir=reliable_dir,
-                                max_block_df=max_block_df,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)
 

@@ -42,11 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
+from .canonicalize import BLOCK_PREDS
 from .schema import EXTRACT_SCHEMA, TRIPLES_SCHEMA
 from .triples import extract_record, parse_dump_line
 
-_COLS = ["kind", "src_type", "url", "subj", "pred", "obj", "obj_kind",
-         "obj_datatype"]
+_COLS = ["kind", "subj", "pred", "obj", "obj_kind", "obj_datatype"]
 _TRIPLE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
 
 # Triples whose predicate can ALSO be produced by the link stage's joins
@@ -58,12 +58,6 @@ _TRIPLE_COLS = ["subj", "pred", "obj", "obj_kind", "obj_datatype"]
 # disjoint — global dedup then decomposes into two independent dedups.
 _DC_SUBJECT = V.DC_SUBJECT
 _OL_AUTHOR = V.OL_AUTHOR
-
-# identifier predicates double as entity-resolution blocking keys; the sink
-# carries a copy (kind='block_id') so the canonicalize stage never re-scans
-# the full edge table for them (duplicates are harmless — blocking dedups)
-_BLOCK_PREDS = {V.BIBO_ISBN13: "isbn13", V.BIBO_LCCN: "lccn",
-                V.BIBO_OCLCNUM: "oclc"}
 
 
 def _is_collision_triple(pred: str, obj_kind: str) -> bool:
@@ -170,28 +164,28 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
                 res = extract_record(rec[0], rec[4])
                 if res is None:
                     continue
-                src_type = rec[0]
                 for t in res.triples:
                     if _is_collision_triple(t.pred, t.obj_kind):
-                        side.append("triple", src_type, None, t.subj, t.pred,
-                                    t.obj, t.obj_kind, t.obj_datatype)
+                        side.append("triple", t.subj, t.pred, t.obj,
+                                    t.obj_kind, t.obj_datatype)
                     else:
-                        if t.pred in _BLOCK_PREDS:
-                            side.append("block_id", src_type, None, t.subj,
-                                        None,
-                                        _BLOCK_PREDS[t.pred] + ":" + t.obj,
+                        # identifier predicates double as blocking keys;
+                        # the sink carries a copy so the canonicalize stage
+                        # never re-scans the edge table for them
+                        # (duplicates are harmless — blocking dedups)
+                        if t.pred in BLOCK_PREDS:
+                            side.append("block_id", t.subj, None,
+                                        BLOCK_PREDS[t.pred] + ":" + t.obj,
                                         None, None)
                         out.append(t.subj, t.pred, t.obj, t.obj_kind,
                                    t.obj_datatype)
                 for key, name in res.author_names:
-                    side.append("author_name", src_type, None, key, None,
-                                name, None, None)
+                    side.append("author_name", key, None, name, None, None)
                 for creation, key in res.creation_refs:
-                    side.append("creation_ref", src_type, None, creation,
-                                None, key, None, None)
+                    side.append("creation_ref", creation, None, key, None,
+                                None)
                 for uri, label in res.probes:
-                    side.append("probe", src_type, None, uri, None, label,
-                                None, None)
+                    side.append("probe", uri, None, label, None, None)
             yield out.frame()
 
         if len(side):

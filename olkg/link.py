@@ -27,11 +27,14 @@ from pyspark.sql import functions as F
 
 from . import vocab as V
 
+# J1 salts an author key with more than HOT_KEY_REFS creation refs over
+# NUM_SALTS buckets
+HOT_KEY_REFS = 100_000
+NUM_SALTS = 16
+
 
 def salted_join_author_names(creation_refs: DataFrame,
-                             author_names: DataFrame,
-                             hot_threshold: int = 100_000,
-                             num_salts: int = 16) -> DataFrame:
+                             author_names: DataFrame) -> DataFrame:
     """J1 with explicit hot-key salting.
 
     creation_refs: (creation_uri, author_key)  [probe side, potentially huge]
@@ -44,7 +47,7 @@ def salted_join_author_names(creation_refs: DataFrame,
     # key-frequency census on the probe side; only keys above threshold are
     # salted, so the hot-key table stays tiny and broadcastable at any scale
     hot = (refs.groupBy("author_key").count()
-               .filter(F.col("count") > F.lit(hot_threshold))
+               .filter(F.col("count") > F.lit(HOT_KEY_REFS))
                .select("author_key")
                .withColumn("is_hot", F.lit(True)))
 
@@ -53,11 +56,11 @@ def salted_join_author_names(creation_refs: DataFrame,
                       "salt",
                       F.when(F.col("is_hot").isNotNull(),
                              F.pmod(F.xxhash64("creation_uri"),
-                                    F.lit(num_salts)).cast("int"))
+                                    F.lit(NUM_SALTS)).cast("int"))
                        .otherwise(F.lit(0)))
                   .drop("is_hot"))
 
-    salts = F.array([F.lit(i) for i in range(num_salts)])
+    salts = F.array([F.lit(i) for i in range(NUM_SALTS)])
     names_s = (names.join(F.broadcast(hot), "author_key", "left")
                     .withColumn(
                         "salt",
@@ -91,9 +94,7 @@ def lcsh_lookup_join(probes: DataFrame, lcsh: DataFrame) -> DataFrame:
     )
 
 
-def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,
-                      hot_threshold: int = 100_000,
-                      num_salts: int = 16) -> DataFrame:
+def join_born_triples(sides: DataFrame, lcsh: DataFrame | None) -> DataFrame:
     """The link stage's join outputs: J1 (ol:author rendezvous) and,
     when an LCSH dimension is given, J2 (dc:subject URI lookups) — both
     derived from the small side-row kinds."""
@@ -103,7 +104,7 @@ def join_born_triples(sides: DataFrame, lcsh: DataFrame | None,
     names = (sides.filter(F.col("kind") == "author_name")
              .select(F.col("subj").alias("author_key"),
                      F.col("obj").alias("name")))
-    out = salted_join_author_names(refs, names, hot_threshold, num_salts)
+    out = salted_join_author_names(refs, names)
     if lcsh is not None:
         probes = (sides.filter(F.col("kind") == "probe")
                   .select(F.col("subj").alias("entity_uri"),

@@ -160,6 +160,41 @@ def _set_author_refs(data: dict, author_key: str) -> None:
                     item["key"] = author_key
 
 
+def _clone_rows(line: str, clone_ids, rewrite_refs: bool,
+                skew_hot_author: str | None, skew_fraction: float,
+                cluster_size: int | None) -> list[tuple]:
+    """PAGES_SCHEMA rows of one dump line's clones, one per index in
+    ``clone_ids`` (see :func:`pages_rows`); none for an unparseable line."""
+    parts = line.split("\t")
+    if len(parts) < 5:
+        return []
+    rtype, _key, rev, date = parts[0], parts[1], parts[2], parts[3]
+    try:
+        data = json.loads(parts[4])
+    except ValueError:
+        return []
+    ts = _parse_ts(date)
+    skew_every = int(round(1.0 / skew_fraction)) if skew_fraction else 0
+    rows = []
+    for i in clone_ids:
+        if i == 0:
+            out_line, key = line, data.get("key", "")
+        else:
+            d = _rewrite_keys(data, f"_c{i}", rewrite_refs, rtype=rtype,
+                              cluster=(i // cluster_size
+                                       if cluster_size else None))
+            if (skew_hot_author and rtype in ("/type/edition", "/type/work")
+                    and skew_every and i % skew_every == 0):
+                _set_author_refs(d, skew_hot_author)
+            key = d.get("key", "")
+            out_line = "\t".join([rtype, key, rev, date,
+                                  json.dumps(d, ensure_ascii=False,
+                                             separators=(", ", ": "))])
+        url = "http://openlibrary.org" + key
+        rows.append((url, ts, text_to_html(out_line), out_line, "en"))
+    return rows
+
+
 def pages_rows(lines: list[str], clones: int = 1, rewrite_refs: bool = True,
                skew_hot_author: str | None = None,
                skew_fraction: float = 0.0,
@@ -171,35 +206,10 @@ def pages_rows(lines: list[str], clones: int = 1, rewrite_refs: bool = True,
     clones into near-dup clusters of that size: identifiers/names are shared
     WITHIN a cluster and re-derived ACROSS clusters, so entity-resolution
     blocks have realistic 2-10 sizes instead of one clique per base entity."""
-    rows = []
-    skew_every = int(round(1.0 / skew_fraction)) if skew_fraction else 0
-    for line in lines:
-        parts = line.split("\t")
-        if len(parts) < 5:
-            continue
-        rtype, _key, rev, date = parts[0], parts[1], parts[2], parts[3]
-        try:
-            data = json.loads(parts[4])
-        except ValueError:
-            continue
-        ts = _parse_ts(date)
-        for i in range(clones):
-            if i == 0:
-                out_line, key = line, data.get("key", "")
-            else:
-                d = _rewrite_keys(data, f"_c{i}", rewrite_refs, rtype=rtype,
-                                  cluster=(i // cluster_size
-                                           if cluster_size else None))
-                if (skew_hot_author and rtype in ("/type/edition", "/type/work")
-                        and skew_every and i % skew_every == 0):
-                    _set_author_refs(d, skew_hot_author)
-                key = d.get("key", "")
-                out_line = "\t".join([rtype, key, rev, date,
-                                      json.dumps(d, ensure_ascii=False,
-                                                 separators=(", ", ": "))])
-            url = "http://openlibrary.org" + key
-            rows.append((url, ts, text_to_html(out_line), out_line, "en"))
-    return rows
+    return [row for line in lines
+            for row in _clone_rows(line, range(clones), rewrite_refs,
+                                   skew_hot_author, skew_fraction,
+                                   cluster_size)]
 
 
 def build_pages_df(spark, lines: list[str], **kwargs):
@@ -215,7 +225,8 @@ def build_pages_df_distributed(spark, lines: list[str], clones: int,
                                cluster_size: int | None = None):
     """Clone-scale the corpus *on the executors*: cross the base lines with a
     ``spark.range(clones)`` and rewrite keys inside an Arrow-batched UDF, so
-    corpora of millions of pages never pass through the driver."""
+    corpora of millions of pages never pass through the driver.  Each row
+    comes from the same builder as :func:`pages_rows`."""
     from .schema import PAGES_SCHEMA
 
     base = spark.createDataFrame([(l,) for l in lines], "line string")
@@ -224,50 +235,14 @@ def build_pages_df_distributed(spark, lines: list[str], clones: int,
         idx = idx.repartition(partitions)
     crossed = idx.crossJoin(F.broadcast(base))
 
-    skew_every = int(round(1.0 / skew_fraction)) if skew_fraction else 0
-
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            rows = []
-            for line, clone in zip(pdf["line"], pdf["clone"]):
-                parts = line.split("\t")
-                if len(parts) < 5:
-                    continue
-                rtype, _k, rev, date = parts[0], parts[1], parts[2], parts[3]
-                try:
-                    data = json.loads(parts[4])
-                except ValueError:
-                    continue
-                ts = _parse_ts(date)
-                i = int(clone)
-                if i == 0:
-                    out_line, key = line, data.get("key", "")
-                else:
-                    d = _rewrite_keys(data, f"_c{i}", rewrite_refs,
-                                      rtype=rtype,
-                                      cluster=(i // cluster_size
-                                               if cluster_size else None))
-                    if (skew_hot_author
-                            and rtype in ("/type/edition", "/type/work")
-                            and skew_every and i % skew_every == 0):
-                        _set_author_refs(d, skew_hot_author)
-                    key = d.get("key", "")
-                    out_line = "\t".join([rtype, key, rev, date,
-                                          json.dumps(d, ensure_ascii=False,
-                                                     separators=(", ", ": "))])
-                rows.append(("http://openlibrary.org" + key, ts,
-                             text_to_html(out_line), out_line, "en"))
+            rows = [row for line, clone in zip(pdf["line"], pdf["clone"])
+                    for row in _clone_rows(line, (int(clone),), rewrite_refs,
+                                           skew_hot_author, skew_fraction,
+                                           cluster_size)]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html",
                                               "text", "lang"])
 
     return crossed.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def write_pages_parquet(spark, lines: list[str], path: str,
-                        num_partitions: int | None = None, **kwargs) -> int:
-    df = build_pages_df(spark, lines, **kwargs)
-    if num_partitions:
-        df = df.repartition(num_partitions, "url")
-    df.write.mode("overwrite").parquet(path)
-    return df.count()

@@ -21,7 +21,11 @@ reads was reused too.  The side sink gets its marker only after it has been
 validated against the executors' row census.
 
 Run:  python -m olkg.pipeline --pages <dir> --out <dir> [--lcsh-parquet <dir>]
-      (spark-submit --py-files olkg.zip works the same way on a cluster)
+  or  spark-submit [--master ...] [--conf key=value ...] \
+          --py-files dist/olkg.zip olkg/pipeline.py --pages ... --out ...
+The session takes the launcher's master and confs (olkg.session); this
+module imports its package by absolute name, so spark-submit can run it as
+a script.
 """
 
 from __future__ import annotations
@@ -34,45 +38,37 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fsio
-from .canonicalize import dedup_edges, plan_dedup, release_checkpoint
-from .fsio import pjoin
-from .materialize import (append_lineage, build_nodes, export_ntriples_gz,
-                          read_stage, stage_complete, write_stage)
+from olkg import fsio
+from olkg.canonicalize import dedup_edges, plan_dedup, release_checkpoint
+from olkg.fsio import pjoin
+from olkg.materialize import (append_lineage, build_nodes, export_ntriples_gz,
+                              read_stage, stage_complete, write_stage)
 
-
-def _parse_size_bytes(s: str) -> int:
-    """Spark size-string → bytes ('16m', '128MB', '134217728', '1g')."""
-    import re as _re
-    m = _re.match(r"^\s*(\d+)\s*([kmgt]?)b?\s*$", s.lower())
-    if not m:
-        raise ValueError(f"unparseable size: {s!r}")
-    return int(m.group(1)) * {"": 1, "k": 2**10, "m": 2**20,
-                              "g": 2**30, "t": 2**40}[m.group(2)]
+# dump lines the dedup-sizing sampler extracts on the driver
+SAMPLE_PAGES = 256
 
 
 def estimate_extract_size(spark: SparkSession, pages_path: str,
-                          sample_pages: int = 256,
                           repartition_by_url: int | None = None
                           ) -> tuple[int, float]:
     """(est_total_triples, est_rows_per_map_task) for the extract stream —
     the inputs dedup_edges sizes its plan from.
 
     Cost: one metadata-only parquet count, one Hadoop-FS content summary,
-    and ~``sample_pages`` dump lines (the extract job's own
+    and ~``SAMPLE_PAGES`` dump lines (the extract job's own
     :func:`~olkg.extract.pages_to_lines`) extracted DRIVER-side through the
     pure-Python semantics (~milliseconds) to estimate triples/page.
     Map-task count is input_bytes / spark.sql.files.maxPartitionBytes —
     unless the stream is explicitly repartitioned (``repartition_by_url``),
     which then fixes the task count."""
-    from .extract import pages_to_lines
-    from .triples import extract_line
+    from olkg.extract import pages_to_lines
+    from olkg.triples import extract_line
 
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
     if n_pages == 0:
         return 0, 0.0
-    sample = pages_to_lines(pages).limit(min(sample_pages, n_pages)).collect()
+    sample = pages_to_lines(pages).limit(min(SAMPLE_PAGES, n_pages)).collect()
     tri = 0
     for (line,) in sample:
         res = extract_line(line) if line else None
@@ -83,8 +79,8 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     else:
         fs, p = fsio._hadoop_fs(spark, pages_path)
         total_bytes = fs.getContentSummary(p).getLength()
-        maxpb = _parse_size_bytes(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"))
+        maxpb = spark._jsparkSession.sessionState().conf() \
+            .filesMaxPartitionBytes()
         n_tasks = max(1, -(-total_bytes // maxpb))
     return est_total, est_total / n_tasks
 
@@ -115,10 +111,7 @@ def dedup_pages_df(pages: DataFrame) -> DataFrame:
 def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
                  lcsh: DataFrame | None = None,
                  resume: bool = True,
-                 hot_threshold: int = 100_000,
-                 num_salts: int = 16,
                  repartition_by_url: int | None = None,
-                 with_canonical_map: bool = True,
                  dedup_pages: bool = False,
                  export_nt: bool = False) -> dict:
     """Build the graph; returns a metrics dict (stage walls, row counts,
@@ -158,9 +151,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
 
     from pyspark.sql import Observation
 
-    from .extract import (audit_pages, extract_triples_with_side_sink,
-                          read_side_rows)
-    from .link import join_born_triples
+    from olkg.extract import (audit_pages, extract_triples_with_side_sink,
+                              read_side_rows)
+    from olkg.link import join_born_triples
 
     fsio.mkdirs(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
@@ -239,9 +232,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
             collision = (sides.filter(F.col("kind") == "triple")
                          .select("subj", "pred", "obj", "obj_kind",
                                  "obj_datatype"))
-            joinborn = join_born_triples(
-                sides, lcsh, hot_threshold=hot_threshold,
-                num_salts=num_salts).unionByName(collision)
+            joinborn = join_born_triples(sides, lcsh).unionByName(collision)
             obs_join = Observation("join_edges")
             write_stage(dedup_edges(joinborn).observe(
                 obs_join, F.count(F.lit(1)).alias("n")),
@@ -267,7 +258,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
             fsio.delete(spark, cc_ckpt)
             return
         t = time.time()
-        from .canonicalize import canonical_map_from_blocks
+        from olkg.canonicalize import canonical_map_from_blocks
         block_ids = (sides.filter(F.col("kind") == "block_id")
                      .select(F.col("subj").alias("entity"),
                              F.col("obj").alias("block_key")))
@@ -305,10 +296,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
                 errs.append(e)
         return inner
 
-    threads = [threading.Thread(target=_guard(_run_link_then_nodes)),
-               threading.Thread(target=_guard(_run_audit))]
-    if with_canonical_map:
-        threads.append(threading.Thread(target=_guard(_run_cmap)))
+    threads = [threading.Thread(target=_guard(fn))
+               for fn in (_run_link_then_nodes, _run_audit, _run_cmap)]
     for th in threads:
         th.start()
     for th in threads:
@@ -332,7 +321,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         append_lineage(spark, out_dir, run_id, "nodes",
                        read_stage(spark, out_dir, "nodes"),
                        stages["nodes"]["wall_ms"])
-    if with_canonical_map and not cmap_reused:
+    if not cmap_reused:
         append_lineage(spark, out_dir, run_id, "canonical_map",
                        read_stage(spark, out_dir, "canonical_map"),
                        stages["canonical_map"]["wall_ms"])
@@ -360,26 +349,22 @@ def main(argv=None):
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--hot-threshold", type=int, default=100_000)
-    ap.add_argument("--num-salts", type=int, default=16)
     ap.add_argument("--repartition-by-url", type=int, default=None)
     ap.add_argument("--dedup-pages", action="store_true",
                     help="exact-dedup pages by content hash before extract")
     args = ap.parse_args(argv)
 
-    from .session import build_session
+    from olkg.session import build_session
     spark = build_session(app_name="olkg-pipeline", master=args.master,
                           shuffle_partitions=args.shuffle_partitions)
     lcsh = None
     if args.lcsh_parquet:
         lcsh = spark.read.parquet(args.lcsh_parquet)
     elif args.lcsh_nt:
-        from .link import load_lcsh_ntriples
+        from olkg.link import load_lcsh_ntriples
         lcsh = load_lcsh_ntriples(spark, args.lcsh_nt)
     metrics = run_pipeline(spark, args.pages, args.out, lcsh=lcsh,
                            resume=not args.no_resume,
-                           hot_threshold=args.hot_threshold,
-                           num_salts=args.num_salts,
                            repartition_by_url=args.repartition_by_url,
                            dedup_pages=args.dedup_pages,
                            export_nt=True)

@@ -23,8 +23,6 @@ PAGES_SCHEMA = StructType([
 #                           (entity-resolution blocking key)
 EXTRACT_SCHEMA = StructType([
     StructField("kind", StringType(), False),
-    StructField("src_type", StringType(), True),
-    StructField("url", StringType(), True),
     StructField("subj", StringType(), True),
     StructField("pred", StringType(), True),
     StructField("obj", StringType(), True),

@@ -29,15 +29,18 @@ def _edges_set(spark, out_uri):
     return {(r.subj, r.pred, r.obj, r.obj_kind, r.obj_datatype) for r in rows}
 
 
-def test_fast_pipeline_on_file_uri_out_dir(spark, tmp_path_factory):
+def test_fast_pipeline_on_file_uri_out_dir(spark, tmp_path_factory,
+                                           monkeypatch):
+    import olkg.link as L
     from olkg.pipeline import run_pipeline
     corpus = corpus_lines(include_reference=True)
     out = "file://" + str(tmp_path_factory.mktemp("olkg_uri_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_uri")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
-                           hot_threshold=100, num_salts=4)
+    monkeypatch.setattr(L, "HOT_KEY_REFS", 100)
+    monkeypatch.setattr(L, "NUM_SALTS", 4)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh)
     result = _edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)

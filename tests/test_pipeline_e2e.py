@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from olkg import link
 from olkg import vocab as V
 from olkg.fixtures import LCSH_ROWS, corpus_lines
 from olkg.golden import golden_triples, precision_recall
@@ -15,6 +16,13 @@ from olkg.link import salted_join_author_names
 from olkg.pagesgen import build_pages_df, html_to_text, text_to_html
 from olkg.pipeline import run_pipeline
 from olkg.schema import LCSH_SCHEMA
+
+
+def small_salts(mp, hot_key_refs: int = 100):
+    """J1 salting at test scale: keys with more than ``hot_key_refs``
+    creation refs salt over 4 buckets."""
+    mp.setattr(link, "HOT_KEY_REFS", hot_key_refs)
+    mp.setattr(link, "NUM_SALTS", 4)
 
 
 @pytest.fixture(scope="module")
@@ -28,8 +36,10 @@ def pipeline_out(spark, corpus, tmp_path_factory):
     pages_path = str(tmp_path_factory.mktemp("pages")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                           hot_threshold=100, num_salts=4, export_nt=True)
+    with pytest.MonkeyPatch.context() as mp:
+        small_salts(mp)
+        metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
+                               resume=True, export_nt=True)
     return out, pages_path, metrics
 
 
@@ -86,8 +96,7 @@ def test_non_utf8_envelope_falls_back_to_text(spark, corpus, tmp_path):
     build_pages_df(spark, corpus).unionByName(bad).write.parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
     out = str(tmp_path / "out")
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
-                           with_canonical_map=False)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh)
     assert metrics["pages"] == len(corpus) + 1
     assert metrics["text_mismatches"] == 1
     golden = golden_triples(corpus + [line], dict(LCSH_ROWS))
@@ -98,6 +107,30 @@ def test_non_utf8_envelope_falls_back_to_text(spark, corpus, tmp_path):
 def test_html_roundtrip():
     line = "/type/edition\t/books/X\t1\t2020\t{\"key\": \"/books/X\", \"title\": \"a<b>&c\"}"
     assert html_to_text(text_to_html(line)) == line
+
+
+def test_pages_generators_agree(spark, corpus):
+    """The driver-side and the executor-side clone generators build the
+    same rows, skew and near-dup clusters included."""
+    from olkg.pagesgen import build_pages_df_distributed
+    kw = dict(skew_hot_author="/authors/HOT1A", skew_fraction=0.5,
+              cluster_size=2)
+    local = build_pages_df(spark, corpus, clones=5, **kw)
+    dist = build_pages_df_distributed(spark, corpus, clones=5, **kw)
+    assert local.count() == dist.count() > len(corpus)
+    assert local.exceptAll(dist).count() == 0
+    assert dist.exceptAll(local).count() == 0
+
+
+def test_side_sink_schema(pipeline_out):
+    """The side sink's part files carry exactly the six columns its
+    readers use."""
+    import pyarrow.parquet as pq
+    out, _, _ = pipeline_out
+    for part in sink_parts(out):
+        schema = pq.read_schema(os.path.join(out, "sides", part))
+        assert schema.names == ["kind", "subj", "pred", "obj", "obj_kind",
+                                "obj_datatype"]
 
 
 def test_join_born_triples_present(spark, pipeline_out):
@@ -139,13 +172,14 @@ def _resume_copy(spark, pipeline_out, tmp_path):
     return out, pages_path, edges_set(spark, out), cmap_set(spark, out)
 
 
-def _rerun(spark, pages_path, out):
+def _rerun(spark, pages_path, out, mp):
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    return run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True,
-                        hot_threshold=100, num_salts=4)
+    small_salts(mp)
+    return run_pipeline(spark, pages_path, out, lcsh=lcsh, resume=True)
 
 
-def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path):
+def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path,
+                                   monkeypatch):
     """A crash during the tail: the validated extract job is reused (the UDF
     does not run again) and only the missing tail stages are rebuilt."""
     out, pages_path, edges0, cmap0 = _resume_copy(spark, pipeline_out,
@@ -154,7 +188,7 @@ def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path):
     assert parts
     for stage in ("edges/d=1", "nodes", "canonical_map"):
         shutil.rmtree(os.path.join(out, stage))
-    metrics = _rerun(spark, pages_path, out)
+    metrics = _rerun(spark, pages_path, out, monkeypatch)
     assert metrics["stages"]["extract"] == {"skipped": True}
     assert sink_parts(out) == parts
     assert "wall_ms" in metrics["stages"]["link_dedup"]
@@ -164,7 +198,8 @@ def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path):
     assert metrics["triples"] == len(edges0)
 
 
-def test_resume_reextracts_unvalidated_sink(spark, pipeline_out, tmp_path):
+def test_resume_reextracts_unvalidated_sink(spark, pipeline_out, tmp_path,
+                                            monkeypatch):
     """Side-sink part files without the _SUCCESS marker stand for a crash
     before the sink was validated: the run extracts again into a fresh sink
     and rebuilds every stage read from it."""
@@ -172,7 +207,7 @@ def test_resume_reextracts_unvalidated_sink(spark, pipeline_out, tmp_path):
                                                   tmp_path)
     parts = sink_parts(out)
     os.remove(os.path.join(out, "sides", "_SUCCESS"))
-    metrics = _rerun(spark, pages_path, out)
+    metrics = _rerun(spark, pages_path, out, monkeypatch)
     assert "wall_ms" in metrics["stages"]["extract"]
     assert "wall_ms" in metrics["stages"]["canonical_map"]
     assert sink_parts(out) and parts.isdisjoint(sink_parts(out))
@@ -190,7 +225,7 @@ def test_lineage_written(spark, pipeline_out):
     assert lineage.filter(F.col("rows_out") > 0).count() > 0
 
 
-def test_salted_join_equals_plain_join(spark):
+def test_salted_join_equals_plain_join(spark, monkeypatch):
     refs = spark.createDataFrame(
         [(f"http://c/{i}", "/authors/HOT") for i in range(50)]
         + [("http://c/x", "/authors/COLD")],
@@ -199,8 +234,8 @@ def test_salted_join_equals_plain_join(spark):
         [("/authors/HOT", "Hot Name"), ("/authors/HOT", "H. Name"),
          ("/authors/COLD", "Cold Name"), ("/authors/ORPHAN", "Nobody")],
         ["author_key", "name"])
-    salted = salted_join_author_names(refs, names, hot_threshold=10,
-                                      num_salts=4)
+    small_salts(monkeypatch, hot_key_refs=10)
+    salted = salted_join_author_names(refs, names)
     plain = (refs.join(names, "author_key")
              .select("creation_uri", "name"))
     got = {(r.subj, r.obj) for r in salted.collect()}
@@ -209,7 +244,7 @@ def test_salted_join_equals_plain_join(spark):
     assert len(got) == 101  # 50*2 + 1; orphan author drops out (inner join)
 
 
-def test_skewed_corpus_still_correct(spark, tmp_path):
+def test_skewed_corpus_still_correct(spark, tmp_path, monkeypatch):
     """Web-duplicate skew: many cloned editions point at one hot author key;
     salted J1 must still produce the exact golden set."""
     from olkg.pagesgen import pages_rows
@@ -222,9 +257,9 @@ def test_skewed_corpus_still_correct(spark, tmp_path):
     pages_path = str(tmp_path / "pages.parquet")
     pages.write.parquet(pages_path)
     out = str(tmp_path / "out")
+    small_salts(monkeypatch, hot_key_refs=5)
     metrics = run_pipeline(spark, pages_path, out, lcsh=None, resume=False,
-                           hot_threshold=5, num_salts=4,
-                           with_canonical_map=False, export_nt=False)
+                           export_nt=False)
     result = edges_set(spark, out)
     golden = golden_triples(skew_lines, {})
     p, r = precision_recall(result, golden)
@@ -232,7 +267,8 @@ def test_skewed_corpus_still_correct(spark, tmp_path):
     assert metrics["text_mismatches"] == 0
 
 
-def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
+def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory,
+                                   monkeypatch):
     """dedup_pages: duplicate-content pages are dropped before extraction;
     the triple net effect is unchanged."""
     out = str(tmp_path_factory.mktemp("olkg_dedup_out"))
@@ -241,9 +277,9 @@ def test_fast_pipeline_dedup_pages(spark, corpus, tmp_path_factory):
     dup = build_pages_df(spark, corpus)
     dup.union(dup).union(dup).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
+    small_salts(monkeypatch)
     metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
-                           hot_threshold=100, num_salts=4,
-                           with_canonical_map=False, dedup_pages=True)
+                           dedup_pages=True)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)
@@ -339,7 +375,8 @@ def test_cc_sides_agree_in_pipeline(spark, pipeline_out, tmp_path,
     assert driver["finish"] == "driver"
     shutil.rmtree(os.path.join(out, "canonical_map"))
     monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 0)
-    loop = _rerun(spark, pages_path, out)["stages"]["canonical_map"]
+    loop = _rerun(spark, pages_path, out,
+                  monkeypatch)["stages"]["canonical_map"]
     assert loop["finish"] == "loop"
     assert cmap0 and cmap_set(spark, out) == cmap0
     census = ("dropped_super_blocks", "dropped_pair_rows")
@@ -450,15 +487,15 @@ def test_estimate_extract_size_sampler(spark, corpus, tmp_path_factory):
     assert per_task == pytest.approx(est_total / 4)
 
 
-def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory):
+def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory,
+                                  monkeypatch):
     """The sampler-sized dedup reproduces golden and records its plan."""
     out = str(tmp_path_factory.mktemp("olkg_auto_out"))
     pages_path = str(tmp_path_factory.mktemp("pages_auto")) + "/pages.parquet"
     build_pages_df(spark, corpus).write.mode("overwrite").parquet(pages_path)
     lcsh = spark.createDataFrame(LCSH_ROWS, LCSH_SCHEMA)
-    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh,
-                           hot_threshold=100, num_salts=4,
-                           with_canonical_map=False)
+    small_salts(monkeypatch)
+    metrics = run_pipeline(spark, pages_path, out, lcsh=lcsh)
     result = edges_set(spark, out)
     golden = golden_triples(corpus, dict(LCSH_ROWS))
     p, r = precision_recall(result, golden)

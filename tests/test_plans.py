@@ -91,17 +91,18 @@ def test_ann_bruteforce_broadcasts_queries(spark):
     assert "Broadcast" in plan, plan
 
 
-def test_salted_join_no_broadcast_of_big_sides(spark):
+def test_salted_join_no_broadcast_of_big_sides(spark, monkeypatch):
     """J1's salted equi-join: the hot-key census table broadcasts (tiny);
     the refs/names sides join by shuffle (scale path)."""
-    from olkg.link import salted_join_author_names
+    import olkg.link as L
     refs = spark.createDataFrame([(f"http://c/{i}", f"/a/{i % 7}")
                                   for i in range(100)],
                                  ["creation_uri", "author_key"])
     names = spark.createDataFrame([(f"/a/{i}", f"n{i}") for i in range(7)],
                                   ["author_key", "name"])
-    plan = plan_of(salted_join_author_names(refs, names, hot_threshold=10,
-                                            num_salts=4), mode="simple")
+    monkeypatch.setattr(L, "HOT_KEY_REFS", 10)
+    monkeypatch.setattr(L, "NUM_SALTS", 4)
+    plan = plan_of(L.salted_join_author_names(refs, names), mode="simple")
     assert "BroadcastHashJoin" in plan, plan  # the census join
 
 
