@@ -265,9 +265,32 @@ def _ivf_handles(spark, path: str):
     return _CACHE[key]
 
 
+def _ivf_layout_name(sf_dir: str) -> tuple[str, str]:
+    """(prefix, name) of this sf's IVF layout directory,
+    ``olkg_ivf_corpus_<basename>_<path digest>_<files digest>``.  The
+    prefix digests the embeddings table's absolute path, the name adds its
+    files' (relative path, size, mtime), so two sf directories never share
+    a layout and a rewritten one gets a new one."""
+    import hashlib
+    root = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
+    files = ([root] if os.path.isfile(root) else sorted(
+        os.path.join(d, f) for d, _, names in os.walk(root) for f in names))
+    h = hashlib.sha256()
+    for f in files:
+        st = os.stat(f)
+        h.update(f"\0{os.path.relpath(f, root)}\0{st.st_size}\0"
+                 f"{st.st_mtime_ns}".encode())
+    prefix = ("olkg_ivf_corpus_" + os.path.basename(sf_dir.rstrip("/")) + "_"
+              + hashlib.sha256(root.encode()).hexdigest()[:12] + "_")
+    return prefix, prefix + h.hexdigest()[:12]
+
+
 def ensure_ivf_materialized(spark, sf_dir: str) -> str:
     """Build (once) the cell-partitioned IVF corpus layout for this sf and
-    return its path.  Concurrent-safe: the layout is written to a unique
+    return its path.  The cache is keyed by the embeddings' identity
+    (:func:`_ivf_layout_name`), not by the directory's name; installing a
+    layout removes this sf's layouts of earlier embeddings.
+    Concurrent-safe: the layout is written to a unique
     scratch directory and atomically renamed into place, so parallel runs
     on the same sf either win the rename or reuse the winner — never read
     a half-overwritten layout.  Re-invocations reuse the existing layout
@@ -277,8 +300,8 @@ def ensure_ivf_materialized(spark, sf_dir: str) -> str:
     import tempfile
     import uuid
     from olkg.simsearch import ivf_materialize
-    path = os.path.join(tempfile.gettempdir(),
-                        "olkg_ivf_corpus_" + os.path.basename(sf_dir.rstrip("/")))
+    prefix, name = _ivf_layout_name(sf_dir)
+    path = os.path.join(tempfile.gettempdir(), name)
     if (os.path.exists(os.path.join(path, "_SUCCESS"))
             and os.path.isdir(os.path.join(path, "_ids"))):
         _ivf_handles(spark, path)
@@ -302,6 +325,13 @@ def ensure_ivf_materialized(spark, sf_dir: str) -> str:
         except OSError:
             pass                      # target occupied — examine it
         else:
+            # layouts of this sf's earlier embeddings; scratch and trash
+            # directories (a '.' after the prefix) belong to other runs
+            for old in os.listdir(tempfile.gettempdir()):
+                if (old.startswith(prefix) and old != name
+                        and "." not in old[len(prefix):]):
+                    shutil.rmtree(os.path.join(tempfile.gettempdir(), old),
+                                  ignore_errors=True)
             _ivf_handles(spark, path)
             return path
         if (os.path.exists(os.path.join(path, "_SUCCESS"))

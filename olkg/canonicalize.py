@@ -10,7 +10,10 @@ entity are clustered by **blocking keys** —
 
 - normalized ISBN-13 (``bibo:isbn13``), LCCN (``bibo:lccn``),
   OCLC (``bibo:oclcnum``): exact identifier blocks;
-- author name MinHash band signatures: fuzzy name blocks.
+- author name MinHash band signatures: fuzzy name blocks
+  (:func:`name_band_keys`, pure Python and bit-exact with Spark's
+  ``xxhash64``, computed by the extract UDF in the pass that already holds
+  each name and written to the side sink next to the identifier keys).
 
 Within the bipartite (entity, block-key) graph, connected components are
 computed as a size-dispatched plan (:func:`connected_components`).  One
@@ -25,6 +28,9 @@ member URI (deterministic across runs, cluster sizes and the dispatch).
 """
 
 from __future__ import annotations
+
+import functools
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +52,7 @@ AUTO_TARGET_ROWS_PER_PARTITION = 1_000_000
 
 def plan_dedup(total_rows: int, rows_per_task: float) -> tuple[str, int | None]:
     """Pure sizing rule for :func:`dedup_edges`: returns (strategy,
-    num_partitions).  Separated from the Spark sampler so the decision
+    num_partitions).  Separated from the sampler so the decision
     boundary is unit-testable with arbitrary scales."""
     if rows_per_task > AUTO_PREPARTITION_ROWS_PER_TASK:
         n = max(1, round(total_rows / AUTO_TARGET_ROWS_PER_PARTITION))
@@ -91,14 +97,114 @@ NAME_BAND_ROWS = 2
 MAX_BLOCK_DF = 100_000
 
 
+# --- author-name band keys ---------------------------------------------------
+# Pure Python, so the extract UDF computes them in the pass that already holds
+# each name.  The hashes are Spark's XXH64 (``F.xxhash64``, seed 42) bit for
+# bit, so a key equals the one the native expression
+# ``xxhash64(min_g xxhash64(xxhash64(g), p) ...)`` gives.
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42
+_NON_ALNUM = re.compile(r"[^A-Za-z0-9]")
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _fmix(h: int) -> int:
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _xxh_short(data: bytes, seed: int) -> int:
+    """``XXH64.hashUnsafeBytes`` for fewer than 4 bytes (a gram is 1-3
+    ASCII characters, so no 8- or 4-byte words)."""
+    h = (seed + _P5 + len(data)) & _M64
+    for b in data:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    return _fmix(h)
+
+
+def _xxh_long(v: int, seed: int) -> int:
+    """``XXH64.hashLong``; ``v`` and ``seed`` as unsigned 64-bit ints."""
+    h = (seed + _P5 + 8) & _M64
+    h ^= _rotl(v * _P2 & _M64, 31) * _P1 & _M64
+    return _fmix((_rotl(h, 27) * _P1 + _P4) & _M64)
+
+
+def _xxh_int(v: int, seed: int) -> int:
+    """``XXH64.hashInt`` of a non-negative int."""
+    h = (seed + _P5 + 4) & _M64
+    h ^= v * _P1 & _M64
+    return _fmix((_rotl(h, 23) * _P2 + _P3) & _M64)
+
+
+def _signed(u: int) -> int:
+    return u - (1 << 64) if u >> 63 else u
+
+
+# the cache holds every gram: at most 36^3 + 36^2 + 36 lowercase ones
+@functools.lru_cache(maxsize=48_000)
+def _gram_perms(gram: str) -> tuple[int, ...]:
+    """A gram's NAME_BANDS * NAME_BAND_ROWS permutation hashes, signed (the
+    order Spark's min compares in)."""
+    h = _xxh_long(_xxh_short(gram.encode("ascii"), _XXH_SEED), _XXH_SEED)
+    return tuple(_signed(_xxh_int(p, h))
+                 for p in range(NAME_BANDS * NAME_BAND_ROWS))
+
+
+def name_band_keys(name: str | None) -> list[str]:
+    """MinHash-LSH band keys (``nameband:<b>:<signed hash>``) of an author
+    name: ``[^A-Za-z0-9]`` removed, then lowercased; its distinct
+    character 3-grams (the whole string when shorter than 3); per
+    permutation ``p`` the min over grams of ``xxhash64(xxhash64(gram), p)``;
+    band ``b`` is ``xxhash64`` of its NAME_BAND_ROWS mins.  A name with
+    nothing left after the normalisation (or None) has no keys.  Two names
+    sharing any band land in one block."""
+    if name is None:
+        return []
+    norm = _NON_ALNUM.sub("", name).lower()
+    if not norm:
+        return []
+    grams = {norm[i:i + 3] for i in range(max(len(norm) - 2, 1))}
+    mins = [min(col) for col in zip(*map(_gram_perms, grams))]
+    keys = []
+    for b in range(NAME_BANDS):
+        h = _XXH_SEED
+        for m in mins[b * NAME_BAND_ROWS:(b + 1) * NAME_BAND_ROWS]:
+            h = _xxh_long(m & _M64, h)
+        keys.append(f"nameband:{b}:{_signed(h)}")
+    return keys
+
+
+def _name_band_frames(batches):
+    """mapInPandas body: (name) rows -> (name, block_key) rows."""
+    import pandas as pd
+
+    for pdf in batches:
+        rows = [(n, k) for n in pdf["name"] for k in name_band_keys(n)]
+        yield pd.DataFrame(rows, columns=["name", "block_key"])
+
+
 def blocking_keys(edges: DataFrame,
                   author_names: DataFrame | None = None) -> DataFrame:
     """(entity, block_key) pairs.
 
     Identifier keys come straight off the deduped edge table (already
     normalized by the extract semantics: ISBN cleanup/convert, LCCN strip,
-    OCLC digits-only).  Author fuzzy keys are MinHash band signatures over
-    character 3-grams of each name (vectorized, see _minhash_band_udf)."""
+    OCLC digits-only).  Author fuzzy keys are :func:`name_band_keys` of each
+    distinct name (the function the extract UDF writes to the side sink),
+    joined back to the ``(author_key, name)`` rows."""
     pred_map = F.create_map(*[F.lit(x) for kv in BLOCK_PREDS.items()
                               for x in kv])
     ids = (edges.filter(F.col("pred").isin(list(BLOCK_PREDS)))
@@ -107,50 +213,14 @@ def blocking_keys(edges: DataFrame,
                                F.col("obj")).alias("block_key")))
     if author_names is None:
         return ids
-    return ids.unionByName(_author_name_bands(author_names))
-
-
-def _author_name_bands(author_names: DataFrame) -> DataFrame:
-    """MinHash-LSH band keys for author names, entirely in native
-    expressions (JVM-side, codegen): casefold+strip → char-3-gram array →
-    per-permutation min of xxhash64(perm|gram) → per-band signature hash.
-    Two names sharing any band land in one block."""
-    n_perm = NAME_BANDS * NAME_BAND_ROWS
-    per_author = (author_names
-                  .select(F.col("author_key"), F.col("name"))
-                  .dropDuplicates())
-    # web corpora repeat the same name across vast numbers of pages/clones:
-    # compute the MinHash signature once per DISTINCT name string, then map
-    # back to author keys — the gram fan-out runs on |distinct names|, not
-    # |author mentions|
-    distinct_names = per_author.select("name").distinct()
-    norm = F.lower(F.regexp_replace(F.col("name"), r"[^A-Za-z0-9]", ""))
-    n_grams = F.greatest(F.length(norm) - F.lit(2), F.lit(1))
-    grams = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: norm.substr(i, F.lit(3))))
-    # hash each gram ONCE; the p-th permutation hash is a cheap remix
-    # xxhash64(gram_hash, p) computed as p aggregate columns — one shuffle of
-    # the gram rows, no p-fold explosion before the min
-    with_grams = (distinct_names.select(
-        "name",
-        F.explode(grams).alias("gram"))
-        .filter(F.col("gram") != "")
-        .select("name", F.xxhash64("gram").alias("h")))
-    mins = with_grams.groupBy("name").agg(
-        *[F.min(F.xxhash64(F.col("h"), F.lit(p))).alias(f"m{p}")
-          for p in range(n_perm)])
-    band_keys = F.array(*[
-        F.concat(F.lit(f"nameband:{b}:"),
-                 F.xxhash64(*[F.col(f"m{b * NAME_BAND_ROWS + r}")
-                              for r in range(NAME_BAND_ROWS)]).cast("string"))
-        for b in range(NAME_BANDS)])
-    name_bands = mins.select("name", F.explode(band_keys).alias("block_key"))
-    return (per_author.join(name_bands, "name")
-            .select(F.concat(F.lit(V.URI_PREFIX),
-                             F.col("author_key")).alias("entity"),
-                    "block_key")
-            .dropDuplicates())
+    per_author = author_names.select("author_key", "name").dropDuplicates()
+    bands = (per_author.select("name").distinct()
+             .mapInPandas(_name_band_frames, "name string, block_key string"))
+    return ids.unionByName(
+        per_author.join(bands, "name")
+        .select(F.concat(F.lit(V.URI_PREFIX),
+                         F.col("author_key")).alias("entity"), "block_key")
+        .dropDuplicates())
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -573,21 +643,20 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
 
 
 def canonical_map_from_blocks(block_ids: DataFrame,
-                              author_names: DataFrame | None = None,
                               reliable_dir: str | None = None,
                               dropped_stats: dict | None = None,
                               cc_stats: dict | None = None) -> DataFrame:
     """(entity, canonical_id) for all entities resolvable via blocking keys;
     entities not in any block are their own canonical id (left out of the
     map — consumers treat absence as identity).  The pipeline feeds the
-    extract stage's sink copy of the identifier triples here, so entity
-    resolution never re-scans the full edge table (and can run concurrently
-    with the link stage, which only appends join-born predicates that are
-    never blocking keys).  ``reliable_dir``: where each CC step's reliable
-    checkpoint goes (distributed storage on a cluster)."""
+    extract stage's ``block_id`` sink rows here: the identifier keys and
+    the author-name band keys the UDF computed, so entity resolution never
+    re-scans the edge table nor hashes a name again (and can run
+    concurrently with the link stage, which only appends join-born
+    predicates that are never blocking keys).  ``reliable_dir``: where each
+    CC step's reliable checkpoint goes (distributed storage on a
+    cluster)."""
     pairs = block_ids.select("entity", "block_key")
-    if author_names is not None:
-        pairs = pairs.unionByName(_author_name_bands(author_names))
     return connected_components(pairs, reliable_dir=reliable_dir,
                                 dropped_stats=dropped_stats,
                                 cc_stats=cc_stats)

@@ -20,7 +20,8 @@ Scale notes (100 TB posture):
   extraction — the pipeline, the query entry points and the streaming
   ingest all run it): the UDF yields the big triple stream straight into the
   downstream shuffle and writes the small side rows (author names, creation
-  refs, LCSH probes, block ids — a few rows per page) to a parquet side sink
+  refs, LCSH probes, block ids — identifier keys and each author name's
+  MinHash band keys; a few rows per page) to a parquet side sink
   from inside the task, so the expensive Python extraction runs EXACTLY
   ONCE per page and the large intermediate is never materialized.  On a
   cluster the sink path must be shared storage — the sink is written
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
-from .canonicalize import BLOCK_PREDS
+from .canonicalize import BLOCK_PREDS, name_band_keys
 from .schema import EXTRACT_SCHEMA, TRIPLES_SCHEMA
 from .triples import extract_record, parse_dump_line
 
@@ -136,7 +137,10 @@ def audit_pages(pages: DataFrame):
 def _make_sink_batches(side_sink: str, side_count_acc=None):
     """Single-pass batch iterator over (line) rows: yields 5-column triple
     rows; side rows (incl. collision-class triples) accumulate across the
-    task's batches and are written once per task to ``side_sink``.  The
+    task's batches and are written once per task to ``side_sink``.  Each
+    (author key, name) also gets its name's band keys
+    (:func:`olkg.canonicalize.name_band_keys`) as ``block_id`` rows, once
+    per task, computed once per distinct name in the task.  The
     html→text inversion and the page audit happen JVM-side
     (:func:`pages_to_lines` / :func:`audit_pages`) — Python never touches
     html bytes.
@@ -155,6 +159,10 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
         from .fsio import pa_fs, pjoin
 
         side = _Cols(_COLS)
+        # (author key, name) pairs whose band keys this task has written,
+        # and each name's keys
+        banded: set = set()
+        bands: dict = {}
         for pdf in batches:
             out = _Cols(_TRIPLE_COLS)
             for line in pdf["line"].tolist():
@@ -181,6 +189,14 @@ def _make_sink_batches(side_sink: str, side_count_acc=None):
                                    t.obj_datatype)
                 for key, name in res.author_names:
                     side.append("author_name", key, None, name, None, None)
+                    if (key, name) in banded:
+                        continue
+                    banded.add((key, name))
+                    if name not in bands:
+                        bands[name] = name_band_keys(name)
+                    for bk in bands[name]:
+                        side.append("block_id", V.URI_PREFIX + key, None, bk,
+                                    None, None)
                 for creation, key in res.creation_refs:
                     side.append("creation_ref", creation, None, key, None,
                                 None)
@@ -211,7 +227,12 @@ def extract_triples_with_side_sink(pages: DataFrame, side_sink: str,
     The caller MUST run an action on the stream before reading the sink.
     The page audit is NOT part of this stream — use :func:`audit_pages`.
     Pass a Spark accumulator as ``side_count_acc`` to census side rows
-    written (feeds the empty-sink guard in :func:`read_side_rows`)."""
+    written (feeds the empty-sink guard in :func:`read_side_rows`).  The
+    sink path is qualified on the driver first (:func:`olkg.fsio.qualify`),
+    so the tasks write where Spark and :func:`read_side_rows` resolve it."""
+    from . import fsio
+
+    side_sink = fsio.qualify(pages.sparkSession, side_sink)
     src = pages
     if repartition_by_url:
         src = src.repartition(repartition_by_url, F.xxhash64("url"))
@@ -225,23 +246,24 @@ def read_side_rows(spark, side_sink: str,
     """Read the side sink written by :func:`extract_triples_with_side_sink`
     (EXTRACT_SCHEMA-shaped; empty DataFrame if the sink has no files).
 
-    Existence checks go through Spark's Hadoop FileSystem (scheme-aware),
-    so URI sinks work wherever Spark itself can read them.  When
-    ``expected_rows`` (the side-row accumulator's value) is positive, this
-    raises unless the visible sink holds AT LEAST that many rows — a sink
-    that is missing entirely OR undercounts is the signature of executors
-    writing to storage the driver cannot fully see (e.g. executor-local
-    disks on a multi-node cluster with a local-path sink, where the
-    driver-colocated executor's files ARE visible and an existence check
-    alone passes), which would otherwise silently drop join-born edges,
-    block_ids and the canonical map.  ``visible >= expected`` is the sound
-    direction: the accumulator counts each successful task exactly once,
-    and task retries can only ADD files to the sink, never remove them."""
+    The sink is listed, and its rows counted from the part files' parquet
+    footers, through :func:`olkg.fsio.parquet_parts`: the pyarrow URI
+    resolution the executors wrote it with, metadata only, no Spark job.
+    When ``expected_rows`` (the side-row accumulator's value) is positive,
+    this raises unless the visible sink holds AT LEAST that many rows — a
+    sink that is missing entirely OR undercounts is the signature of
+    executors writing to storage the driver cannot fully see (e.g.
+    executor-local disks on a multi-node cluster with a local-path sink,
+    where the driver-colocated executor's files ARE visible and an
+    existence check alone passes), which would otherwise silently drop
+    join-born edges, block_ids and the canonical map.  ``visible >=
+    expected`` is the sound direction: the accumulator counts each
+    successful task exactly once, and task retries can only ADD files to
+    the sink, never remove them."""
     from . import fsio
 
-    names = fsio.listdir(spark, side_sink)
-    has_files = any(n.endswith(".parquet") for n in names)
-    if not has_files:
+    _, parts = fsio.parquet_parts(spark, side_sink)
+    if not parts:
         if expected_rows:
             raise RuntimeError(
                 f"side sink {side_sink!r} is empty but executors reported "
@@ -250,9 +272,8 @@ def read_side_rows(spark, side_sink: str,
                 "--out/side_sink at shared storage (HDFS/S3/NFS) for "
                 "multi-node runs.")
         return spark.createDataFrame([], EXTRACT_SCHEMA)
-    sides = spark.read.schema(EXTRACT_SCHEMA).parquet(side_sink)
     if expected_rows:
-        visible = sides.count()
+        visible = sum(rows for *_, rows in parts)
         if visible < expected_rows:
             raise RuntimeError(
                 f"side sink {side_sink!r} holds {visible} rows but "
@@ -260,4 +281,4 @@ def read_side_rows(spark, side_sink: str,
                 "sink is on storage the driver cannot see (e.g. an "
                 "executor-local path on a multi-node cluster). Point "
                 "--out/side_sink at shared storage (HDFS/S3/NFS).")
-    return sides
+    return spark.read.schema(EXTRACT_SCHEMA).parquet(side_sink)

@@ -1,5 +1,11 @@
 """Materialize stage: checkpointed stage tables, nodes/edges graph tables,
-N-Triples export, per-partition lineage metrics, idempotent resume.
+N-Triples export, per-file lineage metrics, idempotent resume.
+
+Bookkeeping around the stages runs no Spark job: :func:`read_stage` reads
+the edges with their known schema (no schema-inference job), and
+:func:`stage_rows` and :func:`append_lineage` take their row counts from
+the written files' parquet footers, the lineage written through pyarrow
+(:mod:`olkg.fsio`).
 
 Storage format is pluggable: parquet everywhere in this sandbox; on a cluster
 with an Iceberg catalog, pass ``table_format='iceberg'`` and stage outputs go
@@ -16,6 +22,7 @@ olkg.util.det_bnode).
 from __future__ import annotations
 
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +30,7 @@ from pyspark.sql import functions as F
 from . import fsio
 from . import vocab as V
 from .fsio import pjoin
+from .schema import EDGES_SCHEMA, LINEAGE_SCHEMA
 
 
 def _stage_path(out_dir: str, stage: str) -> str:
@@ -65,22 +73,55 @@ def write_stage(df: DataFrame, out_dir: str, stage: str,
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(_stage_path(out_dir, stage))
+    """A stage table.  ``edges``, the one the pipeline and the query entry
+    read, comes with its known schema (``d`` partition column included),
+    so reading it runs no schema-inference job."""
+    reader = spark.read
+    if stage == "edges":
+        reader = reader.schema(EDGES_SCHEMA)
+    return reader.parquet(_stage_path(out_dir, stage))
 
 
-def append_lineage(spark: SparkSession, out_dir: str, run_id: str, stage: str,
-                   df: DataFrame, wall_ms: int) -> None:
-    """Per-partition lineage rows for a completed stage: the checkpointed
-    evidence of what each partition produced (north_rule's lineage+metrics).
-    Reads the stage's own checkpoint so counting costs one column scan."""
-    per_part = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).alias("rows_out"))
-                .select(F.lit(run_id).alias("run_id"),
-                        F.lit(stage).alias("stage"),
-                        F.col("partition_id").cast("long"),
-                        F.col("rows_out").cast("long"),
-                        F.lit(wall_ms).cast("long").alias("wall_ms")))
-    per_part.write.mode("append").parquet(pjoin(out_dir, "lineage"))
+def _written_parts(spark: SparkSession, out_dir: str, stage: str):
+    """(fs, parts) of a stage Spark wrote (:func:`olkg.fsio.parquet_parts`).
+    Spark writes at least one file per stage, even an empty one, so finding
+    none means the footers were looked for somewhere else: raise rather
+    than count nothing."""
+    fs, parts = fsio.parquet_parts(spark, _stage_path(out_dir, stage))
+    if not parts:
+        raise FileNotFoundError(
+            f"stage {stage!r} under {out_dir!r} has no parquet files")
+    return fs, parts
+
+
+def stage_rows(spark: SparkSession, out_dir: str, stage: str) -> int:
+    """A stage table's row count from its files' parquet footers."""
+    _, parts = _written_parts(spark, out_dir, stage)
+    return sum(rows for *_, rows in parts)
+
+
+def append_lineage(spark: SparkSession, out_dir: str, run_id: str,
+                   stage: str, wall_ms: int) -> None:
+    """Lineage rows for a completed stage (north_rule's lineage+metrics):
+    one per parquet file the stage wrote — one write task's output — with
+    ``rows_out`` from that file's footer.  Metadata I/O through pyarrow,
+    no Spark job; parquet stages only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    _, parts = _written_parts(spark, out_dir, stage)
+    n = len(parts)
+    tbl = pa.table({"run_id": [run_id] * n, "stage": [stage] * n,
+                    "file": [rel for _, rel, _, _ in parts],
+                    "rows_out": [rows for *_, rows in parts],
+                    "wall_ms": [wall_ms] * n},
+                   schema=to_arrow_schema(LINEAGE_SCHEMA))
+    fs, path = fsio.pa_fs(fsio.qualify(spark, _stage_path(out_dir,
+                                                           "lineage")))
+    fs.create_dir(path, recursive=True)
+    pq.write_table(tbl, pjoin(path, f"part-{uuid.uuid4().hex}.parquet"),
+                   filesystem=fs)
 
 
 def build_nodes(edges: DataFrame) -> DataFrame:

@@ -6,14 +6,20 @@ parquet side sink written from inside the tasks.  Everything after that
 reads only materialized inputs, as three concurrent chains::
 
   pages ──extract UDF──┬─▶ edges/d=0     direct triples, deduped
-                       └─▶ sides/        names, refs, probes, block ids,
+                       └─▶ sides/        names, refs, probes, block ids
+                                         (identifiers + name band keys),
                                          collision-class triples
   sides ──link (J1 salted ⋈, J2 broadcast ⋈) + dedup──▶ edges/d=1
         ──▶ nodes/ [──▶ export_nt/]
-  sides ──blocked CC (reliable checkpoints; small graphs finish on the
-        driver)──▶ canonical_map/
+  sides ──blocked CC over the block ids (reliable checkpoints; small
+        graphs finish on the driver)──▶ canonical_map/
   pages ──native byte-identity audit
-  then  ──▶ lineage/ (per-partition rows for each stage the run wrote)
+  then  ──▶ lineage/ (one row per written file of each stage the run
+                      wrote, from the parquet footers)
+
+Only the extract and the tail chains run Spark jobs.  The dedup sampler,
+the sink validation, the lineage and the stage reads are metadata I/O
+(parquet footers, known schemas) on the driver.
 
 Resume: every output above is a stage with a ``_SUCCESS`` marker.  With
 ``resume`` on, a stage is skipped when its marker exists and every stage it
@@ -42,10 +48,38 @@ from olkg import fsio
 from olkg.canonicalize import dedup_edges, plan_dedup, release_checkpoint
 from olkg.fsio import pjoin
 from olkg.materialize import (append_lineage, build_nodes, export_ntriples_gz,
-                              read_stage, stage_complete, write_stage)
+                              read_stage, stage_complete, stage_rows,
+                              write_stage)
 
 # dump lines the dedup-sizing sampler extracts on the driver
 SAMPLE_PAGES = 256
+
+
+def _sample_lines(fs, parts: list, n: int) -> list:
+    """The first ``n`` dump lines of the pages table, the rows a Spark
+    ``limit`` over the scan returns first (files by size, largest first),
+    inverted like :func:`~olkg.extract.pages_to_lines`: the html envelope
+    when it conforms and is UTF-8, else the text column."""
+    import pyarrow.parquet as pq
+
+    from olkg.pagesgen import html_to_text
+
+    lines: list = []
+    for path, *_ in sorted(parts, key=lambda p: -p[2]):
+        pf = pq.ParquetFile(path, filesystem=fs)
+        cols = [c for c in ("html", "text") if c in pf.schema_arrow.names]
+        for batch in pf.iter_batches(batch_size=n, columns=cols):
+            d = batch.to_pydict()
+            for html, text in zip(d.get("html", [None] * batch.num_rows),
+                                  d.get("text", [None] * batch.num_rows)):
+                try:
+                    line = html_to_text(html)
+                except UnicodeDecodeError:
+                    line = None
+                lines.append(text if line is None else line)
+                if len(lines) == n:
+                    return lines
+    return lines
 
 
 def estimate_extract_size(spark: SparkSession, pages_path: str,
@@ -54,31 +88,34 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     """(est_total_triples, est_rows_per_map_task) for the extract stream —
     the inputs dedup_edges sizes its plan from.
 
-    Cost: one metadata-only parquet count, one Hadoop-FS content summary,
-    and ~``SAMPLE_PAGES`` dump lines (the extract job's own
-    :func:`~olkg.extract.pages_to_lines`) extracted DRIVER-side through the
-    pure-Python semantics (~milliseconds) to estimate triples/page.
-    Map-task count is input_bytes / spark.sql.files.maxPartitionBytes —
-    unless the stream is explicitly repartitioned (``repartition_by_url``),
-    which then fixes the task count."""
-    from olkg.extract import pages_to_lines
+    Metadata and driver-side Python only, no Spark job: the page count is
+    the sum of the pages files' parquet footer row counts, and
+    ~``SAMPLE_PAGES`` dump lines (read with pyarrow, inverted by
+    :func:`_sample_lines`) go through the pure-Python semantics
+    (~milliseconds) to estimate triples/page.  Map-task count is the
+    Hadoop-FS content summary's input bytes /
+    spark.sql.files.maxPartitionBytes — unless the stream is explicitly
+    repartitioned (``repartition_by_url``), which then fixes the task
+    count."""
     from olkg.triples import extract_line
 
-    pages = spark.read.parquet(pages_path)
-    n_pages = pages.count()
+    fs, parts = fsio.parquet_parts(spark, pages_path)
+    if not parts:
+        raise FileNotFoundError(f"no parquet files under {pages_path!r}")
+    n_pages = sum(rows for *_, rows in parts)
     if n_pages == 0:
         return 0, 0.0
-    sample = pages_to_lines(pages).limit(min(SAMPLE_PAGES, n_pages)).collect()
+    sample = _sample_lines(fs, parts, min(SAMPLE_PAGES, n_pages))
     tri = 0
-    for (line,) in sample:
+    for line in sample:
         res = extract_line(line) if line else None
         tri += len(res.triples) if res else 0
     est_total = int(n_pages * (tri / len(sample)))
     if repartition_by_url:
         n_tasks = repartition_by_url
     else:
-        fs, p = fsio._hadoop_fs(spark, pages_path)
-        total_bytes = fs.getContentSummary(p).getLength()
+        hfs, p = fsio._hadoop_fs(spark, pages_path)
+        total_bytes = hfs.getContentSummary(p).getLength()
         maxpb = spark._jsparkSession.sessionState().conf() \
             .filesMaxPartitionBytes()
         n_tasks = max(1, -(-total_bytes // maxpb))
@@ -119,25 +156,26 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
 
     Extract job: the UDF's triple stream is deduped into ``edges/d=0``
     while the side rows (author names, creation refs, LCSH probes, block
-    ids) plus the collision-class triples (ol:author / dc:subject-URI, the
-    only predicates a join can also produce) go to the ``sides/`` sink.
+    ids: identifier keys and the author-name band keys) plus the
+    collision-class triples (ol:author / dc:subject-URI, the only
+    predicates a join can also produce) go to the ``sides/`` sink.
     The tail derives the join-born triples from the sink, dedups them
     together with the collision class and writes ``edges/d=1``.  The two
     edge sets are disjoint by construction (tested), so the two local
     dedups compose to the global A4 dedup.
 
-    The direct-triple dedup is sized from :func:`estimate_extract_size` (a
-    driver-side sample, milliseconds): map-side partial aggregation for
-    small per-task row counts, prepartition then aggregate beyond
-    ~1.5M rows per map task (see olkg.canonicalize.dedup_edges).  The
+    The direct-triple dedup is sized from :func:`estimate_extract_size`
+    (parquet footers and a driver-side sample, no Spark job): map-side
+    partial aggregation for small per-task row counts, prepartition then
+    aggregate beyond ~1.5M rows per map task (see olkg.canonicalize.dedup_edges).  The
     estimate and the chosen plan are on record in
     ``metrics['stages']['dedup_plan']``.
 
     ``resume``: skip every stage whose ``_SUCCESS`` marker exists and whose
     inputs were reused (see the module docstring).  A reused extract job
-    never runs the UDF: it reads the validated sink and counts the
-    ``edges/d=0`` parquet.  A sink without its marker (a crash before
-    validation) is deleted and extracted again.
+    never runs the UDF: it reads the validated sink and takes the
+    ``edges/d=0`` row count from its parquet footers.  A sink without its
+    marker (a crash before validation) is deleted and extracted again.
 
     ``dedup_pages``: web crawls are duplicate-heavy — when set, pages are
     exact-deduplicated by content hash (url-min survivor) BEFORE extraction
@@ -183,7 +221,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     # only ever reads blocking-key predicates — all direct) runs concurrently
     if extract_reused:
         sides = read_side_rows(spark, sides_sink)
-        n_direct = read_stage(spark, out_dir, "edges/d=0").count()
+        n_direct = stage_rows(spark, out_dir, "edges/d=0")
         stages["extract"] = {"skipped": True}
     else:
         fsio.delete(spark, sides_sink)
@@ -206,7 +244,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         write_stage(direct_edges, out_dir, "edges/d=0")
         n_direct = obs_direct.get["n"]
         stages["extract"] = {"wall_ms": int((time.time() - t0) * 1000),
-                             "rows": n_direct}
+                             "rows": n_direct, "side_rows": side_acc.value}
         # fail loudly if executors wrote side rows the driver cannot see
         # (non-shared sink storage) instead of silently emitting no
         # join-born edges / block_ids / canonical map; only a validated
@@ -226,7 +264,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         if d1_reused:
             stages["link_dedup"] = {
                 "skipped": True,
-                "rows": read_stage(spark, out_dir, "edges/d=1").count()}
+                "rows": stage_rows(spark, out_dir, "edges/d=1")}
         else:
             t = time.time()
             collision = (sides.filter(F.col("kind") == "triple")
@@ -259,19 +297,17 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
             return
         t = time.time()
         from olkg.canonicalize import canonical_map_from_blocks
+        # identifier keys and the author-name band keys the UDF computed
         block_ids = (sides.filter(F.col("kind") == "block_id")
                      .select(F.col("subj").alias("entity"),
                              F.col("obj").alias("block_key")))
-        names = (sides.filter(F.col("kind") == "author_name")
-                 .select(F.col("subj").alias("author_key"),
-                         F.col("obj").alias("name")))
         # every CC step is one reliable checkpoint into the output directory
         # (distributed storage on a cluster), so an executor loss recovers
         # from storage instead of recomputing the loop
         dropped: dict = {}
         cc_stats: dict = {}
         cmap = canonical_map_from_blocks(
-            block_ids, names, reliable_dir=cc_ckpt,
+            block_ids, reliable_dir=cc_ckpt,
             dropped_stats=dropped, cc_stats=cc_stats)
         write_stage(cmap, out_dir, "canonical_map")
         release_checkpoint(cmap)
@@ -308,22 +344,20 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     fsio.touch(spark, pjoin(out_dir, "edges", "_SUCCESS"))
     stages["tail"] = {"wall_ms": int((time.time() - t_tail) * 1000)}
 
-    # per-stage lineage (north_rule) for every stage this run wrote: each
-    # census is one pruned column scan of the stage's own output
+    # per-stage lineage (north_rule) for every stage this run wrote: one
+    # row per written file, from its parquet footer (no Spark job); a sink
+    # no task wrote a side row to has no file, so no lineage row
     if not d1_reused:
         append_lineage(spark, out_dir, run_id, "edges",
-                       read_stage(spark, out_dir, "edges"),
                        stages["link_dedup"]["wall_ms"])
-    if not extract_reused:
-        append_lineage(spark, out_dir, run_id, "sides", sides,
+    if not extract_reused and stages["extract"]["side_rows"]:
+        append_lineage(spark, out_dir, run_id, "sides",
                        stages["extract"]["wall_ms"])
     if not nodes_reused:
         append_lineage(spark, out_dir, run_id, "nodes",
-                       read_stage(spark, out_dir, "nodes"),
                        stages["nodes"]["wall_ms"])
     if not cmap_reused:
         append_lineage(spark, out_dir, run_id, "canonical_map",
-                       read_stage(spark, out_dir, "canonical_map"),
                        stages["canonical_map"]["wall_ms"])
 
     audit = results["audit"]

@@ -1,7 +1,8 @@
 """Spark schemas for every table the pipeline touches."""
 
-from pyspark.sql.types import (BinaryType, StringType, StructField,
-                               StructType, TimestampType)
+from pyspark.sql.types import (BinaryType, IntegerType, LongType,
+                               StringType, StructField, StructType,
+                               TimestampType)
 
 # Input: Common-Crawl-style pages (BASELINE.json input_hint)
 PAGES_SCHEMA = StructType([
@@ -20,7 +21,9 @@ PAGES_SCHEMA = StructType([
 #   kind = 'author_name'  → subj=author key, obj=name string (J1 build side)
 #   kind = 'creation_ref' → subj=creation uri, obj=author key (J1 probe side)
 #   kind = 'block_id'     → subj=entity uri, obj='isbn13:…'|'lccn:…'|'oclc:…'
-#                           (entity-resolution blocking key)
+#                           or, for an author, 'nameband:<b>:…' (its name's
+#                           MinHash band keys): entity-resolution blocking
+#                           keys
 EXTRACT_SCHEMA = StructType([
     StructField("kind", StringType(), False),
     StructField("subj", StringType(), True),
@@ -37,6 +40,19 @@ TRIPLES_SCHEMA = StructType([
     StructField("obj", StringType(), False),
     StructField("obj_kind", StringType(), False),
     StructField("obj_datatype", StringType(), True),
+])
+
+# The edges stage read whole: d=0 direct, d=1 join-born (partition column)
+EDGES_SCHEMA = StructType(TRIPLES_SCHEMA.fields
+                          + [StructField("d", IntegerType(), True)])
+
+# One row per parquet file a stage wrote, rows_out from its footer
+LINEAGE_SCHEMA = StructType([
+    StructField("run_id", StringType(), False),
+    StructField("stage", StringType(), False),
+    StructField("file", StringType(), False),
+    StructField("rows_out", LongType(), False),
+    StructField("wall_ms", LongType(), False),
 ])
 
 # LCSH label → URI dimension (lib/util.rb:25-34 replacement)

@@ -314,11 +314,19 @@ def ivf_materialize(embeddings: DataFrame, centroids: DataFrame, path: str,
     :func:`ivf_topk` docstring promises.  Assignment runs once here
     (offline, one shuffle); every later query pays I/O proportional to
     nprobe/k_cells of the corpus, enforced by parquet partition pruning
-    (asserted in tests/test_textops.py)."""
+    (asserted in tests/test_entry_oracle.py).
+
+    Both writes rebalance first, so a cell directory gets one file per
+    ~advisory-partition-size of its rows instead of one per reduce
+    partition that held any of its rows (16 cells x 32 partitions wrote
+    538 files for 2,000 vectors, each listed and opened by every probe).
+    A rebalance, not ``repartition("cell")``: AQE still splits a skewed
+    cell across several files."""
     cells = ivf_assignments(embeddings, centroids, id_col, vec_col).persist()
     (embeddings
      .join(cells, embeddings[id_col] == cells["id"])
      .drop("id")
+     .hint("rebalance", "cell")
      .write.mode("overwrite").partitionBy("cell").parquet(path))
     # id→cell index (two longs per vector, ~1/1000th of the corpus bytes):
     # written under an underscore-prefixed subdirectory so the corpus
@@ -326,7 +334,7 @@ def ivf_materialize(embeddings: DataFrame, centroids: DataFrame, path: str,
     # only the queried ids' home cells instead of scanning every cell's
     # files for 10 rows — without it, the query fetch alone would touch
     # the whole corpus at 100 TB.
-    cells.write.mode("overwrite").parquet(path + "/_ids")
+    cells.hint("rebalance").write.mode("overwrite").parquet(path + "/_ids")
     cells.unpersist()
 
 

@@ -293,3 +293,66 @@ def test_ivf_materialized_preopened_handles_identical_and_pruned(
         assert as_set(got_h) == as_set(got) and len(as_set(got)) > 0
     finally:
         ids.unpersist()
+
+
+def test_ivf_materialized_writes_one_file_per_cell(spark, tmp_path):
+    """The layout rebalances before its writes: on the sf0.001 embeddings
+    every ``cell=`` directory and the ``_ids`` index hold one parquet file,
+    not one per reduce partition that held any of their rows."""
+    import os
+    from pyspark.sql import functions as F
+    from olkg.simsearch import ivf_materialize
+
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    emb = emb.withColumn("embedding",
+                         F.transform("embedding", lambda x: x.cast("double")))
+    cents = spark.read.parquet(
+        os.path.join(os.path.dirname(entry_mod.__file__), "data",
+                     "ivf_centroids.parquet"))
+    path = tmp_path / "ivf_corpus"
+    ivf_materialize(emb, cents, str(path))
+    dirs = [d for d in path.iterdir() if d.name.startswith("cell=")]
+    assert len(dirs) > 4
+    for d in dirs + [path / "_ids"]:
+        files = [f.name for f in d.iterdir() if f.suffix == ".parquet"
+                 and not f.name.startswith(".")]
+        assert len(files) == 1, (d.name, files)
+
+
+def test_ivf_layout_cache_is_keyed_by_embeddings(spark, tmp_path,
+                                                 monkeypatch):
+    """Two sf directories with the same basename and different embeddings
+    get their own layouts: the second answers with its own vectors.  An sf
+    directory rewritten in place gets a new layout, which replaces its
+    old one."""
+    import os
+    import tempfile
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from olkg.simsearch import ivf_topk
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    src = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = src.column("embedding")
+    cents = spark.read.parquet(
+        os.path.join(os.path.dirname(entry_mod.__file__), "data",
+                     "ivf_centroids.parquet"))
+    reversed_ = src.set_column(1, "embedding", vecs.take(
+        pa.array(range(src.num_rows - 1, -1, -1))))
+    for name, tbl in (("a", src), ("b", reversed_),
+                      ("a", src.slice(0, src.num_rows - 1))):
+        sf = tmp_path / name / "sf"
+        sf.mkdir(parents=True, exist_ok=True)
+        pq.write_table(tbl, sf / "embeddings.parquet")
+        got = {tuple(r) for r in
+               entry_mod.q_ann_ivf_materialized(spark, str(sf)).collect()}
+        df = spark.read.parquet(str(sf / "embeddings.parquet")).withColumn(
+            "embedding", F.transform("embedding", lambda x: x.cast("double")))
+        want = {tuple(r) for r in
+                ivf_topk(df, cents, list(range(10)), k=5, nprobe=4).collect()}
+        assert got == want and got, name
+    layouts = [n for n in os.listdir(tmp_path / "tmp")
+               if n.startswith("olkg_ivf_corpus_sf_")]
+    assert len(layouts) == 2, layouts

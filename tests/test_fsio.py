@@ -88,6 +88,29 @@ def test_read_side_rows_fails_loudly_when_sink_invisible(spark, tmp_path):
         read_side_rows(spark, empty, expected_rows=123)
 
 
+def test_read_side_rows_fails_loudly_when_sink_undercounts(spark, tmp_path):
+    """The sink's files exist but one part is gone (visible < expected, the
+    multi-node executor-local-path signature): raise, don't read short."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from olkg.extract import read_side_rows
+    sink = tmp_path / "sides"
+    sink.mkdir()
+    cols = ["kind", "subj", "pred", "obj", "obj_kind", "obj_datatype"]
+    for i, n in enumerate((3, 4)):
+        rows = [["author_name"] * n, [f"/authors/A{i}"] * n, [None] * n,
+                [f"Name {k}" for k in range(n)], [None] * n, [None] * n]
+        pq.write_table(pa.table(dict(zip(cols, rows)),
+                                schema=pa.schema([(c, pa.string())
+                                                  for c in cols])),
+                       sink / f"part-{i}.parquet")
+    assert read_side_rows(spark, str(sink), expected_rows=7).count() == 7
+    (sink / "part-1.parquet").unlink()
+    with pytest.raises(RuntimeError, match="holds 3 rows"):
+        read_side_rows(spark, str(sink), expected_rows=7)
+
+
 def test_s3a_uri_translates_to_pyarrow_s3():
     from olkg.fsio import translate_pa_uri
     assert translate_pa_uri("s3a://bucket/key") == "s3://bucket/key"

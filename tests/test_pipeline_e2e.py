@@ -501,3 +501,97 @@ def test_fast_pipeline_auto_dedup(spark, corpus, tmp_path_factory,
     p, r = precision_recall(result, golden)
     assert p == 1.0 and r == 1.0
     assert metrics["stages"]["dedup_plan"]["chosen"] == "partial"
+
+
+def test_bookkeeping_runs_no_spark_job(spark, pipeline_out, tmp_path):
+    """The sampler, the sink validation, the lineage append and the stage
+    reads are metadata I/O on the driver: none submits a Spark job."""
+    from olkg.extract import read_side_rows
+    from olkg.materialize import append_lineage, read_stage
+    from olkg.pipeline import estimate_extract_size
+    out, pages_path, _, _ = _resume_copy(spark, pipeline_out, tmp_path)
+    n_sides = spark.read.parquet(out + "/sides").count()
+    sc = spark.sparkContext
+    calls = {
+        "estimate_extract_size": lambda: estimate_extract_size(spark,
+                                                               pages_path),
+        "read_side_rows": lambda: read_side_rows(spark, out + "/sides",
+                                                 expected_rows=n_sides),
+        "read_stage": lambda: read_stage(spark, out, "edges"),
+        "append_lineage": lambda: append_lineage(spark, out, "r", "nodes", 1),
+    }
+    jobs = {}
+    for name, call in calls.items():
+        group = f"bookkeeping-{name}-{os.path.basename(str(tmp_path))}"
+        sc.setJobGroup(group, "no jobs expected")
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {name: [] for name in calls}
+
+
+def test_lineage_one_row_per_written_file(spark, pipeline_out):
+    """Lineage has one row per parquet file each stage wrote, and its
+    rows_out sums equal the stages' row counts."""
+    import pyarrow.parquet as pq
+    out, _, metrics = pipeline_out
+    lineage = pq.read_table(out + "/lineage").to_pylist()
+    by_stage: dict = {}
+    for r in lineage:
+        by_stage.setdefault(r["stage"], []).append(r)
+    for stage, rows in by_stage.items():
+        on_disk = sorted(
+            os.path.relpath(os.path.join(d, f), os.path.join(out, stage))
+            for d, _, names in os.walk(os.path.join(out, stage))
+            for f in names if f.endswith(".parquet")
+            and not f.startswith((".", "_")))
+        assert sorted(r["file"] for r in rows) == on_disk, stage
+        assert sum(r["rows_out"] for r in rows) == spark.read.parquet(
+            os.path.join(out, stage)).count(), stage
+    stages = metrics["stages"]
+    assert sum(r["rows_out"] for r in by_stage["edges"]) == (
+        stages["extract"]["rows"] + stages["link_dedup"]["rows"])
+    assert sum(r["rows_out"] for r in by_stage["sides"]) == (
+        stages["extract"]["side_rows"])
+
+
+def test_bookkeeping_resolves_relative_paths_like_spark(
+        spark, pipeline_out, tmp_path, monkeypatch):
+    """A relative path means what it means to Spark (the JVM's working
+    directory), also where pyarrow reads footers or writes the sink and
+    the lineage, however far the Python process has moved away."""
+    import pyarrow.parquet as pq
+
+    from olkg.extract import extract_triples_with_side_sink, read_side_rows
+    from olkg.materialize import append_lineage, stage_rows
+    from olkg.pipeline import estimate_extract_size
+    out, pages_path, _, _ = _resume_copy(spark, pipeline_out, tmp_path)
+    jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    rel_out = os.path.relpath(out, jvm_cwd)
+    rel_pages = os.path.relpath(pages_path, jvm_cwd)
+    (tmp_path / "elsewhere").mkdir()
+    monkeypatch.chdir(tmp_path / "elsewhere")
+    n_sides = spark.read.parquet(out + "/sides").count()
+    n_nodes = spark.read.parquet(out + "/nodes").count()
+
+    assert (estimate_extract_size(spark, rel_pages)
+            == estimate_extract_size(spark, pages_path))
+    assert read_side_rows(spark, rel_out + "/sides",
+                          expected_rows=n_sides).count() == n_sides
+    assert stage_rows(spark, rel_out, "edges/d=0") == spark.read.parquet(
+        out + "/edges/d=0").count()
+    append_lineage(spark, rel_out, "relative", "nodes", 1)
+    lineage = [r for r in pq.read_table(out + "/lineage").to_pylist()
+               if r["run_id"] == "relative"]
+    assert sum(r["rows_out"] for r in lineage) == n_nodes > 0
+
+    acc = spark.sparkContext.accumulator(0)
+    rel_sink = rel_out + "/sides_again"
+    assert extract_triples_with_side_sink(
+        spark.read.parquet(rel_pages), rel_sink,
+        side_count_acc=acc).count() > 0
+    assert read_side_rows(spark, rel_sink,
+                          expected_rows=acc.value).count() == acc.value > 0
+    assert os.listdir(os.path.join(out, "sides_again"))
