@@ -273,7 +273,7 @@ def read_side_rows(spark, side_sink: str,
                 "multi-node runs.")
         return spark.createDataFrame([], EXTRACT_SCHEMA)
     if expected_rows:
-        visible = sum(rows for *_, rows in parts)
+        visible = sum(p.rows for p in parts)
         if visible < expected_rows:
             raise RuntimeError(
                 f"side sink {side_sink!r} holds {visible} rows but "

@@ -97,7 +97,7 @@ def _written_parts(spark: SparkSession, out_dir: str, stage: str):
 def stage_rows(spark: SparkSession, out_dir: str, stage: str) -> int:
     """A stage table's row count from its files' parquet footers."""
     _, parts = _written_parts(spark, out_dir, stage)
-    return sum(rows for *_, rows in parts)
+    return sum(p.rows for p in parts)
 
 
 def append_lineage(spark: SparkSession, out_dir: str, run_id: str,
@@ -113,8 +113,8 @@ def append_lineage(spark: SparkSession, out_dir: str, run_id: str,
     _, parts = _written_parts(spark, out_dir, stage)
     n = len(parts)
     tbl = pa.table({"run_id": [run_id] * n, "stage": [stage] * n,
-                    "file": [rel for _, rel, _, _ in parts],
-                    "rows_out": [rows for *_, rows in parts],
+                    "file": [p.rel for p in parts],
+                    "rows_out": [p.rows for p in parts],
                     "wall_ms": [wall_ms] * n},
                    schema=to_arrow_schema(LINEAGE_SCHEMA))
     fs, path = fsio.pa_fs(fsio.qualify(spark, _stage_path(out_dir,

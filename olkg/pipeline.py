@@ -17,9 +17,9 @@ reads only materialized inputs, as three concurrent chains::
   then  ──▶ lineage/ (one row per written file of each stage the run
                       wrote, from the parquet footers)
 
-Only the extract and the tail chains run Spark jobs.  The dedup sampler,
-the sink validation, the lineage and the stage reads are metadata I/O
-(parquet footers, known schemas) on the driver.
+Only the extract and the tail chains run Spark jobs.  The pages schema,
+the dedup sampler, the sink validation, the lineage and the stage reads are
+metadata I/O (parquet footers, known schemas) on the driver.
 
 Resume: every output above is a stage with a ``_SUCCESS`` marker.  With
 ``resume`` on, a stage is skipped when its marker exists and every stage it
@@ -65,8 +65,8 @@ def _sample_lines(fs, parts: list, n: int) -> list:
     from olkg.pagesgen import html_to_text
 
     lines: list = []
-    for path, *_ in sorted(parts, key=lambda p: -p[2]):
-        pf = pq.ParquetFile(path, filesystem=fs)
+    for part in sorted(parts, key=lambda p: -p.size):
+        pf = pq.ParquetFile(part.path, filesystem=fs)
         cols = [c for c in ("html", "text") if c in pf.schema_arrow.names]
         for batch in pf.iter_batches(batch_size=n, columns=cols):
             d = batch.to_pydict()
@@ -83,8 +83,8 @@ def _sample_lines(fs, parts: list, n: int) -> list:
 
 
 def estimate_extract_size(spark: SparkSession, pages_path: str,
-                          repartition_by_url: int | None = None
-                          ) -> tuple[int, float]:
+                          repartition_by_url: int | None = None,
+                          parts: tuple | None = None) -> tuple[int, float]:
     """(est_total_triples, est_rows_per_map_task) for the extract stream —
     the inputs dedup_edges sizes its plan from.
 
@@ -96,13 +96,14 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     Hadoop-FS content summary's input bytes /
     spark.sql.files.maxPartitionBytes — unless the stream is explicitly
     repartitioned (``repartition_by_url``), which then fixes the task
-    count."""
+    count.  ``parts``: the pages table's :func:`olkg.fsio.parquet_parts`,
+    when the caller has listed it already."""
     from olkg.triples import extract_line
 
-    fs, parts = fsio.parquet_parts(spark, pages_path)
+    fs, parts = parts or fsio.parquet_parts(spark, pages_path)
     if not parts:
         raise FileNotFoundError(f"no parquet files under {pages_path!r}")
-    n_pages = sum(rows for *_, rows in parts)
+    n_pages = sum(p.rows for p in parts)
     if n_pages == 0:
         return 0, 0.0
     sample = _sample_lines(fs, parts, min(SAMPLE_PAGES, n_pages))
@@ -199,7 +200,13 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     metrics: dict = {"run_id": run_id, "stages": stages}
     t_total = time.time()
 
-    pages = spark.read.parquet(pages_path)
+    # the footers the sampler reads give the schema Spark would otherwise
+    # infer with a job of its own
+    pages_parts = fsio.parquet_parts(spark, pages_path)
+    pages_schema = fsio.footer_schema(spark, pages_parts[1])
+    reader = spark.read if pages_schema is None else spark.read.schema(
+        pages_schema)
+    pages = reader.parquet(pages_path)
     if dedup_pages:
         pages = dedup_pages_df(pages)
 
@@ -232,7 +239,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
             pages, sides_sink, repartition_by_url=repartition_by_url,
             side_count_acc=side_acc)
         est_total, est_per_task = estimate_extract_size(
-            spark, pages_path, repartition_by_url=repartition_by_url)
+            spark, pages_path, repartition_by_url=repartition_by_url,
+            parts=pages_parts)
         stages["dedup_plan"] = {
             "est_total_rows": est_total,
             "est_rows_per_task": int(est_per_task),

@@ -595,3 +595,63 @@ def test_bookkeeping_resolves_relative_paths_like_spark(
     assert read_side_rows(spark, rel_sink,
                           expected_rows=acc.value).count() == acc.value > 0
     assert os.listdir(os.path.join(out, "sides_again"))
+
+
+def test_footer_schema_is_sparks_inferred_schema(spark, corpus, tmp_path):
+    """The pages schema read from the parquet footers is the one Spark's
+    reader infers, for tables pyarrow wrote (the committed pages, a
+    text-only table, a multi-file directory) and one Spark wrote; footers
+    that disagree leave the inference to Spark."""
+    import pyarrow.parquet as pq
+
+    from olkg import fsio
+    from olkg.fixtures import PAGES
+    pages = pq.read_table(PAGES)
+    fixture = str(tmp_path / "fixture.parquet")
+    build_pages_df(spark, corpus).repartition(3).write.parquet(fixture)
+    text_only = str(tmp_path / "text_only.parquet")
+    pq.write_table(pages.select(["url", "text"]), text_only)
+    multi, mixed = tmp_path / "multi", tmp_path / "mixed"
+    multi.mkdir()
+    mixed.mkdir()
+    for i in range(3):
+        pq.write_table(pages.slice(10 * i, 10), multi / f"part-{i}.parquet")
+    pq.write_table(pages.select(["url", "text"]), mixed / "a.parquet")
+    pq.write_table(pages.select(["url", "lang"]), mixed / "b.parquet")
+
+    for path in (str(PAGES), fixture, text_only, str(multi)):
+        _, parts = fsio.parquet_parts(spark, path)
+        assert fsio.footer_schema(spark, parts) == spark.read.parquet(
+            path).schema, path
+    assert len(fsio.parquet_parts(spark, fixture)[1]) == 3
+    assert fsio.footer_schema(
+        spark, fsio.parquet_parts(spark, str(mixed))[1]) is None
+
+
+def test_no_spark_job_before_the_sampler(spark, corpus, tmp_path,
+                                         monkeypatch):
+    """run_pipeline reaches the dedup sampler without running a Spark job:
+    the pages schema comes from the footers, not from Spark's inference
+    job."""
+    import olkg.pipeline as pipeline
+    pages_path = str(tmp_path / "pages.parquet")
+    build_pages_df(spark, corpus).write.parquet(pages_path)
+    sc = spark.sparkContext
+    group = f"before-sampler-{os.path.basename(str(tmp_path))}"
+    seen = {}
+
+    class SamplerReached(Exception):
+        pass
+
+    def sampler(*args, **kwargs):
+        seen["jobs"] = list(sc.statusTracker().getJobIdsForGroup(group))
+        raise SamplerReached
+
+    monkeypatch.setattr(pipeline, "estimate_extract_size", sampler)
+    sc.setJobGroup(group, "no jobs expected")
+    try:
+        with pytest.raises(SamplerReached):
+            run_pipeline(spark, pages_path, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen["jobs"] == []
