@@ -76,6 +76,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings, their vectors as doubles."""
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    return emb.withColumn("embedding",
+                          F.transform("embedding", lambda x: x.cast("double")))
+
+
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -214,10 +221,8 @@ def q_doc_simhash_pairs(spark, sf_dir):
 
 def q_ann_cosine_topk(spark, sf_dir):
     from olkg.simsearch import cosine_topk_bruteforce
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
-    return cosine_topk_bruteforce(emb, query_ids=list(range(10)), k=5)
+    return cosine_topk_bruteforce(_emb(spark, sf_dir),
+                                  query_ids=list(range(10)), k=5)
 
 
 def q_ann_lsh_topk(spark, sf_dir):
@@ -225,11 +230,9 @@ def q_ann_lsh_topk(spark, sf_dir):
     table (data/hyperplanes.parquet) — the oracle reads the same weights and
     derives identical buckets, candidates, and ranks."""
     from olkg.simsearch import cosine_topk_lsh
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
     planes = spark.read.parquet(PLANES)
-    return cosine_topk_lsh(emb, query_ids=list(range(10)), k=5, planes=planes)
+    return cosine_topk_lsh(_emb(spark, sf_dir), query_ids=list(range(10)),
+                           k=5, planes=planes)
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -237,11 +240,9 @@ def q_ann_ivf_topk(spark, sf_dir):
     (data/ivf_centroids.parquet) — cell assignment and probing are
     engine-identical, so the oracle reproduces the exact result."""
     from olkg.simsearch import ivf_topk
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
     cents = spark.read.parquet(CENTROIDS)
-    return ivf_topk(emb, cents, query_ids=list(range(10)), k=5, nprobe=4)
+    return ivf_topk(_emb(spark, sf_dir), cents, query_ids=list(range(10)),
+                    k=5, nprobe=4)
 
 
 def _ivf_handles(spark, path: str):
@@ -306,12 +307,9 @@ def ensure_ivf_materialized(spark, sf_dir: str) -> str:
             and os.path.isdir(os.path.join(path, "_ids"))):
         _ivf_handles(spark, path)
         return path
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
     cents = spark.read.parquet(CENTROIDS)
     scratch = path + ".tmp." + uuid.uuid4().hex[:8]
-    ivf_materialize(emb, cents, scratch)
+    ivf_materialize(_emb(spark, sf_dir), cents, scratch)
     import shutil
     # swap loop: each pass either installs our complete scratch, adopts a
     # complete layout a concurrent run installed, or evicts ONE stale
@@ -371,11 +369,9 @@ def q_doc_embedding_neardup(spark, sf_dir):
     hyperplane table → identical buckets in both engines) verified with the
     exact cosine — the oracle reproduces the same candidate set + filter."""
     from olkg.simsearch import embedding_near_dup_pairs
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
     planes = spark.read.parquet(PLANES)
-    return embedding_near_dup_pairs(emb, planes, threshold=0.4)
+    return embedding_near_dup_pairs(_emb(spark, sf_dir), planes,
+                                    threshold=0.4)
 
 
 def q_multimodal_features(spark, sf_dir):

@@ -113,14 +113,8 @@ def _native_recovered(html_col):
 def pages_to_lines(pages: DataFrame) -> DataFrame:
     """(line): the dump line per page — html inversion when possible, else
     the text column."""
-    cols = pages.columns
-    if "html" in cols and "text" in cols:
-        line = F.coalesce(_native_recovered(F.col("html")), F.col("text"))
-    elif "html" in cols:
-        line = _native_recovered(F.col("html"))
-    else:
-        line = F.col("text")
-    return pages.select(line.alias("line"))
+    return pages.select(F.coalesce(_native_recovered(F.col("html")),
+                                   F.col("text")).alias("line"))
 
 
 def audit_pages(pages: DataFrame):

@@ -15,11 +15,12 @@ the way its side of the cluster naturally can:
   from a URI *inside a task* (no JVM access there), used by the pipeline's
   side sink (:mod:`olkg.extract`).  ``s3a://`` is translated to pyarrow's
   ``s3://`` scheme; credentials come from the task environment the way any
-  pyarrow S3 access does.  The driver reads parquet footers
-  (:func:`parquet_parts`) and writes the lineage table through the same
-  resolution, on paths it has qualified through the Hadoop layer first, so
-  that bookkeeping is metadata I/O, runs no Spark job, and reads where
-  Spark wrote.
+  pyarrow S3 access does.  The driver lists parquet tables with their
+  footers (:func:`parquet_parts`) and writes the lineage table through the
+  same resolution, on paths it has qualified through the Hadoop layer
+  first, so that bookkeeping is metadata I/O, runs no Spark job, and reads
+  where Spark wrote.  The footers give only row counts, file sizes and
+  column names; schemas come from :mod:`olkg.schema`.
 
 Path joining uses POSIX separators (URIs always do); :func:`pjoin` is
 ``posixpath.join``, safe for both plain paths and URIs on every deployment
@@ -148,71 +149,3 @@ def parquet_parts(spark, uri_or_path: str):
                               footer))
     return fs, sorted(parts, key=lambda p: p.rel)
 
-
-# the key Spark stores its own schema under in the files it writes
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def footer_schema(spark, parts: list):
-    """The schema Spark's parquet reader infers for the table of ``parts``,
-    read from the footers :func:`parquet_parts` already holds, so the read
-    can pass it and skip Spark's schema-inference job.  None, for Spark to
-    infer, when the footers disagree, the files are partitioned, or a
-    column has a type whose pyarrow and Spark readings may differ.  Like
-    Spark's, every field of the schema is nullable.
-
-    Spark takes the schema it stored when writing the file; otherwise it
-    converts the parquet schema.  Only plain columns are converted here,
-    whose readings agree: signed integers, floating point, booleans,
-    decimals, dates, UTF-8 strings, binary (unless
-    ``spark.sql.parquet.binaryAsString``) and UTC-adjusted milli- or
-    microsecond timestamps."""
-    import json
-
-    import pyarrow.types as pt
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
-
-    if not parts or any("=" in p.rel for p in parts):
-        return None
-    first = parts[0].footer
-    stored = (first.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if any(not p.footer.schema.equals(first.schema)
-           or (p.footer.metadata or {}).get(_SPARK_SCHEMA_KEY) != stored
-           for p in parts[1:]):
-        return None
-    if stored is not None:
-        return _as_nullable(StructType.fromJson(json.loads(stored)))
-    arrow = first.schema.to_arrow_schema()
-    binary_as_string = spark.conf.get("spark.sql.parquet.binaryAsString",
-                                      "false") == "true"
-
-    def plain(t) -> bool:
-        if pt.is_timestamp(t):
-            return t.tz is not None and t.unit in ("ms", "us")
-        if pt.is_binary(t):
-            return not binary_as_string
-        return (pt.is_signed_integer(t) or pt.is_float32(t)
-                or pt.is_float64(t) or pt.is_boolean(t)
-                or pt.is_decimal128(t) or pt.is_date32(t) or pt.is_string(t))
-
-    if not all(plain(f.type) for f in arrow):
-        return None
-    return _as_nullable(from_arrow_schema(arrow))
-
-
-def _as_nullable(schema):
-    """``schema`` with every field, element and value nullable, as Spark's
-    file sources read it."""
-    from pyspark.sql.types import StructType
-
-    flags = ("nullable", "containsNull", "valueContainsNull")
-
-    def walk(v):
-        if isinstance(v, dict):
-            return {k: True if k in flags else walk(x) for k, x in v.items()}
-        if isinstance(v, list):
-            return [walk(x) for x in v]
-        return v
-
-    return StructType.fromJson(walk(schema.jsonValue()))

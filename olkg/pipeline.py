@@ -15,11 +15,13 @@ reads only materialized inputs, as three concurrent chains::
         graphs finish on the driver)──▶ canonical_map/
   pages ──native byte-identity audit
   then  ──▶ lineage/ (one row per written file of each stage the run
-                      wrote, from the parquet footers)
+                      wrote, edges per partition, from the parquet footers)
 
-Only the extract and the tail chains run Spark jobs.  The pages schema,
-the dedup sampler, the sink validation, the lineage and the stage reads are
-metadata I/O (parquet footers, known schemas) on the driver.
+Only the extract and the tail chains run Spark jobs.  The pages are read
+with the declared ``PAGES_SCHEMA`` after their footers are checked for its
+url, html and text columns; that check, the dedup sampler, the sink
+validation, the lineage and the stage reads are metadata I/O (parquet
+footers, known schemas) on the driver.
 
 Resume: every output above is a stage with a ``_SUCCESS`` marker.  With
 ``resume`` on, a stage is skipped when its marker exists and every stage it
@@ -50,9 +52,26 @@ from olkg.fsio import pjoin
 from olkg.materialize import (append_lineage, build_nodes, export_ntriples_gz,
                               read_stage, stage_complete, stage_rows,
                               write_stage)
+from olkg.schema import PAGES_SCHEMA
 
 # dump lines the dedup-sizing sampler extracts on the driver
 SAMPLE_PAGES = 256
+
+
+def read_pages(spark: SparkSession, pages_path: str):
+    """(pages, (fs, parts)): the pages table read with the declared
+    ``PAGES_SCHEMA``, and its :func:`olkg.fsio.parquet_parts`, no Spark
+    job.  A file without url, html or text, which the read would turn into
+    nulls, raises ``ValueError``; extra columns and partition directories
+    are ignored."""
+    fs, parts = fsio.parquet_parts(spark, pages_path)
+    for part in parts:
+        names = part.footer.schema.to_arrow_schema().names
+        for col in ("url", "html", "text"):
+            if col not in names:
+                raise ValueError(
+                    f"pages file {part.path!r} has no {col!r} column")
+    return spark.read.schema(PAGES_SCHEMA).parquet(pages_path), (fs, parts)
 
 
 def _sample_lines(fs, parts: list, n: int) -> list:
@@ -67,11 +86,10 @@ def _sample_lines(fs, parts: list, n: int) -> list:
     lines: list = []
     for part in sorted(parts, key=lambda p: -p.size):
         pf = pq.ParquetFile(part.path, filesystem=fs)
-        cols = [c for c in ("html", "text") if c in pf.schema_arrow.names]
-        for batch in pf.iter_batches(batch_size=n, columns=cols):
-            d = batch.to_pydict()
-            for html, text in zip(d.get("html", [None] * batch.num_rows),
-                                  d.get("text", [None] * batch.num_rows)):
+        for batch in pf.iter_batches(batch_size=n, columns=["html", "text"]):
+            # html as PAGES_SCHEMA reads it, also where stored as a string
+            for html, text in zip(batch[0].cast("binary").to_pylist(),
+                                  batch[1].to_pylist()):
                 try:
                     line = html_to_text(html)
                 except UnicodeDecodeError:
@@ -93,11 +111,11 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     ~``SAMPLE_PAGES`` dump lines (read with pyarrow, inverted by
     :func:`_sample_lines`) go through the pure-Python semantics
     (~milliseconds) to estimate triples/page.  Map-task count is the
-    Hadoop-FS content summary's input bytes /
-    spark.sql.files.maxPartitionBytes — unless the stream is explicitly
-    repartitioned (``repartition_by_url``), which then fixes the task
-    count.  ``parts``: the pages table's :func:`olkg.fsio.parquet_parts`,
-    when the caller has listed it already."""
+    listed pages files' bytes / spark.sql.files.maxPartitionBytes — unless
+    the stream is explicitly repartitioned (``repartition_by_url``), which
+    then fixes the task count.  ``parts``: the pages table's
+    :func:`olkg.fsio.parquet_parts`, when the caller has listed it
+    already."""
     from olkg.triples import extract_line
 
     fs, parts = parts or fsio.parquet_parts(spark, pages_path)
@@ -115,8 +133,7 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
     if repartition_by_url:
         n_tasks = repartition_by_url
     else:
-        hfs, p = fsio._hadoop_fs(spark, pages_path)
-        total_bytes = hfs.getContentSummary(p).getLength()
+        total_bytes = sum(p.size for p in parts)
         maxpb = spark._jsparkSession.sessionState().conf() \
             .filesMaxPartitionBytes()
         n_tasks = max(1, -(-total_bytes // maxpb))
@@ -200,13 +217,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     metrics: dict = {"run_id": run_id, "stages": stages}
     t_total = time.time()
 
-    # the footers the sampler reads give the schema Spark would otherwise
-    # infer with a job of its own
-    pages_parts = fsio.parquet_parts(spark, pages_path)
-    pages_schema = fsio.footer_schema(spark, pages_parts[1])
-    reader = spark.read if pages_schema is None else spark.read.schema(
-        pages_schema)
-    pages = reader.parquet(pages_path)
+    pages, pages_parts = read_pages(spark, pages_path)
     if dedup_pages:
         pages = dedup_pages_df(pages)
 
@@ -353,10 +364,14 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     stages["tail"] = {"wall_ms": int((time.time() - t_tail) * 1000)}
 
     # per-stage lineage (north_rule) for every stage this run wrote: one
-    # row per written file, from its parquet footer (no Spark job); a sink
-    # no task wrote a side row to has no file, so no lineage row
+    # row per written file, from its parquet footer (no Spark job); the
+    # edges per partition, since a resumed run may rebuild d=1 alone; a
+    # sink no task wrote a side row to has no file, so no lineage row
+    if not extract_reused:
+        append_lineage(spark, out_dir, run_id, "edges/d=0",
+                       stages["extract"]["wall_ms"])
     if not d1_reused:
-        append_lineage(spark, out_dir, run_id, "edges",
+        append_lineage(spark, out_dir, run_id, "edges/d=1",
                        stages["link_dedup"]["wall_ms"])
     if not extract_reused and stages["extract"]["side_rows"]:
         append_lineage(spark, out_dir, run_id, "sides",

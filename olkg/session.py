@@ -15,11 +15,11 @@ archive writes one when its JVM exits and installs it by atomic rename
 once that JVM is gone; concurrent first runs each write their own and the
 last rename wins.  Writing costs a few seconds at start and ~10 s at
 interpreter exit, once.  No archive is used when the launcher sets
-``spark.driver.defaultJavaOptions``, when the Spark conf directory holds a
-real file (the archive refuses a non-empty directory on the class path),
-when the cache is not writable, and under ``spark-submit``, where the JVM
-already runs.  JVM warnings go to stderr, so stdout carries only what the
-program prints.
+``spark.driver.defaultJavaOptions`` or the driver class path, when the
+Spark conf directory holds a real file (the archive refuses a non-empty
+directory on the class path), when the cache is not writable, and under
+``spark-submit``, where the JVM already runs.  JVM warnings go to stderr,
+so stdout carries only what the program prints.
 """
 
 from __future__ import annotations
@@ -139,10 +139,13 @@ def _cds_launch(explicit: dict) -> tuple[str, str, str | None, str] | None:
     """(java options, conf dir, dump path or None, archive path) for the
     driver JVM this process is about to launch; None to launch it without
     class-data sharing (see the module docstring for when)."""
-    opts_key = "spark.driver.defaultJavaOptions"
+    # the launcher's own java options win, and a class path it extends may
+    # hold a non-empty directory, which the dump refuses
     submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
-    if (opts_key in explicit or opts_key in submit_args
-            or "--properties-file" in submit_args):
+    keys = ("spark.driver.defaultJavaOptions", "spark.driver.extraClassPath")
+    if (any(k in explicit or k in submit_args for k in keys)
+            or "--properties-file" in submit_args
+            or "--driver-class-path" in submit_args):
         return None
     spark_home = _find_spark_home()
     conf_dir = (os.environ.get("SPARK_CONF_DIR")

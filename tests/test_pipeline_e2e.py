@@ -221,7 +221,8 @@ def test_lineage_written(spark, pipeline_out):
     out, _, _ = pipeline_out
     lineage = spark.read.parquet(out + "/lineage")
     stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert {"edges", "sides", "nodes", "canonical_map"} <= stages
+    assert {"edges/d=0", "edges/d=1", "sides", "nodes",
+            "canonical_map"} <= stages
     assert lineage.filter(F.col("rows_out") > 0).count() > 0
 
 
@@ -551,10 +552,29 @@ def test_lineage_one_row_per_written_file(spark, pipeline_out):
         assert sum(r["rows_out"] for r in rows) == spark.read.parquet(
             os.path.join(out, stage)).count(), stage
     stages = metrics["stages"]
-    assert sum(r["rows_out"] for r in by_stage["edges"]) == (
-        stages["extract"]["rows"] + stages["link_dedup"]["rows"])
+    assert sum(r["rows_out"] for r in by_stage["edges/d=0"]) == (
+        stages["extract"]["rows"])
+    assert sum(r["rows_out"] for r in by_stage["edges/d=1"]) == (
+        stages["link_dedup"]["rows"])
     assert sum(r["rows_out"] for r in by_stage["sides"]) == (
         stages["extract"]["side_rows"])
+
+
+def test_resumed_lineage_names_only_rebuilt_files(spark, pipeline_out,
+                                                  tmp_path, monkeypatch):
+    """A resumed run that rebuilds edges/d=1 alone records lineage for the
+    files it wrote, not for the reused edges/d=0 files."""
+    import pyarrow.parquet as pq
+    out, pages_path, edges0, _ = _resume_copy(spark, pipeline_out, tmp_path)
+    shutil.rmtree(os.path.join(out, "edges", "d=1"))
+    metrics = _rerun(spark, pages_path, out, monkeypatch)
+    assert metrics["stages"]["extract"] == {"skipped": True}
+    rows = [r for r in pq.read_table(out + "/lineage").to_pylist()
+            if r["run_id"] == metrics["run_id"]]
+    assert {r["stage"] for r in rows} == {"edges/d=1", "nodes"}
+    assert sum(r["rows_out"] for r in rows if r["stage"] == "edges/d=1") == (
+        metrics["stages"]["link_dedup"]["rows"])
+    assert edges_set(spark, out) == edges0
 
 
 def test_bookkeeping_resolves_relative_paths_like_spark(
@@ -597,61 +617,106 @@ def test_bookkeeping_resolves_relative_paths_like_spark(
     assert os.listdir(os.path.join(out, "sides_again"))
 
 
-def test_footer_schema_is_sparks_inferred_schema(spark, corpus, tmp_path):
-    """The pages schema read from the parquet footers is the one Spark's
-    reader infers, for tables pyarrow wrote (the committed pages, a
-    text-only table, a multi-file directory) and one Spark wrote; footers
-    that disagree leave the inference to Spark."""
-    import pyarrow.parquet as pq
-
-    from olkg import fsio
-    from olkg.fixtures import PAGES
-    pages = pq.read_table(PAGES)
-    fixture = str(tmp_path / "fixture.parquet")
-    build_pages_df(spark, corpus).repartition(3).write.parquet(fixture)
-    text_only = str(tmp_path / "text_only.parquet")
-    pq.write_table(pages.select(["url", "text"]), text_only)
-    multi, mixed = tmp_path / "multi", tmp_path / "mixed"
-    multi.mkdir()
-    mixed.mkdir()
-    for i in range(3):
-        pq.write_table(pages.slice(10 * i, 10), multi / f"part-{i}.parquet")
-    pq.write_table(pages.select(["url", "text"]), mixed / "a.parquet")
-    pq.write_table(pages.select(["url", "lang"]), mixed / "b.parquet")
-
-    for path in (str(PAGES), fixture, text_only, str(multi)):
-        _, parts = fsio.parquet_parts(spark, path)
-        assert fsio.footer_schema(spark, parts) == spark.read.parquet(
-            path).schema, path
-    assert len(fsio.parquet_parts(spark, fixture)[1]) == 3
-    assert fsio.footer_schema(
-        spark, fsio.parquet_parts(spark, str(mixed))[1]) is None
-
-
-def test_no_spark_job_before_the_sampler(spark, corpus, tmp_path,
-                                         monkeypatch):
-    """run_pipeline reaches the dedup sampler without running a Spark job:
-    the pages schema comes from the footers, not from Spark's inference
-    job."""
+def _run_until_sampler(spark, pages_path, out, monkeypatch):
+    """(jobs, sampled lines): the Spark jobs ``run_pipeline`` runs before
+    the dedup sampler, and the lines the sampler reads; ``(jobs, error)``
+    when the run raises ValueError before it."""
     import olkg.pipeline as pipeline
-    pages_path = str(tmp_path / "pages.parquet")
-    build_pages_df(spark, corpus).write.parquet(pages_path)
     sc = spark.sparkContext
-    group = f"before-sampler-{os.path.basename(str(tmp_path))}"
+    group = f"before-sampler-{os.path.basename(out)}"
     seen = {}
 
     class SamplerReached(Exception):
         pass
 
-    def sampler(*args, **kwargs):
+    def sampler(spark, pages_path, repartition_by_url=None, parts=None):
         seen["jobs"] = list(sc.statusTracker().getJobIdsForGroup(group))
+        seen["lines"] = pipeline._sample_lines(*parts, pipeline.SAMPLE_PAGES)
         raise SamplerReached
 
     monkeypatch.setattr(pipeline, "estimate_extract_size", sampler)
     sc.setJobGroup(group, "no jobs expected")
     try:
-        with pytest.raises(SamplerReached):
-            run_pipeline(spark, pages_path, str(tmp_path / "out"))
+        run_pipeline(spark, pages_path, out)
+    except SamplerReached:
+        return seen["jobs"], seen["lines"]
+    except ValueError as e:
+        return list(sc.statusTracker().getJobIdsForGroup(group)), e
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert seen["jobs"] == []
+    raise AssertionError("run_pipeline finished without the sampler")
+
+
+def test_no_spark_job_before_the_sampler(spark, corpus, tmp_path,
+                                         monkeypatch):
+    """run_pipeline reaches the dedup sampler without running a Spark job:
+    the pages are read with the declared PAGES_SCHEMA after a footer check
+    of their columns, with no schema-inference job."""
+    pages_path = str(tmp_path / "pages.parquet")
+    build_pages_df(spark, corpus).write.parquet(pages_path)
+    jobs, lines = _run_until_sampler(spark, pages_path,
+                                     str(tmp_path / "out"), monkeypatch)
+    assert jobs == [] and len(lines) == len(corpus)
+
+
+def test_pages_contract(spark, tmp_path, monkeypatch):
+    """The pipeline's pages read (read_pages, with the declared
+    PAGES_SCHEMA) takes the committed pages and tables derived from them
+    alike: Spark- and pyarrow-written multi-file tables, html stored as a
+    string, a hive-partitioned directory and warc_ts without a time zone
+    give the same lines, sampled and in Spark, and the same audit, with no
+    Spark job before the sampler.  A table without html raises ValueError
+    naming it, before any job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from olkg import fsio
+    from olkg.extract import audit_pages, pages_to_lines
+    from olkg.fixtures import PAGES
+    from olkg.pipeline import read_pages
+    from olkg.schema import PAGES_SCHEMA
+    pages = pq.read_table(PAGES)
+
+    def table(name, tbl, files=1, sub=""):
+        path = tmp_path / name
+        (path / sub).mkdir(parents=True)
+        n = -(-tbl.num_rows // files)
+        for i in range(files):
+            pq.write_table(tbl.slice(n * i, n),
+                           path / sub / f"part-{i}.parquet")
+        return str(path)
+
+    spark_3 = str(tmp_path / "spark_3")
+    spark.read.schema(PAGES_SCHEMA).parquet(str(PAGES)).repartition(3) \
+        .write.parquet(spark_3)
+    hive = table("hive", pages.slice(0, 15), sub="crawl=a")
+    table("hive", pages.slice(15), sub="crawl=b")
+    html_str = pages.set_column(2, "html", pages["html"].cast(pa.string()))
+    ntz = pages.set_column(1, "warc_ts",
+                           pages["warc_ts"].cast(pa.timestamp("us")))
+    variants = {"committed": str(PAGES), "spark_3": spark_3,
+                "pyarrow_3": table("pyarrow_3", pages, files=3),
+                "html_string": table("html_string", html_str),
+                "hive": hive, "warc_ts_ntz": table("warc_ts_ntz", ntz)}
+    assert len(fsio.parquet_parts(spark, spark_3)[1]) == 3
+
+    want = None
+    for name, path in variants.items():
+        jobs, sampled = _run_until_sampler(
+            spark, path, str(tmp_path / f"out_{name}"), monkeypatch)
+        assert jobs == [], name
+        df, _ = read_pages(spark, path)
+        got = (sorted(sampled),
+               sorted(r.line for r in pages_to_lines(df).collect()),
+               tuple(audit_pages(df)))
+        want = want or got
+        assert got == want, name
+    assert len(want[0]) == 30 and want[1] == want[0]
+    assert want[2] == (30, 0)
+
+    text_only = table("text_only", pages.select(["url", "text"]))
+    jobs, err = _run_until_sampler(spark, text_only,
+                                   str(tmp_path / "out_text_only"),
+                                   monkeypatch)
+    assert jobs == []
+    assert isinstance(err, ValueError) and "'html'" in str(err), err

@@ -10,6 +10,7 @@ it as ``shared objects file (top)``.
 import json
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 import time
@@ -72,16 +73,18 @@ def _pipeline(out, env) -> tuple:
 def test_archive_dumped_once_then_mapped_and_a_mismatch_falls_back(tmp_path):
     """The first pipeline run writes and installs exactly one archive, the
     second maps it, and a run whose class path no longer matches falls back
-    without it.  All three write the same edges and canonical map, and
-    stdout's last line is the metrics JSON every time (the JVM's archive
-    warnings go to stderr)."""
-    cache, extra_cp = tmp_path / "cache", tmp_path / "extra-cp"
-    extra_cp.mkdir()
+    without it: the archive copied into another cache, whose empty conf
+    directory, first on the class path, has another path.  All three write
+    the same edges and canonical map, and stdout's last line is the metrics
+    JSON every time (the JVM's archive warnings go to stderr)."""
+    cache, moved = tmp_path / "cache", tmp_path / "moved"
     runs = []
-    for i, extra in enumerate(["", "", "--conf spark.driver.extraClassPath="
-                                      + str(extra_cp)]):
-        env = _env(cache, f"{CLASS_LOAD} {extra}")
-        runs.append(_pipeline(tmp_path / f"out{i}", env))
+    for i, where in enumerate((cache, cache, moved)):
+        if where == moved:
+            [name] = _cache_files(cache, ".jsa")
+            (moved / "olkg").mkdir(parents=True)
+            shutil.copy(cache / "olkg" / name, moved / "olkg" / name)
+        runs.append(_pipeline(tmp_path / f"out{i}", _env(where, CLASS_LOAD)))
         if i == 0:
             assert len(_cache_files(cache, ".jsa")) == 1
             assert _cache_files(cache, ".part") == []
@@ -134,6 +137,22 @@ def test_launcher_java_options_mean_no_archive(tmp_path):
         cache, "--conf spark.driver.defaultJavaOptions=-Dolkg.test=1"))
     assert _last_json(proc.stdout)["java_opts"] == "-Dolkg.test=1"
     assert _cache_files(cache, ".jsa") == []
+
+
+def test_launcher_class_path_means_no_dump(tmp_path):
+    """A driver class path the launcher sets, here a directory of classes
+    (which the dump refuses), means no archive: two runs both succeed, no
+    archive or partial dump is left, and neither run tries a dump."""
+    cache, classes = tmp_path / "cache", tmp_path / "classes"
+    (classes / "pkg").mkdir(parents=True)
+    (classes / "pkg" / "A.class").write_bytes(b"\xca\xfe\xba\xbe")
+    for args in (f"--conf spark.driver.extraClassPath={classes}",
+                 f"--driver-class-path {classes}"):
+        proc = _run(["-c", SESSION], _env(cache, args))
+        out = _last_json(proc.stdout)
+        assert out["n"] == 3 and out["java_opts"] is None
+        assert "[cds" not in proc.stderr and "non-empty" not in proc.stderr
+    assert _cache_files(cache, ".jsa") == _cache_files(cache, ".part") == []
 
 
 def test_concurrent_first_runs_install_one_whole_archive(tmp_path):
