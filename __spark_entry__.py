@@ -215,8 +215,7 @@ def q_doc_simhash_pairs(spark, sf_dir):
     (max_hamming+1 chunks, pigeonhole) over the cross-engine md5-based
     60-bit signature — the oracle recomputes signatures + all pairs in SQL."""
     from olkg.textops import simhash_near_pairs
-    return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3,
-                              hash_fn="md5_60")
+    return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -231,8 +230,8 @@ def q_ann_lsh_topk(spark, sf_dir):
     derives identical buckets, candidates, and ranks."""
     from olkg.simsearch import cosine_topk_lsh
     planes = spark.read.parquet(PLANES)
-    return cosine_topk_lsh(_emb(spark, sf_dir), query_ids=list(range(10)),
-                           k=5, planes=planes)
+    return cosine_topk_lsh(_emb(spark, sf_dir), planes,
+                           query_ids=list(range(10)), k=5)
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -251,7 +250,7 @@ def _ivf_handles(spark, path: str):
     the ``_ids`` id→cell index persisted in memory, and the persisted
     centroid codebook.  These are the per-query fixed read costs a serving
     layer pays ONCE per layout, not per query — ``ivf_topk_materialized``
-    takes them as its ``corpus`` / ``ids_index`` handles."""
+    takes them as its ``corpus`` / ``ids_index`` / ``centroids``."""
     # keyed on the application id (stable per SparkContext lifetime), not
     # id(spark): a stopped session's address can be reused by a new one,
     # which would hand back handles bound to the dead session
@@ -359,9 +358,8 @@ def q_ann_ivf_materialized(spark, sf_dir):
     from olkg.simsearch import ivf_topk_materialized
     path = ensure_ivf_materialized(spark, sf_dir)
     corpus, ids, cents = _ivf_handles(spark, path)
-    return ivf_topk_materialized(spark, path, cents,
-                                 query_ids=list(range(10)), k=5, nprobe=4,
-                                 corpus=corpus, ids_index=ids)
+    return ivf_topk_materialized(corpus, ids, cents,
+                                 query_ids=list(range(10)), k=5, nprobe=4)
 
 
 def q_doc_embedding_neardup(spark, sf_dir):

@@ -4,7 +4,7 @@ Two complementary layers, each reaching shared storage (HDFS / S3 / GCS)
 the way its side of the cluster naturally can:
 
 - **Driver side** — :func:`exists` / :func:`mkdirs` / :func:`delete` /
-  :func:`listdir` / :func:`rename` / :func:`touch` / :func:`qualify` go
+  :func:`touch` / :func:`qualify` go
   through Spark's Hadoop ``FileSystem`` (resolved from the path's scheme +
   the session's Hadoop conf), so whatever storage Spark itself can
   read/write — ``file://``, ``hdfs://``, ``s3a://`` with the cluster's
@@ -61,20 +61,6 @@ def delete(spark, path: str, recursive: bool = True) -> None:
     fs, p = _hadoop_fs(spark, path)
     if fs.exists(p):
         fs.delete(p, recursive)
-
-
-def listdir(spark, path: str) -> list[str]:
-    """Child NAMES (not full paths) of a directory; [] if absent."""
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
-
-
-def rename(spark, src: str, dst: str) -> bool:
-    fs, p_src = _hadoop_fs(spark, src)
-    _, p_dst = _hadoop_fs(spark, dst)
-    return bool(fs.rename(p_src, p_dst))
 
 
 def qualify(spark, path: str) -> str:

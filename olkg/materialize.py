@@ -1,5 +1,6 @@
 """Materialize stage: checkpointed stage tables, nodes/edges graph tables,
-N-Triples export, per-file lineage metrics, idempotent resume.
+N-Triples export (a directory of gzipped part files), per-file lineage
+metrics, idempotent resume.
 
 Bookkeeping around the stages runs no Spark job: :func:`read_stage` reads
 the edges with their known schema (no schema-inference job), and
@@ -21,7 +22,6 @@ olkg.util.det_bnode).
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -166,26 +166,10 @@ def ntriples_lines(edges: DataFrame) -> DataFrame:
                  F.lit(" .")).alias("value"))
 
 
-def export_ntriples_gz(edges: DataFrame, path: str,
-                       dated_single_file: bool = False,
-                       date: str | None = None) -> None:
-    """Gzipped N-Triples export.  Default: a directory of part files (the
-    scalable layout).  ``dated_single_file`` reproduces the reference's
-    ``openlibrary-YYYY-MM-DD.nt.gz`` convention (openlibrary_to_rdf.rb:22)
-    by coalescing to one partition and renaming the part file — parity mode
-    for modest outputs, not the 100-TB path."""
-    df = ntriples_lines(edges)
-    if dated_single_file:
-        df = df.coalesce(1)
-    (df.write.mode("overwrite")
+def export_ntriples_gz(edges: DataFrame, path: str) -> None:
+    """Gzipped N-Triples export: a directory of part files, one per write
+    task (the scalable layout; the reference's single dated
+    ``openlibrary-YYYY-MM-DD.nt.gz`` file is a concatenation of them)."""
+    (ntriples_lines(edges).write.mode("overwrite")
      .option("compression", "gzip")
      .text(path))
-    if dated_single_file:
-        if date is None:
-            date = time.strftime("%Y-%m-%d")
-        spark = SparkSession.getActiveSession()
-        part = [f for f in fsio.listdir(spark, path)
-                if f.startswith("part-") and f.endswith(".gz")]
-        if part:
-            fsio.rename(spark, pjoin(path, part[0]),
-                        pjoin(path, f"openlibrary-{date}.nt.gz"))

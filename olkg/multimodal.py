@@ -52,14 +52,12 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                           "header_hash", "modality"])
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload",
-                     modality_col: str = "modality") -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads — the exact
-    pipeline shape a real decode/resize/frame-sample stage uses (binary in,
-    fixed-width features out, no per-row Python round trips)."""
-    src = df.select(F.col("doc_id"),
-                    F.col(payload_col).alias("payload"),
-                    F.col(modality_col).alias("modality"))
+def extract_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over (doc_id, payload, modality)
+    rows — the exact pipeline shape a real decode/resize/frame-sample stage
+    uses (binary in, fixed-width features out, no per-row Python round
+    trips)."""
+    src = df.select("doc_id", "payload", "modality")
     return src.mapInPandas(_feature_batches, schema=FEATURE_SCHEMA)
 
 

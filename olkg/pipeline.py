@@ -152,8 +152,7 @@ def dedup_pages_df(pages: DataFrame) -> DataFrame:
     keeper rows, and the final (digest, url) dropDuplicates collapses
     identical-content recrawls of the keeper url while reusing the join's
     partitioning (no extra exchange)."""
-    digest = F.coalesce(F.md5("text"),
-                        F.md5("html") if "html" in pages.columns else F.lit(None),
+    digest = F.coalesce(F.md5("text"), F.md5("html"),
                         F.concat(F.lit("null:"), F.col("url")))
     hashed = pages.withColumn("_d", digest)
     keep = (hashed.select("_d", "url")

@@ -11,12 +11,12 @@ Top-k is computed in TWO PHASES: a per-partition partial top-k (window over
 rows before the global per-query rank — no single-reducer straggler when one
 query scores the whole corpus.
 
-Hyperplanes come in two flavors:
-- :func:`lsh_signatures` derives ±1 weights from xxhash64 — self-contained,
-  reproducible, Spark-only;
-- :func:`lsh_signatures_from_planes` reads the weights from a (table_id,
-  plane_id, w: array<double>) table, so an independent engine given the same
-  table computes the identical buckets — this is the oracle-checkable path.
+The hyperplanes are a (table_id, plane_id, w: array<double>) table
+(:func:`lsh_signatures_from_planes`; the queries pass the committed
+``data/hyperplanes.parquet``), so an independent engine given the same table
+computes the identical buckets.
+
+Every function reads the embeddings as ``vec_id`` and ``embedding`` columns.
 """
 
 from __future__ import annotations
@@ -55,8 +55,7 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
 
 
 def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
-                           k: int = 5, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
+                           k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query id against the full table.
     (query_id, neighbor_id, cos_sim rounded to 4dp, rank).  The query side is
     tiny → broadcast; the corpus side streams, so this scales with corpus
@@ -66,13 +65,13 @@ def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
     # (identical expression → identical double) instead of once per
     # (query, neighbor) pair — cuts the per-pair array passes 3× (guide
     # §1.2 "per-task work")
-    q = (embeddings.filter(F.col(id_col).isin(query_ids))
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("qv"),
-                 _norm(F.col(vec_col)).alias("qn")))
-    c = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cv"),
-                          _norm(F.col(vec_col)).alias("cn"))
+    q = (embeddings.filter(F.col("vec_id").isin(query_ids))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv"),
+                 _norm(F.col("embedding")).alias("qn")))
+    c = embeddings.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("embedding").alias("cv"),
+                          _norm(F.col("embedding")).alias("cn"))
     pairs = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id"))
     sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
@@ -81,46 +80,35 @@ def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
     return _topk_per_query(scored, k)
 
 
-def _hyperplane_sign(vec_col, plane: int):
-    """Deterministic pseudo-random hyperplane: component j's weight is ±1 by
-    parity of xxhash64(plane, j); sign of <v, h> is the signature bit.
-    The weight array is sized per row from the vector itself — no driver-side
-    dimension sniff."""
-    weights = F.transform(
-        F.sequence(F.lit(0), F.size(vec_col) - 1),
-        lambda j: F.when(
-            F.pmod(F.xxhash64(F.concat(F.lit(f"p{plane}|"),
-                                       j.cast("string"))), F.lit(2)) == 0,
-            F.lit(1.0)).otherwise(F.lit(-1.0)))
-    return (_dot(vec_col, weights) > 0).cast("int")
-
-
-def lsh_signatures(embeddings: DataFrame, num_planes: int = 8,
-                   num_tables: int = 4, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """(id, bucket): multi-table random-hyperplane LSH (OR-construction).
-    Each of ``num_tables`` tables hashes with its own ``num_planes``
-    hyperplanes; a vector emits one bucket per table, and any shared bucket
-    makes a candidate pair — the standard recall/selectivity trade."""
-    buckets = []
-    for t in range(num_tables):
-        bits = [_hyperplane_sign(F.col(vec_col), t * 1000 + p)
-                .cast("string") for p in range(num_planes)]
-        buckets.append(F.concat_ws("", F.lit(f"t{t}:"), *bits))
-    return embeddings.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(*buckets)).alias("bucket"))
+def _score_topk(embeddings: DataFrame, cand: DataFrame,
+                query_ids: list[int], k: int) -> DataFrame:
+    """Exact cosine over the candidate ``(query_id, neighbor_id)`` pairs,
+    then :func:`_topk_per_query`.  The candidates attach the corpus vectors
+    by a join and the (tiny) query vectors by a broadcast; both norms are
+    evaluated once per vector row, not once per pair (identical expressions
+    → identical doubles)."""
+    q = (embeddings.filter(F.col("vec_id").isin(query_ids))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv"),
+                 _norm(F.col("embedding")).alias("qn")))
+    c = embeddings.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("embedding").alias("cv"),
+                          _norm(F.col("embedding")).alias("cn"))
+    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    scored = (cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
+              .select("query_id", "neighbor_id",
+                      F.round(sim, 4).alias("cos_sim")))
+    return _topk_per_query(scored, k)
 
 
 def lsh_signatures_from_planes(embeddings: DataFrame, planes: DataFrame,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
                                with_vec: bool = False) -> DataFrame:
     """(id, bucket) from an explicit hyperplane table (table_id, plane_id,
-    w: array<double>).  The plane table is tiny (tables × planes rows) →
-    broadcast; bits are computed per row with nested array expressions, no
-    extra shuffle.  Any engine reading the same table derives the identical
-    buckets — the cross-engine-verifiable LSH path.
+    w: array<double>): multi-table random-hyperplane LSH (OR-construction),
+    one bucket per table and vector.  The plane table is tiny (tables ×
+    planes rows) → broadcast; bits are computed per row with nested array
+    expressions, no extra shuffle.  Any engine reading the same table
+    derives the identical buckets — the cross-engine-verifiable LSH path.
 
     ``with_vec=True`` additionally carries the vector (``v``) and its
     precomputed L2 norm (``vn``) on each signature row, so a downstream
@@ -136,19 +124,23 @@ def lsh_signatures_from_planes(embeddings: DataFrame, planes: DataFrame,
                          F.transform("pw", lambda x: x["w"]).alias("ws")))
     bits = F.transform(
         "ws",
-        lambda w: F.when(_dot(F.col(vec_col), w) > 0, F.lit("1"))
+        lambda w: F.when(_dot(F.col("embedding"), w) > 0, F.lit("1"))
                    .otherwise(F.lit("0")))
-    out = [F.col(id_col).alias("id"),
+    out = [F.col("vec_id").alias("id"),
            F.concat(F.lit("t"), F.col("table_id").cast("string"),
                     F.lit(":"), F.array_join(bits, "")).alias("bucket")]
     if with_vec:
-        out += [F.col(vec_col).alias("v"), _norm(F.col(vec_col)).alias("vn")]
+        out += [F.col("embedding").alias("v"),
+                _norm(F.col("embedding")).alias("vn")]
     return embeddings.crossJoin(F.broadcast(per_table)).select(*out)
 
 
-def _topk_from_signatures(embeddings: DataFrame, sig: DataFrame,
-                          query_ids: list[int], k: int,
-                          id_col: str, vec_col: str) -> DataFrame:
+def cosine_topk_lsh(embeddings: DataFrame, planes: DataFrame,
+                    query_ids: list[int], k: int = 5) -> DataFrame:
+    """ANN top-k: restrict the brute-force scoring to same-bucket candidates
+    across the LSH tables of the ``planes`` table.  Same schema as the
+    brute-force variant; recall < 1 by design."""
+    sig = lsh_signatures_from_planes(embeddings, planes)
     # candidate (query, neighbor) pairs dedup as two LONGS; the previous
     # shape attached both vectors first and then ran distinct over rows
     # whose grouping keys included two 64-double arrays (an
@@ -161,43 +153,11 @@ def _topk_from_signatures(embeddings: DataFrame, sig: DataFrame,
             .filter(F.col("id") != F.col("query_id"))
             .select("query_id", F.col("id").alias("neighbor_id"))
             .distinct())
-    q = (embeddings.filter(F.col(id_col).isin(query_ids))
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("qv"),
-                 _norm(F.col(vec_col)).alias("qn")))
-    c = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cv"),
-                          _norm(F.col(vec_col)).alias("cn"))
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    scored = (cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-              .select("query_id", "neighbor_id",
-                      F.round(sim, 4).alias("cos_sim")))
-    return _topk_per_query(scored, k)
-
-
-def cosine_topk_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-                    num_planes: int = 8, num_tables: int = 4,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    planes: DataFrame | None = None) -> DataFrame:
-    """ANN top-k: restrict the brute-force scoring to same-bucket candidates
-    across the LSH tables.  Same schema as the brute-force variant;
-    recall < 1 by design (tested against brute force).  Pass ``planes`` (a
-    (table_id, plane_id, w) table) for the cross-engine-verifiable variant;
-    otherwise hyperplanes derive from xxhash64."""
-    if planes is not None:
-        sig = lsh_signatures_from_planes(embeddings, planes, id_col, vec_col)
-    else:
-        sig = lsh_signatures(embeddings, num_planes, num_tables, id_col,
-                             vec_col)
-    return _topk_from_signatures(embeddings, sig, query_ids, k, id_col,
-                                 vec_col)
+    return _score_topk(embeddings, cand, query_ids, k)
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame, planes: DataFrame,
-                             threshold: float = 0.9,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH-bucket candidate
     generation (shared hyperplane table → bucket set reproducible in any
     engine) + exact cosine verification — (id_a, id_b, cos_sim) for
@@ -206,7 +166,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame, planes: DataFrame,
     The threshold compares the unrounded cosine (rounding is display-only).
     Candidate cost is bucket-quadratic, not corpus-quadratic: the bucket
     join shuffles on the bucket key, so skewed buckets are the thing to
-    watch — lower num_planes widens buckets, more tables raises recall."""
+    watch — fewer planes per table widen buckets, more tables raise
+    recall."""
     # signatures carry the vector + its precomputed norm through the ONE
     # bucket self-join, so pairs are scored inline as they stream out of
     # the join — no candidate-distinct over ~bucket-quadratic pair rows and
@@ -216,8 +177,7 @@ def embedding_near_dup_pairs(embeddings: DataFrame, planes: DataFrame,
     # each scoring is the identical arithmetic on the identical vectors →
     # identical row, collapsed by the final distinct; sim per pair and the
     # surviving pair set are unchanged.
-    sig = lsh_signatures_from_planes(embeddings, planes, id_col, vec_col,
-                                     with_vec=True)
+    sig = lsh_signatures_from_planes(embeddings, planes, with_vec=True)
     # materialize the signature relation ONCE per invocation: the self-join
     # references it on both sides and (collect_list in the per-table plane
     # aggregation being flagged nondeterministic) the planner never reuses
@@ -243,9 +203,7 @@ def embedding_near_dup_pairs(embeddings: DataFrame, planes: DataFrame,
 
 # --- IVF (coarse-quantizer) ANN -------------------------------------------
 
-def ivf_assignments(embeddings: DataFrame, centroids: DataFrame,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def ivf_assignments(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """(id, cell): assign every vector to its max-cosine centroid from the
     committed codebook (ties → lowest centroid_id, deterministic).  The
     codebook is tiny → broadcast; assignment is one narrow pass + a groupBy
@@ -254,32 +212,31 @@ def ivf_assignments(embeddings: DataFrame, centroids: DataFrame,
     # per row (corpus side) / once per codebook row (broadcast side) instead
     # of once per (vector × centroid) combination — identical expressions on
     # identical inputs, so the cosine (and the argmin cell) are unchanged
-    cj = (embeddings.withColumn("_vn", _norm(F.col(vec_col)))
+    cj = (embeddings.withColumn("_vn", _norm(F.col("embedding")))
           .crossJoin(F.broadcast(
               centroids.select("centroid_id", "c",
                                _norm(F.col("c")).alias("_cn")))))
-    neg = -(_dot(F.col(vec_col), F.col("c")) /
+    neg = -(_dot(F.col("embedding"), F.col("c")) /
             (F.col("_vn") * F.col("_cn")))
-    return (cj.groupBy(F.col(id_col).alias("id"))
+    return (cj.groupBy(F.col("vec_id").alias("id"))
             .agg(F.min(F.struct(neg.alias("nd"),
                                 F.col("centroid_id").alias("cid"))).alias("m"))
             .select("id", F.col("m.cid").alias("cell")))
 
 
 def ivf_topk(embeddings: DataFrame, centroids: DataFrame,
-             query_ids: list[int], k: int = 5, nprobe: int = 4,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             query_ids: list[int], k: int = 5, nprobe: int = 4) -> DataFrame:
     """IVF ANN top-k: score only vectors whose cell is among each query's
     ``nprobe`` nearest centroids.  Same output schema as the other top-k
     variants; recall < 1 by design (traded against scanning ~nprobe/k_cells
     of the corpus).  At scale the assignment is computed once offline and
     the corpus is laid out cell-partitioned, so a query touches only its
     probed cells' files."""
-    cells = ivf_assignments(embeddings, centroids, id_col, vec_col)
+    cells = ivf_assignments(embeddings, centroids)
 
-    q = (embeddings.filter(F.col(id_col).isin(query_ids))
-         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")))
+    q = (embeddings.filter(F.col("vec_id").isin(query_ids))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv")))
     qc = q.crossJoin(F.broadcast(centroids.select("centroid_id", "c")))
     qcos = (_dot(F.col("qv"), F.col("c")) /
             (_norm(F.col("qv")) * _norm(F.col("c"))))
@@ -293,21 +250,11 @@ def ivf_topk(embeddings: DataFrame, centroids: DataFrame,
     cand = (cells.join(F.broadcast(probes), "cell")
             .filter(F.col("id") != F.col("query_id"))
             .select("query_id", F.col("id").alias("neighbor_id")))
-    # per-vector norms once at the scan, not once per candidate pair
-    c = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cv"),
-                          _norm(F.col(vec_col)).alias("cn"))
-    qn = q.withColumn("qn", _norm(F.col("qv")))
-    scored = (cand.join(c, "neighbor_id").join(F.broadcast(qn), "query_id"))
-    sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    return _topk_per_query(
-        scored.select("query_id", "neighbor_id",
-                      F.round(sim, 4).alias("cos_sim")), k)
+    return _score_topk(embeddings, cand, query_ids, k)
 
 
-def ivf_materialize(embeddings: DataFrame, centroids: DataFrame, path: str,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
+def ivf_materialize(embeddings: DataFrame, centroids: DataFrame,
+                    path: str) -> None:
     """Materialize the corpus CELL-PARTITIONED: one parquet partition
     directory per IVF cell (``cell=<centroid_id>/``), so a probe read scans
     only the probed cells' files — the at-scale IVF layout the in-memory
@@ -322,9 +269,9 @@ def ivf_materialize(embeddings: DataFrame, centroids: DataFrame, path: str,
     538 files for 2,000 vectors, each listed and opened by every probe).
     A rebalance, not ``repartition("cell")``: AQE still splits a skewed
     cell across several files."""
-    cells = ivf_assignments(embeddings, centroids, id_col, vec_col).persist()
+    cells = ivf_assignments(embeddings, centroids).persist()
     (embeddings
-     .join(cells, embeddings[id_col] == cells["id"])
+     .join(cells, embeddings["vec_id"] == cells["id"])
      .drop("id")
      .hint("rebalance", "cell")
      .write.mode("overwrite").partitionBy("cell").parquet(path))
@@ -338,111 +285,85 @@ def ivf_materialize(embeddings: DataFrame, centroids: DataFrame, path: str,
     cells.unpersist()
 
 
-def ivf_topk_materialized(spark, corpus_path: str, centroids: DataFrame,
-                          query_ids: list[int] | None = None,
-                          k: int = 5, nprobe: int = 4,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          queries: DataFrame | None = None,
-                          corpus: DataFrame | None = None,
-                          ids_index: DataFrame | None = None) -> DataFrame:
+def ivf_topk_materialized(corpus: DataFrame, ids_index: DataFrame,
+                          centroids: DataFrame, query_ids: list[int],
+                          k: int = 5, nprobe: int = 4) -> DataFrame:
     """IVF top-k against a cell-partitioned corpus written by
     :func:`ivf_materialize` — identical results to :func:`ivf_topk` on the
     same codebook (tested), and EVERY read of the corpus prunes to cell
     directories (partition pruning on the ``cell`` column):
 
     - candidate scoring reads only the probed cells' files;
-    - the query vectors come either from an explicit ``queries`` DataFrame
-      (``id_col``, ``vec_col`` — the realistic serving API, queries are
-      usually not corpus rows and the corpus is never touched for them), or
-      by ``query_ids`` via the tiny ``_ids`` index ``ivf_materialize``
-      writes alongside, which maps each queried id to its home cell so the
-      vector fetch reads ≤ |queries| cell directories — never a full scan.
+    - the query vectors are fetched by ``query_ids`` via the tiny ``_ids``
+      index ``ivf_materialize`` writes alongside, which maps each queried
+      id to its home cell so the vector fetch reads ≤ |queries| cell
+      directories — never a full scan.
+
+    ``corpus`` and ``ids_index`` are the layout's two reads
+    (``spark.read.parquet(path)`` and ``path + "/_ids"``), opened once by
+    the caller and kept across queries (a serving layer persists the
+    index): that skips the per-call parquet directory listing and schema
+    inference, which otherwise dominate small-query latency.
 
     The probed-cell list (≤ |queries|·nprobe ints) is collected to the
     driver to become a partition-pruning predicate — that is the point of
-    the layout, not a driver-side compute loop.  The by-id path pays
-    exactly TWO driver round-trips before the scoring job: the ``_ids``
-    lookup, then one combined job that reads the queries' home cells,
-    selects each query's probed cells, and AGGREGATES to one row per query
-    (vector + probed-cell list) before collecting — driver transfer is
+    the layout, not a driver-side compute loop.  The query pays exactly TWO
+    driver round-trips before the scoring job: the ``_ids`` lookup, then
+    one combined job that reads the queries' home cells, selects each
+    query's probed cells, and AGGREGATES to one row per query (vector +
+    probed-cell list) before collecting — driver transfer is
     |queries|·dim + |queries|·nprobe ints, never the vector × nprobe.
-    (A one-round-trip DPP variant measured slower; see the inline note.)
-
-    ``corpus`` / ``ids_index`` are optional pre-opened handles for the two
-    layout reads (a serving layer keeps them persisted across queries):
-    passing them skips the per-call parquet directory listing + schema
-    inference, which otherwise dominates small-query latency.  Semantics
-    are identical — they must simply be reads of ``corpus_path`` and
-    ``corpus_path + "/_ids"``."""
-    if queries is None and query_ids is None:
-        raise ValueError(
-            "ivf_topk_materialized: pass query_ids or a queries DataFrame")
+    (A one-round-trip DPP variant measured slower; see the inline note.)"""
     from pyspark.sql import types as T
-    if corpus is None:
-        corpus = spark.read.parquet(corpus_path)
+    spark = corpus.sparkSession
     qc_cols = F.broadcast(centroids.select("centroid_id", "c"))
     qcos = (_dot(F.col("qv"), F.col("c")) /
             (_norm(F.col("qv")) * _norm(F.col("c"))))
     w = Window.partitionBy("query_id").orderBy(
         F.col("qcos").desc(), F.col("centroid_id"))
-    if queries is not None:
-        q = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qv"))
-        probes = (q.crossJoin(qc_cols)
-                  .select("query_id", "centroid_id", qcos.alias("qcos"))
-                  .withColumn("r", F.row_number().over(w))
-                  .filter(F.col("r") <= nprobe)
-                  .select("query_id", F.col("centroid_id").alias("cell")))
-        probe_cells = [r.cell
-                       for r in probes.select("cell").distinct().collect()]
-    else:
-        idx = (ids_index if ids_index is not None
-               else spark.read.parquet(corpus_path + "/_ids"))
-        # Two driver round-trips before scoring: the tiny ``_ids`` lookup
-        # (against the persisted index a serving layer keeps in memory),
-        # then the combined fetch+probe job.  A single-round-trip variant —
-        # broadcast-joining the filtered index against the corpus so
-        # dynamic partition pruning carries the home-cell list — was built
-        # and A/B-measured in round 7: DPP does fire, but the subquery
-        # planning+broadcast costs MORE than the collect it replaces at
-        # every tested scale (first call ~2.8× worse), so the explicit
-        # literal prune stays (OPTIMIZATION_r07.md).
-        qcells = [r.cell for r in (idx.filter(F.col("id").isin(query_ids))
-                                   .select("cell").distinct().collect())]
-        qv_src = (corpus.filter(F.col("cell").isin(qcells))
-                  .filter(F.col(id_col).isin(query_ids))
-                  .select(F.col(id_col).alias("query_id"),
-                          F.col(vec_col).alias("qv")))
-        picked = (qv_src.crossJoin(qc_cols)
-                  .select("query_id", "qv", "centroid_id",
-                          qcos.alias("qcos"))
-                  .withColumn("r", F.row_number().over(w))
-                  .filter(F.col("r") <= nprobe)
-                  .groupBy("query_id")
-                  .agg(F.first("qv").alias("qv"),
-                       F.sort_array(F.collect_list("centroid_id"))
-                        .alias("cells"))
-                  .collect())
-        id_f = qv_src.schema["query_id"]
-        vec_f = qv_src.schema["qv"]
-        cell_t = centroids.schema["centroid_id"].dataType
-        probe_cells = sorted({c for r in picked for c in r.cells})
-        probes = spark.createDataFrame(
-            [(r.query_id, c) for r in picked for c in r.cells],
-            T.StructType([id_f, T.StructField("cell", cell_t)]))
-        q = spark.createDataFrame([(r.query_id, r.qv) for r in picked],
-                                  T.StructType([id_f, vec_f]))
+    # Two driver round-trips before scoring: the tiny ``_ids`` lookup
+    # (against the persisted index a serving layer keeps in memory), then
+    # the combined fetch+probe job.  A single-round-trip variant —
+    # broadcast-joining the filtered index against the corpus so dynamic
+    # partition pruning carries the home-cell list — was built and
+    # A/B-measured in round 7: DPP does fire, but the subquery
+    # planning+broadcast costs MORE than the collect it replaces at every
+    # tested scale (first call ~2.8× worse), so the explicit literal prune
+    # stays (OPTIMIZATION_r07.md).
+    qcells = [r.cell for r in (ids_index.filter(F.col("id").isin(query_ids))
+                               .select("cell").distinct().collect())]
+    qv_src = (corpus.filter(F.col("cell").isin(qcells))
+              .filter(F.col("vec_id").isin(query_ids))
+              .select(F.col("vec_id").alias("query_id"),
+                      F.col("embedding").alias("qv")))
+    picked = (qv_src.crossJoin(qc_cols)
+              .select("query_id", "qv", "centroid_id", qcos.alias("qcos"))
+              .withColumn("r", F.row_number().over(w))
+              .filter(F.col("r") <= nprobe)
+              .groupBy("query_id")
+              .agg(F.first("qv").alias("qv"),
+                   F.sort_array(F.collect_list("centroid_id")).alias("cells"))
+              .collect())
+    id_f = qv_src.schema["query_id"]
+    vec_f = qv_src.schema["qv"]
+    cell_t = centroids.schema["centroid_id"].dataType
+    probe_cells = sorted({c for r in picked for c in r.cells})
+    probes = spark.createDataFrame(
+        [(r.query_id, c) for r in picked for c in r.cells],
+        T.StructType([id_f, T.StructField("cell", cell_t)]))
+    q = spark.createDataFrame([(r.query_id, r.qv) for r in picked],
+                              T.StructType([id_f, vec_f]))
 
     # per-vector norms once at the scan / once per query row, not once per
     # candidate pair (identical expressions → identical doubles)
     pruned = (corpus.filter(F.col("cell").isin(probe_cells))
-              .withColumn("_cn", _norm(F.col(vec_col))))
+              .withColumn("_cn", _norm(F.col("embedding"))))
     cand = (pruned.join(F.broadcast(probes), "cell")
-            .filter(F.col(id_col) != F.col("query_id")))
-    sim = _dot(F.col("qv"), F.col(vec_col)) / (F.col("_qn") * F.col("_cn"))
+            .filter(F.col("vec_id") != F.col("query_id")))
+    sim = (_dot(F.col("qv"), F.col("embedding")) /
+           (F.col("_qn") * F.col("_cn")))
     scored = (cand.join(F.broadcast(
                   q.withColumn("_qn", _norm(F.col("qv")))), "query_id")
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
+              .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(sim, 4).alias("cos_sim")))
     return _topk_per_query(scored, k)

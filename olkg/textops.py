@@ -4,7 +4,8 @@ These are the operations a large-scale corpus pipeline needs beyond the KG
 mapping itself: deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard),
 language id, quality scoring, token counting, fingerprinting.  Every operator
 is built from native Catalyst expressions (JVM-side, whole-stage codegen); no
-Python UDF runs in this module.
+Python UDF runs in this module.  Every operator reads a ``doc_id`` and a
+``text`` column.
 
 Scale notes:
 - exact dedup: one hash-partitioned aggregate on a fixed-width digest, never
@@ -13,7 +14,9 @@ Scale notes:
   document-frequency cap (`max_df`) so stop-shingles don't produce quadratic
   candidate blowup — the standard guard at web scale;
 - MinHash-LSH: band buckets shuffle like any groupBy; bucket sizes are
-  bounded by band width, not corpus size.
+  bounded by band width, not corpus size;
+- SimHash: a 60-bit signature from an md5 token hash that SQL engines share,
+  blocked into radius-complete chunks.
 """
 
 from __future__ import annotations
@@ -35,32 +38,6 @@ def exact_dup_groups(documents: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("dup_count"),
                  F.min("doc_id").alias("keeper_id"))
             .filter(F.col("dup_count") > 1))
-
-
-def dedup_exact(documents: DataFrame,
-                broadcast_drops: bool = False) -> DataFrame:
-    """Keep one row per distinct text (min doc_id wins).
-
-    Scale shape: duplicate-victim ids ("drops") are elected on a NARROW
-    (digest, doc_id) projection — the election shuffle carries 32B + 8B
-    per row, never the document text — and the full rows are then filtered
-    with a LEFT ANTI join on doc_id.  Why anti-join-the-drops rather than
-    semi-join-the-keepers: at a typical web dedup rate the drop list is a
-    small fraction of the corpus (keepers are ~all of it), so it is the
-    side that can broadcast.  ``broadcast_drops=True`` forces the hint
-    (documents then never shuffle at all); the default leaves it to AQE's
-    runtime SMJ→BHJ conversion, which at worst shuffles documents ONCE on
-    the uniformly-distributed doc_id — never on the digest, whose hot keys
-    (empty/boilerplate texts) would skew a partitionBy(md5(text)) window.
-    """
-    narrow = documents.select(F.md5("text").alias("_h"), "doc_id")
-    keep = F.min("doc_id").over(Window.partitionBy("_h"))
-    drops = (narrow.withColumn("_keep", keep)
-             .filter(F.col("doc_id") != F.col("_keep"))
-             .select("doc_id"))
-    if broadcast_drops:
-        drops = F.broadcast(drops)
-    return documents.join(drops, on="doc_id", how="left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -137,7 +114,7 @@ def _unpack_pair(pk_col: str):
 
 def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
                         threshold: float = 0.5,
-                        max_df: int | None = 10_000,
+                        max_df: int = 10_000,
                         dropped_stats: dict | None = None) -> DataFrame:
     """(doc_a, doc_b, inter_size, jaccard) for all pairs with word-n-gram
     Jaccard ≥ threshold.  Inverted-index equi-join on the 64-bit shingle
@@ -164,17 +141,15 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
     w_dedup = Window.partitionBy("h", "doc_id").orderBy("doc_id")
     sh = (occ.withColumn("_rn", F.row_number().over(w_dedup))
           .filter(F.col("_rn") == 1).drop("_rn"))
-    if max_df is not None:
-        counted = sh.withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy("h")))
-        if dropped_stats is not None:
-            row = (counted.filter(F.col("_df") > max_df)
-                   .agg(F.count_distinct("h").alias("dropped_shingles"),
-                        F.count(F.lit(1)).alias("dropped_postings")).first())
-            dropped_stats["dropped_shingles"] = row["dropped_shingles"]
-            dropped_stats["dropped_postings"] = row["dropped_postings"]
-        sh = (counted.filter(F.col("_df") <= max_df)
-              .select("doc_id", "h"))
+    counted = sh.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("h")))
+    if dropped_stats is not None:
+        row = (counted.filter(F.col("_df") > max_df)
+               .agg(F.count_distinct("h").alias("dropped_shingles"),
+                    F.count(F.lit(1)).alias("dropped_postings")).first())
+        dropped_stats["dropped_shingles"] = row["dropped_shingles"]
+        dropped_stats["dropped_postings"] = row["dropped_postings"]
+    sh = counted.filter(F.col("_df") <= max_df).select("doc_id", "h")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "h")
     b = sh.select(F.col("doc_id").alias("doc_b"), "h")
@@ -285,32 +260,22 @@ def minhash_near_dup_pairs(documents: DataFrame, n: int = 3,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_bits(documents: DataFrame, text_col: str = "text",
-                 hash_fn: str = "md5_60") -> DataFrame:
+SIMHASH_BITS = 60
+
+
+def simhash_bits(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) SimHash over word tokens: per-bit majority of token
     hashes, all in native expressions (token → hash → bit tests → sums →
     sign).
 
-    hash_fn:
-      'md5_60'   (default) — token hash = low 60 bits of md5, an expression
-                 every SQL engine shares (``('0x'||substr(md5(tok),1,15))::
-                 UBIGINT`` in DuckDB), so signatures are independently
-                 verifiable; signature width 60 bits.
-      'xxhash64' — Spark-native, ~2x faster per token, NOT SQL-portable;
-                 width 64 bits.  Use at scale when no cross-engine check is
-                 needed.
+    The token hash is the low 60 bits of md5, an expression every SQL
+    engine shares (``('0x'||substr(md5(tok),1,15))::UBIGINT`` in DuckDB),
+    so the signatures are independently verifiable; the signature is
+    :data:`SIMHASH_BITS` wide.
     """
-    if hash_fn == "md5_60":
-        nbits = 60
-        h = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10) \
-             .cast("long")
-    elif hash_fn == "xxhash64":
-        nbits = 64
-        h = F.xxhash64("tok")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    h = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
     toks = (documents
-            .select("doc_id", F.explode(F.split(text_col, " ")).alias("tok"))
+            .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
             .filter(F.col("tok") != "")
             .withColumn("h", h))
     one = F.lit(1).cast("long")
@@ -320,43 +285,35 @@ def simhash_bits(documents: DataFrame, text_col: str = "text",
     # aggregate's inner loop (60 × |tokens| evaluations)
     bit_cols = [
         F.sum(F.shiftright("h", b).bitwiseAND(one)).alias(f"b{b}")
-        for b in range(nbits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n"), *bit_cols)
     sim = F.lit(0).cast("long")
-    for b in range(nbits):
-        # high bits via shiftleft (a 1 << 63 Python literal would overflow
-        # the JVM long)
+    for b in range(SIMHASH_BITS):
         sim = sim + F.when(F.col(f"b{b}") * 2 > F.col("_n"),
                            F.shiftleft(one, b)) \
                      .otherwise(F.lit(0).cast("long"))
-    return agg.select("doc_id", sim.alias("simhash")), nbits
+    return agg.select("doc_id", sim.alias("simhash"))
 
 
-def simhash64(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Back-compat: 64-bit xxhash64 SimHash (see :func:`simhash_bits`)."""
-    sig, _ = simhash_bits(documents, text_col, hash_fn="xxhash64")
-    return sig
-
-
-def simhash_near_pairs(documents: DataFrame, max_hamming: int = 3,
-                       hash_fn: str = "md5_60") -> DataFrame:
+def simhash_near_pairs(documents: DataFrame,
+                       max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash with RADIUS-COMPLETE chunk blocking:
     the signature is split into ``max_hamming + 1`` bit chunks, so any pair
     within hamming ≤ max_hamming has all its differing bits in at most
     max_hamming chunks and therefore shares at least one exact chunk
     (pigeonhole) — no pair inside the radius is ever missed, at any radius.
     Hamming distance is verified exactly within blocks."""
-    sig, nbits = simhash_bits(documents, hash_fn=hash_fn)
+    sig = simhash_bits(documents)
     n_chunks = max_hamming + 1
-    if n_chunks > nbits:
+    if n_chunks > SIMHASH_BITS:
         raise ValueError(f"max_hamming={max_hamming} needs {n_chunks} chunks "
-                         f"but the signature has only {nbits} bits")
+                         f"but the signature has only {SIMHASH_BITS} bits")
     chunk_keys = []
     for c in range(n_chunks):
-        # even partition of [0, nbits) into n_chunks non-empty ranges
-        start = c * nbits // n_chunks
-        end = (c + 1) * nbits // n_chunks
+        # even partition of [0, SIMHASH_BITS) into n_chunks non-empty ranges
+        start = c * SIMHASH_BITS // n_chunks
+        end = (c + 1) * SIMHASH_BITS // n_chunks
         w = end - start
         mask = (1 << w) - 1
         chunk_keys.append(

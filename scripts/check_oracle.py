@@ -5,7 +5,8 @@ driver performs, runnable at sf0.1/sf1.0 where hash-collision or FP-boundary
 risks of a restructured query would actually show up.
 
 Usage: python scripts/check_oracle.py --sf-dir /root/testdata/sf1.0 \
-           --queries doc_minhash_lsh,doc_ngram_jaccard
+           [--queries doc_minhash_lsh,doc_ngram_jaccard]
+(default: every query in ``__spark_entry__.queries()``)
 """
 
 from __future__ import annotations
@@ -39,9 +40,8 @@ def _norm_cell(v):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
-    ap.add_argument("--queries", required=True)
+    ap.add_argument("--queries", help="comma-separated; default: all")
     args = ap.parse_args()
-    names = [n.strip() for n in args.queries.split(",") if n.strip()]
 
     import duckdb
     con = duckdb.connect()
@@ -63,6 +63,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
     qmap, omap = entry.queries(), entry.oracle_sql()
+    names = ([n.strip() for n in args.queries.split(",") if n.strip()]
+             if args.queries else list(qmap))
     if any(n.startswith("ann_ivf") for n in names):
         entry.ensure_ivf_materialized(spark, args.sf_dir)
 

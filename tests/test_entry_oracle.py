@@ -90,22 +90,6 @@ def test_session_cache_evicts_stopped_applications(spark):
     assert all(k[1] == live for k in entry_mod._CACHE)
 
 
-def test_ann_lsh_recall_vs_bruteforce(spark):
-    """The LSH path must find a reasonable fraction of the true top-5."""
-    from olkg.simsearch import cosine_topk_bruteforce, cosine_topk_lsh
-    from pyspark.sql import functions as F
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double")))
-    bf = {(r.query_id, r.neighbor_id)
-          for r in cosine_topk_bruteforce(emb, list(range(10)), k=5).collect()}
-    lsh = {(r.query_id, r.neighbor_id)
-           for r in cosine_topk_lsh(emb, list(range(10)), k=5,
-                                    num_planes=4, num_tables=6).collect()}
-    assert len(bf) == 50
-    recall = len(bf & lsh) / len(bf)
-    assert recall >= 0.3, f"LSH recall {recall} suspiciously low"
-
-
 def test_multimodal_decode_stub_raises():
     from olkg.multimodal import decode_stub
     with pytest.raises(NotImplementedError):
@@ -157,7 +141,9 @@ def test_ivf_materialized_layout_prunes_and_matches(spark, tmp_path):
     assert len(cells_on_disk) > 4   # corpus actually spread over cells
 
     qids = list(range(5))
-    got = ivf_topk_materialized(spark, path, cents, qids, k=5, nprobe=2)
+    corpus = spark.read.parquet(path)
+    ids = spark.read.parquet(path + "/_ids")
+    got = ivf_topk_materialized(corpus, ids, cents, qids, k=5, nprobe=2)
     want = ivf_topk(emb, cents, qids, k=5, nprobe=2)
     g = {(r.query_id, r.neighbor_id, r.cos_sim, r.rank) for r in got.collect()}
     w = {(r.query_id, r.neighbor_id, r.cos_sim, r.rank) for r in want.collect()}
@@ -166,7 +152,6 @@ def test_ivf_materialized_layout_prunes_and_matches(spark, tmp_path):
     # pruning evidence: the probe filter reaches the scan as a PARTITION
     # filter (directory-level pruning, not row-level), and the pruned scan
     # touches fewer partition directories than exist on disk
-    corpus = spark.read.parquet(path)
     probed = corpus.filter(F.col("cell").isin([0, 1]))
     import contextlib, io
     buf = io.StringIO()
@@ -184,18 +169,12 @@ def test_ivf_materialized_layout_prunes_and_matches(spark, tmp_path):
     assert probed.count() == want_rows > 0
 
 
-def test_ivf_materialized_query_lookup_prunes_and_queries_df(spark, tmp_path):
-    """Round-4 contract extension: EVERY corpus scan in the materialized
-    IVF query — the candidate scan AND the query-vector lookup — carries a
-    partition filter on `cell` (via the _ids index), so total files read is
-    bounded by the probed + query-home cells, never the whole corpus.  An
-    explicit `queries` DataFrame skips the corpus lookup entirely and gives
-    identical results for corpus-resident vectors."""
-    import contextlib
-    import io
+def _ivf_layout(spark, tmp_path):
+    """The sf0.001 embeddings materialized as an IVF layout under tmp_path;
+    returns (embeddings, codebook, layout path)."""
     import os
     from pyspark.sql import functions as F
-    from olkg.simsearch import ivf_materialize, ivf_topk, ivf_topk_materialized
+    from olkg.simsearch import ivf_materialize
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     emb = emb.withColumn("embedding",
@@ -205,92 +184,91 @@ def test_ivf_materialized_query_lookup_prunes_and_queries_df(spark, tmp_path):
                      "ivf_centroids.parquet"))
     path = str(tmp_path / "ivf_corpus")
     ivf_materialize(emb, cents, path)
-    assert os.path.isdir(path + "/_ids")   # the id→cell index exists
+    return emb, cents, path
 
-    qids = list(range(5))
-    got = ivf_topk_materialized(spark, path, cents, qids, k=5, nprobe=2)
+
+def _corpus_scans(df):
+    """The scan blocks over the cell-partitioned corpus (not the _ids index)
+    in df's STATIC plan, read before any action: after execution the AQE
+    final plan prints the DPP subquery as a second scan block of the same
+    pruned scan."""
+    import contextlib
+    import io
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        got.explain(mode="formatted")
+        df.explain(mode="formatted")
     plan = buf.getvalue()
-    # every scan over the cell-partitioned corpus (not the _ids index) must
-    # be partition-pruned; an unpruned corpus scan = full-corpus I/O at scale
-    scans = [b for b in plan.split("\n\n")
-             if "Scan parquet" in b and "ivf_corpus" in b
-             and "_ids" not in b]
-    assert scans, plan
+    return plan, [b for b in plan.split("\n\n")
+                  if "Scan parquet" in b and "ivf_corpus" in b
+                  and "_ids" not in b]
+
+
+def _topk_set(df):
+    return {(r.query_id, r.neighbor_id, r.cos_sim, r.rank)
+            for r in df.collect()}
+
+
+def test_ivf_materialized_query_lookup_prunes_and_queries_df(spark, tmp_path):
+    """EVERY corpus scan in the materialized IVF query — the candidate scan
+    AND the query-vector lookup — carries a partition filter on `cell` (via
+    the _ids index), so total files read is bounded by the probed +
+    query-home cells, never the whole corpus.  The looked-up query vectors
+    come back as a local queries DataFrame, so the scoring plan reads the
+    corpus once, and the results equal the in-memory ivf_topk."""
+    import os
+    from olkg.simsearch import ivf_topk, ivf_topk_materialized
+
+    emb, cents, path = _ivf_layout(spark, tmp_path)
+    assert os.path.isdir(path + "/_ids")   # the id→cell index exists
+
+    corpus = spark.read.parquet(path)
+    ids = spark.read.parquet(path + "/_ids")
+    qids = list(range(5))
+    got = ivf_topk_materialized(corpus, ids, cents, qids, k=5, nprobe=2)
+    plan, scans = _corpus_scans(got)
+    # every scan over the corpus must be partition-pruned; an unpruned
+    # corpus scan = full-corpus I/O at scale
     for b in scans:
         pf = [ln for ln in b.splitlines() if "PartitionFilters" in ln]
         assert pf and any("cell" in ln for ln in pf), b
-    # round-5 tightening: the by-id SCORING plan reads the corpus exactly
-    # once (the pruned candidate scan) — the query vectors and probe pairs
-    # come back from the single combined probe-selection collect as local
-    # relations, not a second corpus read
+    # the SCORING plan reads the corpus exactly once (the pruned candidate
+    # scan) — the query vectors and probe pairs come back from the single
+    # combined probe-selection collect as local relations, not a second
+    # corpus read
     assert len(scans) == 1, plan
 
-    # explicit-queries path: same results, corpus untouched for the lookup
-    queries = emb.filter(F.col("vec_id").isin(qids))
-    got_q = ivf_topk_materialized(spark, path, cents, k=5, nprobe=2,
-                                  queries=queries)
     want = ivf_topk(emb, cents, qids, k=5, nprobe=2)
-    as_set = lambda df: {(r.query_id, r.neighbor_id, r.cos_sim, r.rank)
-                         for r in df.collect()}
-    assert as_set(got) == as_set(got_q) == as_set(want)
-    assert len(as_set(got)) > 0
-
-    # misuse is an explicit error, not an empty result
-    with pytest.raises(ValueError, match="query_ids or a queries"):
-        ivf_topk_materialized(spark, path, cents, k=5, nprobe=2)
+    assert _topk_set(got) == _topk_set(want) and len(_topk_set(got)) > 0
 
 
 def test_ivf_materialized_preopened_handles_identical_and_pruned(
         spark, tmp_path):
-    """Round-6: the serving read path takes pre-opened ``corpus`` /
-    ``ids_index`` handles (what entry._ivf_handles caches per session) so
-    repeated queries skip the per-call parquet listing + schema inference.
-    Results and the pruned single-corpus-scan plan must be IDENTICAL to the
-    self-opening path."""
-    import contextlib
-    import io
-    import os
-    from pyspark.sql import functions as F
-    from olkg.simsearch import ivf_materialize, ivf_topk_materialized
+    """The serving read path keeps the layout's ``corpus`` / ``ids_index``
+    handles open across queries (entry._ivf_handles caches them per
+    session, the index persisted), so repeated queries skip the per-call
+    parquet listing + schema inference.  Handles reused for successive
+    queries give results identical to freshly opened handles, and every
+    query on them keeps the single pruned corpus scan."""
+    from olkg.simsearch import ivf_topk_materialized
 
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    emb = emb.withColumn("embedding",
-                         F.transform("embedding", lambda x: x.cast("double")))
-    cents = spark.read.parquet(
-        os.path.join(os.path.dirname(entry_mod.__file__), "data",
-                     "ivf_centroids.parquet"))
-    path = str(tmp_path / "ivf_corpus")
-    ivf_materialize(emb, cents, path)
-
+    _, cents, path = _ivf_layout(spark, tmp_path)
     corpus = spark.read.parquet(path)
     ids = spark.read.parquet(path + "/_ids").persist()
     try:
-        qids = list(range(5))
-        got_h = ivf_topk_materialized(spark, path, cents, qids, k=5,
-                                      nprobe=2, corpus=corpus,
-                                      ids_index=ids)
-        # read the STATIC plan before any action (matching the round-5
-        # pruning contract test): after execution the AQE final plan prints
-        # the DPP subquery as a second scan block of the same pruned scan
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            got_h.explain(mode="formatted")
-        plan = buf.getvalue()
-        scans = [b for b in plan.split("\n\n")
-                 if "Scan parquet" in b and "ivf_corpus" in b
-                 and "_ids" not in b]
-        assert len(scans) == 1, plan   # one pruned candidate scan, as before
-        for b in scans:
-            pf = [ln for ln in b.splitlines() if "PartitionFilters" in ln]
-            assert pf and any("cell" in ln for ln in pf), b
-
-        got = ivf_topk_materialized(spark, path, cents, qids, k=5, nprobe=2)
-        as_set = lambda df: {(r.query_id, r.neighbor_id, r.cos_sim, r.rank)
-                             for r in df.collect()}
-        assert as_set(got_h) == as_set(got) and len(as_set(got)) > 0
+        for qids in ([0, 1, 2], [3, 4], [0, 1, 2]):
+            got = ivf_topk_materialized(corpus, ids, cents, qids, k=5,
+                                        nprobe=2)
+            plan, scans = _corpus_scans(got)
+            assert len(scans) == 1, plan
+            pf = [ln for ln in scans[0].splitlines()
+                  if "PartitionFilters" in ln]
+            assert pf and any("cell" in ln for ln in pf), scans[0]
+            fresh = ivf_topk_materialized(
+                spark.read.parquet(path), spark.read.parquet(path + "/_ids"),
+                cents, qids, k=5, nprobe=2)
+            g = _topk_set(got)
+            assert g == _topk_set(fresh) and len(g) > 0
+            assert {q for q, _, _, _ in g} == set(qids)
     finally:
         ids.unpersist()
 

@@ -384,23 +384,6 @@ def test_cc_sides_agree_in_pipeline(spark, pipeline_out, tmp_path,
     assert {k: loop[k] for k in census} == {k: driver[k] for k in census}
 
 
-def test_ntriples_dated_single_file(spark, pipeline_out, tmp_path):
-    """K1 parity: openlibrary-YYYY-MM-DD.nt.gz filename convention
-    (openlibrary_to_rdf.rb:22)."""
-    import gzip
-    import os
-    from olkg.materialize import export_ntriples_gz
-    out, _, _ = pipeline_out
-    edges = spark.read.parquet(out + "/edges")
-    dest = str(tmp_path / "nt_dated")
-    export_ntriples_gz(edges, dest, dated_single_file=True, date="2026-08-16")
-    fname = os.path.join(dest, "openlibrary-2026-08-16.nt.gz")
-    assert os.path.exists(fname)
-    with gzip.open(fname, "rt", encoding="utf-8") as f:
-        n = sum(1 for _ in f)
-    assert n == edges.count()
-
-
 def test_fast_pipeline_prepartition_dedup(spark):
     """Past AUTO_PREPARTITION_ROWS_PER_TASK (the scale shape the
     pipeline's sampler can pick), dedup_edges repartitions on the five edge
@@ -446,14 +429,14 @@ def test_dedup_pages_preserves_distinct_content_per_url(spark):
     together; identical-content recrawls collapse to one row."""
     from olkg.pipeline import dedup_pages_df
     rows = [
-        ("http://a", "contentX"),   # url a, content X
-        ("http://a", "contentY"),   # SAME url, different content
-        ("http://b", "contentX"),   # dup of X under another url → dropped
-        ("http://c", None),         # null text
-        ("http://d", None),         # null text, distinct url → kept too
-        ("http://d", None),         # exact recrawl of the null page → 1 row
+        ("http://a", None, "contentX"),   # url a, content X
+        ("http://a", None, "contentY"),   # SAME url, different content
+        ("http://b", None, "contentX"),   # dup of X under another url → dropped
+        ("http://c", None, None),         # null text (and html)
+        ("http://d", None, None),         # null text, distinct url → kept too
+        ("http://d", None, None),         # exact recrawl of the null page → 1 row
     ]
-    pages = spark.createDataFrame(rows, "url string, text string")
+    pages = spark.createDataFrame(rows, "url string, html string, text string")
     got = [(r.url, r.text) for r in dedup_pages_df(pages).collect()]
     assert sorted(got) == [("http://a", "contentX"), ("http://a", "contentY"),
                            ("http://c", None), ("http://d", None)]

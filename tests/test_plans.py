@@ -67,16 +67,23 @@ def test_lcsh_join_is_broadcast(spark):
 
 
 def test_textops_plans_have_no_python(spark):
-    """Every corpus text operator is native Catalyst — no ArrowEvalPython /
-    BatchEvalPython node may appear (Python would cap throughput 10-100x)."""
-    from olkg import textops
-    docs = spark.createDataFrame([(1, "some text here ok")],
-                                 ["doc_id", "text"])
-    for fn in (textops.quality_scores, textops.token_counts,
-               textops.lang_id, textops.doc_fingerprints,
-               textops.exact_dup_groups, textops.simhash64):
-        plan = plan_of(fn(docs), mode="simple")
-        assert "EvalPython" not in plan, f"{fn.__name__}: {plan}"
+    """Every corpus query (every non-KG query of ``__spark_entry__``) plans
+    as native Catalyst — no ArrowEvalPython / BatchEvalPython /
+    MapInPandas / MapInArrow node may appear (Python would cap throughput
+    10-100x).  ``multimodal_features`` is the one exception: its
+    ``mapInPandas`` is the decoder's intended shape."""
+    import __spark_entry__ as entry
+    from test_entry_oracle import SF_DIR as sf_dir
+    names = [n for n in sorted(entry.queries())
+             if not n.startswith("kg_") and n != "multimodal_features"]
+    assert len(names) == 17
+    for name in names:
+        plan = plan_of(entry.queries()[name](spark, sf_dir))
+        for node in ("EvalPython", "MapInPandas", "MapInArrow"):
+            assert node not in plan, f"{name}: {node}\n{plan}"
+    # the check can see the node it excludes
+    mm = plan_of(entry.q_multimodal_features(spark, sf_dir))
+    assert "MapInPandas" in mm, mm
 
 
 def test_ann_bruteforce_broadcasts_queries(spark):
@@ -104,25 +111,3 @@ def test_salted_join_no_broadcast_of_big_sides(spark, monkeypatch):
     monkeypatch.setattr(L, "NUM_SALTS", 4)
     plan = plan_of(L.salted_join_author_names(refs, names), mode="simple")
     assert "BroadcastHashJoin" in plan, plan  # the census join
-
-
-def test_dedup_exact_never_shuffles_text(spark):
-    """dedup_exact's election shuffle must carry only (digest, doc_id);
-    with broadcast_drops the documents side never enters ANY exchange —
-    no Exchange node in the whole plan may list the text column."""
-    from olkg.textops import dedup_exact
-    docs = spark.createDataFrame(
-        [(i, "dup" if i % 2 else f"uniq {i}") for i in range(10)],
-        ["doc_id", "text"])
-    plan = plan_of(dedup_exact(docs, broadcast_drops=True), mode="formatted")
-    lines = plan.splitlines()
-    offending = []
-    for i, ln in enumerate(lines):
-        if ") Exchange" in ln:
-            for follow in lines[i + 1:i + 6]:
-                if follow.startswith("Input") and "text#" in follow:
-                    offending.append((ln, follow))
-    assert not offending, offending
-    # sanity: the result is still correct
-    kept = sorted(r.doc_id for r in dedup_exact(docs).collect())
-    assert kept == [0, 1, 2, 4, 6, 8]
