@@ -35,6 +35,29 @@ def _sf_name() -> str:
     return base[2:] if base.startswith("sf") else base
 
 
+def bench_session(app_name: str):
+    """The session the benchmark runs in; ``scripts/check_oracle.py`` and
+    ``scripts/dump_plans.py`` build the same one, so their plans match the
+    benchmark's: ``local[SPARK_GRAFT_CPUS]``, ``max(2·cpus, 16)`` shuffle
+    partitions, tmpfs shuffle scratch."""
+    # tmpfs scratch is opt-in (session.py); the bench opts in so shuffle I/O
+    # models per-node local SSD instead of the sandbox's one shared disk
+    os.environ.setdefault("OLKG_TMPFS_SCRATCH", "1")
+    from olkg.session import build_session
+    # UDF task slots run a JVM thread + a Python worker (2 runnable threads);
+    # at high core counts task.cpus=2 sizes slots to that reality instead of
+    # oversubscribing the box (measured ~35% faster at local[32] on sf0.1)
+    extra = {"spark.task.cpus": "2"} if CPUS >= 16 else {}
+    spark = build_session(
+        app_name=app_name,
+        master=f"local[{CPUS}]",
+        shuffle_partitions=max(2 * CPUS, 16),
+        extra_conf=extra,
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def ensure_bench_pages(spark, sf: str) -> str:
     """Build (once) the clone-scaled pages parquet for this sf, with a
     hot-author skew.  The skew does not reach the salted join path: at sf0.1
@@ -63,21 +86,7 @@ def ensure_bench_pages(spark, sf: str) -> str:
 
 def main() -> None:
     sf = _sf_name()
-    # tmpfs scratch is opt-in (session.py); the bench opts in so shuffle I/O
-    # models per-node local SSD instead of the sandbox's one shared disk
-    os.environ.setdefault("OLKG_TMPFS_SCRATCH", "1")
-    from olkg.session import build_session
-    # UDF task slots run a JVM thread + a Python worker (2 runnable threads);
-    # at high core counts task.cpus=2 sizes slots to that reality instead of
-    # oversubscribing the box (measured ~35% faster at local[32] on sf0.1)
-    extra = {"spark.task.cpus": "2"} if CPUS >= 16 else {}
-    spark = build_session(
-        app_name="olkg-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(2 * CPUS, 16),
-        extra_conf=extra,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("olkg-bench")
 
     queries: dict[str, float] = {}
     t_total = time.time()

@@ -37,11 +37,10 @@ def _stage_path(out_dir: str, stage: str) -> str:
     return pjoin(out_dir, stage)
 
 
-def stage_complete(out_dir: str, stage: str) -> bool:
-    """Checked through the Hadoop FS of the ACTIVE session, so resume
-    markers work on any storage Spark can reach (file/hdfs/s3a), not only
-    the driver's local filesystem."""
-    spark = SparkSession.getActiveSession()
+def stage_complete(spark: SparkSession, out_dir: str, stage: str) -> bool:
+    """Checked through ``spark``'s Hadoop FS, so resume markers work on any
+    storage Spark can reach (file/hdfs/s3a), not only the driver's local
+    filesystem."""
     return fsio.exists(spark, pjoin(_stage_path(out_dir, stage), "_SUCCESS"))
 
 

@@ -7,7 +7,10 @@ that the extract stage must invert byte-identically.
 Clone scaling rewrites entity keys deterministically so bench corpora of any
 size derive from the fixture corpus; ``skew_hot_author`` re-points a fraction
 of cloned editions at one author key to reproduce web-duplicate hot-key skew
-(the J1 stress case, SURVEY.md §4).
+(the J1 stress case, SURVEY.md §4).  Near-duplicate clusters are built from
+the pieces below by ``perfbench/inputs.py``: :func:`_rewrite_keys`, the
+identifier and name field tuples, :func:`_mutate_isbn13` and
+:func:`_fake_name`.
 """
 
 from __future__ import annotations
@@ -85,52 +88,9 @@ def _fake_name(seed: str, cluster: int) -> str:
     return f"{letters[:6]} {letters[6:]}"
 
 
-def _mutate_cluster_identity(out: dict, rtype: str, cluster: int) -> None:
-    """Re-identify a record for its near-dup CLUSTER: clusters > 0 get their
-    own (still-valid) identifiers and their own dissimilar author names, so
-    blocking-key groups and name blocks have size ≈ cluster_size — the 2-10
-    shape real crawls produce — instead of one clique per base entity
-    spanning every clone."""
-    for f in _ISBN_FIELDS:
-        v = out.get(f)
-        if isinstance(v, list):
-            out[f] = [_mutate_isbn13(x, cluster) if isinstance(x, str) else x
-                      for x in v]
-        elif isinstance(v, str):
-            out[f] = _mutate_isbn13(v, cluster)
-    for f in _LCCN_FIELDS:
-        v = out.get(f)
-        if isinstance(v, list):
-            out[f] = [x + str(cluster) if isinstance(x, str) and x else x
-                      for x in v]
-        elif isinstance(v, str) and v:
-            out[f] = v + str(cluster)
-    for f in _OCLC_FIELDS:
-        v = out.get(f)
-        if isinstance(v, list):
-            out[f] = [x + str(cluster) if isinstance(x, str) and x else x
-                      for x in v]
-        elif isinstance(v, str) and v:
-            out[f] = v + str(cluster)
-    if rtype == "/type/author":
-        for f in _NAME_FIELDS:
-            v = out.get(f)
-            if isinstance(v, str) and v:
-                out[f] = _fake_name(v, cluster)
-        alts = out.get("alternate_names")
-        if isinstance(alts, list):
-            out["alternate_names"] = [
-                _fake_name(x, cluster) if isinstance(x, str) and x else x
-                for x in alts]
-
-
-def _rewrite_keys(data: dict, suffix: str, rewrite_refs: bool,
-                  rtype: str | None = None,
-                  cluster: int | None = None) -> dict:
+def _rewrite_keys(data: dict, suffix: str, rewrite_refs: bool) -> dict:
     """Deterministically rename the entity (and optionally its refs) for a
-    clone: key '/books/OL1M' → '/books/OL1M<suffix>'.  With ``cluster`` set
-    and > 0, identifiers and names are re-derived per cluster (see
-    :func:`_mutate_cluster_identity`)."""
+    clone: key '/books/OL1M' → '/books/OL1M<suffix>'."""
     out = json.loads(json.dumps(data))  # deep copy
     if isinstance(out.get("key"), str):
         out["key"] = out["key"] + suffix
@@ -145,8 +105,6 @@ def _rewrite_keys(data: dict, suffix: str, rewrite_refs: bool,
                         ref = item.get("author")
                         if isinstance(ref, dict) and isinstance(ref.get("key"), str):
                             ref["key"] = ref["key"] + suffix
-    if cluster:
-        _mutate_cluster_identity(out, rtype or "", cluster)
     return out
 
 
@@ -161,8 +119,8 @@ def _set_author_refs(data: dict, author_key: str) -> None:
 
 
 def _clone_rows(line: str, clone_ids, rewrite_refs: bool,
-                skew_hot_author: str | None, skew_fraction: float,
-                cluster_size: int | None) -> list[tuple]:
+                skew_hot_author: str | None,
+                skew_fraction: float) -> list[tuple]:
     """PAGES_SCHEMA rows of one dump line's clones, one per index in
     ``clone_ids`` (see :func:`pages_rows`); none for an unparseable line."""
     parts = line.split("\t")
@@ -180,9 +138,7 @@ def _clone_rows(line: str, clone_ids, rewrite_refs: bool,
         if i == 0:
             out_line, key = line, data.get("key", "")
         else:
-            d = _rewrite_keys(data, f"_c{i}", rewrite_refs, rtype=rtype,
-                              cluster=(i // cluster_size
-                                       if cluster_size else None))
+            d = _rewrite_keys(data, f"_c{i}", rewrite_refs)
             if (skew_hot_author and rtype in ("/type/edition", "/type/work")
                     and skew_every and i % skew_every == 0):
                 _set_author_refs(d, skew_hot_author)
@@ -197,19 +153,15 @@ def _clone_rows(line: str, clone_ids, rewrite_refs: bool,
 
 def pages_rows(lines: list[str], clones: int = 1, rewrite_refs: bool = True,
                skew_hot_author: str | None = None,
-               skew_fraction: float = 0.0,
-               cluster_size: int | None = None) -> list[tuple]:
+               skew_fraction: float = 0.0) -> list[tuple]:
     """Rows matching PAGES_SCHEMA.  clone 0 keeps the verbatim lines; clones
     1..n-1 rewrite keys with a deterministic suffix.  With skew enabled, every
-    edition clone whose index satisfies ``i % round(1/skew_fraction) == 0``
-    points all author refs at ``skew_hot_author``.  ``cluster_size`` groups
-    clones into near-dup clusters of that size: identifiers/names are shared
-    WITHIN a cluster and re-derived ACROSS clusters, so entity-resolution
-    blocks have realistic 2-10 sizes instead of one clique per base entity."""
+    edition and work clone whose index satisfies
+    ``i % round(1/skew_fraction) == 0`` points all author refs at
+    ``skew_hot_author``."""
     return [row for line in lines
             for row in _clone_rows(line, range(clones), rewrite_refs,
-                                   skew_hot_author, skew_fraction,
-                                   cluster_size)]
+                                   skew_hot_author, skew_fraction)]
 
 
 def build_pages_df(spark, lines: list[str], **kwargs):
@@ -221,8 +173,7 @@ def build_pages_df_distributed(spark, lines: list[str], clones: int,
                                rewrite_refs: bool = True,
                                skew_hot_author: str | None = None,
                                skew_fraction: float = 0.0,
-                               partitions: int | None = None,
-                               cluster_size: int | None = None):
+                               partitions: int | None = None):
     """Clone-scale the corpus *on the executors*: cross the base lines with a
     ``spark.range(clones)`` and rewrite keys inside an Arrow-batched UDF, so
     corpora of millions of pages never pass through the driver.  Each row
@@ -240,8 +191,7 @@ def build_pages_df_distributed(spark, lines: list[str], clones: int,
         for pdf in batches:
             rows = [row for line, clone in zip(pdf["line"], pdf["clone"])
                     for row in _clone_rows(line, (int(clone),), rewrite_refs,
-                                           skew_hot_author, skew_fraction,
-                                           cluster_size)]
+                                           skew_hot_author, skew_fraction)]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html",
                                               "text", "lang"])
 

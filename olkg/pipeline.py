@@ -75,28 +75,19 @@ def read_pages(spark: SparkSession, pages_path: str):
 
 
 def _sample_lines(fs, parts: list, n: int) -> list:
-    """The first ``n`` dump lines of the pages table, the rows a Spark
-    ``limit`` over the scan returns first (files by size, largest first),
-    inverted like :func:`~olkg.extract.pages_to_lines`: the html envelope
-    when it conforms and is UTF-8, else the text column."""
+    """The ``text`` of the first ``n`` pages, the rows a Spark ``limit``
+    over the scan returns first (files by size, largest first).  On a page
+    that passes the byte-identity audit the extract UDF's line equals its
+    text; every other page is counted in ``text_mismatches``."""
     import pyarrow.parquet as pq
-
-    from olkg.pagesgen import html_to_text
 
     lines: list = []
     for part in sorted(parts, key=lambda p: -p.size):
         pf = pq.ParquetFile(part.path, filesystem=fs)
-        for batch in pf.iter_batches(batch_size=n, columns=["html", "text"]):
-            # html as PAGES_SCHEMA reads it, also where stored as a string
-            for html, text in zip(batch[0].cast("binary").to_pylist(),
-                                  batch[1].to_pylist()):
-                try:
-                    line = html_to_text(html)
-                except UnicodeDecodeError:
-                    line = None
-                lines.append(text if line is None else line)
-                if len(lines) == n:
-                    return lines
+        for batch in pf.iter_batches(batch_size=n, columns=["text"]):
+            lines.extend(batch[0].to_pylist()[:n - len(lines)])
+            if len(lines) == n:
+                return lines
     return lines
 
 
@@ -108,8 +99,8 @@ def estimate_extract_size(spark: SparkSession, pages_path: str,
 
     Metadata and driver-side Python only, no Spark job: the page count is
     the sum of the pages files' parquet footer row counts, and
-    ~``SAMPLE_PAGES`` dump lines (read with pyarrow, inverted by
-    :func:`_sample_lines`) go through the pure-Python semantics
+    ~``SAMPLE_PAGES`` dump lines (the pages' ``text``, read with pyarrow
+    by :func:`_sample_lines`) go through the pure-Python semantics
     (~milliseconds) to estimate triples/page.  Map-task count is the
     listed pages files' bytes / spark.sql.files.maxPartitionBytes — unless
     the stream is explicitly repartitioned (``repartition_by_url``), which
@@ -224,12 +215,13 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
     # reused: re-extracted sides invalidate the whole tail, and a rewritten
     # edges/d=1 invalidates what is built from the full edge set
     sides_sink = pjoin(out_dir, "sides")
-    extract_reused = (resume and stage_complete(out_dir, "sides")
-                      and stage_complete(out_dir, "edges/d=0"))
-    d1_reused = extract_reused and stage_complete(out_dir, "edges/d=1")
-    nodes_reused = d1_reused and stage_complete(out_dir, "nodes")
-    nt_reused = d1_reused and stage_complete(out_dir, "export_nt")
-    cmap_reused = extract_reused and stage_complete(out_dir, "canonical_map")
+    extract_reused = (resume and stage_complete(spark, out_dir, "sides")
+                      and stage_complete(spark, out_dir, "edges/d=0"))
+    d1_reused = extract_reused and stage_complete(spark, out_dir, "edges/d=1")
+    nodes_reused = d1_reused and stage_complete(spark, out_dir, "nodes")
+    nt_reused = d1_reused and stage_complete(spark, out_dir, "export_nt")
+    cmap_reused = (extract_reused
+                   and stage_complete(spark, out_dir, "canonical_map"))
     cc_ckpt = pjoin(out_dir, "_cc_checkpoints")
 
     # -- job 1: extract (once) → dedup direct triples → edges/d=0 ------------

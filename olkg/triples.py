@@ -22,6 +22,12 @@ lib/edition.rb:298-313) are surfaced in two ways:
   (``author_names``, ``creation_refs``, ``probes``) that the Spark stage turns
   into order-independent equi-joins — the batch net effect of the protocol.
 
+Each extractor declares one ``HANDLERS`` table (record key → function of
+``(self, value)``); the one :meth:`_Emitter.run` walks the record's keys in
+JSON order and calls the handler of each key that has one.  Edition's table
+is the generic-field map (``GENERIC_FIELDS``) with its own handlers laid
+over it, so a handler wins where both name a key (``subtitle``).
+
 Blank nodes are minted deterministically (util.det_bnode) instead of Ruby's
 random ``RDF::Node.new`` so output is idempotent under resume and dedup.
 """
@@ -32,6 +38,7 @@ import json
 import re
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import partial
 
 try:  # fast path: orjson parses identical JSON ~5x faster; stdlib fallback
     import orjson as _fastjson
@@ -149,10 +156,20 @@ def normalize_subject_label(subject: str) -> str:
     return _SUBJ_COLLAPSE_RE.sub("--", s)
 
 
+def _to_s(v) -> str:
+    """Ruby #to_s for JSON scalar values."""
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
+
+
 class _Emitter:
     """Shared triple-accumulation helpers (openlibrary.rb:8-20)."""
 
     rdf_type: str  # class-level: the entity's rdf:type object
+    HANDLERS: dict  # class-level: record key → handler(self, value)
 
     def __init__(self, data: dict, db=None):
         self.data = data if isinstance(data, dict) else {}
@@ -163,6 +180,16 @@ class _Emitter:
         self.db = db
         self.res = ExtractResult()
         self.add(self.uri, V.RDF_TYPE, self.rdf_type, URI)
+
+    def run(self):
+        """parse_data (lib/edition.rb:28-36): each record key that has a
+        handler, in JSON order, calls ``HANDLERS[key](self, value)``."""
+        handlers = self.HANDLERS
+        for key, value in self.data.items():  # insertion order == JSON order
+            h = handlers.get(key)
+            if h is not None:
+                h(self, value)
+        return self.res
 
     def add(self, s, p, o, kind=LIT, datatype=None):
         if kind == LIT and datatype is None and not isinstance(o, str):
@@ -206,7 +233,10 @@ class _Emitter:
                 k = subject.get("key")
                 if k is None or ruby_empty(k):
                     continue
-                self.add(self.uri, V.DC_SUBJECT, V.URI_PREFIX + k, URI)
+                self.add(self.uri, V.DC_SUBJECT, V.URI_PREFIX + _to_s(k),
+                         URI)
+                if not isinstance(k, str):
+                    continue  # Ruby would crash on a non-String #split
                 last = ruby_split_last(k)
                 if last is None:
                     continue  # Ruby would crash on nil.gsub
@@ -227,7 +257,9 @@ class _Emitter:
                     self.db.set(author_key, self.uri)
                     self.db.sadd("pending", author_key)
         else:
-            self.res.creation_refs.append((self.uri, author_key))
+            # _to_s: the side row is a string column, and Redis would
+            # stringify the key the same way
+            self.res.creation_refs.append((self.uri, _to_s(author_key)))
 
     def _author_list(self, authors: list[str]):
         """gen_author_list (lib/author.rb:63-73): reversed cons-list of blank
@@ -265,7 +297,7 @@ class _Emitter:
                 self.add(scheme, V.RDF_TYPE, V.SKOS_CONCEPT_SCHEME, URI)
                 self.add(node, V.SKOS_IN_SCHEME, scheme, URI)
 
-    def _parse_ddc(self, ddcs):
+    def parse_ddc(self, ddcs):
         """lib/edition.rb:241-256 == lib/work.rb:123-138."""
         for ddc in splat(ddcs):
             if ddc is None or not isinstance(ddc, str) or ruby_empty(ddc):
@@ -296,6 +328,11 @@ class _Emitter:
         if val and isinstance(val, str) and not ruby_empty(val):
             self.add(self.uri, V.DC_DESCRIPTION, val.replace("\f", "f"))
 
+    def parse_subtitle(self, subtitle):
+        """lib/edition.rb:235-239; the work's is in lib/work.rb:19-34."""
+        if isinstance(subtitle, str) and subtitle:
+            self.add(self.uri, V.RDA_OTHER_TITLE_INFORMATION, subtitle)
+
     def parse_covers(self, covers, path_letter: str):
         """lib/edition.rb:368-375 (b), lib/work.rb:140-147 (w),
         lib/author.rb:147-156 (a, photos)."""
@@ -308,15 +345,6 @@ class _Emitter:
                     f"http://covers.openlibrary.org/{path_letter}/id/{cover}-{size}.jpg",
                     URI,
                 )
-
-
-def _to_s(v) -> str:
-    """Ruby #to_s for JSON scalar values."""
-    if isinstance(v, str):
-        return v
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
 
 
 class _AbortList(Exception):
@@ -332,16 +360,10 @@ class _AbortList(Exception):
 class AuthorExtractor(_Emitter):
     rdf_type = V.FOAF_AGENT  # lib/author.rb:7
 
-    FIELDS = ("birth_date", "death_date", "website", "bio", "title",
-              "wikipedia", "photos", "links")
-
     def run(self):
         self.name_strings: list[str] = []
         self.parse_names()
-        for key in self.data.keys():  # insertion order == JSON order
-            m = getattr(self, "parse_" + key, None)
-            if key in self.FIELDS and m is not None:
-                m()
+        super().run()
         self.save()
         return self.res
 
@@ -384,11 +406,13 @@ class AuthorExtractor(_Emitter):
                         self.add(creation, V.OL_AUTHOR, name)
                 self.db.srem("pending", self.data.get("key"))
         else:
+            # _to_s as in _author_ref: the join key is a string
+            key = _to_s(self.data.get("key") or "")
             for name in names:
-                self.res.author_names.append((self.data.get("key") or "", name))
+                self.res.author_names.append((key, name))
 
-    def _bio_event(self, field_name: str, type_uri: str):
-        v = self.data.get(field_name)
+    def _bio_event(self, v, field_name: str, type_uri: str):
+        """lib/author.rb:76-83 (birth), lib/author.rb:85-92 (death)."""
         if not isinstance(v, str) or v == "":
             return
         node = det_bnode(self.key, field_name)
@@ -397,15 +421,8 @@ class AuthorExtractor(_Emitter):
         self.add(self.uri, V.BIO_EVENT, node, BNODE)
         self.add(node, V.DC_DATE, v)
 
-    def parse_birth_date(self):
-        self._bio_event("birth_date", V.BIO_BIRTH)   # lib/author.rb:76-83
-
-    def parse_death_date(self):
-        self._bio_event("death_date", V.BIO_DEATH)   # lib/author.rb:85-92
-
-    def parse_website(self):
+    def parse_website(self, v):
         """lib/author.rb:94-107."""
-        v = self.data.get("website")
         if not isinstance(v, str) or v == "":
             return
         url = sanitize_url(v)
@@ -417,9 +434,8 @@ class AuthorExtractor(_Emitter):
             if u:
                 self.add(self.uri, V.FOAF_HOMEPAGE, u, URI)
 
-    def parse_bio(self):
+    def parse_bio(self, v):
         """lib/author.rb:109-117."""
-        v = self.data.get("bio")
         if v is None or ruby_empty(v):
             return
         if isinstance(v, str):
@@ -429,14 +445,12 @@ class AuthorExtractor(_Emitter):
             if val and isinstance(val, str):
                 self.add(self.uri, V.BIO_OLB, val)
 
-    def parse_title(self):
-        v = self.data.get("title")                   # lib/author.rb:119-122
-        if isinstance(v, str) and v:
+    def parse_title(self, v):
+        if isinstance(v, str) and v:                 # lib/author.rb:119-122
             self.add(self.uri, V.RDAG2_TITLE_OF_THE_PERSON, v)
 
-    def parse_wikipedia(self):
+    def parse_wikipedia(self, v):
         """lib/author.rb:124-145 (early return aborts remaining entries)."""
-        v = self.data.get("wikipedia")
         if v is None or ruby_empty(v):
             return
         for wik in splat(v):
@@ -458,15 +472,13 @@ class AuthorExtractor(_Emitter):
                 dbpedia = dbpedia.replace("/wiki/", "/resource/", 1)
                 self.add(self.uri, V.OWL_SAME_AS, dbpedia, URI)
 
-    def parse_photos(self):
-        v = self.data.get("photos")                  # lib/author.rb:147-156
-        if v is None or ruby_empty(v):
+    def parse_photos(self, v):
+        if v is None or ruby_empty(v):               # lib/author.rb:147-156
             return
         self.parse_covers(v, "a")
 
-    def parse_links(self):
+    def parse_links(self, v):
         """lib/author.rb:158-175."""
-        v = self.data.get("links")
         if v is None or ruby_empty(v):
             return
         for link in splat(v):
@@ -481,6 +493,19 @@ class AuthorExtractor(_Emitter):
                     return
                 if lnk:
                     self.add(self.uri, V.FOAF_PAGE, lnk, URI)
+
+    HANDLERS = {
+        "birth_date": partial(_bio_event, field_name="birth_date",
+                              type_uri=V.BIO_BIRTH),
+        "death_date": partial(_bio_event, field_name="death_date",
+                              type_uri=V.BIO_DEATH),
+        "website": parse_website,
+        "bio": parse_bio,
+        "title": parse_title,
+        "wikipedia": parse_wikipedia,
+        "photos": parse_photos,
+        "links": parse_links,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -508,57 +533,16 @@ GENERIC_FIELDS = {
 }
 
 
+def _generic_field(self, values, pred):
+    """lib/edition.rb:165-172: one literal per non-empty splatted value."""
+    for value in splat(values):
+        if value is None or ruby_empty(value):
+            continue
+        self.add(self.uri, pred, value)
+
+
 class EditionExtractor(_Emitter):
     rdf_type = V.BIBO_BOOK  # lib/edition.rb:8
-
-    # field → handler method name (aliases per lib/edition.rb:79-82,163,258,315-317)
-    DISPATCH = {
-        "languages": "parse_languages",
-        "isbn": "parse_isbn", "isbn10": "parse_isbn", "isbn13": "parse_isbn",
-        "isbn_10": "parse_isbn", "isbn_13": "parse_isbn",
-        "url": "parse_url", "uris": "parse_uris",
-        "lc_classifications": "parse_lc_classifications",
-        "genres": "parse_genres",
-        "table_of_contents": "parse_table_of_contents",
-        "lccns": "parse_lccns", "lccn": "parse_lccns",
-        "authors": "parse_authors",
-        "contributors": "parse_contributors",
-        "description": "parse_description",
-        "title": "parse_title",
-        "subtitle": "parse_subtitle",
-        "dewey_decimal_class": "parse_ddc", "dewry_decimal_class": "parse_ddc",
-        "publish_country": "parse_publish_country",
-        "identifiers": "parse_identifiers",
-        "oclc_numbers": "parse_oclc_numbers",
-        "volumes": "parse_volumes",
-        "subjects": "parse_subjects", "subject_people": "parse_subjects",
-        "subject_times": "parse_subjects", "subject_places": "parse_subjects",
-        "ocaid": "parse_ocaid",
-        "notes": "parse_notes",
-        "oclc_number": "parse_oclc_number",
-        "works": "parse_works",
-        "covers": "parse_edition_covers",
-    }
-
-    def run(self):
-        """parse_data (lib/edition.rb:28-36): dispatch else generic-field map."""
-        for key in self.data.keys():
-            m = self.DISPATCH.get(key)
-            if m is not None:
-                getattr(self, m)(self.data[key])
-            elif key in GENERIC_FIELDS:
-                self.parse_generic_field(key, self.data[key])
-        return self.res
-
-    def parse_generic_field(self, fld, values):
-        """lib/edition.rb:165-172."""
-        pred = GENERIC_FIELDS.get(fld)
-        if not pred:
-            return
-        for value in splat(values):
-            if value is None or ruby_empty(value):
-                continue
-            self.add(self.uri, pred, value)
 
     def parse_languages(self, languages):
         """lib/edition.rb:38-49 (not splatted: list input only)."""
@@ -616,12 +600,6 @@ class EditionExtractor(_Emitter):
                 return
             if u:
                 self.add(self.uri, predicate, u, URI)
-
-    def parse_url(self, url):
-        self.parse_uri_list(url, V.FOAF_PAGE)        # lib/edition.rb:99-101
-
-    def parse_uris(self, uris):
-        self.parse_uri_list(uris, V.BIBO_URI)        # lib/edition.rb:103-105
 
     def parse_genres(self, genres):
         """lib/edition.rb:127-132."""
@@ -700,13 +678,6 @@ class EditionExtractor(_Emitter):
         if sub is not None and sub is not False:
             title = title + "; " + _to_s(sub)
         self.add(self.uri, V.DC_TITLE, title)
-
-    def parse_subtitle(self, subtitle):
-        if isinstance(subtitle, str) and subtitle:
-            self.add(self.uri, V.RDA_OTHER_TITLE_INFORMATION, subtitle)
-
-    def parse_ddc(self, ddcs):
-        self._parse_ddc(ddcs)                        # lib/edition.rb:241-258
 
     def parse_publish_country(self, pc):
         """lib/edition.rb:260-266."""
@@ -806,8 +777,41 @@ class EditionExtractor(_Emitter):
             self.add(w, V.DC_HAS_VERSION, self.uri, URI)
             self.add(w, V.OV_COMMON_MANIFESTATION, self.uri, URI)
 
-    def parse_edition_covers(self, covers):
-        self.parse_covers(covers, "b")               # lib/edition.rb:368-375
+    # parse_data's dispatch (lib/edition.rb:28-36) with the aliases of
+    # lib/edition.rb:79-82,163,258,315-317; a handler shadows the generic
+    # map (subtitle)
+    HANDLERS = {
+        **{k: partial(_generic_field, pred=p) for k, p in GENERIC_FIELDS.items()},
+        "languages": parse_languages,
+        "isbn": parse_isbn, "isbn10": parse_isbn, "isbn13": parse_isbn,
+        "isbn_10": parse_isbn, "isbn_13": parse_isbn,
+        "url": partial(parse_uri_list, predicate=V.FOAF_PAGE),   # :99-101
+        "uris": partial(parse_uri_list, predicate=V.BIBO_URI),   # :103-105
+        "lc_classifications": _Emitter.parse_lc_classifications,
+        "genres": parse_genres,
+        "table_of_contents": parse_table_of_contents,
+        "lccns": parse_lccns, "lccn": parse_lccns,
+        "authors": parse_authors,
+        "contributors": parse_contributors,
+        "description": _Emitter.parse_description,
+        "title": parse_title,
+        "subtitle": _Emitter.parse_subtitle,
+        "dewey_decimal_class": _Emitter.parse_ddc,
+        "dewry_decimal_class": _Emitter.parse_ddc,
+        "publish_country": parse_publish_country,
+        "identifiers": parse_identifiers,
+        "oclc_numbers": parse_oclc_numbers,
+        "volumes": parse_volumes,
+        "subjects": _Emitter.parse_subjects,
+        "subject_people": _Emitter.parse_subjects,
+        "subject_times": _Emitter.parse_subjects,
+        "subject_places": _Emitter.parse_subjects,
+        "ocaid": parse_ocaid,
+        "notes": parse_notes,
+        "oclc_number": parse_oclc_number,
+        "works": parse_works,
+        "covers": partial(_Emitter.parse_covers, path_letter="b"),  # :368-375
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -816,26 +820,6 @@ class EditionExtractor(_Emitter):
 
 class WorkExtractor(_Emitter):
     rdf_type = V.FRBR_WORK  # lib/work.rb:8
-
-    DISPATCH = {
-        "title": "parse_title",
-        "subtitle": "parse_subtitle",
-        "subjects": "parse_subjects", "subject_places": "parse_subjects",
-        "subject_people": "parse_subjects", "subject_times": "parse_subjects",
-        "first_publish_date": "parse_first_publish_date",
-        "authors": "parse_authors",
-        "description": "parse_description",
-        "lc_classifications": "parse_lc_classifications",
-        "dewey_number": "parse_ddc",
-        "covers": "parse_work_covers",
-    }
-
-    def run(self):
-        for key in self.data.keys():
-            m = self.DISPATCH.get(key)
-            if m is not None:
-                getattr(self, m)(self.data[key])
-        return self.res
 
     def parse_title(self, t):
         """lib/work.rb:19-28 — like edition's but without title_prefix."""
@@ -847,10 +831,6 @@ class WorkExtractor(_Emitter):
         if sub is not None and sub is not False:     # lib/work.rb:23
             title = title + "; " + _to_s(sub)
         self.add(self.uri, V.DC_TITLE, title)
-
-    def parse_subtitle(self, subtitle):
-        if isinstance(subtitle, str) and subtitle:
-            self.add(self.uri, V.RDA_OTHER_TITLE_INFORMATION, subtitle)
 
     def parse_first_publish_date(self, pub_date):
         if isinstance(pub_date, str) and pub_date:
@@ -876,11 +856,20 @@ class WorkExtractor(_Emitter):
             self._author_ref(k)
         self._author_list(authors)
 
-    def parse_ddc(self, ddcs):
-        self._parse_ddc(ddcs)                        # lib/work.rb:123-138
-
-    def parse_work_covers(self, covers):
-        self.parse_covers(covers, "w")               # lib/work.rb:140-147
+    HANDLERS = {
+        "title": parse_title,
+        "subtitle": _Emitter.parse_subtitle,
+        "subjects": _Emitter.parse_subjects,
+        "subject_places": _Emitter.parse_subjects,
+        "subject_people": _Emitter.parse_subjects,
+        "subject_times": _Emitter.parse_subjects,
+        "first_publish_date": parse_first_publish_date,
+        "authors": parse_authors,
+        "description": _Emitter.parse_description,
+        "lc_classifications": _Emitter.parse_lc_classifications,
+        "dewey_number": _Emitter.parse_ddc,
+        "covers": partial(_Emitter.parse_covers, path_letter="w"),  # :140-147
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -890,19 +879,9 @@ class WorkExtractor(_Emitter):
 class SubjectExtractor(_Emitter):
     rdf_type = V.SKOS_CONCEPT  # lib/subject.rb:8
 
-    def run(self):
-        for key in self.data.keys():
-            if key == "name":
-                self.parse_name(self.data[key])
-            elif key == "created":
-                self.parse_dt(self.data[key], V.DC_CREATED)
-            elif key == "last_modified":
-                self.parse_dt(self.data[key], V.DC_MODIFIED)
-        return self.res
-
     def parse_name(self, name):
         if isinstance(name, str) and name:           # lib/subject.rb:18-21
-            self.add(self.uri, V.SKOS_PREF_LABEL, self.data.get("name"))
+            self.add(self.uri, V.SKOS_PREF_LABEL, name)
 
     def parse_dt(self, v, pred):
         """lib/subject.rb:23-28 — the only typed (xsd:dateTime) literals in
@@ -912,6 +891,12 @@ class SubjectExtractor(_Emitter):
         s = ruby_datetime_str(v.get("value"))
         if s is not None:
             self.add(self.uri, pred, s, LIT, V.XSD_DATETIME)
+
+    HANDLERS = {
+        "name": parse_name,
+        "created": partial(parse_dt, pred=V.DC_CREATED),
+        "last_modified": partial(parse_dt, pred=V.DC_MODIFIED),
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,9 @@ Ruby-regex fidelity notes:
 - Ruby ``gsub(/\\b/, '')`` is a **no-op** (word boundary, zero-width), so the
   reference's ``.gsub(/\\b/,'')`` scrubs (lib/edition.rb:139,219) do nothing and
   are intentionally omitted here.
+
+The three String helpers that the reference defines but never calls
+(lib/util.rb:38-52, SURVEY.md §2.8) have no counterpart here.
 """
 
 from __future__ import annotations
@@ -61,27 +64,6 @@ _TRAILING_PUNCT_RE = re.compile(r"[\.:,;/\s]\s*$", re.ASCII)
 def strip_trailing_punct(s: str) -> str:
     """String#strip_trailing_punct (lib/util.rb:43-45)."""
     return _TRAILING_PUNCT_RE.sub("", s, count=1).strip()
-
-
-_LEADING_PUNCT_RE = re.compile(r"^\s*[\.:,;/\s\(\[]", re.ASCII)
-_TRAILING_PUNCT_BRACKET_RE = re.compile(r"[\.:,;/\s\)\]]\s*$", re.ASCII)
-
-
-def strip_leading_and_trailing_punct(s: str) -> str:
-    """String#strip_leading_and_trailing_punct (lib/util.rb:46-49)."""
-    s = _TRAILING_PUNCT_BRACKET_RE.sub("", s, count=1).strip()
-    return _LEADING_PUNCT_RE.sub("", s.strip(), count=1)
-
-
-_NON_SLUG_RE = re.compile(r"[^" + RUBY_A_TO_z09 + r"\s\-]", re.ASCII)
-_WS_RE = re.compile(r"\s", re.ASCII)
-
-
-def slug(s: str) -> str:
-    """String#slug (lib/util.rb:38-42)."""
-    out = _NON_SLUG_RE.sub("", s)
-    out = _WS_RE.sub("_", out)
-    return strip_leading_and_trailing_punct(out.lower())
 
 
 # --- CGI.escape (Ruby) ------------------------------------------------------
@@ -365,10 +347,3 @@ def nt_unescape(s: str) -> str:
         out.append(c)
         i += 1
     return "".join(out)
-
-
-def lpad(s: str, count: int = 1) -> str:
-    """Ruby ``String#lpad`` (lib/util.rb:50-52): prefix ``count`` spaces.
-    Unused by the reference pipeline itself; provided for API completeness
-    (SURVEY.md §2.8)."""
-    return " " * count + s

@@ -51,16 +51,8 @@ def main() -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     # the session bench.py builds (same confs → same plans)
-    os.environ.setdefault("OLKG_TMPFS_SCRATCH", "1")
-    from olkg.session import build_session
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(
-        app_name="olkg-check-oracle",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(2 * cpus, 16),
-        extra_conf={"spark.task.cpus": "2"} if cpus >= 16 else {},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from bench import bench_session
+    spark = bench_session("olkg-check-oracle")
     import __spark_entry__ as entry
     qmap, omap = entry.queries(), entry.oracle_sql()
     names = ([n.strip() for n in args.queries.split(",") if n.strip()]

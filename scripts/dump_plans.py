@@ -5,8 +5,9 @@ Each non-KG query in ``__spark_entry__.queries()`` is built on the given
 scale factor and its ``explain("formatted")`` is written to
 ``<out>/<query>.txt``.  Masked: expression ids (``#123``), lambda variable
 numbers (``x_27``), RDD and plan ids (``RDD[12]``, ``plan_id=45``) and the
-checkout's own path.  The session is the one ``scripts/check_oracle.py``
-and ``bench.py`` build, so the partition counts in the plans match theirs.
+checkout's own path.  The session is ``bench.bench_session``, the one
+``bench.py`` and ``scripts/check_oracle.py`` run in, so the partition counts
+in the plans match theirs.
 
 Usage: python scripts/dump_plans.py --sf-dir <sf_dir> --out plans_a
        (the same in the other checkout, with --out plans_b)
@@ -46,16 +47,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    os.environ.setdefault("OLKG_TMPFS_SCRATCH", "1")
-    from olkg.session import build_session
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(
-        app_name="olkg-dump-plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(2 * cpus, 16),
-        extra_conf={"spark.task.cpus": "2"} if cpus >= 16 else {},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from bench import bench_session
+    spark = bench_session("olkg-dump-plans")
     import __spark_entry__ as entry
     entry.ensure_ivf_materialized(spark, args.sf_dir)
 

@@ -111,13 +111,13 @@ def test_html_roundtrip():
 
 def test_pages_generators_agree(spark, corpus):
     """The driver-side and the executor-side clone generators build the
-    same rows, skew and near-dup clusters included."""
+    same rows, hot-author skew included."""
     from olkg.pagesgen import build_pages_df_distributed
-    kw = dict(skew_hot_author="/authors/HOT1A", skew_fraction=0.5,
-              cluster_size=2)
+    kw = dict(skew_hot_author="/authors/HOT1A", skew_fraction=0.5)
     local = build_pages_df(spark, corpus, clones=5, **kw)
     dist = build_pages_df_distributed(spark, corpus, clones=5, **kw)
     assert local.count() == dist.count() > len(corpus)
+    assert local.filter(F.col("text").contains("/authors/HOT1A")).count() > 0
     assert local.exceptAll(dist).count() == 0
     assert dist.exceptAll(local).count() == 0
 
@@ -196,6 +196,33 @@ def test_resume_reuses_checkpoints(spark, pipeline_out, tmp_path,
     assert edges_set(spark, out) == edges0
     assert cmap_set(spark, out) == cmap0
     assert metrics["triples"] == len(edges0)
+
+
+def test_resume_from_a_worker_thread(spark, pipeline_out, tmp_path):
+    """run_pipeline checks its resume markers through the session it is
+    given: from a fresh thread, which has no active session, a resume of a
+    finished run skips every stage."""
+    import threading
+    out, pages_path, edges0, _ = _resume_copy(spark, pipeline_out, tmp_path)
+    got = {}
+
+    def body():
+        try:
+            got["metrics"] = run_pipeline(spark, pages_path, out,
+                                          resume=True, export_nt=True)
+        except Exception as e:  # noqa: BLE001 — reported by the assert
+            got["error"] = e
+
+    t = threading.Thread(target=body)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive()
+    assert "error" not in got, got.get("error")
+    stages = got["metrics"]["stages"]
+    assert stages["extract"] == stages["nodes"] == {"skipped": True}
+    assert stages["canonical_map"] == {"skipped": True}
+    assert stages["link_dedup"]["skipped"]
+    assert edges_set(spark, out) == edges0
 
 
 def test_resume_reextracts_unvalidated_sink(spark, pipeline_out, tmp_path,

@@ -2,7 +2,7 @@
 
 from olkg.util import (cgi_escape, det_bnode, is_valid_isbn10, is_valid_isbn13,
                        isbn10_to_isbn13, isbn13_to_isbn10, isbn_cleanup,
-                       normalize_uri, sanitize_url, slug, splat,
+                       normalize_uri, sanitize_url, splat,
                        strip_trailing_punct, uri_is_relative, uri_parse_ok)
 
 
@@ -112,9 +112,6 @@ class TestStringHelpers:
         assert strip_trailing_punct("History / ") == "History"
         assert strip_trailing_punct("a.b") == "a.b"
 
-    def test_slug(self):
-        assert slug("Hello, World!") == "hello_world"
-
     def test_splat_hash_to_pairs(self):
         # Ruby [*hash] → array of [k, v] pairs (drives parse_notes duck-typing)
         assert splat({"value": "x"}) == [["value", "x"]]
@@ -128,10 +125,3 @@ def test_det_bnode_deterministic():
     assert det_bnode("k", "birth") != det_bnode("k", "death")
     assert det_bnode("k", "authlist", 0) != det_bnode("k", "authlist", 1)
     assert det_bnode("k", "birth").startswith("_:b")
-
-
-def test_lpad():
-    from olkg.util import lpad
-    assert lpad("x") == " x"
-    assert lpad("x", 3) == "   x"
-    assert lpad("", 2) == "  "
