@@ -61,14 +61,14 @@ def _kg(spark: SparkSession):
     app = spark.sparkContext.applicationId
     key = ("kg", app)
     if key not in _CACHE:
-        from olkg.materialize import read_stage
+        from olkg.materialize import read_edges
         from olkg.pipeline import run_pipeline
 
         out = _kg_dir(app)
         atexit.register(shutil.rmtree, out, True)
         metrics = run_pipeline(spark, PAGES, out,
                                lcsh=spark.read.parquet(LCSH))
-        _cache_put(spark, key, (metrics, read_stage(spark, out, "edges")))
+        _cache_put(spark, key, (metrics, read_edges(spark, out)))
     return _CACHE[key]
 
 

@@ -16,7 +16,7 @@ entity are clustered by **blocking keys** —
   each name and written to the side sink next to the identifier keys).
 
 Within the bipartite (entity, block-key) graph, connected components are
-computed as a size-dispatched plan (:func:`connected_components`).  One
+computed as a size-dispatched plan (:func:`canonical_map_from_blocks`).  One
 distributed build keeps the entity pairs of merge-capable blocks.  A graph
 whose collect fits ``DRIVER_FINISH_BYTES`` is then collected once and
 finished on the driver (numpy min-label propagation with pointer jumping);
@@ -60,28 +60,26 @@ def plan_dedup(total_rows: int, rows_per_task: float) -> tuple[str, int | None]:
     return "partial", None
 
 
-def dedup_edges(triples: DataFrame, est_total_rows: int | None = None,
-                est_rows_per_task: float | None = None) -> DataFrame:
+def dedup_edges(triples: DataFrame,
+                num_partitions: int | None = None) -> DataFrame:
     """A4: distinct (subj, pred, obj, obj_kind, obj_datatype).
 
-    The plan is sized by :func:`plan_dedup` from the caller's estimates
-    (``est_total_rows``, ``est_rows_per_task`` — see
-    olkg.pipeline.estimate_extract_size for the cheap sampler):
+    ``num_partitions`` is the partition count of :func:`plan_dedup`'s plan
+    (the pipeline sizes it from olkg.pipeline.estimate_extract_size, the
+    cheap sampler):
 
-    - 'partial': plain dropDuplicates — hash aggregate with map-side partial
-      dedup.  Right when per-map-task row counts fit the hash map or
-      duplicates are common; also what runs with no estimates.
-    - 'prepartition': explicit repartition on the dedup key first, so the
-      aggregate runs only after that exchange and skips the map-side
-      partial pass.  Web-scale triple streams are mostly UNIQUE rows — partial
-      aggregation then reduces nothing while building (and spilling) a
-      giant per-task hash map.  Measured on 2.4M pages / 57M rows at 8
-      cores: 300 s (partial) → 111 s (prepartition, ≈ the no-dedup write
-      cost)."""
-    if est_rows_per_task is not None:
-        strategy, n = plan_dedup(est_total_rows or 0, est_rows_per_task)
-        if strategy == "prepartition":
-            triples = triples.repartition(n, *_EDGE_COLS)
+    - None ('partial'): plain dropDuplicates — hash aggregate with map-side
+      partial dedup.  Right when per-map-task row counts fit the hash map
+      or duplicates are common.
+    - n ('prepartition'): explicit repartition into n partitions on the
+      dedup key first, so the aggregate runs only after that exchange and
+      skips the map-side partial pass.  Web-scale triple streams are mostly
+      UNIQUE rows — partial aggregation then reduces nothing while building
+      (and spilling) a giant per-task hash map.  Measured on 2.4M pages /
+      57M rows at 8 cores: 300 s (partial) → 111 s (prepartition, ≈ the
+      no-dedup write cost)."""
+    if num_partitions is not None:
+        triples = triples.repartition(num_partitions, *_EDGE_COLS)
     return triples.dropDuplicates(_EDGE_COLS)
 
 
@@ -95,6 +93,9 @@ NAME_BANDS = 4
 NAME_BAND_ROWS = 2
 # a blocking key shared by more entities is a super-block, dropped by CC
 MAX_BLOCK_DF = 100_000
+# CC's round budget on either side; pointer jumping converges in
+# O(log diameter) rounds, so running out of it raises
+CC_MAX_ROUNDS = 20
 
 
 # --- author-name band keys ---------------------------------------------------
@@ -223,20 +224,6 @@ def blocking_keys(edges: DataFrame,
         .dropDuplicates())
 
 
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks behind a ``localCheckpoint``/``checkpoint`` result.
-
-    A checkpointed DataFrame reads a ``LogicalRDD`` whose RDD stays
-    registered (and its blocks cached) until unpersisted or garbage
-    collected; ``DataFrame.unpersist`` does not reach it.  Callers of
-    :func:`connected_components` release the returned map with this once
-    they have written it.  A driver-finished map reads a local relation,
-    which holds no blocks: then this is a no-op."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
-
-
 def _plan_nodes(df: DataFrame) -> int:
     """Node count of ``df``'s analyzed logical plan (no Spark action)."""
     def walk(p):
@@ -245,10 +232,10 @@ def _plan_nodes(df: DataFrame) -> int:
     return walk(df._jdf.queryExecution().analyzed())
 
 
-# Largest build connected_components finishes on the driver, in bytes of
-# the Arrow table it collects: Spark's default spark.driver.maxResultSize,
-# past which the collect aborts.  The measurements behind it are in the
-# connected_components docstring.
+# Largest build CC finishes on the driver, in bytes of the Arrow table it
+# collects: Spark's default spark.driver.maxResultSize, past which the
+# collect aborts.  The measurements behind it are in the
+# canonical_map_from_blocks docstring.
 DRIVER_FINISH_BYTES = 1 << 30
 
 
@@ -304,7 +291,7 @@ def _driver_components(entity, h1, h2, max_rounds: int):
     return names, label, changed_hist
 
 
-def _not_converged(max_iter: int, changed_hist: list, n_rows: int):
+def _not_converged(changed_hist: list, n_rows: int):
     # fail LOUDLY rather than return a partially-merged map: the budget
     # exhausted with labels still changing means the output would silently
     # under-merge (the engine's no-silent-caps rule).  Unreachable with the
@@ -312,23 +299,25 @@ def _not_converged(max_iter: int, changed_hist: list, n_rows: int):
     # diameter) -- so hitting this means the budget was cut or the graph
     # violates the blocking assumptions; both deserve a stop.
     return RuntimeError(
-        f"connected_components did not converge in {max_iter} "
-        f"iterations: {changed_hist[-1]} rows still changing over a "
+        f"connected components did not converge in {CC_MAX_ROUNDS} "
+        f"rounds: {changed_hist[-1]} rows still changing over a "
         f"{n_rows}-row frontier (changed_hist={changed_hist}); raise "
-        f"max_iter or inspect the blocking keys for super-components")
+        f"CC_MAX_ROUNDS or inspect the blocking keys for super-components")
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20,
-                         reliable_dir: str | None = None,
-                         max_block_df: int | None = MAX_BLOCK_DF,
-                         dropped_stats: dict | None = None,
-                         cc_stats: dict | None = None) -> DataFrame:
-    """Connected components of the bipartite (entity, block_key) graph.
-    Returns (entity, canonical_id) for every entity that has at least one
-    *merge-capable* block key (df >= 2); singleton-key entities are their
-    own canonical id and are omitted (identity).  canonical_id is the
+def canonical_map_from_blocks(block_ids: DataFrame, checkpoint_dir: str,
+                              stats: dict) -> DataFrame:
+    """(entity, canonical_id) for all entities resolvable via blocking keys:
+    the connected components of the bipartite (entity, block_key) graph of
+    ``block_ids``.  Only entities with at least one *merge-capable* block
+    key (df >= 2) are in the map; the others are their own canonical id
+    (consumers treat absence as identity).  canonical_id is the
     lexicographic MIN entity URI of the component, whichever side finishes
-    it.
+    it.  The pipeline feeds the extract stage's ``block_id`` sink rows
+    here: the identifier keys and the author-name band keys the UDF
+    computed, so entity resolution never re-scans the edge table nor hashes
+    a name again (and can run concurrently with the link stage, which only
+    appends join-born predicates that are never blocking keys).
 
     A size-dispatched plan, like :func:`plan_dedup`.  One distributed BUILD
     step keeps the (entity, block) pairs of merge-capable blocks, with both
@@ -396,47 +385,44 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     - a POINTER-JUMP step (label <- label-of-label, one self-join) engages
       on a roughly-flat census -- the signature of chain-at-a-time
       propagation -- and compresses chains in O(log diameter) rounds; star
-      blocks collapse geometrically and never pay it.  Past ``max_iter//2``
-      it engages unconditionally as a convergence backstop.
+      blocks collapse geometrically and never pay it.  Past
+      ``CC_MAX_ROUNDS // 2`` it engages unconditionally as a convergence
+      backstop.
 
-    ONE LINEAGE-TRUNCATING ACTION PER STEP.  A step is the mergeable-state
-    build, one label-propagation iteration, or one contraction; each is a
-    single eager ``localCheckpoint`` (re-derivable state) or, when
-    ``reliable_dir`` is given (the pipeline always gives one), a reliable
-    ``checkpoint`` there -- an executor loss on a real cluster recovers
-    from distributed storage.
-    Every step's plan therefore starts from the previous step's checkpoint,
-    so plan size is constant across iterations (``cc_stats["plan_nodes"]``).
-    The step's censuses ride on that same action through ``Observation``:
-    super-block drops (build), row count (every step) and changed count
-    (iterations) -- no separate count, first or pin job.  The build and
-    the states contractions start from are held until the unwind, every
-    other state is released as soon as the loop moves past it, and the
-    held ones once the result is pinned.  The returned map is a local
-    checkpoint (loop) or a local relation (driver): pass it to
-    :func:`release_checkpoint` once it is written.
+    ONE RELIABLE CHECKPOINT PER STEP.  A step is the mergeable-state build,
+    one label-propagation iteration, or one contraction; each is a single
+    eager ``checkpoint`` into ``checkpoint_dir`` (distributed storage on a
+    cluster), so an executor loss recovers from storage instead of
+    recomputing the loop.  Every step's plan therefore starts from the
+    previous step's checkpoint, so plan size is constant across iterations
+    (``stats["plan_nodes"]``).  The step's censuses ride on that same
+    action through ``Observation``: super-block drops (build), row count
+    (every step) and changed count (iterations) -- no separate count, first
+    or pin job.  A reliable checkpoint pins no executor blocks, so there is
+    nothing to release: the loop's map is its unwind, a lazy plan over the
+    step files, and the driver's is a local relation.  The caller deletes
+    ``checkpoint_dir`` once it has written the map.
 
     Either side raises ``RuntimeError`` rather than return an under-merged
-    map when ``max_iter`` rounds pass without a fixpoint.
+    map when ``CC_MAX_ROUNDS`` rounds pass without a fixpoint.
 
-    ``cc_stats`` (dict, optional) receives: finish ("driver" | "loop"),
-    iterations, jump_engaged_at, changed_hist, iter_walls (per-iteration
-    seconds; the driver side's one entry is the whole finish), contractions
-    (at_iter / rows_before / rows_after censuses -- no silent shrinks),
-    converged, plan_nodes (analyzed-plan node count per step: build,
-    iterations, contractions).  The driver side jumps from its first round
-    and never contracts.
+    ``stats`` (a dict) receives the super-block guard's census
+    (dropped_super_blocks, dropped_pair_rows) and: finish ("driver" |
+    "loop"), iterations, jump_engaged_at, changed_hist, iter_walls
+    (per-iteration seconds; the driver side's one entry is the whole
+    finish), contractions (at_iter / rows_before / rows_after censuses --
+    no silent shrinks), converged, plan_nodes (analyzed-plan node count per
+    step: build, iterations, contractions).  The driver side jumps from its
+    first round and never contracts.
     """
     import itertools
     import time as _time
     from pyspark.sql import Observation
 
-    spark = pairs.sparkSession
-    if reliable_dir is not None:
-        spark.sparkContext.setCheckpointDir(reliable_dir)
+    spark = block_ids.sparkSession
+    spark.sparkContext.setCheckpointDir(checkpoint_dir)
     plan_nodes: dict = {"build": [], "iterations": [], "contractions": []}
     step_ids = itertools.count()
-    stats = cc_stats if cc_stats is not None else {}
 
     def step(kind: str, df: DataFrame, cols: list, **census):
         """Materialize ``df.select(cols)`` with one eager checkpoint; the
@@ -447,9 +433,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                           *[e.alias(k) for k, e in census.items()])
                .select(*cols))
         plan_nodes[kind].append(_plan_nodes(out))
-        out = (out.checkpoint(eager=True) if reliable_dir is not None
-               else out.localCheckpoint(eager=True))
-        return out, obs.get
+        return out.checkpoint(eager=True), obs.get
 
     def _h(col: str):
         return F.struct(F.xxhash64(F.col(col)).alias("h1"),
@@ -458,32 +442,27 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     # the entity string rides along, so the build is also the finish's
     # input and the unwind's dictionary; a (2^-128) entity-hash collision
     # keeps both strings, so the result stays deterministic
-    pe = pairs.select(_h("entity").alias("eh"), _h("block_key").alias("bh"),
-                      F.col("entity")).dropDuplicates()
+    pe = block_ids.select(_h("entity").alias("eh"),
+                          _h("block_key").alias("bh"),
+                          F.col("entity")).dropDuplicates()
 
     # only keys shared by >=2 entities can merge anything -- this drops the
     # (at web scale, vast) unique-identifier majority before the loop;
     # SHUFFLE_HASH: AQE would otherwise broadcast the large side per plan.
-    # max_block_df additionally drops SUPER-BLOCKS (df > cap): a blocking
+    # MAX_BLOCK_DF additionally drops SUPER-BLOCKS (df > cap): a blocking
     # key shared by 100k+ entities -- a hub author name, a placeholder ISBN,
     # a degenerate band bucket -- carries no discriminating evidence, chains
     # unrelated entities into one giant component, and blows up both the
     # window sizes and the iteration count (component diameter).  This is
-    # the standard entity-resolution guard; pass ``dropped_stats`` (a dict)
-    # to census what the cap discarded (no silent caps) -- observed on the
-    # block census inside the state build's own action.
-    dfs = pe.groupBy("bh").agg(F.count(F.lit(1)).alias("df"))
-    keep = F.col("df") >= 2
-    drops = None
-    if max_block_df is not None:
-        keep = keep & (F.col("df") <= max_block_df)
-        if dropped_stats is not None:
-            drops = Observation(f"cc_step_{next(step_ids)}")
-            big = F.col("df") > max_block_df
-            dfs = dfs.observe(drops,
-                              F.count(F.when(big, 1)).alias("k"),
-                              F.sum(F.when(big, F.col("df"))).alias("rows"))
-    mergeable = dfs.filter(keep).select("bh")
+    # the standard entity-resolution guard; what it discarded goes into
+    # ``stats`` (no silent caps), observed on the block census inside the
+    # state build's own action.
+    drops = Observation(f"cc_step_{next(step_ids)}")
+    big = F.col("df") > MAX_BLOCK_DF
+    dfs = (pe.groupBy("bh").agg(F.count(F.lit(1)).alias("df"))
+           .observe(drops, F.count(F.when(big, 1)).alias("k"),
+                    F.sum(F.when(big, F.col("df"))).alias("rows")))
+    mergeable = dfs.filter((F.col("df") >= 2) & ~big).select("bh")
     build, seen = step("build", pe.join(mergeable.hint("SHUFFLE_HASH"), "bh"),
                        ["eh", "bh", "entity"],
                        ebytes=F.sum(F.octet_length("entity")))
@@ -493,19 +472,17 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     # block hashes and ~0.7 bytes of validity bits and IPC framing
     # (measured: 57.1 MB of task results for a 56.4 MB table of 974k rows)
     n_bytes = (seen["ebytes"] or 0) + 21 * n_rows
-    if drops is not None:
-        dropped_stats["dropped_super_blocks"] = drops.get["k"] or 0
-        dropped_stats["dropped_pair_rows"] = drops.get["rows"] or 0
+    stats["dropped_super_blocks"] = drops.get["k"] or 0
+    stats["dropped_pair_rows"] = drops.get["rows"] or 0
 
     if n_bytes <= _driver_finish_cap(spark):
         import pyarrow as pa
         t_fin = _time.time()
         tbl = build.select("entity", F.col("bh.h1").alias("h1"),
                            F.col("bh.h2").alias("h2")).toArrow()
-        release_checkpoint(build)
         names, label, changed_hist = _driver_components(
             tbl.column("entity"), tbl.column("h1").to_numpy(),
-            tbl.column("h2").to_numpy(), max_iter)
+            tbl.column("h2").to_numpy(), CC_MAX_ROUNDS)
         converged = not changed_hist or changed_hist[-1] == 0
         stats.update(finish="driver", iterations=len(changed_hist),
                      jump_engaged_at=0, changed_hist=changed_hist,
@@ -513,7 +490,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                      contractions=[], converged=converged,
                      plan_nodes=plan_nodes)
         if not converged:
-            raise _not_converged(max_iter, changed_hist, n_rows)
+            raise _not_converged(changed_hist, n_rows)
         return spark.createDataFrame(pa.table(
             {"entity": names, "canonical_id": names.take(label)}))
 
@@ -529,7 +506,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     jump_on = False
     jump_engaged_at: int | None = None
     last_contract = -2
-    for i in range(max_iter):
+    for i in range(CC_MAX_ROUNDS):
         t_iter = _time.time()
         # min(label) over the block, then min of that over the entity; both
         # include the row's own label, so labels decrease monotonically
@@ -550,7 +527,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
             # need O(log d) jumping; a >=4x per-round drop means stars about
             # to hit 0, for which the jump is pure overhead.
             prev, prev2 = changed_hist[-1], changed_hist[-2]
-            jump_on = prev > 0 and (prev * 4 > prev2 or i >= max_iter // 2)
+            jump_on = prev > 0 and (prev * 4 > prev2
+                                    or i >= CC_MAX_ROUNDS // 2)
             if jump_on:
                 jump_engaged_at = i
         if jump_on:
@@ -568,11 +546,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                    .select("eh", "bh",
                            F.coalesce("_jmp", "label").alias("label"),
                            "_chg"))
-        prev_state = state
         state, seen = step("iterations", win, ["eh", "bh", "label"],
                            n=F.sum("_chg"))
-        if prev_state is not build:
-            release_checkpoint(prev_state)
         n_rows = seen["rows"]
         n_changed = int(seen["n"] or 0)
         changed_hist.append(n_changed)
@@ -607,14 +582,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
                  jump_engaged_at=jump_engaged_at, changed_hist=changed_hist,
                  iter_walls=iter_walls, contractions=contractions,
                  converged=converged, plan_nodes=plan_nodes)
-
-    def release_states():
-        for df in [state, build] + sources:
-            release_checkpoint(df)
-
     if not converged:
-        release_states()
-        raise _not_converged(max_iter, changed_hist, n_rows)
+        raise _not_converged(changed_hist, n_rows)
     # unwind: pseudo-entity labels -> previous level's labels, innermost
     # mapping first; a pseudo-entity absent from the contracted loop output
     # was removed by the df>=2 refilter with its component fully converged,
@@ -633,31 +602,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     # label loop chose it (labels are internal ids only); ONE window pass
     # instead of groupBy + join-back — the rows are already co-partitioned
     # by label for the min, so the join-back shuffle would be pure waste
-    out = (comp.withColumn("canonical_id",
-                           F.min("entity").over(Window.partitionBy("label")))
-           .select("entity", "canonical_id").distinct())
-    # pin the result before releasing the loop states it derives from
-    out = out.localCheckpoint(eager=True)
-    release_states()
-    return out
-
-
-def canonical_map_from_blocks(block_ids: DataFrame,
-                              reliable_dir: str | None = None,
-                              dropped_stats: dict | None = None,
-                              cc_stats: dict | None = None) -> DataFrame:
-    """(entity, canonical_id) for all entities resolvable via blocking keys;
-    entities not in any block are their own canonical id (left out of the
-    map — consumers treat absence as identity).  The pipeline feeds the
-    extract stage's ``block_id`` sink rows here: the identifier keys and
-    the author-name band keys the UDF computed, so entity resolution never
-    re-scans the edge table nor hashes a name again (and can run
-    concurrently with the link stage, which only appends join-born
-    predicates that are never blocking keys).  ``reliable_dir``: where each
-    CC step's reliable checkpoint goes (distributed storage on a
-    cluster)."""
-    pairs = block_ids.select("entity", "block_key")
-    return connected_components(pairs, reliable_dir=reliable_dir,
-                                dropped_stats=dropped_stats,
-                                cc_stats=cc_stats)
-
+    return (comp.withColumn("canonical_id",
+                            F.min("entity").over(Window.partitionBy("label")))
+            .select("entity", "canonical_id").distinct())

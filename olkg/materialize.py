@@ -1,16 +1,12 @@
-"""Materialize stage: checkpointed stage tables, nodes/edges graph tables,
+"""Materialize stage: parquet stage tables, nodes/edges graph tables,
 N-Triples export (a directory of gzipped part files), per-file lineage
 metrics, idempotent resume.
 
-Bookkeeping around the stages runs no Spark job: :func:`read_stage` reads
+Bookkeeping around the stages runs no Spark job: :func:`read_edges` reads
 the edges with their known schema (no schema-inference job), and
 :func:`stage_rows` and :func:`append_lineage` take their row counts from
 the written files' parquet footers, the lineage written through pyarrow
 (:mod:`olkg.fsio`).
-
-Storage format is pluggable: parquet everywhere in this sandbox; on a cluster
-with an Iceberg catalog, pass ``table_format='iceberg'`` and stage outputs go
-through ``writeTo(...).createOrReplace()`` instead (same logical layout).
 
 Resume contract (north_rule): every stage writes to ``<out>/<stage>/`` with a
 ``_SUCCESS`` marker; a re-run skips a stage whose marker exists (and whose
@@ -44,41 +40,18 @@ def stage_complete(spark: SparkSession, out_dir: str, stage: str) -> bool:
     return fsio.exists(spark, pjoin(_stage_path(out_dir, stage), "_SUCCESS"))
 
 
-def write_stage(df: DataFrame, out_dir: str, stage: str,
-                partition_by: list[str] | None = None,
-                table_format: str = "parquet",
-                mode: str = "overwrite",
-                catalog: str = "olkg") -> None:
-    """Write one stage table.  ``table_format='iceberg'`` targets a
-    configured Iceberg catalog via the DataFrameWriterV2 API and honors
-    ``partition_by`` (identity transforms) and ``mode`` ('overwrite' →
-    createOrReplace, 'append' → append); parquet is the sandbox default."""
-    if table_format == "iceberg":
-        writer_v2 = df.writeTo(f"{catalog}.{stage}")
-        if mode == "append":
-            # appends inherit the existing table's partition spec
-            writer_v2.append()
-        else:
-            if partition_by:
-                writer_v2 = writer_v2.partitionedBy(
-                    *[F.col(c) for c in partition_by])
-            writer_v2.createOrReplace()
-        return
-    path = _stage_path(out_dir, stage)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_stage(df: DataFrame, out_dir: str, stage: str) -> None:
+    """Write one stage table: parquet under ``<out_dir>/<stage>``,
+    replacing what a killed run left there."""
+    df.write.mode("overwrite").parquet(_stage_path(out_dir, stage))
 
 
-def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    """A stage table.  ``edges``, the one the pipeline and the query entry
-    read, comes with its known schema (``d`` partition column included),
-    so reading it runs no schema-inference job."""
-    reader = spark.read
-    if stage == "edges":
-        reader = reader.schema(EDGES_SCHEMA)
-    return reader.parquet(_stage_path(out_dir, stage))
+def read_edges(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The edge table, both partitions, read with its known schema (``d``
+    partition column included), so reading it runs no schema-inference
+    job."""
+    return spark.read.schema(EDGES_SCHEMA).parquet(
+        _stage_path(out_dir, "edges"))
 
 
 def _written_parts(spark: SparkSession, out_dir: str, stage: str):

@@ -47,10 +47,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olkg import fsio
-from olkg.canonicalize import dedup_edges, plan_dedup, release_checkpoint
+from olkg.canonicalize import dedup_edges, plan_dedup
 from olkg.fsio import pjoin
 from olkg.materialize import (append_lineage, build_nodes, export_ntriples_gz,
-                              read_stage, stage_complete, stage_rows,
+                              read_edges, stage_complete, stage_rows,
                               write_stage)
 from olkg.schema import PAGES_SCHEMA
 
@@ -243,13 +243,13 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         est_total, est_per_task = estimate_extract_size(
             spark, pages_path, repartition_by_url=repartition_by_url,
             parts=pages_parts)
+        strategy, n_parts = plan_dedup(est_total, est_per_task)
         stages["dedup_plan"] = {
             "est_total_rows": est_total,
             "est_rows_per_task": int(est_per_task),
-            "chosen": plan_dedup(est_total, est_per_task)[0]}
+            "chosen": strategy}
         obs_direct = Observation("direct_edges")
-        direct_edges = dedup_edges(stream, est_total_rows=est_total,
-                                   est_rows_per_task=est_per_task).observe(
+        direct_edges = dedup_edges(stream, n_parts).observe(
             obs_direct, F.count(F.lit(1)).alias("n"))
         write_stage(direct_edges, out_dir, "edges/d=0")
         n_direct = obs_direct.get["n"]
@@ -293,11 +293,11 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
             stages["nodes"] = {"skipped": True}
         else:
             t = time.time()
-            write_stage(build_nodes(read_stage(spark, out_dir, "edges")),
+            write_stage(build_nodes(read_edges(spark, out_dir)),
                         out_dir, "nodes")
             stages["nodes"] = {"wall_ms": int((time.time() - t) * 1000)}
         if export_nt and not nt_reused:
-            export_ntriples_gz(read_stage(spark, out_dir, "edges"),
+            export_ntriples_gz(read_edges(spark, out_dir),
                                pjoin(out_dir, "export_nt"))
 
     def _run_cmap():
@@ -314,20 +314,16 @@ def run_pipeline(spark: SparkSession, pages_path: str, out_dir: str,
         # every CC step is one reliable checkpoint into the output directory
         # (distributed storage on a cluster), so an executor loss recovers
         # from storage instead of recomputing the loop
-        dropped: dict = {}
         cc_stats: dict = {}
-        cmap = canonical_map_from_blocks(
-            block_ids, reliable_dir=cc_ckpt,
-            dropped_stats=dropped, cc_stats=cc_stats)
+        cmap = canonical_map_from_blocks(block_ids, cc_ckpt, cc_stats)
         write_stage(cmap, out_dir, "canonical_map")
-        release_checkpoint(cmap)
         # the map's marker now stands for the whole stage: a resumed run
         # never reads the checkpoints again
         fsio.delete(spark, cc_ckpt)
         # no silent caps: super-block-guard drops are on record per run, as
         # are the CC loop's iteration count and jump engagement
         stages["canonical_map"] = {"wall_ms": int((time.time() - t) * 1000),
-                                   **dropped, **cc_stats}
+                                   **cc_stats}
 
     def _run_audit():
         results["audit"] = audit_pages(pages)

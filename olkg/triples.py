@@ -243,7 +243,10 @@ class _Emitter:
                 self.add(self.uri, V.DC11_SUBJECT, last.replace("_", " "))
 
     # ---- author refs J1 client side (lib/edition.rb:174-202, lib/work.rb:64-93)
-    def _author_ref(self, author_key: str):
+    def _author_ref(self, author_key):
+        # _to_s: the side row is a string column, and Redis stringifies
+        # its keys, so both modes join on the same string
+        author_key = _to_s(author_key)
         if self.db is not None:
             if self.db.sismember("pending", author_key):
                 self.db.append(author_key, "||" + self.uri)
@@ -257,9 +260,7 @@ class _Emitter:
                     self.db.set(author_key, self.uri)
                     self.db.sadd("pending", author_key)
         else:
-            # _to_s: the side row is a string column, and Redis would
-            # stringify the key the same way
-            self.res.creation_refs.append((self.uri, _to_s(author_key)))
+            self.res.creation_refs.append((self.uri, author_key))
 
     def _author_list(self, authors: list[str]):
         """gen_author_list (lib/author.rb:63-73): reversed cons-list of blank
@@ -398,16 +399,16 @@ class AuthorExtractor(_Emitter):
     def save(self):
         """J1 server side (lib/author.rb:50-61)."""
         names = list(dict.fromkeys(self.name_strings))  # Array#uniq
+        # _to_s as in _author_ref: the join key is a string in both modes
+        key = _to_s(self.data.get("key") or "")
         if self.db is not None:
-            val = self.db.getset(self.data.get("key"), "||".join(names))
-            if val is not None and self.db.sismember("pending", self.data.get("key")):
+            val = self.db.getset(key, "||".join(names))
+            if val is not None and self.db.sismember("pending", key):
                 for creation in (val.split("||") if val else []):
                     for name in self.name_strings:
                         self.add(creation, V.OL_AUTHOR, name)
-                self.db.srem("pending", self.data.get("key"))
+                self.db.srem("pending", key)
         else:
-            # _to_s as in _author_ref: the join key is a string
-            key = _to_s(self.data.get("key") or "")
             for name in names:
                 self.res.author_names.append((key, name))
 

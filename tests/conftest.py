@@ -116,7 +116,7 @@ def spark():
 
 @pytest.fixture
 def cc_loop(monkeypatch):
-    """Pins ``connected_components`` to its distributed loop: the driver
+    """Pins ``canonical_map_from_blocks`` to its distributed loop: the driver
     finish cap at 0 bytes, for the tests of loop internals."""
     import olkg.canonicalize as C
     monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 0)

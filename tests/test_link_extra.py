@@ -94,32 +94,38 @@ def test_lcsh_loader_unescapes_labels(spark, tmp_path):
         "http://id.loc.gov/authorities/subjects/sh10"
 
 
-def test_cc_super_block_guard(spark, cc_sides):
-    """connected_components drops blocks with df > max_block_df (hub keys
-    carry no discriminating evidence and chain unrelated entities), censuses
-    what it dropped, and keeps normal blocks intact -- with an identical
-    census and map on both sides of the driver finish cap."""
-    from olkg.canonicalize import connected_components
+def test_cc_super_block_guard(spark, tmp_path, cc_sides, monkeypatch):
+    """CC drops blocks with df > MAX_BLOCK_DF (hub keys carry no
+    discriminating evidence and chain unrelated entities), censuses what it
+    dropped, and keeps normal blocks intact -- with an identical census and
+    map on both sides of the driver finish cap."""
+    import olkg.canonicalize as C
     rows = ([("e%d" % i, "hub") for i in range(50)]        # super-block
             + [("a1", "k1"), ("a2", "k1"),                 # normal block
                ("b1", "k2"), ("b2", "k2"), ("b3", "k2")])
     pairs = spark.createDataFrame(rows, ["entity", "block_key"])
+    census = ("dropped_super_blocks", "dropped_pair_rows")
     for side in cc_sides():
-        stats, cc = {}, {}
+        monkeypatch.setattr(C, "MAX_BLOCK_DF", 10)
+        stats = {}
         cmap = {(r.entity, r.canonical_id)
-                for r in connected_components(pairs, max_block_df=10,
-                                              dropped_stats=stats,
-                                              cc_stats=cc).collect()}
-        assert cc["finish"] == side
+                for r in C.canonical_map_from_blocks(
+                    pairs, str(tmp_path), stats).collect()}
+        assert stats["finish"] == side
         # hub entities resolved nowhere (identity); normal blocks resolved
         assert cmap == {("a1", "a1"), ("a2", "a1"),
                         ("b1", "b1"), ("b2", "b1"), ("b3", "b1")}
-        assert stats == {"dropped_super_blocks": 1, "dropped_pair_rows": 50}
-        # no cap → the hub merges everything it touches
+        assert {k: stats[k] for k in census} == {
+            "dropped_super_blocks": 1, "dropped_pair_rows": 50}
+        # a cap above the hub → the hub merges everything it touches
+        monkeypatch.setattr(C, "MAX_BLOCK_DF", 100)
+        stats = {}
         all_cc = {(r.entity, r.canonical_id)
-                  for r in connected_components(pairs,
-                                                max_block_df=None).collect()}
+                  for r in C.canonical_map_from_blocks(
+                      pairs, str(tmp_path), stats).collect()}
         assert ("e49", "e0") in all_cc
+        assert {k: stats[k] for k in census} == {
+            "dropped_super_blocks": 0, "dropped_pair_rows": 0}
 
 
 def test_fake_names_do_not_chain_minhash_blocks():
@@ -132,14 +138,14 @@ def test_fake_names_do_not_chain_minhash_blocks():
     assert all(n.replace(" ", "").isalpha() for n in names)
 
 
-def test_cc_long_chain_converges_within_max_iter(spark, cc_sides):
-    """A chain component longer than max_iter hops must still fully
+def test_cc_long_chain_converges_within_max_iter(spark, tmp_path, cc_sides):
+    """A chain component longer than CC_MAX_ROUNDS hops must still fully
     converge: plain hash-min propagates one hop per iteration and would
-    silently stop short at max_iter; the pointer-jump step (iteration >= 3
-    in the loop, every round on the driver) compresses chains in
+    silently stop short at CC_MAX_ROUNDS; the pointer-jump step (iteration
+    >= 3 in the loop, every round on the driver) compresses chains in
     O(log diameter)."""
-    from olkg.canonicalize import connected_components
-    n = 60   # bipartite diameter ~120 >> max_iter=20
+    from olkg.canonicalize import CC_MAX_ROUNDS, canonical_map_from_blocks
+    n = 60   # bipartite diameter ~120 >> CC_MAX_ROUNDS=20
     rows = []
     for i in range(n - 1):
         rows.append((f"e{i:03d}", f"k{i:03d}"))
@@ -147,8 +153,8 @@ def test_cc_long_chain_converges_within_max_iter(spark, cc_sides):
     pairs = spark.createDataFrame(rows, ["entity", "block_key"])
     for side in cc_sides():
         stats = {}
-        cmap = connected_components(pairs, max_iter=20,
-                                    cc_stats=stats).collect()
+        cmap = canonical_map_from_blocks(pairs, str(tmp_path),
+                                         stats).collect()
         assert stats["finish"] == side
         labels = {r.canonical_id for r in cmap}
         assert labels == {"e000"}, \
@@ -158,7 +164,7 @@ def test_cc_long_chain_converges_within_max_iter(spark, cc_sides):
         # jump gate must fire (without it the chain needs ~diameter/2 = 60
         # iterations)
         assert stats["jump_engaged_at"] is not None
-        assert stats["iterations"] <= 20
+        assert stats["iterations"] <= CC_MAX_ROUNDS == 20
 
 
 def _chain_pairs(spark, n=60):
@@ -169,42 +175,45 @@ def _chain_pairs(spark, n=60):
     return spark.createDataFrame(rows, ["entity", "block_key"])
 
 
-def test_cc_releases_loop_state(spark, cc_sides):
-    """The loop side leaves exactly one persistent RDD behind -- the
-    returned map -- and release_checkpoint frees that one too: every loop
-    checkpoint and contraction source is released by the loop itself
-    (checkpointed blocks otherwise stay registered for the application's
-    lifetime).  The driver side releases its build once collected and
-    returns a local relation, so it leaves none, and releasing its map is
-    a no-op."""
-    from olkg.canonicalize import connected_components, release_checkpoint
+def test_cc_releases_loop_state(spark, tmp_path, cc_sides):
+    """Neither side leaves a persistent RDD behind, and nothing needs
+    releasing: every CC step is a reliable checkpoint, which pins no
+    executor blocks, and the loop returns its unwind as a lazy plan whose
+    every leaf reads checkpoint files under ``checkpoint_dir`` (which the
+    pipeline deletes once the map is written).  The driver side returns a
+    local relation."""
+    from olkg.canonicalize import canonical_map_from_blocks
     pairs = _chain_pairs(spark)
     jsc = spark.sparkContext._jsc
-
-    def new_rdds():   # ids, not a size: the cleaner may free older ones
-        return set(jsc.getPersistentRDDs().keys()) - start
-
     for side in cc_sides():
+        ckdir = tmp_path / side
         start = set(jsc.getPersistentRDDs().keys())
         stats = {}
-        cmap = connected_components(pairs, max_iter=20, cc_stats=stats)
+        cmap = canonical_map_from_blocks(pairs, str(ckdir), stats)
         assert stats["finish"] == side
-        assert len(new_rdds()) == {"loop": 1, "driver": 0}[side]
         assert cmap.count() == 60
-        release_checkpoint(cmap)
-        assert new_rdds() == set()
+        # ids, not a size: the cleaner may free older ones
+        assert set(jsc.getPersistentRDDs().keys()) - start == set()
+        if side == "driver":
+            continue
+        leaves = cmap._jdf.queryExecution().analyzed().collectLeaves()
+        assert leaves.size() > 0
+        for leaf in map(leaves.apply, range(leaves.size())):
+            assert leaf.getClass().getSimpleName() == "LogicalRDD", leaf
+            ck = leaf.rdd().getCheckpointFile()
+            assert ck.isDefined(), leaf
+            assert ck.get().startswith(f"file:{ckdir}/"), ck.get()
 
 
-def test_cc_plan_size_constant_across_iterations(spark, cc_loop):
+def test_cc_plan_size_constant_across_iterations(spark, tmp_path, cc_loop):
     """Every CC step plans from the previous step's checkpoint, so the
     analyzed plan of an iteration has the same node count whichever
     iteration it is, before and after the pointer jump engages (the jump
     reads the window step twice; without per-step truncation the plan
     doubled each jump iteration)."""
-    from olkg.canonicalize import connected_components, release_checkpoint
+    from olkg.canonicalize import canonical_map_from_blocks
     stats = {}
-    release_checkpoint(connected_components(_chain_pairs(spark), max_iter=20,
-                                            cc_stats=stats))
+    canonical_map_from_blocks(_chain_pairs(spark), str(tmp_path), stats)
     nodes = stats["plan_nodes"]["iterations"]
     j = stats["jump_engaged_at"]
     assert j is not None and len(nodes) - j >= 3, stats
@@ -213,32 +222,33 @@ def test_cc_plan_size_constant_across_iterations(spark, cc_loop):
     assert len(set(stats["plan_nodes"]["contractions"])) == 1, stats
 
 
-def test_cc_nonconvergence_raises_loudly(spark, cc_sides):
-    """An exhausted iteration budget with rows still changing must RAISE,
+def test_cc_nonconvergence_raises_loudly(spark, tmp_path, cc_sides,
+                                         monkeypatch):
+    """An exhausted round budget with rows still changing must RAISE,
     never return a partially-merged map (the engine's no-silent-caps rule):
-    a long chain cannot converge at max_iter=2 in the loop (the jump gate
-    needs iteration >= 2 of history) nor in one driver round (a chain needs
-    a second round to confirm its first), so either side must fail loudly
-    and record converged=False in cc_stats."""
+    a long chain cannot converge in 2 loop iterations (the jump gate needs
+    iteration >= 2 of history) nor in one driver round (a chain needs a
+    second round to confirm its first), so either side must fail loudly
+    and record converged=False in its stats."""
     import pytest
-    from olkg.canonicalize import connected_components
+    import olkg.canonicalize as C
     pairs = _chain_pairs(spark)
     for side in cc_sides():
+        monkeypatch.setattr(C, "CC_MAX_ROUNDS", {"loop": 2, "driver": 1}[side])
         stats = {}
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(pairs, cc_stats=stats,
-                                 max_iter={"loop": 2, "driver": 1}[side])
+        with pytest.raises(RuntimeError, match="did not converge in"):
+            C.canonical_map_from_blocks(pairs, str(tmp_path), stats)
         assert stats["finish"] == side
         assert stats["converged"] is False
         assert stats["changed_hist"][-1] != 0
 
 
-def test_cc_star_blocks_never_pay_the_jump(spark, cc_sides):
+def test_cc_star_blocks_never_pay_the_jump(spark, tmp_path, cc_sides):
     """Star blocks (the identifier-block common case) collapse their
     changed census geometrically and converge by round 3 — the loop's
     progress gate must leave the pointer jump OFF so the common case pays
     no persist + self-join per iteration.  Both sides give the same map."""
-    from olkg.canonicalize import connected_components
+    from olkg.canonicalize import canonical_map_from_blocks
     rows = []
     for b in range(40):                      # 40 disjoint stars of 6
         for m in range(6):
@@ -247,8 +257,8 @@ def test_cc_star_blocks_never_pay_the_jump(spark, cc_sides):
     for side in cc_sides():
         stats = {}
         cmap = {(r.entity, r.canonical_id)
-                for r in connected_components(pairs,
-                                              cc_stats=stats).collect()}
+                for r in canonical_map_from_blocks(pairs, str(tmp_path),
+                                                   stats).collect()}
         assert stats["finish"] == side
         assert len(cmap) == 240
         assert all(c == f"s{e[1:3]}_0" for e, c in cmap)
@@ -259,7 +269,7 @@ def test_cc_star_blocks_never_pay_the_jump(spark, cc_sides):
 
 def _union_find_reference(rows):
     """Driver-side union-find over (entity, block_key) pairs restricted to
-    blocks with df >= 2 — the oracle for connected_components' output
+    blocks with df >= 2 — the oracle for canonical_map_from_blocks' output
     contract: (entity, min-URI-of-component) for every entity in a
     merge-capable block."""
     from collections import defaultdict
@@ -297,13 +307,13 @@ def _union_find_reference(rows):
     return out
 
 
-def test_cc_contraction_matches_union_find(spark, cc_sides):
+def test_cc_contraction_matches_union_find(spark, tmp_path, cc_sides):
     """Mixed stars + a chain long enough to need several iterations: the
     contraction path (engaged unconditionally after iteration 1) must
     census its shrinks (no silent row drops) and the unwound output must
     equal a driver-side union-find, including the min-URI representative;
     so must the driver finish's, which never contracts."""
-    from olkg.canonicalize import connected_components
+    from olkg.canonicalize import canonical_map_from_blocks
     rows = []
     for b in range(25):                       # stars (identifier blocks)
         for m in range(5):
@@ -316,7 +326,8 @@ def test_cc_contraction_matches_union_find(spark, cc_sides):
     for side in cc_sides():
         stats = {}
         got = {(r.entity, r.canonical_id)
-               for r in connected_components(pairs, cc_stats=stats).collect()}
+               for r in canonical_map_from_blocks(pairs, str(tmp_path),
+                                                  stats).collect()}
         assert got == _union_find_reference(rows), side
         if side == "driver":
             assert stats["contractions"] == [] and \
@@ -328,12 +339,13 @@ def test_cc_contraction_matches_union_find(spark, cc_sides):
         assert len(stats["iter_walls"]) == stats["iterations"]
 
 
-def test_cc_seeded_random_graph_matches_union_find(spark, cc_sides):
+def test_cc_seeded_random_graph_matches_union_find(spark, tmp_path,
+                                                   cc_sides):
     """Deterministic pseudo-random bipartite graph (mix of singleton keys,
     stars, shared hubs): hash-encoded labels + contraction + jump, and the
     driver finish, must be invisible in the output vs driver-side
     union-find."""
-    from olkg.canonicalize import connected_components
+    from olkg.canonicalize import canonical_map_from_blocks
     import random
     rng = random.Random(20260817)
     rows = []
@@ -346,19 +358,19 @@ def test_cc_seeded_random_graph_matches_union_find(spark, cc_sides):
     for side in cc_sides():
         stats = {}
         got = {(r.entity, r.canonical_id)
-               for r in connected_components(pairs, max_block_df=None,
-                                             cc_stats=stats).collect()}
+               for r in canonical_map_from_blocks(pairs, str(tmp_path),
+                                                  stats).collect()}
         assert stats["finish"] == side
         assert got == expect, side
 
 
-def test_cc_representative_is_code_point_min(spark, cc_sides):
+def test_cc_representative_is_code_point_min(spark, tmp_path, cc_sides):
     """Both sides pick the smallest URI by code point, the order of Spark's
     min on strings (UTF-8 bytes).  U+FFFF sorts before any astral-plane
     character by code point but after it in UTF-16, and "z" sorts before
     "é" by code point but not in a locale collation, so a driver finish
     that sorted by either would pick another representative here."""
-    from olkg.canonicalize import connected_components
+    from olkg.canonicalize import canonical_map_from_blocks
     astral = ["e\U0001F600", "e\uffff", "e\U00010000"]
     accented = ["e\u00e9", "ez", "e\u00e9z"]
     rows = ([(e, "k:astral") for e in astral]
@@ -370,12 +382,13 @@ def test_cc_representative_is_code_point_min(spark, cc_sides):
     for side in cc_sides():
         stats = {}
         got = {(r.entity, r.canonical_id)
-               for r in connected_components(pairs, cc_stats=stats).collect()}
+               for r in canonical_map_from_blocks(pairs, str(tmp_path),
+                                                  stats).collect()}
         assert stats["finish"] == side
         assert got == expect, side
 
 
-def test_cc_dispatch_reads_the_build_size(spark, monkeypatch):
+def test_cc_dispatch_reads_the_build_size(spark, tmp_path, monkeypatch):
     """The cap is compared with the size of the build's collect, observed
     on the build: entity UTF-8 bytes plus 21 bytes a row, over the pairs of
     merge-capable blocks only (five here, whatever the singleton keys add to
@@ -389,7 +402,7 @@ def test_cc_dispatch_reads_the_build_size(spark, monkeypatch):
     for cap, side in ((size, "driver"), (size - 1, "loop")):
         monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", cap)
         stats = {}
-        C.connected_components(pairs, cc_stats=stats)
+        C.canonical_map_from_blocks(pairs, str(tmp_path), stats)
         assert stats["finish"] == side, cap
     monkeypatch.setattr(C, "DRIVER_FINISH_BYTES", 1 << 40)
     limit = spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")

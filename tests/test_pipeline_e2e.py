@@ -333,38 +333,12 @@ def test_direct_join_born_disjointness(spark, corpus):
             t[1] == V.DC_SUBJECT and t[3] == "uri")
 
 
-def test_iceberg_write_dispatch(spark):
-    """write_stage(table_format='iceberg') must go through the V2 writer,
-    honoring partition_by on create and using append() for appends — no
-    silently-ignored arguments (no Iceberg jars in this sandbox, so the
-    writer is captured with a stub)."""
-    from unittest import mock
-    from olkg.materialize import write_stage
-    df = spark.createDataFrame([(1, "a")], ["id", "kind"])
-
-    writer = mock.MagicMock()
-    with mock.patch.object(type(df), "writeTo", return_value=writer) as wt:
-        write_stage(df, "/tmp/unused", "edges", partition_by=["kind"],
-                    table_format="iceberg")
-    wt.assert_called_once_with("olkg.edges")
-    writer.partitionedBy.assert_called_once()
-    writer.partitionedBy.return_value.createOrReplace.assert_called_once()
-    writer.append.assert_not_called()
-
-    writer = mock.MagicMock()
-    with mock.patch.object(type(df), "writeTo", return_value=writer):
-        write_stage(df, "/tmp/unused", "edges", table_format="iceberg",
-                    mode="append")
-    writer.append.assert_called_once()
-    writer.partitionedBy.assert_not_called()
-    writer.createOrReplace.assert_not_called()
-
-
 def test_cc_reliable_checkpoint(spark, tmp_path, cc_sides):
-    """The pipeline's CC steps checkpoint to the given directory
-    (distributed storage on a cluster) and still converge to the right
-    components, on both sides of the driver finish cap."""
-    from olkg.canonicalize import connected_components
+    """The CC steps checkpoint to the given directory (distributed storage
+    on a cluster), one checkpointed RDD directory per step counted in
+    ``stats["plan_nodes"]``, and still converge to the right components,
+    on both sides of the driver finish cap."""
+    from olkg.canonicalize import canonical_map_from_blocks
     pairs = spark.createDataFrame(
         [("e1", "k1"), ("e2", "k1"), ("e2", "k2"), ("e3", "k2"),
          ("e4", "k9"),  # singleton key: excluded from the map
@@ -373,14 +347,15 @@ def test_cc_reliable_checkpoint(spark, tmp_path, cc_sides):
     for side in cc_sides():
         ckdir = str(tmp_path / f"cc_ck_{side}")
         stats = {}
-        cc = connected_components(pairs, reliable_dir=ckdir, cc_stats=stats)
+        cc = canonical_map_from_blocks(pairs, ckdir, stats)
         assert stats["finish"] == side
         got = {r.entity: r.canonical_id for r in cc.collect()}
         assert got == {"e1": "e1", "e2": "e1", "e3": "e1",
                        "e5": "e5", "e6": "e5"}
-        # at least one reliable checkpoint landed in the stage directory
-        found = any(files for _, _, files in os.walk(ckdir))
-        assert found, f"{side}: no reliable checkpoint files written"
+        rdd_dirs = [d for root, dirs, _ in os.walk(ckdir)
+                    for d in dirs if d.startswith("rdd-")]
+        steps = sum(len(v) for v in stats["plan_nodes"].values())
+        assert steps >= 1 and len(rdd_dirs) == steps, (side, rdd_dirs, stats)
 
 
 def test_cc_checkpoints_deleted_after_map(pipeline_out):
@@ -421,7 +396,7 @@ def test_fast_pipeline_prepartition_dedup(spark):
     import re
 
     from olkg.canonicalize import (AUTO_PREPARTITION_ROWS_PER_TASK,
-                                   dedup_edges)
+                                   dedup_edges, plan_dedup)
     rows = ([("s%d" % i, "p", "o%d" % (i % 7), "uri", None)
              for i in range(40)]
             + [("s1", "p", "o1", "uri", None)] * 5      # true dups
@@ -429,8 +404,9 @@ def test_fast_pipeline_prepartition_dedup(spark):
     cols = ("subj string, pred string, obj string, obj_kind string, "
             "obj_datatype string")
     stream = spark.createDataFrame(rows, cols)
-    got = dedup_edges(stream, est_total_rows=8_000_000,
-                      est_rows_per_task=AUTO_PREPARTITION_ROWS_PER_TASK + 1)
+    strategy, n = plan_dedup(8_000_000, AUTO_PREPARTITION_ROWS_PER_TASK + 1)
+    assert strategy == "prepartition"
+    got = dedup_edges(stream, n)
 
     # the plan before execution: one linear tree, root first
     buf = io.StringIO()
@@ -518,7 +494,7 @@ def test_bookkeeping_runs_no_spark_job(spark, pipeline_out, tmp_path):
     """The sampler, the sink validation, the lineage append and the stage
     reads are metadata I/O on the driver: none submits a Spark job."""
     from olkg.extract import read_side_rows
-    from olkg.materialize import append_lineage, read_stage
+    from olkg.materialize import append_lineage, read_edges
     from olkg.pipeline import estimate_extract_size
     out, pages_path, _, _ = _resume_copy(spark, pipeline_out, tmp_path)
     n_sides = spark.read.parquet(out + "/sides").count()
@@ -528,7 +504,7 @@ def test_bookkeeping_runs_no_spark_job(spark, pipeline_out, tmp_path):
                                                                pages_path),
         "read_side_rows": lambda: read_side_rows(spark, out + "/sides",
                                                  expected_rows=n_sides),
-        "read_stage": lambda: read_stage(spark, out, "edges"),
+        "read_edges": lambda: read_edges(spark, out),
         "append_lineage": lambda: append_lineage(spark, out, "r", "nodes", 1),
     }
     jobs = {}

@@ -5,7 +5,7 @@ handlers and the edition's generic-field map."""
 import pytest
 
 from olkg import vocab as V
-from olkg.triples import extract_record
+from olkg.triples import MemoryKV, extract_record
 
 EDITION, WORK, AUTHOR = "/type/edition", "/type/work", "/type/author"
 
@@ -48,6 +48,39 @@ def test_join_keys_agree_across_key_types():
                                        "authors": [{"key": 5}]})
     assert author.author_names == [("5", "Ada Quill")]
     assert [k for _, k in edition.creation_refs] == ["5"]
+
+
+@pytest.mark.parametrize("author_first", [True, False],
+                         ids=["author_first", "edition_first"])
+@pytest.mark.parametrize("author_key,ref", [
+    (5, "5"), ("5", 5), (5, 5),
+], ids=["int_author_str_ref", "str_author_int_ref", "int_both"])
+def test_memory_kv_joins_on_the_side_row_key(author_key, ref, author_first):
+    """The ``MemoryKV`` replay keys its store with the same string as the
+    side rows, so an author whose key is the int 5 and a ref "5" meet
+    there too, whichever record comes first."""
+    db = MemoryKV()
+    records = [(AUTHOR, {"key": author_key, "name": "Ada Quill"}),
+               (EDITION, {"key": "/books/OL1M", "authors": [{"key": ref}]})]
+    if not author_first:
+        records.reverse()
+    triples = [t for rtype, data in records
+               for t in extract_record(rtype, data, db=db).triples]
+    assert (V.URI_PREFIX + "/books/OL1M", V.OL_AUTHOR, "Ada Quill") in {
+        (t.subj, t.pred, t.obj) for t in triples}
+    assert set(db.kv) == {"5"} and db.pending == set()
+
+
+@pytest.mark.parametrize("key", [["/authors/OL1A"], {"k": "/authors/OL1A"}],
+                         ids=["list_key", "dict_key"])
+def test_memory_kv_takes_unhashable_author_keys(key):
+    """An author whose key is a list or a dict is stored under its string
+    (the side row's key) instead of raising ``TypeError: unhashable``."""
+    db = MemoryKV()
+    res = extract_record(AUTHOR, {"key": key, "name": "Ada Quill"}, db=db)
+    plain = extract_record(AUTHOR, {"key": key, "name": "Ada Quill"})
+    assert res.triples == plain.triples
+    assert db.kv == {plain.author_names[0][0]: "Ada Quill"}
 
 
 def _titles(rtype, **fields):
